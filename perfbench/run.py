@@ -5,8 +5,9 @@
 Workloads (see workloads.py): ``datasus_ingest``, ``analytic_queries``,
 ``corpus_curation``. Inputs are generated from ``--seed`` inside the
 checkout; the run sets up Spark several times, runs the workload's untimed
-warm-up cycles, measures whole cycles for ``--seconds`` (at least one),
-checks every answer, and prints a table followed by one JSON line.
+warm-up cycles, measures a fixed number of whole cycles sized so that they
+take about ``--seconds`` on a 4-core host (at least one), checks every
+answer, and prints a table followed by one JSON line.
 
 ``--trace 0`` reports the end-to-end metrics:
 
@@ -18,7 +19,9 @@ checks every answer, and prints a table followed by one JSON line.
   replay load; one query; one gate).
 
 The table above the JSON line adds each workload's own names for these,
-``error_rate`` and ``peak_rss_mb``, the peak resident memory (PSS) of the
+``error_rate``, ``host_steal_share`` (the share of the machine's CPU time a
+hypervisor gave to other guests during the timed cycles, which slows every
+cycle it touches) and ``peak_rss_mb``, the peak resident memory (PSS) of the
 Spark JVM and its Python workers while the workload runs. Peak memory
 stays out of the JSON line: it moved by up to a quarter between runs of the
 same inputs (JVM heap growth), too much for a regression bound.
@@ -360,6 +363,8 @@ def _run(args, cpus: int, work: str) -> int:
         "workload": args.workload, "seed": args.seed, "seconds": args.seconds,
         "trace": args.trace, "cpus": cpus, "e2e": e2e, "named": named,
         "setups": samples, "phases": phases,
+        "host_steal_share": workload.steal_share,
+        "ops": [(o.name, o.cycle, o.seconds) for o in workload.ops],
         "failures": [(o.name, o.cycle, o.error) for o in workload.ops if not o.ok],
     }
     print(f"# {args.workload} seed={args.seed} local[{cpus}] trace={args.trace}")
@@ -367,6 +372,8 @@ def _run(args, cpus: int, work: str) -> int:
         unit = {"peak_rss_mb": "MB", "ingest_records_per_s": "rec/s", "error_rate": "ratio",
                 "cycles": "count", "executions": "count"}.get(k, "s")
         print(f"{k:<28} {_fmt(v):>12} {unit}")
+    if workload.steal_share is not None:
+        print(f"{'host_steal_share':<28} {_fmt(workload.steal_share):>12} ratio")
     if "executions" in named and "query_p90_s" not in named:
         print(f"{'query_p90_s':<28} {'n/a':>12} s  (needs >=100 executions per run)")
     for name, _cycle, err in record["failures"]:

@@ -38,7 +38,7 @@ CURATION_GATES = ["web_corpus_wet_build"]
 ANALYTIC_SF = 0.02
 # DATASUS archives: UFs × cold months, plus new months in the replay, and
 # the range of rows per file.
-INGEST_UFS, INGEST_MONTHS, INGEST_NEW_MONTHS, INGEST_ROWS = 2, 4, 1, (800, 1200)
+INGEST_UFS, INGEST_MONTHS, INGEST_NEW_MONTHS, INGEST_ROWS = 2, 2, 1, (400, 600)
 
 # Modules whose public functions get op.<module>.<function> spans in traced
 # runs (the gates import them function-locally, so rebinding reaches them).
@@ -67,17 +67,23 @@ class Op:
 
 class Workload:
     """Shared driver loop: ``prepare`` once, the warm-up cycles (numbered
-    below 0), then whole cycles until ``seconds`` have passed."""
+    below 0), then ``timed_cycles(seconds)`` whole cycles."""
 
     name = ""
     steady_kind = "query"  # the kind of op a user repeats (op_p50_s)
     # Untimed cycles run first: they pay the first-use costs (Python worker
     # start, JIT, code generation) and their answers are checked too.
     warmup_cycles = 1
+    # Wall time of one warm cycle at local[4] on a moderately busy 4-core
+    # host; sizes the timed cycle count.
+    nominal_cycle_s = 1.0
 
     def __init__(self, ctx) -> None:
         self.ctx = ctx
         self.ops: list[Op] = []
+        # Share of the machine's CPU time the hypervisor gave to others
+        # while the timed cycles ran (steal in /proc/stat), if known.
+        self.steal_share: float | None = None
 
     def prepare(self) -> None:
         pass
@@ -86,15 +92,29 @@ class Workload:
         """A parquet path the setup warm-up reads, if the workload has one."""
         return None
 
+    def timed_cycles(self, seconds: float) -> int:
+        """Cycles to time, fixed by ``seconds`` alone (about ``seconds`` of
+        work at local[4]). Cycle times keep falling for several cycles as the
+        JVM warms, so a run that fitted one cycle more or fewer than another
+        would report a different median."""
+        return max(1, round(seconds / self.nominal_cycle_s))
+
     def run(self, seconds: float) -> None:
+        """Warm up, then time the cycles. A cycle that would start after
+        ``seconds`` is skipped, which only happens on a starved host and
+        keeps the run's length bounded there."""
         self.prepare()
         for cycle in range(-self.warmup_cycles, 0):
             self.cycle(cycle)
-        t_end = time.perf_counter() + seconds
-        cycle = 0
-        while cycle == 0 or time.perf_counter() < t_end:
+        steal0, t0 = _steal_ticks(), time.perf_counter()
+        for cycle in range(self.timed_cycles(seconds)):
+            if cycle and time.perf_counter() - t0 > seconds:
+                break
             self.cycle(cycle)
-            cycle += 1
+        steal1 = _steal_ticks()
+        if steal0 and steal1:
+            busy = steal1[1] - steal0[1]
+            self.steal_share = (steal1[0] - steal0[0]) / busy if busy else 0.0
 
     def timed(self, name: str, kind: str, cycle: int, fn) -> Op:
         """Run ``fn`` inside an op span under its own job group; failures
@@ -115,12 +135,25 @@ class Workload:
         return op
 
 
+def _steal_ticks() -> tuple[int, int] | None:
+    """(steal, all) CPU ticks of the machine so far, from /proc/stat."""
+    try:
+        with open("/proc/stat") as fh:
+            ticks = [int(x) for x in fh.readline().split()[1:]]
+    except (OSError, ValueError):
+        return None
+    return (ticks[7], sum(ticks[:8])) if len(ticks) > 7 else None
+
+
 # --- datasus_ingest ------------------------------------------------------------
 
 
 class DatasusIngest(Workload):
     name = "datasus_ingest"
     steady_kind = "replay"  # the monthly incremental run
+    # Cycle times settle after the second cycle.
+    warmup_cycles = 2
+    nominal_cycle_s = 5.0
 
     def __init__(self, ctx) -> None:
         super().__init__(ctx)
@@ -346,6 +379,7 @@ class AnalyticQueries(RegisteredQueries):
     # Each run measures the first pass of seventeen distinct queries; an
     # untimed warm-up pass would double the length of a run.
     warmup_cycles = 0
+    nominal_cycle_s = 22.0
     names = ANALYTIC_QUERIES
     sf = ANALYTIC_SF
 
@@ -353,6 +387,7 @@ class AnalyticQueries(RegisteredQueries):
 class CorpusCuration(RegisteredQueries):
     name = "corpus_curation"
     names = CURATION_GATES
+    nominal_cycle_s = 10.0
     # The gates build their own fixtures; they read only doc_id < 32 of
     # ``documents``.
     sf = 0.001
