@@ -71,6 +71,15 @@ def events_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _within_gap(w, seconds: int):
+    """``ts`` minus the previous ``ts`` in ``w`` is at most ``seconds``.
+
+    Compared in microseconds, as the oracles' ``INTERVAL`` is: whole-second
+    casts truncate, so a 1800.5 s gap could read as 1800."""
+    us = F.unix_micros("ts")
+    return us - F.lag(us).over(w) <= seconds * 1_000_000
+
+
 @register(
     "events_sessionization",
     oracle="""
@@ -98,7 +107,7 @@ def events_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
     etl_lala_spark.streaming)."""
     ev = load_events(spark, sf_dir)
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    gap_ok = F.col("ts").cast("long") - F.lag(F.col("ts").cast("long")).over(w) <= 1800
+    gap_ok = _within_gap(w, 1800)
     flagged = ev.withColumn("new_session", F.when(gap_ok, F.lit(0)).otherwise(F.lit(1)))
     numbered = flagged.withColumn(
         "session_id",
@@ -939,7 +948,7 @@ def events_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     merges per-shard boundary points — same plan shape one level up."""
     ev = load_events(spark, sf_dir)
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    gap_ok = F.col("ts").cast("long") - F.lag(F.col("ts").cast("long")).over(w) <= 1800
+    gap_ok = _within_gap(w, 1800)
     numbered = ev.withColumn(
         "new_session", F.when(gap_ok, F.lit(0)).otherwise(F.lit(1))
     ).withColumn(

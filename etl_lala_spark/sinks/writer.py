@@ -14,8 +14,9 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from etl_lala_spark.io import tiny_df
@@ -59,21 +60,20 @@ def load_incremental(
         keys = tiny_df(spark, [(v,) for v in existing], f"{part_col} string")
         batch = df.join(F.broadcast(keys), part_col, "left_anti")
 
-    # persist: the count and the write must see the SAME rows — without it
-    # the plan re-executes for the write and a changing/nondeterministic
-    # source could make registros_inseridos disagree with what landed
-    # (same treatment as backfill_partitions)
-    batch = batch.persist()
-    try:
-        inserted = batch.count()
-        if inserted:
-            batch.write.mode("append").partitionBy(part_col).parquet(table_path)
-    finally:
-        batch.unpersist()
+    # One pass: the count is observed on the write itself, so
+    # registros_inseridos is exactly what landed, even from a changing or
+    # nondeterministic source.
+    obs = Observation()
+    observed = batch.observe(obs, F.count(F.lit(1)).alias("n"))
+    observed.write.mode("append").partitionBy(part_col).parquet(table_path)
+    inserted = obs.get["n"]
+    if absent_before and not inserted:
+        # an empty first batch creates nothing: drop the bare directory the
+        # write left behind
+        shutil.rmtree(table_path, ignore_errors=True)
 
     return LoadResult(
-        # criada_agora only when the table actually materialized this run —
-        # an empty first batch skips the write and creates nothing
+        # criada_agora only when the table actually materialized this run
         tabela={
             "nome": os.path.basename(table_path),
             "criada_agora": absent_before and inserted > 0,
@@ -184,8 +184,6 @@ def write_json_with_manifest(
     ESTRUTURA_DADOS_PROCESSADOS.md:33-73): write the records as JSON lines
     and a small manifest with count/column stats computed via ``observe``
     (single pass — no second scan for the stats)."""
-    from pyspark.sql import Observation
-
     obs = Observation(f"manifest_{name}")
     observed = df.observe(obs, F.count(F.lit(1)).alias("total_registros"))
     observed.write.mode("overwrite").json(os.path.join(out_dir, name))
@@ -321,8 +319,6 @@ def stream_scd2(
     tables are small next to facts, so the per-batch rewrite is the cheap
     side; the fact path never rewrites. Returns the started StreamingQuery.
     """
-    import shutil
-
     from etl_lala_spark.operators.relational import scd2_apply
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
@@ -411,8 +407,6 @@ def compact_partitions(
     silently destroy that pruning.
     Returns {files_before, files_after, rows}.
     """
-    import shutil
-
     def count_files(root: str) -> int:
         n = 0
         for dirpath, _dirs, files in os.walk(root):
@@ -487,8 +481,6 @@ def retain_latest_runs(base_dir: str, keep: int = 5) -> list[str]:
     the 5 newest `execucao-*` dirs, ESTRUTURA_DADOS_PROCESSADOS.md:236-239 —
     `ls -t | tail -n +6 | xargs rm -rf`). Ordered by directory mtime,
     newest retained; returns the deleted paths."""
-    import shutil
-
     if not os.path.isdir(base_dir):
         return []
     runs = sorted(
@@ -587,8 +579,6 @@ def maintain_summary(
     At 100 TB the summary is keys-sized (not fact-sized); the per-batch cost
     is one partial agg of the batch + one merge of two key-sized tables.
     Returns the started StreamingQuery."""
-    import shutil
-
     # meta lives INSIDE the table dir (underscore-prefixed: parquet readers
     # ignore it like _SUCCESS), so the batch-id watermark commits in the
     # SAME atomic rename as the merged data — a side file written after the
@@ -834,8 +824,6 @@ def delete_rows(
     into a metadata write; this is the format-free equivalent with the
     same blast-radius bound.)
     """
-    import shutil
-
     k = F.broadcast(keys.select(F.col(key_col)).distinct())
     table = spark.read.parquet(table_path)
     affected = sorted(

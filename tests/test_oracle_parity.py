@@ -102,3 +102,44 @@ def test_query_matches_oracle(spark, sf_dir, name):
     snorm, onorm = normalize(srows, scols), normalize(orows, ocols)
     mismatch = [(a, b) for a, b in zip(snorm, onorm) if a != b][:5]
     assert snorm == onorm, f"{name}: value mismatch, first diffs: {mismatch}"
+
+
+@pytest.mark.parametrize("name", ["events_sessionization", "events_peak_concurrency"])
+def test_session_gap_rule_subsecond_matches_oracle(spark, tmp_path, name):
+    """The 30-minute gap rule compares sub-second timestamps exactly, as the
+    oracle's ``INTERVAL 30 MINUTE`` does: a 1800.5 s gap that reads as 1800 in
+    truncated whole seconds still starts a new session."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t0 = datetime.datetime(2024, 1, 1, 0, 0, 0, 200_000)
+    sec = datetime.timedelta(seconds=1)
+    user1 = [t0, t0 + 1800.5 * sec, t0 + 3600.5 * sec, t0 + 5400.1 * sec]
+    user2 = [t0 + 0.7 * sec, t0 + 1800.9 * sec]  # 1800.2 s: a new session
+    ts = user1 + user2
+    n = len(ts)
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array(range(n), pa.int64()),
+                "ts": pa.array(ts, pa.timestamp("us")),
+                "user_id": pa.array([1] * len(user1) + [2] * len(user2), pa.int64()),
+                "event_type": ["view"] * n,
+                "value": [float(i) for i in range(n)],
+                "props": ["{}"] * n,
+            }
+        ),
+        str(tmp_path / "events.parquet"),
+    )
+    sf = str(tmp_path)
+    sdf = QUERIES[name].fn(spark, sf)
+    srows = [tuple(r) for r in sdf.collect()]
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM read_parquet('{table_path(sf, 'events')}')")
+    res = con.execute(QUERIES[name].oracle)
+    orows = res.fetchall()
+    assert normalize(srows, sdf.columns) == normalize(orows, [d[0] for d in res.description])
+    if name == "events_sessionization":
+        assert [r["n_events"] for r in sdf.collect()] == [1, 3, 1, 1]
