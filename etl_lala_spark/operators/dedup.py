@@ -21,7 +21,7 @@ aggregates) — no Python in the hot path.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from etl_lala_spark.operators.text import tokens
@@ -287,10 +287,10 @@ def minhash_lsh_pairs(
     bands=8 × rows=4 over 32 hashes → candidate probability ≈
     1-(1-j^4)^8: ~0.99 at j=0.8, ~0.24 at j=0.3 — candidates are then
     verified exactly, so precision is exact and only recall is approximate.
-    Returns (doc_a, doc_b, est_jaccard, jaccard). The internal base/
-    signature caches back the RETURNED plan, so they stay pinned until the
-    caller finishes consuming it - sessions running many dedup strategies
-    back-to-back should ``spark.catalog.clearCache()`` between them.
+    Returns (doc_a, doc_b, est_jaccard, jaccard). The base and signature
+    frames are local checkpoints taken at call time: each is computed once,
+    eagerly, and the RETURNED plan reads them, so it stays valid for the
+    session and there is no cache for the caller to release.
     """
     if bands <= 0 or bands > n_hashes or n_hashes % bands:
         # bands > n_hashes would make every band slice EMPTY - one global
@@ -304,10 +304,13 @@ def minhash_lsh_pairs(
     rows = n_hashes // bands
     from etl_lala_spark.io import spread
 
-    # Cached (doc, n_shingles, hashes) base: the cache is a projection-
-    # collapse barrier, so shingling + string-hashing run exactly once and
-    # every derivation below (signatures, bands, inverted index) works on
-    # 8-byte longs — the text never re-enters the pipeline.
+    # Checkpointed (doc, n_shingles, hashes) base: the checkpoint is a
+    # projection-collapse barrier, so shingling + string-hashing run exactly
+    # once and every derivation below (signatures, bands, inverted index)
+    # works on 8-byte longs — the text never re-enters the pipeline. A
+    # checkpoint, not a cache: AQE materialises a cached frame once per
+    # reference in the plan, concurrently, where the eager checkpoint runs
+    # one job.
     base = (
         spread(df.select(text_col, id_col), by=id_col)
         .select(
@@ -319,20 +322,21 @@ def minhash_lsh_pairs(
             F.size("shingles").alias("n_shingles"),
             F.expr("transform(shingles, s -> xxhash64(s))").alias("hashes"),
         )
-        .cache()
+        .localCheckpoint()
     )
-    # Signatures cached too: the self-join below references them on both
-    # sides, and HOF lambdas are interpreted — without the cache the
+    # Signatures checkpointed too: the self-join below references them on
+    # both sides, and HOF lambdas are interpreted — without the barrier the
     # n_hashes × n_shingles remix would run once per reference (measured 3×
     # the whole query's cost).
-    sig = minhash_signatures(base, n_hashes).cache()
+    sig = minhash_signatures(base, n_hashes).localCheckpoint()
     # Hash-keyed inverted index for exact verification — same rationale as
     # shingle_table: shuffle 8 bytes per shingle, not the text.
     sh = base.select("doc", "n_shingles", F.explode("hashes").alias("shingle"))
 
     # band id + band signature hash → bucket key; equality join on it. The
     # bucket is a hash of the signature SLICE for that band — derived from
-    # the cached signature, so band generation costs bands × O(rows) per doc.
+    # the checkpointed signature, so band generation costs bands × O(rows)
+    # per doc.
     band_rows = sig.select(
         "doc",
         F.expr(_band_bucket_expr(bands, rows)).alias("bb"),
@@ -546,55 +550,60 @@ def canonical_components(
     pipeline (pairs alone under-delete: a~b, b~c must drop two docs, not
     one per pair).
 
-    Iterative min-label propagation over the undirected edge set WITH
-    pointer jumping: each round propagates neighbor minima (one join + one
-    aggregation) and then shortcuts every label to its label's label (one
-    self-join), so label distances halve per round and convergence takes
-    O(log diameter) rounds instead of O(diameter) — the difference between
-    ~60 and ~2^60-diameter coverage at a fixed round budget, and the part
-    that matters for chain-shaped near-dup clusters at 100 TB. The loop is
-    driver-side control flow with a per-round convergence ACTION — the data
-    never leaves the cluster. At 100 TB the same loop runs with the labels
-    checkpointed every few rounds to truncate lineage.
-    Returns (doc, canonical).
+    Iterative min-label propagation WITH pointer jumping, so label
+    distances halve per round and convergence takes O(log diameter) rounds
+    instead of O(diameter) — the difference between ~60 and ~2^60-diameter
+    coverage at a fixed round budget, and the part that matters for
+    chain-shaped near-dup clusters at 100 TB. The edge set holds both
+    directions of every pair plus a self-loop per doc, checkpointed once.
+    A round is two checkpoints:
+
+    - propagate: ``edges ⋈ labels`` on ``dst`` and ONE ``groupBy(src)``
+      yields the new label (the min over the neighbours' labels, the
+      self-loop contributing the doc's own) and ``prev``, the own label
+      (the self-loop row's label); round one reads the edges alone, since
+      every label starts as the doc itself;
+    - pointer jump: a self-join relabels each doc through its label's
+      label.
+
+    Convergence (no label changed) is an ``Observation`` carried by the
+    pointer-jump checkpoint, not a separate action. The loop is driver-side
+    control flow; the data never leaves the cluster. Returns
+    (doc, canonical).
     """
+    both_ways = pairs.select(
+        F.col(a_col).alias("src"), F.col(b_col).alias("dst")
+    ).unionByName(
+        pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst"))
+    )
     edges = (
-        pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-        .unionByName(
-            pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst"))
-        )
+        both_ways.unionByName(both_ways.select("src", F.col("src").alias("dst")))
         .distinct()
-        .cache()
+        .localCheckpoint()
     )
-    labels0 = (
-        edges.select(F.col("src").alias("doc"))
-        .distinct()
-        .withColumn("canonical", F.col("doc"))
-        .cache()
+    own = F.col("src") == F.col("dst")
+    labels = edges.filter(own).select(
+        F.col("src").alias("doc"), F.col("dst").alias("canonical")
     )
-    labels = labels0
-    for _ in range(max_iterations):
-        neighbor_min = (
+    for round_no in range(max_iterations):
+        nbr = (
             edges.join(labels, edges.dst == labels.doc)
-            .groupBy("src")
-            .agg(F.min("canonical").alias("nbr_min"))
+            if round_no
+            else edges.withColumn("canonical", F.col("dst"))
         )
         # localCheckpoint (eager), NOT cache: the pointer-jump self-join
         # references this frame twice, so a cache-based loop DOUBLES the
         # logical plan every round — exponential plan growth that OOMs the
         # driver during plan canonicalization around round ~15. Checkpoint
         # truncates the PLAN, not just the execution, keeping every round's
-        # plan constant-size; it also serves as the per-round materialization
-        # the convergence aggregate reads for free.
+        # plan constant-size.
         propagated = (
-            labels.join(neighbor_min, labels.doc == neighbor_min.src, "left")
-            .select(
-                "doc",
-                F.col("canonical").alias("prev"),
-                F.least(
-                    F.col("canonical"), F.coalesce("nbr_min", F.col("canonical"))
-                ).alias("canonical"),
+            nbr.groupBy("src")
+            .agg(
+                F.min(F.when(own, F.col("canonical"))).alias("prev"),
+                F.min("canonical").alias("canonical"),
             )
+            .withColumnRenamed("src", "doc")
             .localCheckpoint()
         )
         # Pointer jump: relabel through the canonical's own (propagated)
@@ -604,6 +613,7 @@ def canonical_components(
         canon_map = propagated.select(
             F.col("doc").alias("c_doc"), F.col("canonical").alias("c_canon")
         )
+        changed = Observation()
         stepped = (
             propagated.join(
                 canon_map, propagated.canonical == canon_map.c_doc, "left"
@@ -613,18 +623,15 @@ def canonical_components(
                 "prev",
                 F.coalesce("c_canon", "canonical").alias("canonical"),
             )
+            .observe(
+                changed,
+                F.count_if(F.col("canonical") != F.col("prev")).alias("n"),
+            )
             .localCheckpoint()
         )
-        changed = stepped.agg(
-            F.sum(F.when(F.col("canonical") != F.col("prev"), 1).otherwise(0))
-        ).first()[0]
         labels = stepped.select("doc", "canonical")
-        if not changed:
+        if not changed.get["n"]:
             break
-    edges.unpersist()
-    # the seed cache is superseded after round 1; the result rides the
-    # localCheckpoints, so dropping it frees executor storage
-    labels0.unpersist()
     return labels
 
 
@@ -1210,10 +1217,10 @@ def minhash_incremental_pairs(
     under identical parameters, and a caller-supplied k that disagreed
     with the store would silently report ~zero similarity for true dups.
 
-    The internal batch base/signature caches back the RETURNED plan (same
-    contract as ``minhash_lsh_pairs``), so they stay pinned until the
-    caller finishes consuming it — a loop calling this once per batch
-    should ``spark.catalog.clearCache()`` between batches."""
+    The internal batch base/signature caches back the RETURNED plan, so
+    they stay pinned until the caller finishes consuming it — a loop
+    calling this once per batch should ``spark.catalog.clearCache()``
+    between batches."""
     import json
     import os
 

@@ -18,7 +18,8 @@ import os
 import shutil
 import tempfile
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 _CLEANUP_REGISTERED: set[str] = set()
 
@@ -39,6 +40,18 @@ def gate_workdir(spark: SparkSession, name: str) -> str:
     shutil.rmtree(work, ignore_errors=True)
     os.makedirs(work)
     return work
+
+
+def counted_checkpoint(df: DataFrame, agg: Column | None = None) -> tuple:
+    """Eagerly ``localCheckpoint`` ``df`` and return ``(checkpoint, n)``,
+    where ``n`` is the row count observed by the checkpoint job itself: a
+    gate's stage count without a ``count()`` job that re-scans the
+    checkpoint. ``agg`` observes another aggregate instead of the count
+    (e.g. ``F.sum(...)``, which is ``None`` over an empty frame)."""
+    obs = Observation()
+    agg = F.count(F.lit(1)) if agg is None else agg
+    cp = df.observe(obs, agg.alias("n")).localCheckpoint(eager=True)
+    return cp, obs.get["n"]
 
 
 # --- fixture-time accounting -------------------------------------------------

@@ -2895,6 +2895,7 @@ def _corpus_build_tail(spark, ok, stage, stage_rows):
         split_sentences,
     )
     from etl_lala_spark.operators.web import detect_charset
+    from etl_lala_spark.plans._gates import counted_checkpoint
     from etl_lala_spark.sinks.writer import shard_assignments
     from etl_lala_spark.sources.warc import extract_warc_records
 
@@ -2923,8 +2924,8 @@ def _corpus_build_tail(spark, ok, stage, stage_rows):
     # (the source histogram, the URL dedup count, the main-content chain) —
     # checkpointing `pages` instead re-ran the triple-regex charset scan
     # for each of them
-    cs = detect_charset(pages).localCheckpoint(eager=True)
-    stage("warc_responses", cs.count())
+    cs, n = counted_checkpoint(detect_charset(pages))
+    stage("warc_responses", n)
     by_src = {
         r["charset_source"]: r["n"]
         for r in cs.groupBy("charset_source")
@@ -2952,10 +2953,10 @@ def _corpus_build_tail(spark, ok, stage, stage_rows):
     # an O(rounds)-deep join lineage and each downstream stage-count action
     # would re-execute it from scratch otherwise (measured 2x wall on the
     # whole gate)
-    pairs = pairs.repartition(4).localCheckpoint(eager=True)
-    stage("neardup_pairs", pairs.count())
+    pairs, n = counted_checkpoint(pairs.repartition(4))
+    stage("neardup_pairs", n)
     comp = canonical_components(pairs).withColumnRenamed("doc", "doc_id")
-    survivors = (
+    survivors, n = counted_checkpoint(
         docs.join(comp, "doc_id", "left")
         .filter(
             F.col("canonical").isNull()
@@ -2963,10 +2964,8 @@ def _corpus_build_tail(spark, ok, stage, stage_rows):
         )
         .select("doc_id", "text")
         .repartition(4)
-        .localCheckpoint(eager=True)
     )
-    stage("dedup_survivors", survivors.count())
-    spark.catalog.clearCache()  # release the LSH signature caches
+    stage("dedup_survivors", n)
 
     sents = split_sentences(survivors, text_col="text")
     stage("sentences", sents.count())
@@ -2980,11 +2979,8 @@ def _corpus_build_tail(spark, ok, stage, stage_rows):
         ).alias("text")
     )
     ld = line_dedup(sent_text, text_col="text", id_col="doc_id")
-    ld = ld.repartition(4).localCheckpoint(eager=True)
-    stage(
-        "boiler_lines_removed",
-        ld.agg(F.sum("n_removed")).collect()[0][0] or 0,
-    )
+    ld, n = counted_checkpoint(ld.repartition(4), F.sum("n_removed"))
+    stage("boiler_lines_removed", n or 0)
 
     gq = gopher_quality_rules(
         ld.select("doc_id", F.col("clean_text").alias("text")), min_words=30
@@ -2992,13 +2988,12 @@ def _corpus_build_tail(spark, ok, stage, stage_rows):
     kept = gq.filter(F.col("keep")).select("doc_id", "text")
     stage("gopher_keep", kept.count())
 
-    final = (
+    final, n = counted_checkpoint(  # 6 rows; feeds training + export
         badword_stats(kept, ["zonkword"])
         .filter(F.col("n_badwords") == 0)
         .select("doc_id", "text")
-        .localCheckpoint(eager=True)  # 6 rows; feeds training + export
     )
-    stage("badword_keep", final.count())
+    stage("badword_keep", n)
 
     lang_arr = F.array(*[F.lit(x) for x in _CB_LANGS])
     labeled = final.withColumn(
@@ -3809,6 +3804,8 @@ def _recrawl_tail(
     import hashlib
     import os as _os
 
+    from etl_lala_spark.plans._gates import counted_checkpoint
+
     fetched = spark.read.parquet(_os.path.join(work, "fetched")).withColumn(
         "doc_id",
         F.regexp_extract("url", r"/page(\d+)$", 1).cast("long"),
@@ -3847,10 +3844,14 @@ def _recrawl_tail(
         cdx_line(d, 20250101000000, dig, f"http://origin/page{d}")
         for d, dig in sorted(old_digest.items())
     ]
-    new_sel = select_captures(
-        parse_cdxj(spark.createDataFrame([(x,) for x in new_lines], "line string"))
-    ).localCheckpoint(eager=True)
-    stage("new_snapshot_selected", new_sel.count())
+    new_sel, n = counted_checkpoint(
+        select_captures(
+            parse_cdxj(
+                spark.createDataFrame([(x,) for x in new_lines], "line string")
+            )
+        )
+    )
+    stage("new_snapshot_selected", n)
     old_sel = select_captures(
         parse_cdxj(spark.createDataFrame([(x,) for x in old_lines], "line string"))
     )
@@ -3862,29 +3863,26 @@ def _recrawl_tail(
     for c in ("unchanged", "changed", "added", "vanished"):
         stage(f"delta_{c}", by_change.get(c, 0))
 
-    batch = extract_main_content(
-        fetched.filter(F.col("status") == "ok").select(
-            "doc_id", F.col("content").cast("string").alias("html")
-        )
-    ).select("doc_id", F.col("content").alias("text")).localCheckpoint(
-        eager=True
+    batch, n_batch = counted_checkpoint(
+        extract_main_content(
+            fetched.filter(F.col("status") == "ok").select(
+                "doc_id", F.col("content").cast("string").alias("html")
+            )
+        ).select("doc_id", F.col("content").alias("text"))
     )
-    n_batch = batch.count()
     stage("extracted_changed_slice", n_batch)
 
     # near-dup the incoming slice against the PERSISTED index (the corpus
     # is never re-shingled), then pin every frame before the store mutates
-    pairs = minhash_incremental_pairs(
-        batch, index_path, threshold=0.5
-    ).localCheckpoint(eager=True)
-    stage("neardup_pairs_vs_index", pairs.count())
-    dropped = pairs.select(F.col("new_doc").alias("doc_id")).distinct()
-    survivors = batch.join(dropped, "doc_id", "left_anti").localCheckpoint(
-        eager=True
+    pairs, n = counted_checkpoint(
+        minhash_incremental_pairs(batch, index_path, threshold=0.5)
     )
-    # n_batch was already materialized for the extracted_changed_slice
-    # stage — reuse it instead of re-running batch.count()
-    stage("neardup_dropped", n_batch - survivors.count())
+    stage("neardup_pairs_vs_index", n)
+    dropped = pairs.select(F.col("new_doc").alias("doc_id")).distinct()
+    survivors, n = counted_checkpoint(
+        batch.join(dropped, "doc_id", "left_anti")
+    )
+    stage("neardup_dropped", n_batch - n)
     spark.catalog.clearCache()  # release the incremental probe caches
 
     from etl_lala_spark.operators.web import _parquet_dir_rows
@@ -3990,6 +3988,7 @@ def web_corpus_wet_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         gopher_quality_rules,
         split_sentences,
     )
+    from etl_lala_spark.plans._gates import counted_checkpoint
     from etl_lala_spark.sinks.writer import shard_assignments
     from etl_lala_spark.sources.warc import (
         extract_warc_records,
@@ -4035,14 +4034,16 @@ def web_corpus_wet_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
-        pages = recs.select(
-            F.regexp_extract("target_uri", r"/doc(\d+)", 1)
-            .cast("long")
-            .alias("doc_id"),
-            canonicalize_url(F.col("target_uri")).alias("canonical_url"),
-            F.col("payload").cast("string").alias("text"),
-        ).repartition(4).localCheckpoint(eager=True)
-        stage("wet_records", pages.count())
+        pages, n = counted_checkpoint(
+            recs.select(
+                F.regexp_extract("target_uri", r"/doc(\d+)", 1)
+                .cast("long")
+                .alias("doc_id"),
+                canonicalize_url(F.col("target_uri")).alias("canonical_url"),
+                F.col("payload").cast("string").alias("text"),
+            ).repartition(4)
+        )
+        stage("wet_records", n)
 
         uniq = (
             pages.groupBy("canonical_url")
@@ -4052,14 +4053,14 @@ def web_corpus_wet_build(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("_p.text").alias("text"),
             )
         )
-        docs = uniq.repartition(4).localCheckpoint(eager=True)
-        stage("url_unique", docs.count())
+        docs, n = counted_checkpoint(uniq.repartition(4))
+        stage("url_unique", n)
 
         pairs = minhash_lsh_pairs(docs, threshold=0.8)
-        pairs = pairs.repartition(4).localCheckpoint(eager=True)
-        stage("neardup_pairs", pairs.count())
+        pairs, n = counted_checkpoint(pairs.repartition(4))
+        stage("neardup_pairs", n)
         comp = canonical_components(pairs).withColumnRenamed("doc", "doc_id")
-        survivors = (
+        survivors, n = counted_checkpoint(
             docs.join(comp, "doc_id", "left")
             .filter(
                 F.col("canonical").isNull()
@@ -4067,10 +4068,8 @@ def web_corpus_wet_build(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .select("doc_id", "text")
             .repartition(4)
-            .localCheckpoint(eager=True)
         )
-        stage("dedup_survivors", survivors.count())
-        spark.catalog.clearCache()  # release the LSH signature caches
+        stage("dedup_survivors", n)
 
         sents = split_sentences(survivors, text_col="text")
         stage("sentences", sents.count())
@@ -4086,11 +4085,8 @@ def web_corpus_wet_build(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("text")
         )
         ld = line_dedup(sent_text, text_col="text", id_col="doc_id")
-        ld = ld.repartition(4).localCheckpoint(eager=True)
-        stage(
-            "boiler_lines_removed",
-            ld.agg(F.sum("n_removed")).collect()[0][0] or 0,
-        )
+        ld, n = counted_checkpoint(ld.repartition(4), F.sum("n_removed"))
+        stage("boiler_lines_removed", n or 0)
 
         gq = gopher_quality_rules(
             ld.select("doc_id", F.col("clean_text").alias("text")),
@@ -4099,13 +4095,12 @@ def web_corpus_wet_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         kept = gq.filter(F.col("keep")).select("doc_id", "text")
         stage("gopher_keep", kept.count())
 
-        final = (
+        final, n = counted_checkpoint(
             badword_stats(kept, ["zonkword"])
             .filter(F.col("n_badwords") == 0)
             .select("doc_id", "text")
-            .localCheckpoint(eager=True)
         )
-        stage("badword_keep", final.count())
+        stage("badword_keep", n)
 
         sa = shard_assignments(final, 480, seed="corpus")
         agg = sa.agg(
@@ -4170,7 +4165,11 @@ def web_cdx_index_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         parse_cdxj,
         select_captures,
     )
-    from etl_lala_spark.plans._gates import fixture_region, gate_workdir
+    from etl_lala_spark.plans._gates import (
+        counted_checkpoint,
+        fixture_region,
+        gate_workdir,
+    )
     from etl_lala_spark.sources.fetch import fetch_ranges
     from etl_lala_spark.sources.warc import (
         extract_warc_records,
@@ -4264,12 +4263,11 @@ def web_cdx_index_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             .load(warcdir)
             .select(F.col("path"), F.col("content"))
         )
-        recs = (
+        recs, n = counted_checkpoint(
             extract_warc_records(blobs, types=None)  # warcinfo rows too
             .repartition(4)
-            .localCheckpoint(eager=True)
         )
-        stage("warc_records", recs.count())
+        stage("warc_records", n)
         lines = cdx_index_lines(recs, file_col="file").localCheckpoint(
             eager=True
         )
@@ -4286,8 +4284,8 @@ def web_cdx_index_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         stage("index_lines", counts["n_lines"])
         stage("index_redirect_lines", counts["n_redir"])
         stage("parse_errors", counts["n_err"])
-        sel = select_captures(parsed).localCheckpoint(eager=True)
-        stage("selected_newest_good", sel.count())
+        sel, n = counted_checkpoint(select_captures(parsed))
+        stage("selected_newest_good", n)
 
         server = http.server.ThreadingHTTPServer(("127.0.0.1", 0), Handler)
         port = server.server_address[1]

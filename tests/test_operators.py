@@ -628,6 +628,69 @@ def test_canonical_components_long_chain_converges_by_pointer_jumping(spark):
     assert all(r["canonical"] == 0 for r in rows)
 
 
+def _union_find_labels(pairs):
+    """Reference components: every doc -> the minimum id of its component."""
+    parent: dict = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in list(parent)}
+
+
+@pytest.mark.parametrize(
+    "pairs",
+    [
+        [(7, 7)],  # a self-pair alone: one singleton component
+        [(3, 3), (3, 8), (8, 3), (8, 3), (5, 5)],  # self + reversed dups
+        # two disjoint chains, one written backwards
+        [(i, i + 1) for i in range(10, 16)]
+        + [(i + 1, i) for i in range(40, 47)],
+    ],
+    ids=["self_pair", "reversed_duplicates", "disjoint_chains"],
+)
+def test_canonical_components_matches_union_find(spark, pairs):
+    df = spark.createDataFrame(pairs, "doc_a long, doc_b long")
+    got = {
+        r["doc"]: r["canonical"] for r in dd.canonical_components(df).collect()
+    }
+    assert got == _union_find_labels(pairs)
+
+
+def test_canonical_components_job_budget(spark):
+    """8 planted 4-member cliques (48 pairs, the corpus gates' near-dup
+    shape): a round is a propagate checkpoint plus a pointer-jump
+    checkpoint that also observes convergence, so the whole operator stays
+    within 17 Spark jobs."""
+    pairs = [
+        (c * 4 + i, c * 4 + j)
+        for c in range(8)
+        for i in range(4)
+        for j in range(i + 1, 4)
+    ]
+    df = spark.createDataFrame(pairs, "doc_a long, doc_b long")
+    sc = spark.sparkContext
+    group = "canonical_components_job_budget"
+    sc.setJobGroup(group, "canonical_components")
+    try:
+        comp = dd.canonical_components(df)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert {r["doc"]: r["canonical"] for r in comp.collect()} == (
+        _union_find_labels(pairs)
+    )
+    assert 0 < len(jobs) <= 17, sorted(jobs)
+
+
 def test_power_iteration_recovers_planted_direction(spark):
     import math
 

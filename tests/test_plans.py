@@ -729,3 +729,17 @@ def test_per_host_shuffle_skew_posture(spark):
 
     n_exchanges = shuffles(waves._jdf.queryExecution().executedPlan())
     assert n_exchanges == 1, f"waves must shuffle exactly once, saw {n_exchanges}"
+
+
+def test_counted_checkpoint_observes_row_count(spark):
+    from pyspark.sql import functions as F
+
+    from etl_lala_spark.plans._gates import counted_checkpoint
+
+    df = spark.range(0, 37).repartition(3).filter(F.col("id") % 4 != 0)
+    cp, n = counted_checkpoint(df)
+    assert n == df.count() == cp.count() == 27
+    empty, n0 = counted_checkpoint(df.filter(F.col("id") < 0))
+    assert n0 == 0 and empty.count() == 0
+    _, total = counted_checkpoint(df, F.sum("id"))
+    assert total == sum(i for i in range(37) if i % 4)
