@@ -457,10 +457,14 @@ def fetch_http_loopback(spark: SparkSession, sf_dir: str) -> DataFrame:
     and bench's local availableNow-style execution (spark.speculation
     defaults off); a re-run task would see 200-first and flip
     ``attempts`` for the %6==0 rows."""
-    import http.server
     import threading
 
-    from etl_lala_spark.plans._gates import fixture_region, gate_workdir
+    from etl_lala_spark.plans._gates import (
+        QuietHandler,
+        fixture_region,
+        gate_workdir,
+        loopback_server,
+    )
     from etl_lala_spark.sources.fetch import fetch_to_staging
 
     with fixture_region("fetch_http_loopback"):
@@ -479,10 +483,7 @@ def fetch_http_loopback(spark: SparkSession, sf_dir: str) -> DataFrame:
     seen: set[str] = set()
     lock = threading.Lock()
 
-    class Handler(http.server.BaseHTTPRequestHandler):
-        def log_message(self, *a):  # keep gate output clean
-            pass
-
+    class Handler(QuietHandler):
         def do_GET(self):
             key = int(self.path.rstrip("/").rsplit("/", 1)[-1].split(".")[0])
             cat = key % 6
@@ -501,11 +502,7 @@ def fetch_http_loopback(spark: SparkSession, sf_dir: str) -> DataFrame:
             self.end_headers()
             self.wfile.write(body)
 
-    server = http.server.ThreadingHTTPServer(("127.0.0.1", 0), Handler)
-    port = server.server_address[1]
-    t = threading.Thread(target=server.serve_forever, daemon=True)
-    t.start()
-    try:
+    with loopback_server(Handler) as base:
         # pre-stage the % 6 == 3 destinations with their exact bodies
         with fixture_region("fetch_http_loopback"):
             for k, _ in nations:
@@ -515,8 +512,7 @@ def fetch_http_loopback(spark: SparkSession, sf_dir: str) -> DataFrame:
                     ) as fh:
                         fh.write(bodies[k])
         manifest = spark.createDataFrame(
-            [(f"http://127.0.0.1:{port}/{k}.bin", f"nation_{k}.bin")
-             for k, _ in nations],
+            [(f"{base}/{k}.bin", f"nation_{k}.bin") for k, _ in nations],
             "url string, fname string",
         ).repartition(8)
         result = fetch_to_staging(
@@ -524,9 +520,6 @@ def fetch_http_loopback(spark: SparkSession, sf_dir: str) -> DataFrame:
             max_bytes=max_bytes, retries=1, backoff_s=0.05,
         )
         result.write.mode("overwrite").parquet(os.path.join(work, "out"))
-    finally:
-        server.shutdown()
-        server.server_close()
     out = spark.read.parquet(os.path.join(work, "out"))
     return (
         out.select(
@@ -2420,12 +2413,16 @@ def web_cdx_ranged_fetch(spark: SparkSession, sf_dir: str) -> DataFrame:
     mapInPandas task per plan partition, and extraction is the same
     Arrow-batched one-to-many kernel as ``web_warc_extract``."""
     import gzip
-    import http.server
     import re as _re
-    import threading
 
     from etl_lala_spark.operators.web import parse_cdxj, select_captures
-    from etl_lala_spark.plans._gates import fixture_region, gate_workdir
+    from etl_lala_spark.plans._gates import (
+        fixture_region,
+        gate_workdir,
+        loopback_server,
+        ranged_file_handler,
+        shuffle_width,
+    )
     from etl_lala_spark.sources.fetch import fetch_ranges
     from etl_lala_spark.sources.warc import (
         extract_warc_records,
@@ -2486,17 +2483,10 @@ def web_cdx_ranged_fetch(spark: SparkSession, sf_dir: str) -> DataFrame:
                     f' "filename": "crawl{d}.warc.gz"}}'
                 )
 
-    class Handler(http.server.BaseHTTPRequestHandler):
-        def log_message(self, *a):
-            pass
-
+    class Handler(ranged_file_handler(warcdir)):
         def do_GET(self):
-            fn = os.path.join(warcdir, self.path.lstrip("/"))
-            try:
-                with open(fn, "rb") as fh:
-                    data = fh.read()
-            except OSError:
-                self.send_error(404)
+            data = self.read_file()
+            if data is None:
                 return
             d = int(_re.search(r"crawl(\d+)\.warc\.gz$", self.path).group(1))
             rng = self.headers.get("Range")
@@ -2515,21 +2505,13 @@ def web_cdx_ranged_fetch(spark: SparkSession, sf_dir: str) -> DataFrame:
             self.end_headers()
             self.wfile.write(body)
 
-    server = http.server.ThreadingHTTPServer(("127.0.0.1", 0), Handler)
-    port = server.server_address[1]
-    t = threading.Thread(target=server.serve_forever, daemon=True)
-    t.start()
     # ≤80-capture planting end to end: run selection, fetch and the digest
-    # join at a matching shuffle width (the whole-gate override discipline
-    # of web_corpus_build) — this also sizes the fetch leg, whose task
-    # count is select_captures' shuffle output width.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    # join at a matching shuffle width — this also sizes the fetch leg,
+    # whose task count is select_captures' shuffle output width.
+    with shuffle_width(spark, 8), loopback_server(Handler) as base:
         idx = spark.createDataFrame([(x,) for x in cdx_lines], "line string")
         sel = select_captures(parse_cdxj(idx)).withColumn(
-            "url",
-            F.concat(F.lit(f"http://127.0.0.1:{port}/"), F.col("filename")),
+            "url", F.concat(F.lit(f"{base}/"), F.col("filename"))
         )
         fetched = fetch_ranges(
             sel.select("url", "offset", "length"), max_bytes=1 << 20
@@ -2570,12 +2552,8 @@ def web_cdx_ranged_fetch(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         # materialize while the loopback server is alive (the returned
-        # DataFrame is lazy); same pattern as fetch_http_loopback
+        # DataFrame is lazy)
         out.write.mode("overwrite").parquet(os.path.join(work, "out"))
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        server.shutdown()
-        server.server_close()
     return spark.read.parquet(os.path.join(work, "out")).orderBy("surt")
 
 
@@ -2720,14 +2698,27 @@ def web_corpus_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     is distributed. The stage counts collapse each frame to one integer,
     so the gate's output is O(stages) regardless of corpus size."""
     import gzip
-    import http.server
-    import re as _re
-    import threading
 
-    from etl_lala_spark.operators.web import parse_cdxj, select_captures
-    from etl_lala_spark.plans._gates import fixture_region, gate_workdir
+    from etl_lala_spark.functions.scalars import canonicalize_url
+    from etl_lala_spark.operators import ml
+    from etl_lala_spark.operators.text import extract_main_content
+    from etl_lala_spark.operators.web import (
+        detect_charset,
+        parse_cdxj,
+        select_captures,
+    )
+    from etl_lala_spark.plans._gates import (
+        StageLog,
+        counted_checkpoint,
+        fixture_region,
+        gate_workdir,
+        loopback_server,
+        ranged_file_handler,
+        shuffle_width,
+    )
     from etl_lala_spark.sources.fetch import fetch_ranges
     from etl_lala_spark.sources.warc import (
+        extract_warc_records,
         http_response_bytes,
         warc_record_bytes,
     )
@@ -2807,82 +2798,132 @@ def web_corpus_build(spark: SparkSession, sf_dir: str) -> DataFrame:
             ) as fh:
                 fh.write(b"".join(members))
 
-    class Handler(http.server.BaseHTTPRequestHandler):
-        def log_message(self, *a):
-            pass
-
-        def do_GET(self):
-            fn = os.path.join(warcdir, self.path.lstrip("/"))
-            try:
-                with open(fn, "rb") as fh:
-                    data = fh.read()
-            except OSError:
-                self.send_error(404)
-                return
-            m = _re.match(r"bytes=(\d+)-(\d+)$", self.headers.get("Range", ""))
-            lo, hi = int(m.group(1)), int(m.group(2))
-            body = data[lo : hi + 1]
-            self.send_response(206)
-            self.send_header("Content-Range", f"bytes {lo}-{hi}/{len(data)}")
-            self.send_header("Content-Length", str(len(body)))
-            self.end_headers()
-            self.wfile.write(body)
-
-    stage_rows: list[tuple[int, str, int]] = []
-
-    def stage(name: str, count: int) -> None:
-        stage_rows.append((len(stage_rows), name, int(count)))
-
+    log = StageLog()
     # EVERY frame in this gate is bounded by the 64-capture planting (the
     # gate's own constant, not a data-dependent sniff): run the WHOLE
     # chain — CDX selection and the fetch leg included, not just the tail —
-    # at a matching shuffle width instead of paying session-width stages
-    # per tiny frame (the stream-twin gates' discipline,
-    # plans/stream_twins.py:538). The override also sizes the fetch plan:
+    # at a matching shuffle width. The width also sizes the fetch plan:
     # select_captures' shuffle output is what fetch_ranges maps over, so 64
     # one-row HTTP gets ride 8 Python-worker tasks instead of 32 task
-    # launches with 2 rows each. Restored in the finally; a production
-    # corpus keeps the session conf.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        stage("cdx_lines", len(cdx_lines))
+    # launches with 2 rows each.
+    with shuffle_width(spark, 8):
+        log("cdx_lines", len(cdx_lines))
         idx = spark.createDataFrame([(x,) for x in cdx_lines], "line string")
         sel = select_captures(parse_cdxj(idx))
-        stage("cdx_selected", sel.count())
+        log("cdx_selected", sel.count())
 
-        server = http.server.ThreadingHTTPServer(("127.0.0.1", 0), Handler)
-        port = server.server_address[1]
-        threading.Thread(target=server.serve_forever, daemon=True).start()
-        try:
+        with loopback_server(ranged_file_handler(warcdir)) as base:
             plan = sel.select(
-                F.concat(
-                    F.lit(f"http://127.0.0.1:{port}/"), F.col("filename")
-                ).alias("url"),
+                F.concat(F.lit(f"{base}/"), F.col("filename")).alias("url"),
                 "offset",
                 "length",
             )
             fetched = fetch_ranges(plan, max_bytes=1 << 20)
             # materialize while the loopback server is alive (lazy plans
-            # would re-fetch after shutdown) — same pattern as
-            # web_cdx_ranged_fetch
+            # would re-fetch after shutdown)
             fetched.filter(F.col("status") == "ok").write.mode(
                 "overwrite"
             ).parquet(os.path.join(work, "fetched"))
-        finally:
-            server.shutdown()
-            server.server_close()
         ok = spark.read.parquet(os.path.join(work, "fetched"))
-        stage("fetched_ok", ok.count())
+        log("fetched_ok", ok.count())
 
-        return _corpus_build_tail(spark, ok, stage, stage_rows)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+        recs = extract_warc_records(
+            ok.select(
+                F.concat(
+                    "url", F.lit("#"), F.col("offset").cast("string")
+                ).alias("path"),
+                "content",
+            ),
+            types=("response",),
+        )
+        # 64 small rows from here on: collapse to a handful of partitions so
+        # the dedup/training stages don't pay a 200-task shuffle per tiny
+        # frame in a default-conf session, and pin the fetch fan-out with a
+        # checkpoint
+        pages = recs.select(
+            F.regexp_extract("target_uri", r"/doc(\d+)", 1)
+            .cast("long")
+            .alias("doc_id"),
+            "target_uri",
+            F.col("http_content_type").alias("content_type"),
+            F.col("payload").cast("string").alias("html"),
+        ).repartition(4)
+        # checkpoint AFTER the charset pass, not before it: detect_charset
+        # is 1:1 (it appends charset/charset_source), and three consumers
+        # read it (the source histogram, the URL dedup, the main-content
+        # chain) — checkpointing `pages` instead re-ran the triple-regex
+        # charset scan for each of them
+        cs, n = counted_checkpoint(detect_charset(pages))
+        log("warc_responses", n)
+        by_src = {
+            r["charset_source"]: r["n"]
+            for r in cs.groupBy("charset_source")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .collect()
+        }
+        log("charset_header", by_src.get("header", 0))
+        log("charset_meta", by_src.get("meta", 0))
+
+        uniq = (
+            cs.withColumn(
+                "canonical_url", canonicalize_url(F.col("target_uri"))
+            )
+            .groupBy("canonical_url")
+            .agg(F.min(F.struct("target_uri", "doc_id", "html")).alias("_p"))
+            .select(
+                F.col("_p.doc_id").alias("doc_id"),
+                F.col("_p.html").alias("html"),
+            )
+        )
+        # extract_main_content keeps one row per input, so the tail's
+        # url_unique count is taken on its output
+        final = _curation_tail(
+            extract_main_content(uniq).select(
+                "doc_id", F.col("content").alias("text")
+            ),
+            log,
+        )
+
+        lang_arr = F.array(*[F.lit(x) for x in _CB_LANGS])
+        labeled = final.withColumn(
+            "lang_true",
+            F.element_at(lang_arr, (F.col("doc_id") % 3 + 1).cast("int")),
+        )
+        # lr/iters chosen by a margin sweep (not just diagonal/off-diagonal):
+        # at lr=16/iters=6 the min true-vs-best-other logit gap across the 6
+        # docs is 0.050 vs 0.019 at the lr=4/iters=8 default — 2.6x the
+        # robustness headroom against future numeric-path changes, and three
+        # fewer training rounds. Deterministic either way (no RNG).
+        # One materialized feature frame for train + serve (deterministic
+        # map, bit-identical to per-phase rebuilds — same reuse as
+        # langid_trained)
+        feats = ml.hashed_char_ngram_features(
+            labeled, n_buckets=16
+        ).localCheckpoint()
+        model = ml.langid_train(
+            labeled, _CB_LANGS, label_col="lang_true", n_buckets=16, iters=6,
+            lr=16.0, feats=feats,
+        )
+        pred = ml.langid_predict(labeled, model, feats=feats)
+        diag = pred.agg(
+            F.sum((F.col("pred_lang") == F.col("lang_true")).cast("bigint"))
+            .alias("d"),
+            F.sum((F.col("pred_lang") != F.col("lang_true")).cast("bigint"))
+            .alias("o"),
+        ).collect()[0]
+        log("langid_diagonal", diag["d"] or 0)
+        log("langid_offdiag", diag["o"] or 0)
+
+        _shard_stages(final, log)
+    return log.frame(spark)
 
 
-def _corpus_build_tail(spark, ok, stage, stage_rows):
-    from etl_lala_spark.functions.scalars import canonicalize_url
-    from etl_lala_spark.operators import ml
+def _curation_tail(docs: DataFrame, log) -> DataFrame:
+    """The curation stages both corpus gates run on their URL-unique
+    ``(doc_id, text)`` frame: MinHash near-dup -> sentence split ->
+    cross-doc line dedup -> Gopher -> badwords. Logs ``url_unique``
+    through ``badword_keep`` and returns the checkpointed survivors. Runs
+    at the caller's shuffle width."""
     from etl_lala_spark.operators.dedup import (
         canonical_components,
         line_dedup,
@@ -2890,71 +2931,21 @@ def _corpus_build_tail(spark, ok, stage, stage_rows):
     )
     from etl_lala_spark.operators.text import (
         badword_stats,
-        extract_main_content,
         gopher_quality_rules,
         split_sentences,
     )
-    from etl_lala_spark.operators.web import detect_charset
     from etl_lala_spark.plans._gates import counted_checkpoint
-    from etl_lala_spark.sinks.writer import shard_assignments
-    from etl_lala_spark.sources.warc import extract_warc_records
 
-    recs = extract_warc_records(
-        ok.select(
-            F.concat(
-                "url", F.lit("#"), F.col("offset").cast("string")
-            ).alias("path"),
-            "content",
-        ),
-        types=("response",),
-    )
-    # 64 small rows from here on: collapse to a handful of partitions so the
-    # dedup/training stages don't pay a 200-task shuffle per tiny frame in a
-    # default-conf session, and pin the fetch fan-out with a checkpoint
-    pages = recs.select(
-        F.regexp_extract("target_uri", r"/doc(\d+)", 1)
-        .cast("long")
-        .alias("doc_id"),
-        "target_uri",
-        F.col("http_content_type").alias("content_type"),
-        F.col("payload").cast("string").alias("html"),
-    ).repartition(4)
-    # checkpoint AFTER the charset pass, not before it: detect_charset is
-    # 1:1 (it appends charset/charset_source), and three consumers read it
-    # (the source histogram, the URL dedup count, the main-content chain) —
-    # checkpointing `pages` instead re-ran the triple-regex charset scan
-    # for each of them
-    cs, n = counted_checkpoint(detect_charset(pages))
-    stage("warc_responses", n)
-    by_src = {
-        r["charset_source"]: r["n"]
-        for r in cs.groupBy("charset_source")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    stage("charset_header", by_src.get("header", 0))
-    stage("charset_meta", by_src.get("meta", 0))
+    docs, n = counted_checkpoint(docs)  # dedup probes it repeatedly
+    log("url_unique", n)
 
-    uniq = (
-        cs.withColumn("canonical_url", canonicalize_url(F.col("target_uri")))
-        .groupBy("canonical_url")
-        .agg(F.min(F.struct("target_uri", "doc_id", "html")).alias("_p"))
-        .select(
-            F.col("_p.doc_id").alias("doc_id"), F.col("_p.html").alias("html")
-        )
-    )
-    stage("url_unique", uniq.count())
-
-    docs = extract_main_content(uniq).select(
-        "doc_id", F.col("content").alias("text")
-    ).localCheckpoint(eager=True)  # 32 rows; dedup probes it repeatedly
     pairs = minhash_lsh_pairs(docs, threshold=0.8)
     # checkpoint at every iterative/fan-in seam: canonical_components builds
     # an O(rounds)-deep join lineage and each downstream stage-count action
     # would re-execute it from scratch otherwise (measured 2x wall on the
     # whole gate)
     pairs, n = counted_checkpoint(pairs.repartition(4))
-    stage("neardup_pairs", n)
+    log("neardup_pairs", n)
     comp = canonical_components(pairs).withColumnRenamed("doc", "doc_id")
     survivors, n = counted_checkpoint(
         docs.join(comp, "doc_id", "left")
@@ -2965,10 +2956,10 @@ def _corpus_build_tail(spark, ok, stage, stage_rows):
         .select("doc_id", "text")
         .repartition(4)
     )
-    stage("dedup_survivors", n)
+    log("dedup_survivors", n)
 
     sents = split_sentences(survivors, text_col="text")
-    stage("sentences", sents.count())
+    log("sentences", sents.count())
     sent_text = sents.groupBy("doc_id").agg(
         F.array_join(
             F.transform(
@@ -2980,47 +2971,27 @@ def _corpus_build_tail(spark, ok, stage, stage_rows):
     )
     ld = line_dedup(sent_text, text_col="text", id_col="doc_id")
     ld, n = counted_checkpoint(ld.repartition(4), F.sum("n_removed"))
-    stage("boiler_lines_removed", n or 0)
+    log("boiler_lines_removed", n or 0)
 
     gq = gopher_quality_rules(
         ld.select("doc_id", F.col("clean_text").alias("text")), min_words=30
     )
     kept = gq.filter(F.col("keep")).select("doc_id", "text")
-    stage("gopher_keep", kept.count())
+    log("gopher_keep", kept.count())
 
-    final, n = counted_checkpoint(  # 6 rows; feeds training + export
+    final, n = counted_checkpoint(  # feeds the shard export (and langid)
         badword_stats(kept, ["zonkword"])
         .filter(F.col("n_badwords") == 0)
         .select("doc_id", "text")
     )
-    stage("badword_keep", n)
+    log("badword_keep", n)
+    return final
 
-    lang_arr = F.array(*[F.lit(x) for x in _CB_LANGS])
-    labeled = final.withColumn(
-        "lang_true",
-        F.element_at(lang_arr, (F.col("doc_id") % 3 + 1).cast("int")),
-    )
-    # lr/iters chosen by a margin sweep (not just diagonal/off-diagonal):
-    # at lr=16/iters=6 the min true-vs-best-other logit gap across the 6
-    # docs is 0.050 vs 0.019 at the lr=4/iters=8 default — 2.6x the
-    # robustness headroom against future numeric-path changes, and three
-    # fewer training rounds. Deterministic either way (no RNG).
-    # One materialized feature frame for train + serve (deterministic map,
-    # bit-identical to per-phase rebuilds — same reuse as langid_trained)
-    feats = ml.hashed_char_ngram_features(
-        labeled, n_buckets=16
-    ).localCheckpoint()
-    model = ml.langid_train(
-        labeled, _CB_LANGS, label_col="lang_true", n_buckets=16, iters=6,
-        lr=16.0, feats=feats,
-    )
-    pred = ml.langid_predict(labeled, model, feats=feats)
-    diag = pred.agg(
-        F.sum((F.col("pred_lang") == F.col("lang_true")).cast("bigint")).alias("d"),
-        F.sum((F.col("pred_lang") != F.col("lang_true")).cast("bigint")).alias("o"),
-    ).collect()[0]
-    stage("langid_diagonal", diag["d"] or 0)
-    stage("langid_offdiag", diag["o"] or 0)
+
+def _shard_stages(final: DataFrame, log) -> None:
+    """Pack the survivors into seeded 480-byte shards (the packing
+    ``_cb_survivor_shard_cte`` replays) and log docs, bytes and shards."""
+    from etl_lala_spark.sinks.writer import shard_assignments
 
     sa = shard_assignments(final, 480, seed="corpus")
     agg = sa.agg(
@@ -3028,13 +2999,9 @@ def _corpus_build_tail(spark, ok, stage, stage_rows):
         F.sum("doc_bytes").alias("bytes"),
         F.countDistinct("shard").alias("shards"),
     ).collect()[0]
-    stage("shard_docs", agg["docs"])
-    stage("shard_bytes", agg["bytes"])
-    stage("shards", agg["shards"])
-
-    return spark.createDataFrame(
-        stage_rows, "stage_ord int, stage string, n bigint"
-    ).orderBy("stage_ord")
+    log("shard_docs", agg["docs"])
+    log("shard_bytes", agg["bytes"])
+    log("shards", agg["shards"])
 
 
 # --- WET / WAT: the other two Common Crawl formats ---------------------------
@@ -3304,6 +3271,7 @@ def web_cdx_redirects(spark: SparkSession, sf_dir: str) -> DataFrame:
     3xx edge slice, O(log max_hops) rounds — the argument is in the
     operator docstring."""
     from etl_lala_spark.operators.web import cdx_redirect_resolve, parse_cdxj
+    from etl_lala_spark.plans._gates import shuffle_width
 
     d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 120)
     rows = d.select("doc_id", (F.col("doc_id") % 4).cast("int").alias("c"))
@@ -3346,18 +3314,14 @@ def web_cdx_redirects(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     idx = parse_cdxj(redirect_lines.unionByName(final_lines))
     # the edge slice is gate-constant (240 rows): run the doubling loop at
-    # a matching shuffle width (the web_corpus_build discipline) instead of
-    # paying 4 wide-shuffle rounds on a default-conf session
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    # a matching shuffle width instead of paying 4 wide-shuffle rounds on a
+    # default-conf session
+    with shuffle_width(spark, 8):
         # max_hops=4 covers the planted 3-hop chains and classifies the
         # loops (doubling passes 4 after three rounds) with one fewer
         # pointer-doubling round than the operator default
         out = cdx_redirect_resolve(idx, max_hops=4)
-        out = out.localCheckpoint(eager=True)  # materialize under the override
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        out = out.localCheckpoint(eager=True)  # materialize at that width
     return out.orderBy("surt")
 
 
@@ -3448,20 +3412,19 @@ def web_fetch_revalidate(spark: SparkSession, sf_dir: str) -> DataFrame:
     count, and the forward-carried validator per page; a fetcher that
     treats 304 as an error, re-downloads on a match, or drops the new
     validator lands on different rows."""
-    import http.server
     import re as _re
-    import threading
 
-    from etl_lala_spark.plans._gates import gate_workdir
+    from etl_lala_spark.plans._gates import (
+        QuietHandler,
+        gate_workdir,
+        loopback_server,
+    )
     from etl_lala_spark.sources.fetch import fetch_conditional
 
     work = gate_workdir(spark, "web_fetch_revalidate")
     LM = "Wed, 01 Jan 2025 00:00:00 GMT"
 
-    class Handler(http.server.BaseHTTPRequestHandler):
-        def log_message(self, *a):
-            pass
-
+    class Handler(QuietHandler):
         def do_GET(self):
             m = _re.match(r"^/doc(\d+)$", self.path)
             if not m:
@@ -3483,15 +3446,12 @@ def web_fetch_revalidate(spark: SparkSession, sf_dir: str) -> DataFrame:
             self.end_headers()
             self.wfile.write(body)
 
-    server = http.server.ThreadingHTTPServer(("127.0.0.1", 0), Handler)
-    port = server.server_address[1]
-    threading.Thread(target=server.serve_forever, daemon=True).start()
-    try:
+    with loopback_server(Handler) as base:
         d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 160)
         k = F.col("doc_id") % 4
         ds = F.col("doc_id").cast("string")
         plan = d.select(
-            F.concat(F.lit(f"http://127.0.0.1:{port}/doc"), ds).alias("url"),
+            F.concat(F.lit(f"{base}/doc"), ds).alias("url"),
             F.when(k == 1, F.concat(F.lit('"v2-'), ds, F.lit('"')))
             .when(k == 2, F.concat(F.lit('"v1-'), ds, F.lit('"')))
             .alias("etag"),
@@ -3499,9 +3459,6 @@ def web_fetch_revalidate(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         got = fetch_conditional(plan, retries=1, backoff_s=0.05)
         got.write.mode("overwrite").parquet(os.path.join(work, "out"))
-    finally:
-        server.shutdown()
-        server.server_close()
     out = spark.read.parquet(os.path.join(work, "out"))
     return out.select(
         F.regexp_extract("url", r"/(doc\d+)$", 1).alias("page"),
@@ -3563,6 +3520,18 @@ def _rc_page(text: str) -> str:
         '<div class="footer"><a href="/t">t&amp;c</a>'
         ' <a href="/p">privacy</a> <a href="/c">contact</a></div>\n'
         "</body></html>"
+    )
+
+
+def _rc_surt(d: int) -> str:
+    return f"com,example,site{d % 6})/page{d}"
+
+
+def _rc_cdx_line(d: int, ts: int, digest: str, url: str) -> str:
+    return (
+        f'{_rc_surt(d)} {ts} {{"url": "{url}", "mime": "text/html",'
+        f' "status": "200", "digest": "sha1:{digest}",'
+        f' "length": "1", "offset": "0", "filename": "w.warc.gz"}}'
     )
 
 
@@ -3645,32 +3614,8 @@ def web_recrawl_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     band-bucket grain without re-shingling the corpus, deletes rewrite
     only hit partitions, and the shard prefix sum is distributed."""
 
-    def surt(d: int) -> str:
-        return f"com,example,site{d % 6})/page{d}"
-
-    def cdx_line(d: int, ts: int, digest: str, url: str) -> str:
-        return (
-            f'{surt(d)} {ts} {{"url": "{url}", "mime": "text/html",'
-            f' "status": "200", "digest": "sha1:{digest}",'
-            f' "length": "1", "offset": "0", "filename": "w.warc.gz"}}'
-        )
-
-    # every frame in this gate is bounded by the 48-doc planting: run the
-    # WHOLE chain — index write included — at a matching shuffle width
-    # instead of paying 200-task stages (the stream-twin discipline)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        return _recrawl_run(spark, sf_dir, surt, cdx_line)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-
-
-def _recrawl_run(spark, sf_dir, surt, cdx_line):
     import hashlib
-    import http.server
     import re as _re
-    import threading
 
     from etl_lala_spark.operators.dedup import (
         minhash_incremental_pairs,
@@ -3680,42 +3625,24 @@ def _recrawl_run(spark, sf_dir, surt, cdx_line):
     )
     from etl_lala_spark.operators.text import extract_main_content
     from etl_lala_spark.operators.web import (
+        _parquet_dir_rows,
         cdx_snapshot_delta,
         parse_cdxj,
         select_captures,
     )
-    from etl_lala_spark.plans._gates import fixture_region, gate_workdir
+    from etl_lala_spark.plans._gates import (
+        QuietHandler,
+        StageLog,
+        counted_checkpoint,
+        fixture_region,
+        gate_workdir,
+        loopback_server,
+        shuffle_width,
+    )
     from etl_lala_spark.sinks.writer import shard_assignments
     from etl_lala_spark.sources.fetch import fetch_conditional
 
-    with fixture_region("web_recrawl_incremental"):
-        work = gate_workdir(spark, "web_recrawl_incremental")
-        doc_ids = sorted(
-            int(r["doc_id"])
-            for r in load_table(spark, sf_dir, "documents")
-            .filter(F.col("doc_id") < 48)
-            .select("doc_id")
-            .collect()
-        )
-        old_pages = {
-            d: _rc_page(_rc_text("o", d)).encode()
-            for d in doc_ids
-            if d % 4 != 2  # added docs did not exist last month
-        }
-        old_digest = {
-            d: hashlib.md5(b).hexdigest() for d, b in old_pages.items()
-        }
-        index_path = os.path.join(work, "minhash_index")
-        corpus_old = spark.createDataFrame(
-            [(d, _rc_text("o", d)) for d in sorted(old_pages)],
-            "doc_id long, text string",
-        )
-        minhash_index_write(corpus_old, index_path)
-
-    class Handler(http.server.BaseHTTPRequestHandler):
-        def log_message(self, *a):
-            pass
-
+    class Handler(QuietHandler):
         def do_GET(self):
             m = _re.match(r"^/page(\d+)$", self.path)
             d = int(m.group(1)) if m else -1
@@ -3735,197 +3662,193 @@ def _recrawl_run(spark, sf_dir, surt, cdx_line):
             self.end_headers()
             self.wfile.write(body)
 
-    stage_rows: list[tuple[int, str, int]] = []
-
-    def stage(name: str, count: int) -> None:
-        stage_rows.append((len(stage_rows), name, int(count)))
-
-    # the frontier: every key seen last month (with its stored validators)
-    # plus this month's discoveries (no validators yet)
-    plan = spark.createDataFrame(
-        [
-            (
-                d,
-                f'"v1-{d}"' if d % 4 != 2 else None,
-                None,
+    log = StageLog()
+    # every frame in this gate is bounded by the 48-doc planting: run the
+    # WHOLE chain — index write included — at a matching shuffle width
+    # instead of paying 200-task stages
+    with shuffle_width(spark, 8):
+        with fixture_region("web_recrawl_incremental"):
+            work = gate_workdir(spark, "web_recrawl_incremental")
+            doc_ids = sorted(
+                int(r["doc_id"])
+                for r in load_table(spark, sf_dir, "documents")
+                .filter(F.col("doc_id") < 48)
+                .select("doc_id")
+                .collect()
             )
-            for d in doc_ids
-        ],
-        "doc_id long, etag string, last_modified string",
-    )
-    # the frontier is the driver-built planting itself — its row count is
-    # len(doc_ids) by construction, no job needed to restate it
-    stage("frontier_urls", len(doc_ids))
-
-    server = http.server.ThreadingHTTPServer(("127.0.0.1", 0), Handler)
-    port = server.server_address[1]
-    threading.Thread(target=server.serve_forever, daemon=True).start()
-    try:
-        got = fetch_conditional(
-            plan.select(
-                F.concat(
-                    F.lit(f"http://127.0.0.1:{port}/page"),
-                    F.col("doc_id").cast("string"),
-                ).alias("url"),
-                "etag",
-                "last_modified",
-            # fetch-concurrency sizing: the driver-built 48-row plan
-            # parallelizes across defaultParallelism partitions, so the
-            # conditional-GET leg paid 32 Python-worker task launches for
-            # ~1.5 rows each; 8 tasks of 6 loopback gets amortize the
-            # worker round trip and still saturate the loopback server
-            # (production fetch waves bound per-host concurrency anyway)
-            ).coalesce(8),
-            retries=1,
-            backoff_s=0.05,
-        )
-        got.write.mode("overwrite").parquet(os.path.join(work, "fetched"))
-    finally:
-        server.shutdown()
-        server.server_close()
-
-    # shuffle width already overridden for the whole gate by the caller
-    return _recrawl_tail(
-        spark, work, index_path, old_digest, surt, cdx_line,
-        parse_cdxj, select_captures, cdx_snapshot_delta,
-        extract_main_content, minhash_incremental_pairs,
-        minhash_index_delete, minhash_index_append, shard_assignments,
-        stage, stage_rows,
-    )
-
-
-def _recrawl_tail(
-    spark, work, index_path, old_digest, surt, cdx_line,
-    parse_cdxj, select_captures, cdx_snapshot_delta,
-    extract_main_content, minhash_incremental_pairs,
-    minhash_index_delete, minhash_index_append, shard_assignments,
-    stage, stage_rows,
-):
-    import hashlib
-    import os as _os
-
-    from etl_lala_spark.plans._gates import counted_checkpoint
-
-    fetched = spark.read.parquet(_os.path.join(work, "fetched")).withColumn(
-        "doc_id",
-        F.regexp_extract("url", r"/page(\d+)$", 1).cast("long"),
-    )
-    # ONE job answers all four revalidation stages: per-status row counts
-    # AND the 304s' byte sum (previously a second full-frame aggregate)
-    by_status_rows = (
-        fetched.groupBy("status")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("n_bytes").alias("b"))
-        .collect()
-    )
-    by_status = {r["status"]: r["n"] for r in by_status_rows}
-    nm_bytes = next(
-        (r["b"] for r in by_status_rows if r["status"] == "not_modified"), 0
-    )
-    stage("reval_not_modified", by_status.get("not_modified", 0))
-    stage("reval_fetched_ok", by_status.get("ok", 0))
-    stage("reval_errors", by_status.get("error", 0))
-    stage("not_modified_bytes", nm_bytes or 0)
-
-    # this month's snapshot: fresh digests for 200s, carried-forward
-    # entries for 304s (RFC 9110: the stored response stays valid)
-    live = fetched.filter(F.col("status").isin("ok", "not_modified"))
-    new_lines = [
-        cdx_line(
-            int(r["doc_id"]),
-            20250201000000,
-            hashlib.md5(bytes(r["content"])).hexdigest()
-            if r["status"] == "ok"
-            else old_digest[int(r["doc_id"])],
-            r["url"],
-        )
-        for r in live.select("doc_id", "status", "content", "url").collect()
-    ]
-    old_lines = [
-        cdx_line(d, 20250101000000, dig, f"http://origin/page{d}")
-        for d, dig in sorted(old_digest.items())
-    ]
-    new_sel, n = counted_checkpoint(
-        select_captures(
-            parse_cdxj(
-                spark.createDataFrame([(x,) for x in new_lines], "line string")
+            old_pages = {
+                d: _rc_page(_rc_text("o", d)).encode()
+                for d in doc_ids
+                if d % 4 != 2  # added docs did not exist last month
+            }
+            old_digest = {
+                d: hashlib.md5(b).hexdigest() for d, b in old_pages.items()
+            }
+            index_path = os.path.join(work, "minhash_index")
+            corpus_old = spark.createDataFrame(
+                [(d, _rc_text("o", d)) for d in sorted(old_pages)],
+                "doc_id long, text string",
             )
+            minhash_index_write(corpus_old, index_path)
+
+        # the frontier: every key seen last month (with its stored validators)
+        # plus this month's discoveries (no validators yet)
+        plan = spark.createDataFrame(
+            [
+                (
+                    d,
+                    f'"v1-{d}"' if d % 4 != 2 else None,
+                    None,
+                )
+                for d in doc_ids
+            ],
+            "doc_id long, etag string, last_modified string",
         )
-    )
-    stage("new_snapshot_selected", n)
-    old_sel = select_captures(
-        parse_cdxj(spark.createDataFrame([(x,) for x in old_lines], "line string"))
-    )
-    delta = cdx_snapshot_delta(old_sel, new_sel)
-    by_change = {
-        r["change"]: r["n"]
-        for r in delta.groupBy("change").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    for c in ("unchanged", "changed", "added", "vanished"):
-        stage(f"delta_{c}", by_change.get(c, 0))
+        # the frontier is the driver-built planting itself — its row count is
+        # len(doc_ids) by construction, no job needed to restate it
+        log("frontier_urls", len(doc_ids))
 
-    batch, n_batch = counted_checkpoint(
-        extract_main_content(
-            fetched.filter(F.col("status") == "ok").select(
-                "doc_id", F.col("content").cast("string").alias("html")
+        with loopback_server(Handler) as base:
+            got = fetch_conditional(
+                plan.select(
+                    F.concat(
+                        F.lit(f"{base}/page"),
+                        F.col("doc_id").cast("string"),
+                    ).alias("url"),
+                    "etag",
+                    "last_modified",
+                # fetch-concurrency sizing: the driver-built 48-row plan
+                # parallelizes across defaultParallelism partitions, so the
+                # conditional-GET leg paid 32 Python-worker task launches for
+                # ~1.5 rows each; 8 tasks of 6 loopback gets amortize the
+                # worker round trip and still saturate the loopback server
+                # (production fetch waves bound per-host concurrency anyway)
+                ).coalesce(8),
+                retries=1,
+                backoff_s=0.05,
             )
-        ).select("doc_id", F.col("content").alias("text"))
-    )
-    stage("extracted_changed_slice", n_batch)
+            got.write.mode("overwrite").parquet(os.path.join(work, "fetched"))
 
-    # near-dup the incoming slice against the PERSISTED index (the corpus
-    # is never re-shingled), then pin every frame before the store mutates
-    pairs, n = counted_checkpoint(
-        minhash_incremental_pairs(batch, index_path, threshold=0.5)
-    )
-    stage("neardup_pairs_vs_index", n)
-    dropped = pairs.select(F.col("new_doc").alias("doc_id")).distinct()
-    survivors, n = counted_checkpoint(
-        batch.join(dropped, "doc_id", "left_anti")
-    )
-    stage("neardup_dropped", n_batch - n)
-    spark.catalog.clearCache()  # release the incremental probe caches
+        fetched = spark.read.parquet(os.path.join(work, "fetched")).withColumn(
+            "doc_id",
+            F.regexp_extract("url", r"/page(\d+)$", 1).cast("long"),
+        )
+        # ONE job answers all four revalidation stages: per-status row counts
+        # AND the 304s' byte sum (previously a second full-frame aggregate)
+        by_status_rows = (
+            fetched.groupBy("status")
+            .agg(F.count(F.lit(1)).alias("n"), F.sum("n_bytes").alias("b"))
+            .collect()
+        )
+        by_status = {r["status"]: r["n"] for r in by_status_rows}
+        nm_bytes = next(
+            (r["b"] for r in by_status_rows if r["status"] == "not_modified"),
+            0,
+        )
+        log("reval_not_modified", by_status.get("not_modified", 0))
+        log("reval_fetched_ok", by_status.get("ok", 0))
+        log("reval_errors", by_status.get("error", 0))
+        log("not_modified_bytes", nm_bytes or 0)
 
-    from etl_lala_spark.operators.web import _parquet_dir_rows
+        # this month's snapshot: fresh digests for 200s, carried-forward
+        # entries for 304s (RFC 9110: the stored response stays valid)
+        live = fetched.filter(
+            F.col("status").isin("ok", "not_modified")
+        ).select("doc_id", "status", "content", "url")
+        new_lines = [
+            _rc_cdx_line(
+                int(r["doc_id"]),
+                20250201000000,
+                hashlib.md5(bytes(r["content"])).hexdigest()
+                if r["status"] == "ok"
+                else old_digest[int(r["doc_id"])],
+                r["url"],
+            )
+            for r in live.collect()
+        ]
+        old_lines = [
+            _rc_cdx_line(d, 20250101000000, dig, f"http://origin/page{d}")
+            for d, dig in sorted(old_digest.items())
+        ]
+        def captures(lines: list[str]) -> DataFrame:
+            return select_captures(
+                parse_cdxj(
+                    spark.createDataFrame([(x,) for x in lines], "line string")
+                )
+            )
 
-    sigs_path = _os.path.join(index_path, "sigs")
-    # store row counts from parquet footers on the driver — identical to
-    # the Spark metadata count, minus three job launches per run
-    stage("index_docs_before", _parquet_dir_rows(sigs_path))
-    # changed docs' old content is gone either way (their new version is
-    # appended fresh or dropped as a near-dup); vanished docs leave
-    gone = spark.createDataFrame(
-        [(d,) for d in sorted(old_digest) if d % 4 in (1, 3)], "doc long"
-    )
-    minhash_index_delete(spark, index_path, gone)
-    stage("index_docs_after_delete", _parquet_dir_rows(sigs_path))
-    stage("index_appended", minhash_index_append(survivors, index_path))
-    # at-least-once replay: re-appending the same batch must land nothing
-    stage("replay_appended", minhash_index_append(survivors, index_path))
-    stage("index_docs_after", _parquet_dir_rows(sigs_path))
+        new_sel, n = counted_checkpoint(captures(new_lines))
+        log("new_snapshot_selected", n)
+        old_sel = captures(old_lines)
+        delta = cdx_snapshot_delta(old_sel, new_sel)
+        by_change = {
+            r["change"]: r["n"]
+            for r in delta.groupBy("change")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .collect()
+        }
+        for c in ("unchanged", "changed", "added", "vanished"):
+            log(f"delta_{c}", by_change.get(c, 0))
 
-    # the updated corpus: unchanged docs keep last month's text, survivors
-    # contribute this month's — re-sharded for the release
-    unchanged = spark.createDataFrame(
-        [(d, _rc_text("o", d)) for d in sorted(old_digest) if d % 4 == 0],
-        "doc_id long, text string",
-    )
-    corpus = unchanged.unionByName(survivors)
-    shards = shard_assignments(
-        corpus, shard_bytes=_RC_SHARD_BYTES, seed=_RC_SEED
-    ).localCheckpoint(eager=True)
-    # one aggregate answers all three shard stages (was three jobs)
-    sh = shards.agg(
-        F.count(F.lit(1)).alias("docs"),
-        F.max("shard").alias("max_shard"),
-        F.sum("doc_bytes").alias("bytes"),
-    ).collect()[0]
-    stage("shard_docs", sh["docs"])
-    stage("shards", sh["max_shard"] + 1)
-    stage("shard_bytes", sh["bytes"])
+        batch, n_batch = counted_checkpoint(
+            extract_main_content(
+                fetched.filter(F.col("status") == "ok").select(
+                    "doc_id", F.col("content").cast("string").alias("html")
+                )
+            ).select("doc_id", F.col("content").alias("text"))
+        )
+        log("extracted_changed_slice", n_batch)
 
-    return spark.createDataFrame(
-        stage_rows, "stage_ord int, stage string, n bigint"
-    ).orderBy("stage_ord")
+        # near-dup the incoming slice against the PERSISTED index (the corpus
+        # is never re-shingled), then pin every frame before the store mutates
+        pairs, n = counted_checkpoint(
+            minhash_incremental_pairs(batch, index_path, threshold=0.5)
+        )
+        log("neardup_pairs_vs_index", n)
+        dropped = pairs.select(F.col("new_doc").alias("doc_id")).distinct()
+        survivors, n = counted_checkpoint(
+            batch.join(dropped, "doc_id", "left_anti")
+        )
+        log("neardup_dropped", n_batch - n)
+        spark.catalog.clearCache()  # release the incremental probe caches
+
+        sigs_path = os.path.join(index_path, "sigs")
+        # store row counts from parquet footers on the driver — identical to
+        # the Spark metadata count, minus three job launches per run
+        log("index_docs_before", _parquet_dir_rows(sigs_path))
+        # changed docs' old content is gone either way (their new version is
+        # appended fresh or dropped as a near-dup); vanished docs leave
+        gone = spark.createDataFrame(
+            [(d,) for d in sorted(old_digest) if d % 4 in (1, 3)], "doc long"
+        )
+        minhash_index_delete(spark, index_path, gone)
+        log("index_docs_after_delete", _parquet_dir_rows(sigs_path))
+        log("index_appended", minhash_index_append(survivors, index_path))
+        # at-least-once replay: re-appending the same batch must land nothing
+        log("replay_appended", minhash_index_append(survivors, index_path))
+        log("index_docs_after", _parquet_dir_rows(sigs_path))
+
+        # the updated corpus: unchanged docs keep last month's text, survivors
+        # contribute this month's — re-sharded for the release
+        unchanged = spark.createDataFrame(
+            [(d, _rc_text("o", d)) for d in sorted(old_digest) if d % 4 == 0],
+            "doc_id long, text string",
+        )
+        corpus = unchanged.unionByName(survivors)
+        shards = shard_assignments(
+            corpus, shard_bytes=_RC_SHARD_BYTES, seed=_RC_SEED
+        ).localCheckpoint(eager=True)
+        # one aggregate answers all three shard stages (was three jobs)
+        sh = shards.agg(
+            F.count(F.lit(1)).alias("docs"),
+            F.max("shard").alias("max_shard"),
+            F.sum("doc_bytes").alias("bytes"),
+        ).collect()[0]
+        log("shard_docs", sh["docs"])
+        log("shards", sh["max_shard"] + 1)
+        log("shard_bytes", sh["bytes"])
+
+    return log.frame(spark)
 
 
 def _wet_corpus_oracle() -> str:
@@ -3978,18 +3901,11 @@ def web_corpus_wet_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     from etl_lala_spark.functions.scalars import canonicalize_url
-    from etl_lala_spark.operators.dedup import (
-        canonical_components,
-        line_dedup,
-        minhash_lsh_pairs,
+    from etl_lala_spark.plans._gates import (
+        StageLog,
+        counted_checkpoint,
+        shuffle_width,
     )
-    from etl_lala_spark.operators.text import (
-        badword_stats,
-        gopher_quality_rules,
-        split_sentences,
-    )
-    from etl_lala_spark.plans._gates import counted_checkpoint
-    from etl_lala_spark.sinks.writer import shard_assignments
     from etl_lala_spark.sources.warc import (
         extract_warc_records,
         warc_record_bytes,
@@ -4026,14 +3942,8 @@ def web_corpus_wet_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     recs = extract_warc_records(wets, types=("conversion",))
 
-    stage_rows: list[tuple[int, str, int]] = []
-
-    def stage(name: str, count: int) -> None:
-        stage_rows.append((len(stage_rows), name, int(count)))
-
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    log = StageLog()
+    with shuffle_width(spark, 8):
         pages, n = counted_checkpoint(
             recs.select(
                 F.regexp_extract("target_uri", r"/doc(\d+)", 1)
@@ -4043,7 +3953,7 @@ def web_corpus_wet_build(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("payload").cast("string").alias("text"),
             ).repartition(4)
         )
-        stage("wet_records", n)
+        log("wet_records", n)
 
         uniq = (
             pages.groupBy("canonical_url")
@@ -4053,70 +3963,9 @@ def web_corpus_wet_build(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("_p.text").alias("text"),
             )
         )
-        docs, n = counted_checkpoint(uniq.repartition(4))
-        stage("url_unique", n)
-
-        pairs = minhash_lsh_pairs(docs, threshold=0.8)
-        pairs, n = counted_checkpoint(pairs.repartition(4))
-        stage("neardup_pairs", n)
-        comp = canonical_components(pairs).withColumnRenamed("doc", "doc_id")
-        survivors, n = counted_checkpoint(
-            docs.join(comp, "doc_id", "left")
-            .filter(
-                F.col("canonical").isNull()
-                | (F.col("canonical") == F.col("doc_id"))
-            )
-            .select("doc_id", "text")
-            .repartition(4)
-        )
-        stage("dedup_survivors", n)
-
-        sents = split_sentences(survivors, text_col="text")
-        stage("sentences", sents.count())
-        sent_text = sents.groupBy("doc_id").agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct("sentence_id", "sentence"))
-                    ),
-                    lambda s: s["sentence"],
-                ),
-                "\n",
-            ).alias("text")
-        )
-        ld = line_dedup(sent_text, text_col="text", id_col="doc_id")
-        ld, n = counted_checkpoint(ld.repartition(4), F.sum("n_removed"))
-        stage("boiler_lines_removed", n or 0)
-
-        gq = gopher_quality_rules(
-            ld.select("doc_id", F.col("clean_text").alias("text")),
-            min_words=30,
-        )
-        kept = gq.filter(F.col("keep")).select("doc_id", "text")
-        stage("gopher_keep", kept.count())
-
-        final, n = counted_checkpoint(
-            badword_stats(kept, ["zonkword"])
-            .filter(F.col("n_badwords") == 0)
-            .select("doc_id", "text")
-        )
-        stage("badword_keep", n)
-
-        sa = shard_assignments(final, 480, seed="corpus")
-        agg = sa.agg(
-            F.count(F.lit(1)).alias("docs"),
-            F.sum("doc_bytes").alias("bytes"),
-            F.countDistinct("shard").alias("shards"),
-        ).collect()[0]
-        stage("shard_docs", agg["docs"])
-        stage("shard_bytes", agg["bytes"])
-        stage("shards", agg["shards"])
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-
-    return spark.createDataFrame(
-        stage_rows, "stage_ord int, stage string, n bigint"
-    ).orderBy("stage_ord")
+        final = _curation_tail(uniq.repartition(4), log)
+        _shard_stages(final, log)
+    return log.frame(spark)
 
 
 # Per doc d (0..23): url http://site{d%5}.example.com/idx{d}; an OLD 200
@@ -4156,9 +4005,6 @@ def web_cdx_index_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     swallowed Location header, or a ts fold that loses a digit lands on
     a different stage count."""
     import gzip
-    import http.server
-    import re as _re
-    import threading
 
     from etl_lala_spark.operators.web import (
         cdx_index_lines,
@@ -4166,9 +4012,13 @@ def web_cdx_index_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         select_captures,
     )
     from etl_lala_spark.plans._gates import (
+        StageLog,
         counted_checkpoint,
         fixture_region,
         gate_workdir,
+        loopback_server,
+        ranged_file_handler,
+        shuffle_width,
     )
     from etl_lala_spark.sources.fetch import fetch_ranges
     from etl_lala_spark.sources.warc import (
@@ -4228,36 +4078,9 @@ def web_cdx_index_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             with open(os.path.join(warcdir, f"idx{d}.warc.gz"), "wb") as fh:
                 fh.write(b"".join(members))
 
-    class Handler(http.server.BaseHTTPRequestHandler):
-        def log_message(self, *a):
-            pass
-
-        def do_GET(self):
-            fn = os.path.join(warcdir, self.path.lstrip("/"))
-            try:
-                with open(fn, "rb") as fh:
-                    data = fh.read()
-            except OSError:
-                self.send_error(404)
-                return
-            m = _re.match(r"bytes=(\d+)-(\d+)$", self.headers.get("Range", ""))
-            lo, hi = int(m.group(1)), int(m.group(2))
-            body = data[lo : hi + 1]
-            self.send_response(206)
-            self.send_header("Content-Range", f"bytes {lo}-{hi}/{len(data)}")
-            self.send_header("Content-Length", str(len(body)))
-            self.end_headers()
-            self.wfile.write(body)
-
-    stage_rows: list[tuple[int, str, int]] = []
-
-    def stage(name: str, count: int) -> None:
-        stage_rows.append((len(stage_rows), name, int(count)))
-
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        stage("warc_files", len(doc_ids))
+    log = StageLog()
+    with shuffle_width(spark, 8):
+        log("warc_files", len(doc_ids))
         blobs = (
             spark.read.format("binaryFile")
             .load(warcdir)
@@ -4267,7 +4090,7 @@ def web_cdx_index_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             extract_warc_records(blobs, types=None)  # warcinfo rows too
             .repartition(4)
         )
-        stage("warc_records", n)
+        log("warc_records", n)
         lines = cdx_index_lines(recs, file_col="file").localCheckpoint(
             eager=True
         )
@@ -4281,20 +4104,15 @@ def web_cdx_index_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count_if(F.col("line").contains('"redirect"')).alias("n_redir"),
             F.count_if(F.col("_error").isNotNull()).alias("n_err"),
         ).collect()[0]
-        stage("index_lines", counts["n_lines"])
-        stage("index_redirect_lines", counts["n_redir"])
-        stage("parse_errors", counts["n_err"])
+        log("index_lines", counts["n_lines"])
+        log("index_redirect_lines", counts["n_redir"])
+        log("parse_errors", counts["n_err"])
         sel, n = counted_checkpoint(select_captures(parsed))
-        stage("selected_newest_good", n)
+        log("selected_newest_good", n)
 
-        server = http.server.ThreadingHTTPServer(("127.0.0.1", 0), Handler)
-        port = server.server_address[1]
-        threading.Thread(target=server.serve_forever, daemon=True).start()
-        try:
+        with loopback_server(ranged_file_handler(warcdir)) as base:
             plan = sel.select(
-                F.concat(
-                    F.lit(f"http://127.0.0.1:{port}/"), F.col("filename")
-                ).alias("url"),
+                F.concat(F.lit(f"{base}/"), F.col("filename")).alias("url"),
                 "offset",
                 "length",
             )
@@ -4302,11 +4120,8 @@ def web_cdx_index_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             fetched.filter(F.col("status") == "ok").write.mode(
                 "overwrite"
             ).parquet(os.path.join(work, "fetched"))
-        finally:
-            server.shutdown()
-            server.server_close()
         ok = spark.read.parquet(os.path.join(work, "fetched"))
-        stage("fetched_ok", ok.count())
+        log("fetched_ok", ok.count())
         # re-extract the fetched members and compare payload sha1 against
         # the digest THE GENERATED INDEX declared — the full round trip
         refetched = extract_warc_records(
@@ -4324,10 +4139,5 @@ def web_cdx_index_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             sel.select(F.col("url").alias("_u"), F.col("digest")),
             refetched["target_uri"] == F.col("_u"),
         ).filter(F.col("rt_digest") == F.col("digest"))
-        stage("digest_roundtrip_match", match.count())
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-
-    return spark.createDataFrame(
-        stage_rows, "stage_ord int, stage string, n bigint"
-    ).orderBy("stage_ord")
+        log("digest_roundtrip_match", match.count())
+    return log.frame(spark)

@@ -26,7 +26,11 @@ from pyspark.sql import functions as F
 
 from etl_lala_spark.io import load_events, load_table
 from etl_lala_spark.plans import register
-from etl_lala_spark.plans._gates import fixture_region, gate_workdir
+from etl_lala_spark.plans._gates import (
+    fixture_region,
+    gate_workdir,
+    shuffle_width,
+)
 
 _SCD2_ORACLE = """
 WITH c AS (
@@ -534,9 +538,7 @@ def stream_twin_bounded_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     # for THIS stream only (state sizing follows key cardinality, not
     # session width — the same decision a production job makes per
     # stateful stream) and restore the session conf either way.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
+    with shuffle_width(spark, 4):
         q = (
             agg.writeStream.outputMode("append")
             .format("noop")
@@ -545,8 +547,6 @@ def stream_twin_bounded_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination(300)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     progress = []
     for p in q.recentProgress:
         if not isinstance(p, dict):

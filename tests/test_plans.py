@@ -743,3 +743,96 @@ def test_counted_checkpoint_observes_row_count(spark):
     assert n0 == 0 and empty.count() == 0
     _, total = counted_checkpoint(df, F.sum("id"))
     assert total == sum(i for i in range(37) if i % 4)
+
+
+def test_stage_log_frame_orders_rows(spark):
+    from etl_lala_spark.plans._gates import StageLog
+
+    log = StageLog()
+    for name, n in (("cdx_lines", 192), ("cdx_selected", 64), ("shards", 3)):
+        log(name, n)
+    df = log.frame(spark)
+    assert df.schema.simpleString() == (
+        "struct<stage_ord:int,stage:string,n:bigint>"
+    )
+    assert [tuple(r) for r in df.collect()] == [
+        (0, "cdx_lines", 192), (1, "cdx_selected", 64), (2, "shards", 3)
+    ]
+
+
+def test_shuffle_width_restores_when_body_raises(spark):
+    import pytest
+
+    from etl_lala_spark.plans._gates import shuffle_width
+
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    with pytest.raises(RuntimeError), shuffle_width(spark, 3):
+        assert spark.conf.get(key) == "3"
+        raise RuntimeError("stage failed")
+    assert spark.conf.get(key) == prev
+
+
+def _get(base: str, path: str, rng: str = "bytes=0-3") -> tuple[int, bytes]:
+    import http.client
+
+    host, port = base.removeprefix("http://").split(":")
+    conn = http.client.HTTPConnection(host, int(port), timeout=10)
+    try:
+        conn.request("GET", path, headers={"Range": rng})
+        resp = conn.getresponse()
+        return resp.status, resp.read()
+    finally:
+        conn.close()
+
+
+def test_loopback_server_refuses_connections_after_exit(tmp_path):
+    import socket
+
+    import pytest
+
+    from etl_lala_spark.plans._gates import loopback_server, ranged_file_handler
+
+    (tmp_path / "a.warc.gz").write_bytes(b"0123456789")
+    with loopback_server(ranged_file_handler(str(tmp_path))) as base:
+        assert _get(base, "/a.warc.gz", "bytes=2-5") == (206, b"2345")
+    port = int(base.rsplit(":", 1)[1])
+    with pytest.raises(ConnectionRefusedError):
+        socket.create_connection(("127.0.0.1", port), timeout=5).close()
+
+
+def test_ranged_file_handler_serves_only_files_directly_under_root(tmp_path):
+    from etl_lala_spark.plans._gates import loopback_server, ranged_file_handler
+
+    root = tmp_path / "warcs"
+    (root / "sub").mkdir(parents=True)
+    (root / "a.warc.gz").write_bytes(b"0123456789")
+    (root / "sub" / "b.warc.gz").write_bytes(b"0123456789")
+    (tmp_path / "secret.txt").write_bytes(b"secret")
+    with loopback_server(ranged_file_handler(str(root))) as base:
+        assert _get(base, "/a.warc.gz") == (206, b"0123")
+        for path in (
+            "/../secret.txt", "/..", "/.", "/", "/sub", "/sub/b.warc.gz",
+            "/sub/../a.warc.gz", "//etc/passwd", "/" + str(tmp_path / "secret.txt"),
+        ):
+            assert _get(base, path)[0] == 404, path
+
+
+def test_corpus_gates_job_budget(spark, sf_dir):
+    """Spark jobs per call of the two corpus gates, counted with a job group
+    as in test_canonical_components_job_budget: both enter the shared
+    curation tail through one counted checkpoint, so a stage count that
+    re-scans a frame, or a seam that loses its checkpoint, fails here."""
+    from etl_lala_spark.plans import gates_io
+
+    sc = spark.sparkContext
+    for gate, budget in (("web_corpus_wet_build", 57), ("web_corpus_build", 85)):
+        group = f"{gate}_job_budget"
+        sc.setJobGroup(group, gate)
+        try:
+            rows = getattr(gates_io, gate)(spark, sf_dir).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+        assert rows[-1]["stage"] == "shards" and rows[-1]["n"] > 0
+        assert 0 < len(jobs) <= budget, (gate, len(jobs))
