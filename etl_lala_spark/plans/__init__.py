@@ -3,13 +3,17 @@
 Every operator from SURVEY.md §2 (and the LLM-data-pipeline additions) is
 exposed as a named query: a ``(spark, sf_dir) -> DataFrame`` callable plus —
 whenever the semantics are ANSI-SQL-expressible — an equivalent DuckDB SQL
-string used as a correctness oracle. ``__spark_entry__`` re-exports this
-registry to the verification driver.
+string used as a correctness oracle.
 
 Register with::
 
     @register("q1_pricing_summary", oracle="SELECT ...")
     def q1(spark: SparkSession, sf_dir: str) -> DataFrame: ...
+
+``all_queries()``, ``query_fns()`` and ``oracle_sqls()`` import the plan
+modules and return the registry in registration order, the order in which
+the ``@register`` decorators ran. Reading the registry only imports code:
+it reads no data file, starts no process and writes nothing.
 
 Column-name discipline: the driver's comparison sorts columns by name before
 hashing values, so every computed column MUST carry the same alias in the
@@ -76,177 +80,9 @@ def _load_all() -> None:
         importlib.import_module(mod)
 
 
-# --- Driver-rotation ordering -------------------------------------------------
-#
-# The verification driver materializes a CORRECTNESS row for the FIRST 50
-# registered oracle-backed queries each round. With 150+ oracle-backed
-# queries, which 50 get the hard driver signal is a choice — so the registry
-# is emitted in a rotation order: queries that have NOT yet earned a
-# driver-green row come first (the explicitly prioritized window, then the
-# backlog in registration order), and queries already verified green by ANY
-# previous round's driver run come last. Prior greens are detected
-# AUTOMATICALLY from the repo's CORRECTNESS_r*.json files at import time
-# (rows_match+schema_match+hash_match all true), so each round the window
-# advances over the backlog with no manual list maintenance; a query that
-# FAILED a driver round stays in the window for a retry.
-
-# Since round 11 the "query changed after its last driver green" pinning
-# that rounds 9/10 did by hand is AUTOMATED (_change_tracking.py): every
-# query carries a static dependency fingerprint (its own decorated source
-# plus everything reachable through etl_lala_spark imports), and a query
-# whose fingerprint today differs from its fingerprint at the boundary
-# commit of its last green round is pinned into the window as its own
-# tier — after never-checked registrations and red retries, before the
-# least-recently-verified re-checks. _DRIVER_WINDOW stays for the rare
-# manual override (e.g. pinning a query for a driver-environment reason
-# no fingerprint can see); it is empty when automation suffices.
-#
-# Round 11 (drop after): (a) one-time courtesy re-checks of the five
-# queries the round-10 verdict named at MODULE granularity
-# ("multimodal.py changed r7", "dedup.py changed r9") that the
-# FUNCTION-grain fingerprints correctly clear — the r7 multimodal fix
-# touched sniff_media/resize/audio paths but not the AVI frame walk, and
-# the r9 dedup change added the incremental-index family without touching
-# minhash_lsh_pairs / simhash_pairs / semdedup / canonical_components;
-# the fingerprint evidence says their greens still stand, this window
-# records that as a driver row once instead of arguing it. (b) The three
-# r11-ADVICE/verdict-task queries edited THIS round: with 47 changed
-# pins competing for the cap, the oldest-vintage-first tier-3 sort would
-# push these newest-vintage rows to r12, but the round-10 precedent
-# (fixes re-green in the same round's window) wants them recorded now.
-_DRIVER_WINDOW: list[str] = [
-    "multimodal_avi_frames",
-    "audit_minhash_planted",
-    "audit_simhash_planted",
-    "audit_semdedup_planted",
-    "audit_components_planted",
-    "web_cdx_redirects",
-    "web_robots_meta",
-    "web_corpus_build",
-    "web_bloom_frontier",
-    # (c) late-r11 direct edit: the frontier streaming twin's bitmap cache
-    # changed format (48-bit positions + fmt stamp + broadcast LRU); the
-    # tier-3 sort parks it at 51, one past the cap — record the re-green
-    # in the same round per the (b) precedent.
-    "stream_twin_url_frontier",
-]
-
-
-def _correctness_records() -> tuple[dict[str, int], dict[str, int]]:
-    """(last_checked, last_green): for every query name that has EVER had a
-    driver row in this repo's accumulated CORRECTNESS_r*.json files, the
-    latest round number with ANY row, and the latest round number with an
-    all-green row (rows_match+schema_match+hash_match). These drive the
-    rotation: membership = "ever checked / ever green", and the round
-    number = staleness for the tier-3 least-recently-verified sort."""
-    import glob
-    import json
-    import os
-    import re
-
-    repo = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    last_checked: dict[str, int] = {}
-    last_green: dict[str, int] = {}
-    for path in sorted(glob.glob(os.path.join(repo, "CORRECTNESS_r*.json"))):
-        m = re.search(r"_r(\d+)\.json$", path)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            with open(path) as f:
-                rows = json.load(f)
-        except (OSError, ValueError):
-            continue
-        for name, row in rows.items():
-            last_checked[name] = max(rnd, last_checked.get(name, 0))
-            if (
-                isinstance(row, dict)
-                and row.get("rows_match")
-                and row.get("schema_match")
-                and row.get("hash_match")
-            ):
-                last_green[name] = max(rnd, last_green.get(name, 0))
-    return last_checked, last_green
-
-
-def _driver_green_names() -> set[str]:
-    return set(_correctness_records()[1])
-
-
-_CHANGED_MEMO: set[str] | None = None
-
-
-def changed_since_green() -> set[str]:
-    """Verified queries whose dependency fingerprint differs from the tree
-    their last driver green actually tested (see _change_tracking.py).
-    Failure-safe: any git/AST problem degrades to 'no pins', never to a
-    broken registry. Memoized per process — the set is immutable for a
-    fixed working tree, and all_queries() is called repeatedly (driver,
-    tests), so the git-log subprocess and cache parse run once."""
-    global _CHANGED_MEMO
-    if _CHANGED_MEMO is not None:
-        return _CHANGED_MEMO
-    _load_all()
-    last_checked, last_green = _correctness_records()
-    relevant: dict[str, int] = {}
-    for name in _REGISTRY:
-        if name not in last_checked:
-            continue
-        oracle_backed = _REGISTRY[name].oracle is not None
-        if oracle_backed and name not in last_green:
-            continue  # red retry: already front-loaded by its own tier
-        relevant[name] = (
-            last_green[name] if oracle_backed else last_checked[name]
-        )
-    try:
-        from etl_lala_spark.plans import _change_tracking
-
-        _CHANGED_MEMO = _change_tracking.stale_queries(relevant)
-    except Exception:
-        _CHANGED_MEMO = set()
-    return _CHANGED_MEMO
-
-
 def all_queries() -> dict[str, Query]:
     _load_all()
-    last_checked, last_green = _correctness_records()
-    pri = {n: i for i, n in enumerate(_DRIVER_WINDOW)}
-    reg_pos = {n: i for i, n in enumerate(_REGISTRY)}
-    changed = changed_since_green()
-
-    def key(name: str):
-        # Tier 0: the explicitly pinned window (manual overrides; empty
-        #         when the automated pinning below suffices).
-        # Tier 1: never driver-checked — a freshly registered query can
-        #         NEVER silently fall outside the driver's 50-row cap as
-        #         long as the pinned window leaves it a slot.
-        # Tier 2: oracle-backed, checked, never hash-green — a red awaiting
-        #         retry outranks every re-check.
-        # Tier 3: CHANGED-SINCE-GREEN — verified queries whose implementing
-        #         code was edited after the round that produced their last
-        #         green (detected by dependency fingerprint, oldest green
-        #         first): their evidence is invalidated, so they outrank
-        #         mere staleness re-checks.
-        # Tier 4: verified — greens AND rows-only approximates (which can
-        #         only ever earn ran-rows; each has a green oracle-backed
-        #         audit twin) — sorted LEAST-RECENTLY-VERIFIED first, so
-        #         the driver budget re-checks the stalest signal instead of
-        #         whatever happens to lead the registry (round-5 verdict
-        #         #1). Staleness = last green round for oracle-backed
-        #         queries, last ran round for rows-only ones.
-        if name in pri:
-            return (0, pri[name], 0)
-        if name not in last_checked:
-            return (1, reg_pos[name], 0)
-        oracle_backed = _REGISTRY[name].oracle is not None
-        if oracle_backed and name not in last_green:
-            return (2, reg_pos[name], 0)
-        staleness = last_green[name] if oracle_backed else last_checked[name]
-        if name in changed:
-            return (3, staleness, reg_pos[name])
-        return (4, staleness, reg_pos[name])
-
-    return {n: _REGISTRY[n] for n in sorted(_REGISTRY, key=key)}
+    return dict(_REGISTRY)
 
 
 def query_fns() -> dict[str, QueryFn]:

@@ -258,9 +258,9 @@ def hybrid_retrieval_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     the expensive vector math runs on exactly the candidate set, never the
     corpus. This is the composition pattern for ANN-at-scale: prune with an
     index-friendly signal, rerank exactly."""
-    from etl_lala_spark.plans import query_fns
+    from etl_lala_spark.plans.llm_text import text_bm25_retrieval
 
-    cand = query_fns()["text_bm25_retrieval"](spark, sf_dir).limit(20)
+    cand = text_bm25_retrieval(spark, sf_dir).limit(20)
     emb = load_table(spark, sf_dir, "embeddings")
     qv = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
     c = F.col("embedding")

@@ -5,6 +5,8 @@ nested-loop joins where an equi conjunct exists."""
 
 from __future__ import annotations
 
+import os
+
 from etl_lala_spark.plans import query_fns
 
 
@@ -251,61 +253,74 @@ def test_behavior_similarity_rank_uses_window_group_limit(spark, sf_dir):
     assert "WindowGroupLimit" in plan
 
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _driver_view():
+    """(registry, driver order, last_checked, last_green, pins) as the
+    driver contract (``__spark_entry__``) sees them."""
+    import json
+    import sys
+
+    sys.path.insert(0, REPO)
+    import __spark_entry__ as entry
+    from etl_lala_spark.plans import all_queries
+
+    with open(entry.PINS_PATH) as fh:
+        pins = json.load(fh)
+    assert pins == sorted(set(pins)), "RECHECK_PINS.json is one sorted list"
+    last_checked, last_green = entry.correctness_records()
+    return all_queries(), list(entry.queries()), last_checked, last_green, set(pins)
+
+
+def _recheck_pins_tool():
+    import importlib
+    import sys
+
+    tools = os.path.join(REPO, "tools")
+    if tools not in sys.path:
+        sys.path.insert(0, tools)
+    return importlib.import_module("recheck_pins")
+
+
 def test_driver_rotation_window_is_valid():
-    """The driver materializes CORRECTNESS rows for the first ~50 registry
-    entries, so the rotation order IS the verification budget. Round 6:
-    the pin list is empty — tier 1 front-loads never-checked registrations
-    and tier 3 re-verifies greens in LEAST-RECENTLY-GREEN order (round-5
-    verdict #1). Guards: (a, round-4 verdict #3) no never-driver-checked
-    query may ever sort outside the first 50; (b) verified queries must be
+    """The driver materializes CORRECTNESS rows for the first ~50 entries of
+    ``__spark_entry__.queries()``, so that order IS the verification
+    budget. Guards: (a, round-4 verdict #3) no never-driver-checked query
+    may ever sort outside the first 50; (b) verified queries must be
     ordered by staleness — oldest green/ran round first — so the driver
     budget always lands on the stalest signal."""
-    from etl_lala_spark.plans import (
-        _DRIVER_WINDOW,
-        _correctness_records,
-        all_queries,
-        changed_since_green,
-        oracle_sqls,
-    )
+    import __spark_entry__ as entry
 
-    qs = all_queries()
-    last_checked, last_green = _correctness_records()
+    qs, order, last_checked, last_green, pins = _driver_view()
     assert last_green, "repo carries at least the round-1 CORRECTNESS record"
-    assert len(_DRIVER_WINDOW) <= 50
-    for name in _DRIVER_WINDOW:
-        assert name in qs, f"window pins unregistered query {name}"
-    # Window names occupy the exact front of the full ordering…
-    w = len(_DRIVER_WINDOW)
-    assert list(qs)[:w] == list(_DRIVER_WINDOW)
-    # …and the oracle-backed subsequence leads the oracle-only ordering too.
-    win_oracle = [n for n in _DRIVER_WINDOW if qs[n].oracle is not None]
-    assert list(oracle_sqls())[: len(win_oracle)] == win_oracle
+    assert sorted(order) == sorted(qs), "the driver order is a permutation"
+    assert pins <= set(qs), "RECHECK_PINS.json names an unregistered query"
+    # oracle_sql() keeps the same order over the oracle-backed queries.
+    assert list(entry.oracle_sql()) == [n for n in order if qs[n].oracle is not None]
     # Guard (a): every query with no driver row in any CORRECTNESS record
     # must appear within the driver's 50-row cap.
-    order = list(qs)
     never = {n for n in qs if n not in last_checked}
     for n in never:
         assert order.index(n) < 50, (
             f"never-driver-checked query {n} at position {order.index(n)} — "
-            f"outside the driver's 50-row window; shrink _DRIVER_WINDOW"
+            f"outside the driver's 50-row window"
         )
-    # Never-checked queries not pinned must sort immediately behind the
-    # window, ahead of every re-check.
-    queued = [n for n in order[w:] if n in never]
-    assert order[w : w + len(queued)] == queued
+    # Never-checked queries lead, ahead of every re-check.
+    queued = [n for n in order if n in never]
+    assert order[: len(queued)] == queued
     # Oracle-backed checked-but-never-green (red awaiting retry) outrank
-    # every verified re-check among the unpinned remainder.
-    tail = order[w + len(queued):]
+    # every verified re-check.
+    tail = order[len(queued):]
     red = [n for n in tail if qs[n].oracle is not None and n not in last_green]
     assert tail[: len(red)] == red, "red retries must precede verified re-checks"
     # Guard (b): the verified remainder splits into the changed-since-green
-    # pins (tier 3 — evidence invalidated by a later code change, r10
-    # verdict task 1) followed by plain re-checks (tier 4), each sorted
-    # least-recently-verified first.
+    # pins (evidence invalidated by a later code change, r10 verdict task
+    # 1) followed by plain re-checks, each sorted least-recently-verified
+    # first.
     verified = tail[len(red):]
-    changed = changed_since_green()
-    ch = [n for n in verified if n in changed]
-    plain = [n for n in verified if n not in changed]
+    ch = [n for n in verified if n in pins]
+    plain = [n for n in verified if n not in pins]
     assert verified[: len(ch)] == ch, (
         "changed-since-green pins must precede plain re-checks"
     )
@@ -318,7 +333,7 @@ def test_driver_rotation_window_is_valid():
         assert st == sorted(st), (
             "re-checks must be least-recently-verified first within a tier"
         )
-    # The concrete round-6 payoff, now on the PLAIN remainder (pins occupy
+    # The concrete round-6 payoff, on the PLAIN remainder (pins occupy
     # their slots by design and may fill the cap entirely): no plain
     # verified query outside the cap is staler than the plain ones inside.
     plain_in = [n for n in order[:50] if n in plain]
@@ -526,16 +541,7 @@ def test_rotation_window_recheck_slots_go_to_stalest_cohort():
     round 7 that is the 37 queries whose latest green is r2, so the
     staleness floor provably rises each round. Phrased vintage-relative so
     the assertion keeps holding in later rounds."""
-    from etl_lala_spark.plans import (
-        _DRIVER_WINDOW,
-        _correctness_records,
-        all_queries,
-        changed_since_green,
-    )
-
-    qs = all_queries()
-    last_checked, last_green = _correctness_records()
-    order = list(qs)
+    qs, order, last_checked, last_green, pinned = _driver_view()
     window = order[:50]
 
     def staleness(n: str) -> int:
@@ -547,13 +553,12 @@ def test_rotation_window_recheck_slots_go_to_stalest_cohort():
 
     never = [n for n in window if n not in last_checked]
     # Tier-2 retries (oracle-backed, checked, NEVER hash-green — the
-    # registry front-loads them ahead of every re-check) are excluded from
-    # the re-check-slot assertions so one future red row on a new query
-    # doesn't fail this test for an unrelated reason. Likewise tier-0
-    # manual pins and tier-3 changed-since-green pins (r10 verdict task 1:
-    # invalidated evidence outranks stale evidence) occupy window slots by
-    # design. Rows-only queries are tier-4 like greens (mirrors
-    # plans/__init__.py key()).
+    # driver order front-loads them ahead of every re-check) are excluded
+    # from the re-check-slot assertions so one future red row on a new
+    # query doesn't fail this test for an unrelated reason. Likewise the
+    # RECHECK_PINS.json pins (r10 verdict task 1: invalidated evidence
+    # outranks stale evidence) occupy window slots by design. Rows-only
+    # queries are verified like greens (mirrors __spark_entry__'s key()).
     retries = [
         n
         for n in order
@@ -561,7 +566,6 @@ def test_rotation_window_recheck_slots_go_to_stalest_cohort():
         and qs[n].oracle is not None
         and n not in last_green
     ]
-    pinned = set(_DRIVER_WINDOW) | changed_since_green()
     greens = [
         n
         for n in order
@@ -590,25 +594,15 @@ def test_change_aware_pins_precede_staleness_rechecks():
     """Round-10 verdict task 1: a verified query whose dependency
     fingerprint differs from the tree its last green tested must sort
     ahead of every same-or-older plain staleness re-check, and the
-    machinery must be deterministic and total (every registered query
-    fingerprints)."""
-    from etl_lala_spark.plans import (
-        _DRIVER_WINDOW,
-        _correctness_records,
-        all_queries,
-        changed_since_green,
-    )
-    from etl_lala_spark.plans import _change_tracking as ct
-
-    qs = all_queries()
-    fps = ct.fingerprints(ct._working_reader())
+    fingerprinting in tools/recheck_pins.py must be deterministic and total
+    (every registered query fingerprints)."""
+    tool = _recheck_pins_tool()
+    qs, order, last_checked, last_green, changed = _driver_view()
+    fps = tool.fingerprints(tool.working_reader)
     assert set(fps) == set(qs), "every registered query must fingerprint"
-    assert ct.fingerprints(ct._working_reader()) == fps  # deterministic
+    assert tool.fingerprints(tool.working_reader) == fps  # deterministic
 
-    changed = changed_since_green()
     assert changed <= set(qs)
-    last_checked, last_green = _correctness_records()
-    order = list(qs)
 
     def staleness(n):
         return (
@@ -622,7 +616,6 @@ def test_change_aware_pins_precede_staleness_rechecks():
         for n in order
         if n in last_checked
         and n not in changed
-        and n not in _DRIVER_WINDOW  # tier-0 manual pins sort first by design
         and not (qs[n].oracle is not None and n not in last_green)
     ]
     if changed and plain_greens:
@@ -635,6 +628,81 @@ def test_change_aware_pins_precede_staleness_rechecks():
                     n,
                     "plain re-check sorted ahead of a changed-since-green pin",
                 )
+
+
+def test_recheck_pins_fingerprint_contract():
+    """What moves a query's fingerprint, on a tiny in-memory package: an
+    edit to a function the query calls through a ``from … import module``
+    alias used as ``module.attr``, or to the oracle SQL in its decorator.
+    An edit to an uncalled function of the same module does not."""
+    tool = _recheck_pins_tool()
+    ops, plan = "etl_lala_spark/ops/text.py", "etl_lala_spark/plans/q.py"
+    base = {
+        "etl_lala_spark/__init__.py": "",
+        "etl_lala_spark/ops/__init__.py": "",
+        ops: "def called(x):\n    return x + 1\n\n\ndef uncalled(x):\n    return x - 1\n",
+        plan: (
+            "from etl_lala_spark.ops import text\n"
+            "from etl_lala_spark.plans import register\n\n\n"
+            "@register('q', oracle='SELECT 1 AS x')\n"
+            "def q(spark, sf_dir):\n"
+            "    return text.called(1)\n"
+        ),
+    }
+
+    def fp(path: str | None = None, old: str = "", new: str = "") -> str:
+        files = dict(base)
+        if path:
+            assert old in files[path]
+            files[path] = files[path].replace(old, new)
+        return tool.fingerprints(files.get, [plan])["q"]
+
+    ref = fp()
+    assert fp() == ref
+    assert fp(ops, "x + 1", "x + 2") != ref, "called function edited"
+    assert fp(ops, "x - 1", "x - 2") == ref, "uncalled function edited"
+    assert fp(plan, "SELECT 1", "SELECT 2") != ref, "oracle SQL edited"
+
+
+def test_registry_read_has_no_side_effects():
+    """Reading the registry only imports code: in a child interpreter with
+    an audit hook, importing the plans and calling query_fns(),
+    all_queries() and oracle_sqls() starts no process, opens no file for
+    writing, replaces none and reads no CORRECTNESS record; the registry
+    comes out in registration order."""
+    import json
+    import subprocess
+    import sys
+
+    child = """
+import json, os, sys
+events = []
+WRITE = os.O_WRONLY | os.O_RDWR | os.O_CREAT | os.O_APPEND | os.O_TRUNC
+
+def hook(event, args):
+    if event in ("subprocess.Popen", "os.rename"):  # os.replace audits as os.rename
+        events.append([event, repr(args)])
+    elif event == "open":
+        path, mode, flags = args
+        if (set(mode or "") & set("wax+") or (flags or 0) & WRITE
+                or "CORRECTNESS_r" in str(path)):
+            events.append([event, repr(args)])
+
+sys.addaudithook(hook)
+from etl_lala_spark.plans import _REGISTRY, all_queries, oracle_sqls, query_fns
+fns = query_fns()
+all_queries()
+oracle_sqls()
+print(json.dumps({"events": events, "in_order": list(fns) == list(_REGISTRY)}))
+"""
+    # -B: the import system's own .pyc writes are not the registry's.
+    out = subprocess.run(
+        [sys.executable, "-B", "-c", child],
+        cwd=REPO, capture_output=True, text=True, check=True,
+    )
+    seen = json.loads(out.stdout.splitlines()[-1])
+    assert seen["events"] == []
+    assert seen["in_order"]
 
 
 def test_per_host_shuffle_skew_posture(spark):

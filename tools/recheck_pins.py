@@ -1,26 +1,25 @@
-"""Change-aware recheck pinning: detect queries whose implementing code
-changed after their last driver green (round-10 verdict task 1).
+#!/usr/bin/env python
+"""Write ``RECHECK_PINS.json``: the verified queries whose implementing code
+changed after their last driver green. Run it at each round boundary, after
+the round's ``CORRECTNESS_r*.json`` lands:
 
-The driver materializes a CORRECTNESS row for the first 50 registry
-entries per round, so WHICH queries re-earn a hard signal is the
-rotation's choice. Staleness by round age alone misses the case that
-matters most: a query whose implementing module was refactored AFTER its
-last green (e.g. ``sinks/versioned.py`` hardened in r7 while its family's
-greens date to r5). This module computes, purely statically, a
-DEPENDENCY FINGERPRINT per registered query — the sha256 of the query
-function's own source (decorators included, so oracle SQL counts)
-plus the source of everything it reaches through ``etl_lala_spark``
-imports (function-level granularity within a module, whole-file for
-``import module`` style) — and compares today's fingerprint against the
-fingerprint at the git tree the driver actually tested (the ``round N:
-verdict/...`` boundary commit holds the exact tested code). A mismatch
-pins the query into the next driver window.
+    python tools/recheck_pins.py
 
-Everything is derived state: CORRECTNESS_r*.json gives each query's last
-green round, ``git show`` gives the tested tree, and the AST gives the
-dependency closure — no hand-maintained module->query map to rot. Old
-trees' fingerprints are immutable per commit, so they cache in
-``_fp_cache.json`` (committed; computed once per boundary commit ever).
+The driver checks the first 50 queries of ``__spark_entry__.queries()`` per
+round, and that order puts these pins ahead of plain staleness re-checks.
+Round age alone misses the case that matters most: a query whose
+implementing module was refactored after its last green.
+
+Each registered query gets a static DEPENDENCY FINGERPRINT: the sha256 of
+its own source (decorators included, so oracle SQL counts) plus the source
+of everything it reaches through ``etl_lala_spark`` imports (function grain
+within a module, whole file for ``import module`` style). A query is pinned
+when today's fingerprint differs from its fingerprint at the git tree its
+last green round tested: the ``round N: verdict/...`` boundary commit holds
+exactly that code. Everything is derived: ``CORRECTNESS_r*.json`` gives the
+last green round, ``git`` gives the tested tree and the AST gives the
+dependency closure. A missing git or boundary commit is an error, not an
+empty pin list.
 """
 
 from __future__ import annotations
@@ -31,24 +30,24 @@ import json
 import os
 import re
 import subprocess
+import sys
 from collections import deque
 from typing import Callable
 
-_REPO = os.path.dirname(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+from __spark_entry__ import (  # noqa: E402
+    PINS_PATH,
+    correctness_records,
+    verified_rounds,
 )
-_CACHE_PATH = os.path.join(os.path.dirname(__file__), "_fp_cache.json")
+from etl_lala_spark.plans import _PLAN_MODULES, all_queries  # noqa: E402
+
 _PKG = "etl_lala_spark"
-
-# The files whose @register decorators define the query surface. Derived
-# from plans/__init__.py's _PLAN_MODULES at import time (single source of
-# truth); files absent in an old tree simply contribute nothing there.
-
-
-def _plan_files() -> list[str]:
-    from etl_lala_spark.plans import _PLAN_MODULES
-
-    return [m.replace(".", "/") + ".py" for m in _PLAN_MODULES]
+# The files whose @register decorators define the query surface; a file
+# absent in an old tree contributes nothing there.
+PLAN_FILES = [m.replace(".", "/") + ".py" for m in _PLAN_MODULES]
 
 
 # --- per-file static model ----------------------------------------------------
@@ -67,11 +66,7 @@ class _FileInfo:
         self.tree = None
         if not self.ok:
             return
-        try:
-            self.tree = ast.parse(src)
-        except SyntaxError:
-            self.ok = False
-            return
+        self.tree = ast.parse(src, rel)
         self.lines = src.splitlines()
         pkg_parts = _pkg_parts(rel)
         for node in self.tree.body:
@@ -277,12 +272,15 @@ def _register_name(node: ast.AST) -> str | None:
     return None
 
 
-def fingerprints(read: Callable[[str], str | None]) -> dict[str, str]:
+def fingerprints(
+    read: Callable[[str], str | None], plan_files: list[str] = PLAN_FILES
+) -> dict[str, str]:
     """qname -> sha256 dependency fingerprint for every @register-ed query
-    findable in the tree behind ``read``."""
+    in ``plan_files`` of the tree behind ``read`` (relpath -> source, or
+    None for a file the tree does not have)."""
     tree = _Tree(read)
     out: dict[str, str] = {}
-    for rel in _plan_files():
+    for rel in plan_files:
         info = tree.file(rel)
         if not info.ok:
             continue
@@ -303,25 +301,25 @@ def fingerprints(read: Callable[[str], str | None]) -> dict[str, str]:
 # --- trees: working copy and round-boundary commits ---------------------------
 
 
-def _working_reader() -> Callable[[str], str | None]:
+def working_reader(rel: str) -> str | None:
+    try:
+        with open(os.path.join(REPO, rel), encoding="utf-8") as fh:
+            return fh.read()
+    except FileNotFoundError:
+        return None
+
+
+def _git(*args: str) -> str:
+    return subprocess.run(
+        ["git", "-C", REPO, *args], capture_output=True, text=True, check=True
+    ).stdout
+
+
+def git_reader(sha: str) -> Callable[[str], str | None]:
+    files = set(_git("ls-tree", "-r", "--name-only", sha).splitlines())
+
     def read(rel: str) -> str | None:
-        try:
-            with open(os.path.join(_REPO, rel), encoding="utf-8") as fh:
-                return fh.read()
-        except OSError:
-            return None
-
-    return read
-
-
-def _git_reader(sha: str) -> Callable[[str], str | None]:
-    def read(rel: str) -> str | None:
-        p = subprocess.run(
-            ["git", "-C", _REPO, "show", f"{sha}:{rel}"],
-            capture_output=True,
-            text=True,
-        )
-        return p.stdout if p.returncode == 0 else None
+        return _git("show", f"{sha}:{rel}") if rel in files else None
 
     return read
 
@@ -330,15 +328,8 @@ def boundary_commits() -> dict[int, str]:
     """round -> sha of the driver's ``round N: verdict/...`` commit, whose
     tree is exactly the code that round's CORRECTNESS rows were run on
     (the judge only adds the report files on top of the tested tree)."""
-    p = subprocess.run(
-        ["git", "-C", _REPO, "log", "--format=%H%x00%s"],
-        capture_output=True,
-        text=True,
-    )
-    if p.returncode != 0:
-        return {}
     out: dict[int, str] = {}
-    for line in p.stdout.splitlines():
+    for line in _git("log", "--format=%H%x00%s").splitlines():
         sha, _, subj = line.partition("\x00")
         m = re.match(r"round (\d+): verdict", subj)
         if m:
@@ -346,52 +337,33 @@ def boundary_commits() -> dict[int, str]:
     return out
 
 
-def _load_cache() -> dict:
-    try:
-        with open(_CACHE_PATH, encoding="utf-8") as fh:
-            return json.load(fh)
-    except (OSError, ValueError):
-        return {}
-
-
-def _store_cache(cache: dict) -> None:
-    tmp = _CACHE_PATH + ".tmp"
-    with open(tmp, "w", encoding="utf-8") as fh:
-        json.dump(cache, fh, indent=0, sort_keys=True)
-    os.replace(tmp, _CACHE_PATH)
-
-
-_CURRENT_MEMO: dict[str, str] | None = None
-
-
-def stale_queries(last_green_round: dict[str, int]) -> set[str]:
-    """Names whose dependency fingerprint today differs from their
-    fingerprint at the boundary commit of their last driver-green round —
-    i.e. the code under them changed after the evidence was recorded."""
-    global _CURRENT_MEMO
-    if _CURRENT_MEMO is None:
-        _CURRENT_MEMO = fingerprints(_working_reader())
-    current = _CURRENT_MEMO
+def recheck_pins() -> list[str]:
+    """Verified queries whose fingerprint today differs from their
+    fingerprint at the boundary commit of the round that verified them
+    (``__spark_entry__.verified_rounds``). Red retries are left out: the
+    driver order already puts them first."""
+    verified_in = verified_rounds(all_queries(), *correctness_records())
+    current = fingerprints(working_reader)
     bounds = boundary_commits()
-    cache = _load_cache()
-    dirty = False
-    stale: set[str] = set()
-    for rnd in sorted({r for r in last_green_round.values()}):
-        sha = bounds.get(rnd)
-        if sha is None:
-            continue
-        if sha not in cache:
-            cache[sha] = fingerprints(_git_reader(sha))
-            dirty = True
-        old = cache[sha]
-        for q, g in last_green_round.items():
-            if g != rnd:
-                continue
-            if q in old and q in current and old[q] != current[q]:
-                stale.add(q)
-    if dirty:
-        try:
-            _store_cache(cache)
-        except OSError:
-            pass
-    return stale
+    pins: set[str] = set()
+    for rnd in sorted(set(verified_in.values())):
+        if rnd not in bounds:
+            raise SystemExit(f"no 'round {rnd}: verdict' commit in git log")
+        old = fingerprints(git_reader(bounds[rnd]))
+        pins.update(
+            q for q, r in verified_in.items()
+            if r == rnd and q in old and old[q] != current[q]
+        )
+    return sorted(pins)
+
+
+def main() -> None:
+    pins = recheck_pins()
+    with open(PINS_PATH, "w", encoding="utf-8") as fh:
+        json.dump(pins, fh, indent=1)
+        fh.write("\n")
+    print(f"{len(pins)} pins -> {os.path.relpath(PINS_PATH, REPO)}")
+
+
+if __name__ == "__main__":
+    main()
