@@ -120,12 +120,6 @@ def tiny_df(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
     return spark.sql(f"SELECT {cols} FROM (VALUES {values}) AS t({names})")
 
 
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
-    """Load several tables at once; all of them when ``names`` is empty."""
-    wanted = names or TABLES
-    return {n: load_table(spark, sf_dir, n) for n in wanted}
-
-
 def register_views(spark: SparkSession, sf_dir: str, *names: str) -> list[str]:
     """Expose the star schema as temp views so users can work in raw SQL —
     the engine's interactive entry point (SURVEY.md §3.2: the reference's

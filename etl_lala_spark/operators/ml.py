@@ -23,8 +23,6 @@ row-order dependence beyond floating summation order.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -98,10 +96,6 @@ def logistic_predict(
         logit = logit + F.lit(weights[j + 1]) * F.col(c).cast("double")
     p = F.lit(1.0) / (F.lit(1.0) + F.exp(-logit))
     return features.withColumn("p", p).withColumn("pred", (p >= 0.5).cast("int"))
-
-
-def sigmoid(x: float) -> float:
-    return 1.0 / (1.0 + math.exp(-x))
 
 
 # --- Trained language-ID (fastText family) -----------------------------------

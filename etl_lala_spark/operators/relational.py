@@ -1,19 +1,18 @@
 """Relational operator extensions Spark lacks as single built-ins
-(SURVEY.md §2.12): as-of join (two implementations), top-k per group.
+(SURVEY.md §2.12): backward as-of join, skew-salted join, key-skew
+profile, SCD2 and changelog merges, expectation gates, snapshot diff and
+PSI drift.
 
-The as-of join has two physical strategies with identical semantics:
-
-- ``asof_join_window``: union both sides, one window pass with
-  last(ignorenulls) — a single shuffle on the partition key, fully JVM-side.
-  Preferred at 100 TB: no Python, no per-group materialization.
-- ``asof_join_pandas``: per-key ``applyInPandas`` with ``pd.merge_asof`` —
-  the escape hatch when semantics outgrow window expressions (tolerance
-  bands, nearest-direction variants). Arrow-batched; state is one group.
+The as-of join has one strategy, ``asof_join_window``: union both sides,
+one window pass with last(ignorenulls) — a single shuffle on the
+partition key, fully JVM-side. The per-key ``pd.merge_asof`` forms
+(single-sided and cogrouped ``applyInPandas``) measured 33-35× slower at
+sf0.1 with as many jobs or more, so they are gone (SCALE.md,
+Python-boundary policy).
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
@@ -37,10 +36,11 @@ def asof_join_window(
     row even when its fields are NULL), so last(ignorenulls) always picks
     the most recent right ROW as a unit — per-column last() would skip a
     genuine NULL payload value and stitch together fields from different
-    right rows (a row that never existed). Right rows with a NULL ``on``
-    are dropped (no defined position on the as-of axis) and a left row
-    with NULL ``on`` gets NULL payloads — both matching the pandas
-    strategies, which exclude those rows from pd.merge_asof.
+    right rows (a row that never existed): if the latest right row's
+    field is NULL, the output field is NULL. Right rows with a NULL
+    ``on`` are dropped (no defined position on the as-of axis), a left
+    row with a NULL ``on`` gets NULL payloads, and a left row whose key
+    has no right row at or before it gets NULL payloads.
     """
     lt = left.withColumn("_is_left", F.lit(1))
     rt = (
@@ -68,78 +68,6 @@ def asof_join_window(
     # asc), so their window prefix holds no right struct and the payloads
     # are NULL — no special-casing needed.
     return out.filter(F.col("_is_left") == 1).drop("_is_left", "_r")
-
-
-def asof_join_pandas(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    by: str,
-    right_cols: list[str],
-) -> DataFrame:
-    """Same backward as-of semantics via per-key pd.merge_asof
-    (applyInPandas). Kept schema-identical to asof_join_window so the two
-    strategies are interchangeable (and share one oracle)."""
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in left.schema.fields
-    ) + ", " + ", ".join(f"asof_{c} {dict(right.dtypes)[c]}" for c in right_cols)
-
-    lt = left.withColumn("_side", F.lit("l"))
-    rt = right.select(by, on, *right_cols).withColumn("_side", F.lit("r"))
-    both = lt.unionByName(rt, allowMissingColumns=True)
-    left_cols = [f.name for f in left.schema.fields]
-
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        lpdf = pdf[pdf["_side"] == "l"].sort_values(on, kind="mergesort")[left_cols]
-        rpdf = (
-            pdf[pdf["_side"] == "r"]
-            .sort_values(on, kind="mergesort")[[on, *right_cols]]
-            .rename(columns={c: f"asof_{c}" for c in right_cols})
-        )
-        if len(lpdf) == 0:
-            return pd.DataFrame(columns=[*left_cols, *[f"asof_{c}" for c in right_cols]])
-        return _merge_asof_nullsafe(lpdf, rpdf, on, right_cols)
-
-    return both.groupBy(by).applyInPandas(merge, schema=out_schema)
-
-
-def _merge_asof_nullsafe(
-    lpdf: pd.DataFrame, rpdf: pd.DataFrame, on: str, right_cols: list[str]
-) -> pd.DataFrame:
-    """pd.merge_asof with the same NULL-``on`` contract as
-    ``asof_join_window``: right rows with a NULL key are dropped (no
-    position on the as-of axis), left rows with a NULL key keep NULL
-    payloads — merge_asof itself refuses NaT/NaN merge keys ('left keys
-    must be sorted'), which would otherwise fail the job on one bad row."""
-    rpdf = rpdf[rpdf[on].notna()]
-    l_null = lpdf[lpdf[on].isna()]
-    l_ok = lpdf[lpdf[on].notna()]
-    merged = pd.merge_asof(
-        l_ok, rpdf, on=on, direction="backward", allow_exact_matches=True
-    )
-    if len(l_null):
-        l_null = l_null.copy()
-        for c in right_cols:
-            l_null[f"asof_{c}"] = None
-        merged = pd.concat([merged, l_null], ignore_index=True)
-    return merged
-
-
-def topk_per_group(
-    df: DataFrame, group_cols: list[str], order_by: list[Column], k: int
-) -> DataFrame:
-    """Deterministic per-group top-k (row_number + filter → Spark plans a
-    per-partition partial top-k before the shuffle). Output schema equals
-    the input's — the internal rank column is dropped (leaking it broke
-    schema-sensitive consumers like unionByName/parquet appends, and
-    clobbered any existing ``rn`` column)."""
-    w = W.partitionBy(*group_cols).orderBy(*order_by)
-    rank = "__topk_rn"
-    return (
-        df.withColumn(rank, F.row_number().over(w))
-        .filter(F.col(rank) <= k)
-        .drop(rank)
-    )
 
 
 def salted_join(
@@ -375,42 +303,6 @@ def check_expectations(df: DataFrame, rules: dict[str, Column]) -> DataFrame:
             F.round(F.col("n_violations") / F.col("n_rows"), 6).alias("violation_rate"),
         )
         .orderBy("rule")
-    )
-
-
-def asof_join_cogrouped(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    by: str,
-    right_cols: list[str],
-) -> DataFrame:
-    """Backward as-of via cogrouped ``applyInPandas`` — the two-sided
-    grouped-map API: both inputs are shuffled on ``by`` and each key's
-    (left, right) frames arrive as SEPARATE pandas DataFrames, so there is
-    no tag-and-union padding and no NULL-filled columns crossing Arrow.
-    Same semantics and output schema as the window / single-sided forms
-    (the three strategies share one oracle)."""
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in left.schema.fields
-    ) + ", " + ", ".join(f"asof_{c} {dict(right.dtypes)[c]}" for c in right_cols)
-    left_cols = [f.name for f in left.schema.fields]
-
-    def merge(lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-        cols = [*left_cols, *[f"asof_{c}" for c in right_cols]]
-        if len(lpdf) == 0:
-            return pd.DataFrame(columns=cols)
-        lpdf = lpdf.sort_values(on, kind="mergesort")[left_cols]
-        rpdf = (
-            rpdf.sort_values(on, kind="mergesort")[[on, *right_cols]]
-            .rename(columns={c: f"asof_{c}" for c in right_cols})
-        )
-        return _merge_asof_nullsafe(lpdf, rpdf, on, right_cols)
-
-    return (
-        left.groupBy(by)
-        .cogroup(right.groupBy(by))
-        .applyInPandas(merge, schema=out_schema)
     )
 
 

@@ -226,31 +226,6 @@ def hard_negative_mine_ivf(
     )
 
 
-def hyperplane(dim: int, plane: int) -> list[float]:
-    """Deterministic pseudo-random unit-free hyperplane: sin-scrambled values
-    keyed by (plane, dim-index). No RNG → reproducible across runs/engines."""
-    return [math.sin(plane * 7919 + d * 104729 + 0.5) for d in range(dim)]
-
-
-def lsh_bucket(vec: Column, planes: list[list[float]]) -> Column:
-    """Sign-bit bucket id over the hyperplanes (random-projection LSH).
-
-    Single-plane-set form kept for tests; the multi-table hot path uses
-    ``_bucketed`` below, which evaluates every plane of every table in ONE
-    ``transform`` over a plane-matrix literal — 32 separate aggregate
-    expressions made Catalyst analysis + codegen the dominant cost (15 s for
-    a 2 k-row corpus), the fused form is one small tree.
-    """
-    mat = F.array(*[F.array(*[F.lit(float(w)) for w in p]) for p in planes])
-    projs = F.transform(mat, lambda p: dot(vec, p))
-    bucket = F.lit(0).cast("long")
-    for i in range(len(planes)):
-        bucket = bucket + F.when(
-            F.element_at(projs, i + 1) >= 0, F.lit(2**i).cast("long")
-        ).otherwise(F.lit(0).cast("long"))
-    return bucket
-
-
 def lsh_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -276,8 +251,9 @@ def lsh_topk(
 
     def bucketed(df: DataFrame, idc: str, vecc: str) -> DataFrame:
         # All n_tables×n_planes projections in ONE transform over the plane
-        # matrix. The matrix itself is generated JVM-side (same sin formula
-        # as ``hyperplane``) in a one-row broadcast DataFrame: shipping 2048
+        # matrix. The matrix itself is generated JVM-side (sin-scrambled
+        # values keyed by (plane, dim-index): no RNG, reproducible across
+        # runs and engines) in a one-row broadcast DataFrame: shipping 2048
         # Python float literals through py4j cost ~4 s of plan-build time per
         # query — more than executing the query. Projections are materialized
         # as a column so the sign-bit extraction below reads an attribute

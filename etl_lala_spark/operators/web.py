@@ -21,8 +21,6 @@ Semantics implemented (RFC 9309, the Robots Exclusion Protocol):
 
 from __future__ import annotations
 
-from collections import OrderedDict
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
@@ -226,8 +224,8 @@ def bloom_build(
     O(n_bits) driver state at exactly 8 bytes/word (a Python list of
     boxed ints would be ~4× that and cost an O(n_words) conversion on
     every probe at frontier sizes), re-entering :func:`bloom_probe` as
-    plan literals (small) or an executor broadcast (large), the same
-    state discipline as the kmeans codebook. False-positive rate for
+    plan literals (small) or its set words (large), the same state
+    discipline as the kmeans codebook. False-positive rate for
     n keys ≈ (1 − e^(−k·n/m))^k; size m to the seen-set budget."""
     import numpy as np
 
@@ -331,7 +329,7 @@ def _bloom_probe_words(
     """Join-transport probe: k left joins on the word index + a JVM bit
     test — zero Python, zero driver state. A missing word means the bit
     was never set (definitely-new); a NULL key yields a NULL verdict,
-    bit-identical to the other transports. ``words`` must carry ONE row
+    bit-identical to the literal transport. ``words`` must carry ONE row
     per w (bloom_build_words guarantees it; aggregate first if merging
     sketches) and should be materialized — the broadcast-or-not decision
     counts it unless the caller passes ``n_words_hint``."""
@@ -676,25 +674,11 @@ def bloom_sketch_probe(
 
 
 # Above this size the bitmap stops riding the plan as an array literal and
-# ships as an executor broadcast instead: a plan with millions of Literal
-# children is a construction/analysis scale-killer long before the data is
-# (measured: each py4j-built literal costs ~2-3 ms of plan construction, so
-# even 2048 words burn ~5 s before a row moves; the broadcast path probes a
-# 2^27-bit / 16 MB sketch over 4M rows in under 4 s total).
+# is probed as set words by the join transport instead: a plan with
+# millions of Literal children is a construction/analysis scale-killer
+# long before the data is (measured: each py4j-built literal costs ~2-3 ms
+# of plan construction, so even 2048 words burn ~5 s before a row moves).
 _BLOOM_LITERAL_MAX_BITS = 1 << 15
-
-# Content-keyed LRU of live sketch broadcasts (see bloom_probe).
-_BLOOM_BCASTS: "OrderedDict[tuple, object]" = OrderedDict()
-
-# Above this size a DENSE driver bitmap stops making sense entirely: a
-# pickled Python broadcast is deserialized into EVERY Python worker process
-# (at 32 workers/host a 1 GiB bitmap costs 32 GiB of RAM and ~32 GiB of
-# unpickling — measured 324 s for one 2^33-bit probe), and a memmapped
-# SparkFile trades that for disk I/O. Past this threshold the sketch lives
-# as a distributed set-words DataFrame instead (see bloom_build_words):
-# O(set bits) state, probed by k JVM-side joins, no Python, no driver copy
-# (measured: the same 2^33-bit build+probe drops 36+324 s → 8+12 s).
-_BLOOM_BCAST_MAX_BITS = 1 << 28
 
 
 def bloom_probe(
@@ -706,42 +690,41 @@ def bloom_probe(
     out_col: str = "maybe_seen",
 ) -> DataFrame:
     """Probe a built Bloom filter: appends ``out_col`` (true = possibly
-    seen, false = DEFINITELY new). At 100 TB the probe is a scan — no
-    join, no shuffle — with a size-dependent bitmap transport:
+    seen, false = DEFINITELY new). The probe is a scan plus, above the
+    literal ceiling, k joins against the set words — with one of two
+    bitmap transports:
 
-    - a ``DataFrame`` sketch (from :func:`bloom_build_words` — the
-      frontier-scale form): k JVM-side left joins on the word index + a
-      codegen bit test, zero Python, zero driver state;
     - array, ``n_bits <= _BLOOM_LITERAL_MAX_BITS`` (32 Ki bits / 512
       words): the bitmap enters the plan as an array literal and each
       key tests k bits with element_at + shiftright, pure codegen;
-    - array, up to ``_BLOOM_BCAST_MAX_BITS`` (2^28 bits / 32 MB): ships
-      as a numpy broadcast probed by an Arrow-batched pandas UDF doing a
-      vectorized gather + bit-test per batch;
-    - a dense array BEYOND that is converted to its set words and probed
-      via the join transport (a Python broadcast would deserialize one
-      private 1 GiB copy per worker — 32 GiB/host, measured 324 s vs
-      12 s for the joins at 2^33 bits).
+    - a ``DataFrame`` sketch (from :func:`bloom_build_words` — the
+      frontier-scale form), or a dense array above the literal ceiling,
+      which is first converted to its set words (one Arrow-batched
+      ``createDataFrame`` of the nonzero slice, local-checkpointed): k
+      JVM-side left joins on the word index + a codegen bit test, zero
+      Python in the probe, zero driver state after the conversion.
 
-    In every tier the k bit POSITIONS are computed JVM-side by the same
-    md5 codegen (:func:`_bloom_positions`), so all transports are
+    A dense array is never shipped as a Python broadcast: a pickled
+    bitmap is deserialized into EVERY Python worker process (at 32
+    workers/host a 1 GiB bitmap costs 32 GiB of RAM — measured 324 s vs
+    12 s for the joins at 2^33 bits), and keeping broadcasts alive for
+    lazy plans needs process-global state whose eviction fails those
+    plans at action time. The conversion runs two jobs of its own per
+    call (its checkpoint and the words broadcast; SCALE.md, round-11
+    Bloom section), so a caller that re-probes one large sketch should
+    pass a words DataFrame from :func:`bloom_build_words` instead.
+
+    In every transport the k bit POSITIONS are computed JVM-side by the
+    same md5 codegen (:func:`_bloom_positions`), so both are
     bit-identical, including NULL key → NULL verdict.
 
     The contract (zero false negatives) is what makes the filter safe as
     a frontier pre-filter: 'new' rows are exactly right, 'seen' rows go
-    to the exact path only if a re-check matters.
-
-    Broadcast-tier lifetime contract: probed bitmaps are cached as Spark
-    broadcasts in a 4-entry LRU keyed on content; probing a 5th DISTINCT
-    sketch unpersists the oldest broadcast, so a still-unconsumed LAZY
-    plan returned by an earlier probe of that sketch will fail at action
-    time with an executor "broadcast not found" error. Consume (or
-    checkpoint) each probe's result before probing 4 newer distinct
-    sketches."""
+    to the exact path only if a re-check matters."""
     if isinstance(bitmap, DataFrame):
         return _bloom_probe_words(df, bitmap, key_col, n_bits, k, out_col)
-    pos = _bloom_positions(key_col, n_bits, k)
     if n_bits <= _BLOOM_LITERAL_MAX_BITS:
+        pos = _bloom_positions(key_col, n_bits, k)
         out = df.withColumn(
             # int(w): py4j literals must be Python ints, not numpy scalars
             "_bm", F.array(*[F.lit(int(w)).cast("bigint") for w in bitmap])
@@ -757,87 +740,22 @@ def bloom_probe(
             "_bm", *[f"_bp{i}" for i in range(k)]
         )
 
-    import hashlib
-
     import numpy as np
     import pandas as pd
-    from pyspark.sql.functions import pandas_udf
     from pyspark.sql import SparkSession
 
     bm = np.asarray(bitmap, dtype=np.int64)
-
-    if n_bits > _BLOOM_BCAST_MAX_BITS:
-        # A dense array this large should not exist, but a caller who
-        # built one anyway gets the join transport, not a 32-copies-per-
-        # host Python broadcast: re-express the DENSE bitmap as its set
-        # words (one Arrow-batched createDataFrame of the nonzero slice)
-        # and probe JVM-side.
-        nz = np.flatnonzero(bm)
-        spark = df.sparkSession or SparkSession.getActiveSession()
-        words = spark.createDataFrame(
-            pd.DataFrame({"w": nz.astype(np.int64), "bits": bm[nz]}),
-            # explicit schema: an ALL-ZERO bitmap yields an empty frame,
-            # which schema inference rejects (verdicts must be all-false,
-            # not a crash)
-            schema="w bigint, bits bigint",
-        ).localCheckpoint()
-        return _bloom_probe_words(
-            df, words, key_col, n_bits, k, out_col, n_words_hint=nz.size
-        )
-
-    sc = (df.sparkSession or SparkSession.getActiveSession()).sparkContext
-    digest = hashlib.md5(bm.tobytes()).hexdigest()
-    # broadcast CACHE: re-probing the same sketch (a frontier probes
-    # its bitmap every micro-batch) must not ship another copy per
-    # call — content-keyed reuse plus LRU eviction of older sketches
-    # bounds executor memory at a few sketches instead of one per
-    # invocation. Contract: consume a probe's results before 4 newer
-    # DISTINCT sketches are probed (eviction unpersists; a still-lazy
-    # plan over an evicted sketch would re-ship it... by failing, not
-    # silently).
-    key = (sc.applicationId, bm.size, digest)
-    bcast = _BLOOM_BCASTS.get(key)
-    if bcast is None:
-        bcast = sc.broadcast(bm)
-        _BLOOM_BCASTS[key] = bcast
-        while len(_BLOOM_BCASTS) > 4:
-            _, old = _BLOOM_BCASTS.popitem(last=False)
-            try:
-                old.unpersist()
-            except Exception:
-                pass  # context already stopped
-    else:
-        _BLOOM_BCASTS.move_to_end(key)
-
-    def _probe_batches(cols):
-        arr = bcast.value
-        n = len(cols[0])
-        valid = np.ones(n, dtype=bool)
-        hit = np.ones(n, dtype=bool)
-        for c in cols:
-            # NULL key -> NULL verdict, bit-identical to the literal
-            # transport (one malformed frontier row must not kill the scan)
-            f = c.to_numpy(dtype="float64", na_value=np.nan)
-            v = ~np.isnan(f)
-            valid &= v
-            p = np.where(v, f, 0).astype(np.int64)
-            # arithmetic >> keeps bit (p % 64) of the signed word intact
-            hit &= ((arr[p >> 6] >> (p & 63)) & 1).astype(bool)
-        out = pd.Series(hit, dtype="object")
-        out[~valid] = None
-        return out
-
-    # k is dynamic, so the scalar pandas_udf gets an explicitly k-ary
-    # wrapper (varargs type hints aren't accepted by the hint inference)
-    _probe = pandas_udf(
-        lambda *cols: _probe_batches(cols), "boolean"
+    nz = np.flatnonzero(bm)
+    spark = df.sparkSession or SparkSession.getActiveSession()
+    words = spark.createDataFrame(
+        pd.DataFrame({"w": nz.astype(np.int64), "bits": bm[nz]}),
+        # explicit schema: an ALL-ZERO bitmap yields an empty frame, which
+        # schema inference rejects (verdicts must be all-false, not a crash)
+        schema="w bigint, bits bigint",
+    ).localCheckpoint()
+    return _bloom_probe_words(
+        df, words, key_col, n_bits, k, out_col, n_words_hint=nz.size
     )
-
-    tmp = [f"_bp{i}" for i in range(k)]
-    out = df
-    for name, p in zip(tmp, pos):
-        out = out.withColumn(name, p)
-    return out.withColumn(out_col, _probe(*[F.col(t) for t in tmp])).drop(*tmp)
 
 
 # _parquet_dir_rows: above this many files the single-threaded driver

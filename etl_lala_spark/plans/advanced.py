@@ -1,10 +1,8 @@
-"""Advanced relational surface: as-of joins, pivot/unpivot, subqueries,
+"""Advanced relational surface: as-of join, pivot/unpivot, subqueries,
 HAVING, and the UDF/UDTF extension points (SURVEY.md §2.10/§2.12).
 
-The two as-of implementations (window-based JVM path and merge_asof pandas
-path) share one oracle — interchangeable physical strategies for the same
-logical operator, which is the Spark-first design the reference's external-
-converter extension point maps onto.
+The as-of join runs one strategy, the window-based JVM path
+(``operators/relational.py:asof_join_window``).
 """
 
 from __future__ import annotations
@@ -45,17 +43,6 @@ def asof_join_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     left, logins = _asof_inputs(spark, sf_dir)
     out = rel.asof_join_window(left, logins, on="ts", by="user_id", right_cols=["login_ts"])
     return out.select("event_id", "user_id", "ts", F.col("asof_login_ts")).orderBy("event_id")
-
-
-@register("asof_join_pandas", oracle=ASOF_ORACLE)
-def asof_join_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same as-of semantics via per-user pd.merge_asof (applyInPandas) —
-    the Arrow-batched escape hatch, oracle-identical to the window strategy."""
-    left, logins = _asof_inputs(spark, sf_dir)
-    out = rel.asof_join_pandas(left, logins, on="ts", by="user_id", right_cols=["login_ts"])
-    return out.select(
-        "event_id", "user_id", "ts", F.col("asof_login_ts")
-    ).orderBy("event_id")
 
 
 @register(
@@ -464,21 +451,6 @@ def join_lateral_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_table(spark, sf_dir, "nation").createOrReplaceTempView("nation")
     load_table(spark, sf_dir, "customer").createOrReplaceTempView("customer")
     return spark.sql(_LATERAL_SQL)
-
-
-@register("asof_join_cogrouped", oracle=ASOF_ORACLE)
-def asof_join_cogrouped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """As-of join, third strategy: cogrouped applyInPandas
-    (`groupBy().cogroup().applyInPandas`) — the two-sided grouped-map API,
-    one shuffle per side on user_id, no union padding. Oracle-identical to
-    the window and single-sided pandas forms."""
-    left, logins = _asof_inputs(spark, sf_dir)
-    out = rel.asof_join_cogrouped(
-        left, logins, on="ts", by="user_id", right_cols=["login_ts"]
-    )
-    return out.select(
-        "event_id", "user_id", "ts", F.col("asof_login_ts")
-    ).orderBy("event_id")
 
 
 @register(

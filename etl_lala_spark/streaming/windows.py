@@ -3,7 +3,7 @@
 The reference streams NDJSON with constant memory (T1), chunked triggers
 (T3), progress emission (T4), and idempotent incremental loads (T5) — but has
 no event-time semantics. These builders define them Spark-first: watermarked
-tumbling/sliding/session windows and key-dedup over any streaming DataFrame.
+tumbling/session windows and key-dedup over any streaming DataFrame.
 Each returns an unstarted streaming DataFrame so callers pick sink + trigger;
 the batch shapes of the same aggregations live in ``plans.events`` with
 DuckDB oracles, and tests drive these with a memory sink.
@@ -54,20 +54,6 @@ def tumbling_counts(
             "n_events",
             "value_sum",
         )
-    )
-
-
-def sliding_counts(
-    events: DataFrame,
-    width: str = "10 minutes",
-    slide: str = "5 minutes",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", width, slide).alias("w"))
-        .agg(F.count("*").alias("n_events"), F.round(F.sum("value"), 2).alias("value_sum"))
-        .select(F.col("w.start").alias("w_start"), "n_events", "value_sum")
     )
 
 

@@ -263,12 +263,45 @@ def test_udtf_matches_posexplode(spark, sf_dir):
     assert got == ref
 
 
-def test_asof_strategies_agree(spark, sf_dir):
-    from etl_lala_spark.plans import query_fns
+def test_asof_join_window_null_contract(spark):
+    """Hand-computed backward as-of over a NULL-laden fixture: the latest
+    right row wins as a unit (its NULL field stays NULL, never stitched
+    from an older row), a right row with a NULL ``on`` is ignored, a left
+    row with a NULL ``on`` or with no right row at or before it gets NULL
+    payloads, and an equal timestamp matches."""
+    from etl_lala_spark.operators import relational as rel
 
-    w = query_fns()["asof_join_window"](spark, sf_dir).collect()
-    p = query_fns()["asof_join_pandas"](spark, sf_dir).collect()
-    assert [tuple(r) for r in w] == [tuple(r) for r in p]
+    left = spark.createDataFrame(
+        [
+            (1, "u1", 5),     # before every right row of u1
+            (2, "u1", 10),    # equal timestamp
+            (3, "u1", 15),
+            (4, "u1", 25),    # latest right row has a NULL field
+            (5, "u1", None),  # NULL on
+            (6, "u2", 30),    # key without right rows
+        ],
+        "id int, k string, t bigint",
+    )
+    right = spark.createDataFrame(
+        [
+            ("u1", 10, "r10", 1),
+            ("u1", 20, None, 2),
+            ("u1", None, "rnull", 99),  # no position on the as-of axis
+            ("u3", 1, "other", 3),
+        ],
+        "k string, t bigint, a string, b int",
+    )
+    out = rel.asof_join_window(left, right, on="t", by="k", right_cols=["a", "b"])
+    assert out.columns == ["id", "k", "t", "asof_a", "asof_b"]
+    got = {r["id"]: (r["asof_a"], r["asof_b"]) for r in out.collect()}
+    assert got == {
+        1: (None, None),
+        2: ("r10", 1),
+        3: ("r10", 1),
+        4: (None, 2),
+        5: (None, None),
+        6: (None, None),
+    }
 
 
 def test_approx_aggs_bounded_error(spark, sf_dir):
@@ -2652,43 +2685,12 @@ def test_bloom_filter_no_false_negatives(spark):
     assert fp / n < 5 * theory + 0.01  # generous bound; ~0.4% expected
 
 
-def test_bloom_probe_broadcast_transport_bit_identical(spark):
-    """Above _BLOOM_LITERAL_MAX_BITS the probe switches from a plan-literal
-    array to a broadcast + Arrow-batched numpy bit-test; both transports
-    must be bit-identical and the no-false-negative contract must hold on
-    the broadcast path."""
-    from etl_lala_spark.operators import web
-
-    n, k = 300, 3
-    m = web._BLOOM_LITERAL_MAX_BITS * 2  # forces the broadcast transport
-    seen = spark.createDataFrame(
-        [(f"http://x/{i}",) for i in range(n)], "url string"
-    )
-    bitmap = web.bloom_build(seen, n_bits=m, k=k)
-    probe = spark.createDataFrame(
-        [(f"http://x/{i}",) for i in range(2 * n)], "url string"
-    )
-    big = {r["url"]: r["maybe_seen"]
-           for r in web.bloom_probe(probe, bitmap, n_bits=m, k=k).collect()}
-    assert all(big[f"http://x/{i}"] for i in range(n))  # no false negatives
-    # same n_bits through the literal path (threshold raised) must agree
-    # on every row — the transports compute the same k md5 positions
-    old = web._BLOOM_LITERAL_MAX_BITS
-    web._BLOOM_LITERAL_MAX_BITS = m
-    try:
-        lit = {r["url"]: r["maybe_seen"]
-               for r in web.bloom_probe(probe, bitmap, n_bits=m, k=k).collect()}
-    finally:
-        web._BLOOM_LITERAL_MAX_BITS = old
-    assert big == lit
-
-
 def test_bloom_positions_survive_frontier_scale_and_null_keys(spark):
     """The 48-bit position space must stay exact past the 2^31 cliff a
     32-bit cast would hit (a real frontier sketch is 10^9-10^10 bits, and
     Spark 4's ANSI mode turns an overflow into a job-killing exception),
-    and a NULL key must yield a NULL verdict on BOTH transports instead
-    of crashing the Python worker."""
+    and a NULL key must yield a NULL verdict on both dense-array
+    transports instead of failing the probe."""
     from pyspark.sql import functions as F
 
     from etl_lala_spark.operators import web
@@ -2708,8 +2710,8 @@ def test_bloom_positions_survive_frontier_scale_and_null_keys(spark):
     assert 0 <= stats["mn"] and stats["mx"] < n_bits
     assert stats["mx"] > (1 << 31)  # the position space actually exceeds int32
 
-    # NULL-key verdicts: NULL on the broadcast path (not a worker crash),
-    # NULL on the literal path — bit-identical contracts
+    # NULL-key verdicts: NULL on the words-conversion path above the
+    # literal ceiling, NULL on the literal path — bit-identical contracts
     m = web._BLOOM_LITERAL_MAX_BITS * 2
     seen = spark.createDataFrame([("http://x/1",)], "url string")
     bitmap = web.bloom_build(seen, n_bits=m)
@@ -2726,11 +2728,10 @@ def test_bloom_positions_survive_frontier_scale_and_null_keys(spark):
 
 
 def test_bloom_words_transport_bit_identical(spark):
-    """The frontier-scale set-words sketch (bloom_build_words → k JVM
-    joins) must agree row-for-row with the dense-array transports at the
-    same n_bits — same positions, same verdicts, same NULL semantics —
-    and a dense array past _BLOOM_BCAST_MAX_BITS must route through the
-    join transport rather than a per-worker Python broadcast."""
+    """A dense array above _BLOOM_LITERAL_MAX_BITS is converted to its set
+    words and probed by the k-join transport: it must agree row-for-row
+    with the frontier-scale sketch from bloom_build_words at the same
+    n_bits — same positions, same verdicts, same NULL semantics."""
     from etl_lala_spark.operators import web
 
     n, k = 300, 3
@@ -2743,26 +2744,13 @@ def test_bloom_words_transport_bit_identical(spark):
     )
     dense = web.bloom_build(seen, n_bits=m, k=k)
     words = web.bloom_build_words(seen, n_bits=m, k=k)
-    via_bcast = {r["url"]: r["maybe_seen"]
+    via_dense = {r["url"]: r["maybe_seen"]
                  for r in web.bloom_probe(probe, dense, n_bits=m, k=k).collect()}
     via_words = {r["url"]: r["maybe_seen"]
                  for r in web.bloom_probe(probe, words, n_bits=m, k=k).collect()}
-    assert via_words == via_bcast
+    assert via_dense == via_words
     assert via_words[None] is None
     assert all(via_words[f"http://x/{i}"] for i in range(n))
-
-    # dense-array input past the broadcast ceiling: converted to set
-    # words, probed by joins, still bit-identical
-    old = web._BLOOM_BCAST_MAX_BITS
-    web._BLOOM_BCAST_MAX_BITS = web._BLOOM_LITERAL_MAX_BITS
-    try:
-        via_conv = {
-            r["url"]: r["maybe_seen"]
-            for r in web.bloom_probe(probe, dense, n_bits=m, k=k).collect()
-        }
-    finally:
-        web._BLOOM_BCAST_MAX_BITS = old
-    assert via_conv == via_bcast
 
 
 def test_parquet_dir_rows_both_branches(spark, tmp_path):

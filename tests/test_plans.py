@@ -705,6 +705,31 @@ print(json.dumps({"events": events, "in_order": list(fns) == list(_REGISTRY)}))
     assert seen["in_order"]
 
 
+def test_bench_one_starts_from_repo_root_without_pythonpath(sf_dir):
+    """``python tools/bench_one.py <query>`` runs as its docstring says:
+    from the repo root, with PYTHONPATH unset, the tool finds the engine
+    itself and prints one min line per query."""
+    import subprocess
+    import sys
+
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(
+        SPARK_GRAFT_SF_DIR=sf_dir,
+        SPARK_GRAFT_BENCH_RUNS="1",
+        SPARK_GRAFT_CPUS="2",
+        SPARK_DRIVER_MEMORY="1g",
+    )
+    out = subprocess.run(
+        [sys.executable, "tools/bench_one.py", "q1_pricing_summary"],
+        cwd=REPO, env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert any(
+        line.startswith("q1_pricing_summary: min ")
+        for line in out.stdout.splitlines()
+    ), out.stdout
+
+
 def test_per_host_shuffle_skew_posture(spark):
     """Mega-host skew posture of the per-host crawl operators (round-9
     verdict task 7; measured at sf1.0 with a 50%-of-URLs host in

@@ -499,11 +499,12 @@ _bloom_key = st.text(
 @given(
     st.lists(_bloom_key, min_size=1, max_size=60, unique=True),
     st.lists(_bloom_key, min_size=1, max_size=40, unique=True),
-    st.sampled_from([1 << 12, 1 << 17]),  # literal tier / broadcast tier
+    st.sampled_from([1 << 12, 1 << 17]),  # plan literal / words conversion
     st.integers(min_value=1, max_value=4),
 )
 def test_bloom_no_false_negative_property(spark, seen, novel, n_bits, k):
-    """For ANY key set (unicode included), any k, and BOTH dense tiers:
+    """For ANY key set (unicode included), any k, and both dense-array
+    transports (plan literal, and set-words conversion above the ceiling):
     every seen key probes true (the contract that makes the filter safe
     as a frontier pre-filter), and the set-words join transport returns
     the identical verdict map — false positives and all."""

@@ -17,6 +17,9 @@ import statistics
 import sys
 import time
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
 
 def main() -> None:
     names = sys.argv[1:]

@@ -12,7 +12,7 @@ Spark 4 note (memory: bench-measurement-gotchas): the public
 pyspark.sql.DataFrame methods are overridden by the classic subclass, so
 the patch target is pyspark.sql.classic.dataframe.DataFrame.
 
-Usage: PYTHONPATH=/root/repo python tools/job_census.py <query> [query...]
+Usage: python tools/job_census.py <query> [query...]
 Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, SPARK_GRAFT_TRACE=0 to disable
 the action trace (job counts only).
 """
@@ -23,6 +23,9 @@ import os
 import sys
 import time
 import traceback
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def main() -> None:
