@@ -40,6 +40,8 @@ from contextlib import contextmanager
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from etl_lala_spark.io import tiny_df
+
 _CLEANUP_REGISTERED: set[str] = set()
 
 
@@ -84,9 +86,9 @@ class StageLog:
         self.rows.append((len(self.rows), name, int(n)))
 
     def frame(self, spark: SparkSession) -> DataFrame:
-        return spark.createDataFrame(
-            self.rows, "stage_ord int, stage string, n bigint"
-        ).orderBy("stage_ord")
+        # The rows are already in stage order; a VALUES relation collects
+        # with no Spark job, where a parallelized frame plus a sort ran 3.
+        return tiny_df(spark, self.rows, "stage_ord int, stage string, n bigint")
 
 
 @contextmanager

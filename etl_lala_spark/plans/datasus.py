@@ -420,7 +420,7 @@ def datasus_dbc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     or DBF-layout bug breaks the hash match.
 
     The driver-side fixture write is 200 rows (generation, not the operator
-    path); the decode itself runs in executors via mapInPandas."""
+    path); the decode itself runs in executors in the JVM codec."""
     from etl_lala_spark.plans._gates import fixture_region
     from etl_lala_spark.sources.dbc import read_dbc
 

@@ -57,8 +57,8 @@ def archive_expand_members(spark: SparkSession, sf_dir: str) -> DataFrame:
     and contents from SQL ranges: a zip-walk, suffix-case, directory-skip,
     or content-corruption bug all change the hash.
 
-    Scale: one Arrow-batched pass, one-to-many expansion inside the task —
-    the 100 TB shape (S7 spilling is the memory manager's job)."""
+    Scale: one JVM UDF call per archive, one-to-many expansion inside the
+    task — the 100 TB shape (S7 spilling is the memory manager's job)."""
     import zipfile
     from collections.abc import Iterator
     from io import BytesIO
@@ -701,7 +701,7 @@ def dbc_permissive_errors(spark: SparkSession, sf_dir: str) -> DataFrame:
             fh.write(b"not a dbc at all" * 8)
         with open(os.path.join(fixture_dir, "BAD02.dbc"), "wb") as fh:
             # VALID DBF header + garbage compressed payload: passes the
-            # container sniff and fails inside implode.decompress ("bad
+            # container sniff and fails inside the implode explode ("bad
             # literal flag 255") — the decode-past-the-header failure
             # path, distinct from BAD01's header sniff
             import struct
@@ -770,7 +770,7 @@ def archive_permissive_errors(spark: SparkSession, sf_dir: str) -> DataFrame:
     - otherwise: a real ZIP with one good member.
 
     The real ``extract_archive_members(permissive=True, max_member_bytes)``
-    kernel expands everything in one Arrow pass; rows reduce to per-category
+    kernel expands everything in one JVM pass; rows reduce to per-category
     (count, byte sum, error class), which the oracle replays in closed form
     from documents. A swallowed corrupt archive, a cap that blocks the
     sibling good member, a mis-classified error, or a cap that inflates the
@@ -887,8 +887,8 @@ def web_warc_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     (200/404 alternate), and payload bytes (md5) from SQL ranges alone.
 
     Web-layer mirror of reference S6 archive expansion
-    (src/datasus/datasus.service.ts:390-413); same mapInPandas shape as
-    ``sources/archive.py:36``. Scale: one Arrow-batched pass, per-file
+    (src/datasus/datasus.service.ts:390-413); the one-to-many shape of
+    ``sources/archive.py``, in mapInPandas. Scale: one Arrow-batched pass, per-file
     parallelism, no shuffle before the final order-by."""
     import gzip
     from collections.abc import Iterator
@@ -1328,7 +1328,7 @@ def web_bloom_sketch_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
             (7, "probe_rows", counts["rows"]),
         ],
         "stage_ord int, stage string, n bigint",
-    ).orderBy("stage_ord")
+    )
 
 
 @register("web_bloom_frontier_words", oracle=_bloom_oracle(_BLOOM_WORDS_M))

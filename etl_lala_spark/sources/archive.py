@@ -4,25 +4,20 @@ The reference downloads ZIPs into memory (500 MB cap), extracts `.dbc`
 members with adm-zip, and spills them to /tmp to bound memory
 (src/datasus/datasus.service.ts:251-275,390-454). Spark-first version:
 ``binaryFile`` scans the archives as a DataFrame (one row per file, content
-lazily read per task), and extraction is an Arrow-batched ``mapInPandas``
-that emits one row per archive member — the engine's memory manager does the
+lazily read per task), and extraction is a JVM UDF plus ``inline`` that
+emits one row per archive member — the engine's memory manager does the
 bounding, and a 100 TB archive collection parallelizes per file with no
-driver involvement.
+driver involvement and no Python worker.
 """
 
 from __future__ import annotations
 
-import io
-import zipfile
-from collections.abc import Iterator
+import sys
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-MEMBER_SCHEMA = (
-    "archive string, member string, member_basename string, content binary, n_bytes long"
-)
+from etl_lala_spark.sources._jvm import codec_udf
 
 
 def read_binary_files(spark: SparkSession, path: str, glob: str | None = None) -> DataFrame:
@@ -43,82 +38,46 @@ def extract_archive_members(
     ``extrairDbcDoZip``), keeping only entries with the given suffix (P2
     lowercase endswith, src/datasus/datasus.service.ts:398-401).
 
-    One-to-many expansion inside mapInPandas: each task streams archive
-    batches, opens each ZIP from its bytes, and emits member rows — the
-    Spark-native replacement for extract-to-/tmp + path-passing queues (S7:
-    spill/bounding is the memory manager's job now).
+    One-to-many expansion in the JVM codec (:mod:`etl_lala_spark.sources._jvm`):
+    one UDF call per archive reads the ZIP's central directory and returns
+    its member rows, which ``inline`` explodes — the Spark-native
+    replacement for extract-to-/tmp + path-passing queues (S7:
+    spill/bounding is the memory manager's job now). Members are read with
+    a CRC-32 check, as Python's ``zipfile`` reads them.
 
     ``max_member_bytes`` bounds the DECLARED expanded size of each member
     before any byte is inflated — the extraction-side analog of the
     reference's 500 MB download cap, and the zip-bomb guard a 100 TB
     backfill needs (a 1 MB archive can declare a 100 GB member; the check
-    reads only the directory entry). ``permissive=True`` adds an ``_error``
-    string column and turns undecodable archives and over-cap members into
-    structured error rows instead of task failures (R5 — the convention the
-    DBC and NDJSON sources already follow), so one truncated download
-    cannot kill the whole expansion; good rows carry NULL there."""
-
-    schema = MEMBER_SCHEMA + (", _error string" if permissive else "")
-
-    def expand(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {
-                "archive": [],
-                "member": [],
-                "member_basename": [],
-                "content": [],
-                "n_bytes": [],
-                **({"_error": []} if permissive else {}),
-            }
-
-            def emit(path, name, data, err=None):
-                out["archive"].append(path)
-                out["member"].append(name)
-                out["member_basename"].append(
-                    name.rsplit("/", 1)[-1] if name is not None else None
-                )
-                out["content"].append(data)
-                out["n_bytes"].append(len(data) if data is not None else 0)
-                if permissive:
-                    out["_error"].append(err)
-
-            for path, blob in zip(pdf["path"], pdf["content"]):
-                try:
-                    with zipfile.ZipFile(io.BytesIO(bytes(blob))) as zf:
-                        for info in zf.infolist():
-                            if info.is_dir():
-                                continue
-                            name = info.filename
-                            if suffix and not name.lower().endswith(
-                                suffix.lower()
-                            ):
-                                continue
-                            if (
-                                max_member_bytes is not None
-                                and info.file_size > max_member_bytes
-                            ):
-                                msg = (
-                                    f"member {name} declares "
-                                    f"{info.file_size} bytes > cap "
-                                    f"{max_member_bytes}"
-                                )
-                                if not permissive:
-                                    raise ValueError(f"{path}: {msg}")
-                                emit(path, name, None, err=f"ValueError: {msg}")
-                                continue
-                            data = zf.read(info)
-                            emit(path, name, data)
-                except Exception as exc:  # noqa: BLE001 — per-archive boundary
-                    if not permissive:
-                        raise
-                    emit(
-                        path, None, None,
-                        err=f"{type(exc).__name__}: {exc}"[:500],
-                    )
-            yield pd.DataFrame(out)
-
-    cols = archives.select("path", "content")
-    return cols.mapInPandas(expand, schema=schema)
+    reads only the directory entry, and no member is inflated past its
+    declared size). ``permissive=True`` adds an ``_error`` string column
+    and turns undecodable archives (``BadZipFile: …``) and over-cap members
+    (``ValueError: …``) into structured error rows instead of task failures
+    (R5 — the convention the DBC and NDJSON sources already follow), so one
+    truncated download cannot kill the whole expansion; good rows carry
+    NULL there, and members read before an archive fails are kept."""
+    members = codec_udf(
+        archives.sparkSession,
+        "Members",
+        [
+            suffix.lower() if suffix else None,
+            sys.maxsize if max_member_bytes is None else max_member_bytes,
+            permissive,
+        ],
+        F.col("path"),
+        F.col("content"),
+    )
+    expanded = archives.select(F.col("path").alias("archive"), F.inline(members))
+    out = [
+        "archive",
+        "member",
+        F.substring_index("member", "/", -1).alias("member_basename"),
+        "content",
+        F.coalesce(F.length("content"), F.lit(0)).cast("long").alias("n_bytes"),
+    ]
+    if permissive:
+        out.append(F.col("error").alias("_error"))
+    return expanded.select(*out)
 
 
 def strip_extension(df: DataFrame, col: str = "member_basename") -> DataFrame:

@@ -3,12 +3,17 @@
 The reference ships each `.dbc` (PKWare-compressed DBF) to an external Python
 service that runs dbc2dbf + dbfread and streams records back
 (OTIMIZACAO_API_PYTHON.md:190-207,270-287). Here the decode runs *inside* the
-engine: a pure-Python DBF parser (dBase III layout, public spec) executed as
-Arrow-batched ``mapInPandas`` over ``binaryFile`` rows — the idiomatic
-replacement for "POST rows to a Python service". `.dbc` decompression uses
-the pure-Python PKWare implode codec in
-:mod:`etl_lala_spark.sources.implode`, so the whole path runs in-engine with
-no third-party binary dependency.
+engine, in the JVM: :func:`read_dbc` and :func:`read_dbf` are a Java UDF per
+``binaryFile`` row (``jvm/DbcCodec.java``: PKWare DCL explode + dBase III
+record split, compiled at first use by Spark's bundled Janino, see
+:mod:`etl_lala_spark.sources._jvm`) plus ``inline`` — no Python worker
+between the scan and the sink, and no third-party dependency.
+
+The Python codec in this module and :mod:`etl_lala_spark.sources.implode`
+stays as the fixture writer (:func:`write_dbf`, :func:`dbf_to_dbc`), the
+codec of the ``spark.read.format("dbc")`` DataSource (whose API runs in
+Python workers by design), and the reference the JVM codec is tested
+against (tests/test_jvm_codec.py).
 
 Record data model matches the reference: every value stringified, latin1
 decoding, column names discovered from the file header (SURVEY.md §1.2).
@@ -17,16 +22,14 @@ decoding, column names discovered from the file header (SURVEY.md §1.2).
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from etl_lala_spark.sources import implode
+from etl_lala_spark.sources._jvm import codec_udf
 
-HAVE_DBC_CODEC = True  # pure-Python implode codec, no third-party dependency
+_NO_LIMIT = 2**31 - 1
 
 
 def parse_dbf_header(data: bytes) -> list[str]:
@@ -129,7 +132,8 @@ def dbc_to_dbf(data: bytes) -> bytes:
     a 4-byte CRC32, followed by the record section compressed with PKWare
     DCL implode — decoded here by the pure-Python
     :mod:`etl_lala_spark.sources.implode` codec, replacing the reference's
-    external converter service (OTIMIZACAO_API_PYTHON.md:190-207).
+    external converter service (OTIMIZACAO_API_PYTHON.md:190-207). The
+    DataFrame read path runs the JVM port of this function.
     """
     if len(data) < 12:
         raise ValueError("not a .dbc: shorter than a DBF header prefix")
@@ -162,6 +166,46 @@ def infer_dbf_columns(binaries: DataFrame, content_col: str = "content") -> list
     return parse_dbf_header(bytes(first["head"]))
 
 
+def _decode_records(
+    binaries: DataFrame,
+    content_col: str,
+    name_col: str,
+    limit: int | None,
+    columns: list[str] | None,
+    project: list[str] | None,
+    *,
+    dbc: bool,
+    permissive: bool,
+) -> DataFrame:
+    """The shared body of :func:`read_dbf` and :func:`read_dbc`: the JVM
+    codec's ``Records`` UDF yields one struct per kept record, with fields
+    positional so duplicate DBF names keep their own values, and ``inline``
+    turns them into rows."""
+    cols = columns if columns is not None else infer_dbf_columns(binaries, content_col)
+    if project is not None:
+        cols = [c for c in cols if c in project]
+    records = codec_udf(
+        binaries.sparkSession,
+        "Records",
+        [
+            dbc,
+            _NO_LIMIT if limit is None else limit,
+            None if project is None else list(project),
+            cols,
+            permissive,
+        ],
+        F.col(name_col),
+        F.col(content_col),
+    )
+    origem = F.regexp_replace(F.col(name_col), r"\.[^.]*\z", "")  # rsplit(".", 1)[0]
+    split = binaries.select(origem.alias("_o"), F.inline(records))
+    out = [F.col(f"_c{i}").alias(c) for i, c in enumerate(cols)]
+    out.append(F.col("_o").alias("arquivo_origem"))
+    if permissive:
+        out.append(F.col("_e").alias("_decode_error"))
+    return split.select(*out)
+
+
 def read_dbf(
     binaries: DataFrame,
     content_col: str = "content",
@@ -178,43 +222,13 @@ def read_dbf(
     header disagrees raise inside the task (fail-fast, like the reference's
     ``sucesso !== true`` guard). ``project`` pushes column pruning into the
     per-record decoder (see ``parse_dbf``); the output schema keeps the
-    projected fields in file order.
+    projected fields in file order. The split runs in the JVM codec, with
+    :func:`parse_dbf_columns` as its reference.
     """
-    cols = columns if columns is not None else infer_dbf_columns(binaries, content_col)
-    if project is not None:
-        cols = [c for c in cols if c in project]
-    schema = T.StructType(
-        [T.StructField(c, T.StringType()) for c in cols]
-        + [T.StructField("arquivo_origem", T.StringType())]
+    return _decode_records(
+        binaries, content_col, name_col, limit, columns, project,
+        dbc=False, permissive=False,
     )
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            frames = []
-            for name, blob in zip(pdf[name_col], pdf[content_col]):
-                # Columnar decode → dict-of-columns DataFrame: no row-list
-                # materialization, no per-cell dtype coercion pass.
-                file_cols, colvals = parse_dbf_columns(
-                    bytes(blob), limit=limit, project=project
-                )
-                if file_cols != cols:
-                    raise ValueError(
-                        f"{name}: columns {file_cols[:3]}... != expected {cols[:3]}..."
-                    )
-                # Positional construction: dict(zip(names, ...)) would
-                # silently collapse duplicate DBF field names (legal in the
-                # wild) onto the last duplicate's values.
-                f = pd.DataFrame(dict(enumerate(colvals)))
-                f.columns = cols
-                f["arquivo_origem"] = name.rsplit(".", 1)[0]
-                frames.append(f)
-            yield (
-                pd.concat(frames, ignore_index=True)
-                if frames
-                else pd.DataFrame(columns=[*cols, "arquivo_origem"])
-            )
-
-    return binaries.select(name_col, content_col).mapInPandas(decode, schema=schema)
 
 
 def read_dbc(
@@ -229,11 +243,11 @@ def read_dbc(
     """S8 end-to-end: decode ``.dbc`` binary rows (implode-compressed DBF)
     into the all-string record table. Schema discovery needs no
     decompression — the DBF header is stored verbatim at the front of a
-    ``.dbc`` — and the per-file decompress+parse runs distributed inside
-    ``mapInPandas``, one task per batch of files. ``project`` prunes columns
-    inside the decoder (decompression still touches every byte — implode
-    output is sequential — but field slicing/decoding skips non-projected
-    fields).
+    ``.dbc`` — and the per-file explode + record split runs distributed in
+    the JVM codec (:mod:`etl_lala_spark.sources._jvm`), one UDF call per
+    file and no Python worker. ``project`` prunes columns inside the
+    decoder (decompression still touches every byte — implode output is
+    sequential — but field slicing/decoding skips non-projected fields).
 
     ``mode="FAILFAST"`` (default) raises inside the task on a corrupt or
     schema-mismatched file — the reference's ``sucesso !== true`` guard.
@@ -242,57 +256,16 @@ def read_dbc(
     decoding the rest — the Spark PERMISSIVE/badRecords convention the
     NDJSON source already follows (R5), so one truncated archive member
     cannot kill a 100 TB backfill. Pass explicit ``columns`` when the
-    FIRST file may be corrupt (schema inference reads its header)."""
+    FIRST file may be corrupt (schema inference reads its header). The
+    error classes are those of the Python reference codec
+    (``CorruptError`` from :mod:`implode`, ``ValueError`` for the
+    container and column checks)."""
     if mode not in ("FAILFAST", "PERMISSIVE"):
         raise ValueError(f"unknown mode {mode}")
-    cols = columns if columns is not None else infer_dbf_columns(binaries, content_col)
-    if project is not None:
-        cols = [c for c in cols if c in project]
-    permissive = mode == "PERMISSIVE"
-    out_cols = [*cols, "arquivo_origem"] + (["_decode_error"] if permissive else [])
-    schema = T.StructType([T.StructField(c, T.StringType()) for c in out_cols])
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            frames = []
-            for name, blob in zip(pdf[name_col], pdf[content_col]):
-                origem = name.rsplit(".", 1)[0]
-                try:
-                    # Columnar decode (same fast path as read_dbf): one
-                    # latin1 call per column, no rows->columns re-transpose.
-                    file_cols, colvals = parse_dbf_columns(
-                        dbc_to_dbf(bytes(blob)), limit=limit, project=project
-                    )
-                    if file_cols != cols:
-                        raise ValueError(
-                            f"{name}: columns {file_cols[:3]}... != "
-                            f"expected {cols[:3]}..."
-                        )
-                except Exception as ex:  # noqa: BLE001 — per-file boundary
-                    if not permissive:
-                        raise
-                    f = pd.DataFrame(
-                        [[None] * len(cols)], columns=cols, dtype=object
-                    )
-                    f["arquivo_origem"] = origem
-                    f["_decode_error"] = f"{type(ex).__name__}: {str(ex)[:100]}"
-                    frames.append(f)
-                    continue
-                # Positional construction (see read_dbf): preserves data
-                # under duplicate DBF field names.
-                f = pd.DataFrame(dict(enumerate(colvals)))
-                f.columns = cols
-                f["arquivo_origem"] = origem
-                if permissive:
-                    f["_decode_error"] = None
-                frames.append(f)
-            yield (
-                pd.concat(frames, ignore_index=True)
-                if frames
-                else pd.DataFrame(columns=out_cols)
-            )
-
-    return binaries.select(name_col, content_col).mapInPandas(decode, schema=schema)
+    return _decode_records(
+        binaries, content_col, name_col, limit, columns, project,
+        dbc=True, permissive=mode == "PERMISSIVE",
+    )
 
 
 def write_dbf(columns: list[str], rows: list[list[str]], field_len: int = 20) -> bytes:

@@ -10,8 +10,11 @@ flag bit, canonical Huffman tables stored as nibble-packed run lengths with
 inverted code bits, length codes with base+extra tables where decoded length
 519 terminates the stream, and a 4/5/6-bit dictionary).
 
-No third-party codec is required: this replaces the previous import-gated
-``pyreaddbc`` stub, so the S8 scan path runs entirely inside the engine.
+No third-party codec is required. The DataFrame read path
+(``dbc.read_dbc``) runs a JVM port of :func:`decompress`
+(``jvm/DbcCodec.java``); this module is the reference that port is tested
+against byte for byte, the codec of the ``dbc`` Python DataSource, and the
+fixture encoder.
 
 The encoder side below emits *literal-only* streams (valid implode output
 that never uses matches) — enough to build round-trip test fixtures; the
