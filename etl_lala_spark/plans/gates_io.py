@@ -423,9 +423,10 @@ def fetch_http_loopback(spark: SparkSession, sf_dir: str) -> DataFrame:
     serves one deterministic body per nation and the real
     ``fetch_to_staging`` kernel (reference S5: in-memory download with a
     500 MB cap, retry with backoff, src/datasus/datasus.service.ts:251-275)
-    fetches the whole manifest executor-side through ``urllib``. Every
-    reference semantic is exercised against live status codes, not file://
-    shortcuts, with the behavior keyed on ``n_nationkey % 6``:
+    fetches the whole manifest executor-side in the JVM codec's ``Fetch``
+    UDF, which reports urllib's error classes. Every reference semantic is
+    exercised against live status codes, not file:// shortcuts, with the
+    behavior keyed on ``n_nationkey % 6``:
 
     - ``% 6 == 0``: the server 503s the FIRST request for the path and
       succeeds after — retry-with-backoff must land ``ok`` on attempt 2;
@@ -443,10 +444,10 @@ def fetch_http_loopback(spark: SparkSession, sf_dir: str) -> DataFrame:
     closed form, so a broken retry loop, an ignored cap, a swallowed 404,
     or a re-downloaded staged file all land on a different hash.
 
-    Scale: the manifest is the DataFrame and the fetch is mapInPandas —
-    one task per manifest partition, no driver byte ever moves; this gate
-    runs 8 partitions' worth of concurrent loopback requests through the
-    threading server.
+    Scale: the manifest is the DataFrame and the fetch is a Java UDF under
+    ``inline`` — one task per manifest partition, no driver byte ever
+    moves; this gate runs 8 partitions' worth of concurrent loopback
+    requests through the threading server.
 
     Gate scope (not operator scope): the loopback server binds 127.0.0.1
     in the DRIVER process, so this certification runs in local mode —

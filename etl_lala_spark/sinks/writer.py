@@ -5,7 +5,7 @@ The reference's loader creates a destination table on first sight
 (``criada_agora``), appends per month, and skips months already present
 (``competencias_existentes`` — src/datasus/datasus.service.ts:28-34).
 Spark-first: parquet tables partitioned by the competência column; idempotency
-is a left-anti join of the incoming batch against the existing partition keys
+is a literal filter of the incoming batch against the existing partition keys
 (metadata-only listing, no data scan), so re-running a load is a no-op per
 month — at 100 TB this stays O(partitions), not O(rows).
 """
@@ -14,12 +14,11 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-
-from etl_lala_spark.io import tiny_df
 
 
 class LoadResult(dict):
@@ -30,14 +29,30 @@ class LoadResult(dict):
 
 def existing_partitions(spark: SparkSession, table_path: str, part_col: str) -> list[str]:
     """Partition values already present — read from the directory layout
-    (metadata-only; no row scan)."""
+    (metadata-only; no row scan). Spark's %XX path escapes are undone; the
+    NULL partition is not listed, as the JDBC probe lists no NULL key."""
     if not os.path.isdir(table_path):
         return []
     vals = []
     for entry in sorted(os.listdir(table_path)):
         if entry.startswith(f"{part_col}="):
-            vals.append(entry.split("=", 1)[1])
+            val = entry.split("=", 1)[1]
+            if val != "__HIVE_DEFAULT_PARTITION__":
+                vals.append(re.sub(r"%([0-9A-Fa-f]{2})", lambda m: chr(int(m[1], 16)), val))
     return vals
+
+
+def skip_loaded(part_col: str, loaded: list[str]) -> str:
+    """SQL text of the filter that keeps the rows of partitions not in
+    ``loaded``: a literal ``NOT IN`` list, planned with no job, where a
+    broadcast anti-join of the keys costs one. Rows with a NULL partition
+    value are kept, as the anti-join keeps them, and no NULL goes into the
+    list: ``x NOT IN (..., NULL)`` is never true."""
+    col = "`" + part_col.replace("`", "``") + "`"
+    values = ", ".join(
+        "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'" for v in loaded if v is not None
+    )
+    return f"{col} IS NULL OR {col} NOT IN ({values})"
 
 
 def load_incremental(
@@ -48,17 +63,14 @@ def load_incremental(
 ) -> LoadResult:
     """Create-if-absent + append, skipping partitions already loaded.
 
-    Returns the reference-shaped metadata. The skip is an anti-join against
-    the existing partition-key list (broadcast — it is tiny), and the write
-    is partitioned by ``part_col`` so downstream reads prune by month.
+    Returns the reference-shaped metadata. The skip is a filter on the
+    existing partition-key list (:func:`skip_loaded`), and the write is
+    partitioned by ``part_col`` so downstream reads prune by month.
     """
     absent_before = not os.path.isdir(table_path)
     existing = existing_partitions(spark, table_path, part_col)
 
-    batch = df
-    if existing:
-        keys = tiny_df(spark, [(v,) for v in existing], f"{part_col} string")
-        batch = df.join(F.broadcast(keys), part_col, "left_anti")
+    batch = df.filter(skip_loaded(part_col, existing)) if existing else df
 
     # One pass: the count is observed on the write itself, so
     # registros_inseridos is exactly what landed, even from a changing or
@@ -101,7 +113,7 @@ def _jdbc_existing_partitions(
     except Exception as ex:
         # Only a MISSING table means "first load, skip list empty". Any
         # other probe failure (connection blip, permissions, bad part_col)
-        # must propagate: treating it as absent would skip the anti-join
+        # must propagate: treating it as absent would drop the skip filter
         # and re-insert the whole batch — exactly the duplication this
         # function exists to prevent.
         msg = str(ex).lower()
@@ -143,8 +155,8 @@ def load_incremental_jdbc(
     OTIMIZACAO_API_PYTHON.md:144-179): create-if-absent, append per
     competência, skip months already loaded.
 
-    Same idempotency contract as the parquet path: the skip list is an
-    anti-join against the destination's DISTINCT month keys (computed
+    Same idempotency contract as the parquet path: the skip list is a
+    filter on the destination's DISTINCT month keys (computed
     database-side), so replaying a load inserts nothing. The sandbox has no
     database server, so this is exercised by unit tests over the probe/append
     seams; on a real cluster it is a straight pass-through to
@@ -154,11 +166,7 @@ def load_incremental_jdbc(
         spark, url, table, part_col, properties
     )
 
-    batch = df
-    if existing:
-        keys = tiny_df(spark, [(v,) for v in existing], f"{part_col} string")
-        batch = df.join(F.broadcast(keys), part_col, "left_anti")
-
+    batch = df.filter(skip_loaded(part_col, existing)) if existing else df
     batch = batch.persist()  # count and append must see the same rows
     try:
         inserted = batch.count()

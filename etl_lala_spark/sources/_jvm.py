@@ -1,12 +1,13 @@
-"""Spark Java UDFs from the package's JVM codec (``jvm/DbcCodec.java``).
+"""The package's JVM codec (``jvm/DbcCodec.java``): Spark Java UDFs and the
+builders that put them in plans.
 
 The Java source ships with the package and is compiled by the Janino
 compiler that Spark bundles, so no JDK compiler is needed. The classes are
 zipped into a jar named by the source's SHA-256, in a private per-user
-directory under the system temp directory: the first decode call of a
+directory under the system temp directory: the first codec call of a
 process compiles only when no jar for the current source exists there.
-Each SparkContext loads the jar once with ``ADD JAR``; nothing happens at
-session start.
+Each SparkContext loads the jar once with ``ADD JAR`` and keeps one codec
+instance; nothing happens at session start.
 """
 
 from __future__ import annotations
@@ -16,10 +17,11 @@ import os
 import shutil
 import stat
 import tempfile
+import weakref
 import zipfile
 
-from pyspark.sql import Column, SparkSession
-from pyspark.sql.classic.column import _to_java_column, _to_seq
+from pyspark import SparkContext
+from pyspark.sql import SparkSession
 
 SOURCE = os.path.join(os.path.dirname(__file__), "jvm", "DbcCodec.java")
 CLASS = "etl_lala_spark.sources.jvm.DbcCodec"
@@ -58,29 +60,29 @@ def codec_jar(spark: SparkSession) -> str:
     return jar
 
 
+# One codec instance per SparkContext: a stopped context's entry goes with it.
+_CODECS: weakref.WeakKeyDictionary[SparkContext, object] = weakref.WeakKeyDictionary()
+
+
+def codec(spark: SparkSession):
+    """The SparkContext's ``DbcCodec`` instance (a py4j object), whose
+    methods build a codec plan in one call. The first call on a context
+    adds the jar to it, unless already there, and loads the class from the
+    session's jar class loader, which ``newSession()`` clones share."""
+    sc = spark.sparkContext
+    instance = _CODECS.get(sc)
+    if instance is None:
+        jar = codec_jar(spark)
+        jss = spark._jsparkSession
+        if "/" + os.path.basename(jar) not in jss.sparkContext().listJars().mkString(" "):
+            spark.sql(f"ADD JAR '{jar}'")
+        loader = jss.sharedState().jarClassLoader()
+        klass = spark._jvm.java.lang.Class.forName(CLASS, True, loader)
+        instance = _CODECS[sc] = klass.getDeclaredConstructor(None).newInstance(None)
+    return instance
+
+
 def codec_class(spark: SparkSession, name: str = CLASS):
-    """The codec class ``name``, loaded from the jar after adding the jar to
-    the session's SparkContext if it is not there yet."""
-    jar = codec_jar(spark)
-    jss = spark._jsparkSession
-    if "/" + os.path.basename(jar) not in jss.sparkContext().listJars().mkString(" "):
-        spark.sql(f"ADD JAR '{jar}'")
-    loader = jss.sharedState().jarClassLoader()
+    """The codec class ``name``, from the loader of :func:`codec`'s class."""
+    loader = codec(spark).getClass().getClassLoader()
     return spark._jvm.java.lang.Class.forName(name, True, loader)
-
-
-def codec_udf(spark: SparkSession, name: str, args: list, *cols: Column) -> Column:
-    """Apply the codec's ``DbcCodec$<name>`` UDF, constructed from ``args``
-    (Python lists become ``String[]``), to ``cols``."""
-    jvm, gateway = spark._jvm, spark.sparkContext._gateway
-    klass = codec_class(spark, f"{CLASS}${name}")
-    jargs = gateway.new_array(jvm.java.lang.Object, len(args))
-    for i, arg in enumerate(args):
-        if isinstance(arg, list):
-            strings = gateway.new_array(jvm.java.lang.String, len(arg))
-            for j, s in enumerate(arg):
-                strings[j] = s
-            arg = strings
-        jargs[i] = arg
-    judf = klass.getConstructors()[0].newInstance(jargs).udf()
-    return Column(judf.apply(_to_seq(spark.sparkContext, cols, _to_java_column)))

@@ -17,7 +17,7 @@ import sys
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_lala_spark.sources._jvm import codec_udf
+from etl_lala_spark.sources._jvm import codec
 
 
 def read_binary_files(spark: SparkSession, path: str, glob: str | None = None) -> DataFrame:
@@ -56,28 +56,16 @@ def extract_archive_members(
     (R5 — the convention the DBC and NDJSON sources already follow), so one
     truncated download cannot kill the whole expansion; good rows carry
     NULL there, and members read before an archive fails are kept."""
-    members = codec_udf(
-        archives.sparkSession,
-        "Members",
-        [
+    spark = archives.sparkSession
+    return DataFrame(
+        codec(spark).members(
+            archives._jdf,
             suffix.lower() if suffix else None,
             sys.maxsize if max_member_bytes is None else max_member_bytes,
             permissive,
-        ],
-        F.col("path"),
-        F.col("content"),
+        ),
+        spark,
     )
-    expanded = archives.select(F.col("path").alias("archive"), F.inline(members))
-    out = [
-        "archive",
-        "member",
-        F.substring_index("member", "/", -1).alias("member_basename"),
-        "content",
-        F.coalesce(F.length("content"), F.lit(0)).cast("long").alias("n_bytes"),
-    ]
-    if permissive:
-        out.append(F.col("error").alias("_error"))
-    return expanded.select(*out)
 
 
 def strip_extension(df: DataFrame, col: str = "member_basename") -> DataFrame:

@@ -21,13 +21,13 @@ decoding, column names discovered from the file header (SURVEY.md §1.2).
 
 from __future__ import annotations
 
+import json
 import struct
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from etl_lala_spark.sources import implode
-from etl_lala_spark.sources._jvm import codec_udf
+from etl_lala_spark.sources._jvm import codec
 
 _NO_LIMIT = 2**31 - 1
 
@@ -160,10 +160,8 @@ def infer_dbf_columns(binaries: DataFrame, content_col: str = "content") -> list
     distributed with the fixed all-string schema. The prefix is 64 KiB —
     the DBF header length field is u16, so this covers the maximal header
     (a 4 KiB prefix silently truncated any file past ~126 fields)."""
-    first = binaries.select(F.substring(F.col(content_col), 1, 65535).alias("head")).first()
-    if first is None:
-        return []
-    return parse_dbf_header(bytes(first["head"]))
+    head = codec(binaries.sparkSession).head(binaries._jdf, content_col)
+    return [] if head is None else parse_dbf_header(head)
 
 
 def _decode_records(
@@ -180,30 +178,23 @@ def _decode_records(
     """The shared body of :func:`read_dbf` and :func:`read_dbc`: the JVM
     codec's ``Records`` UDF yields one struct per kept record, with fields
     positional so duplicate DBF names keep their own values, and ``inline``
-    turns them into rows."""
+    turns them into rows. The codec builds the plan in one py4j call; the
+    name lists travel as JSON, one argument whatever their length."""
     cols = columns if columns is not None else infer_dbf_columns(binaries, content_col)
     if project is not None:
         cols = [c for c in cols if c in project]
-    records = codec_udf(
-        binaries.sparkSession,
-        "Records",
-        [
-            dbc,
-            _NO_LIMIT if limit is None else limit,
-            None if project is None else list(project),
-            cols,
-            permissive,
-        ],
-        F.col(name_col),
-        F.col(content_col),
+    spark = binaries.sparkSession
+    jdf = codec(spark).records(
+        binaries._jdf,
+        name_col,
+        content_col,
+        dbc,
+        _NO_LIMIT if limit is None else limit,
+        json.dumps(None if project is None else list(project)),
+        json.dumps(cols),
+        permissive,
     )
-    origem = F.regexp_replace(F.col(name_col), r"\.[^.]*\z", "")  # rsplit(".", 1)[0]
-    split = binaries.select(origem.alias("_o"), F.inline(records))
-    out = [F.col(f"_c{i}").alias(c) for i, c in enumerate(cols)]
-    out.append(F.col("_o").alias("arquivo_origem"))
-    if permissive:
-        out.append(F.col("_e").alias("_decode_error"))
-    return split.select(*out)
+    return DataFrame(jdf, spark)
 
 
 def read_dbf(

@@ -3,12 +3,14 @@
 The reference downloads each month's archive over HTTP into memory with a
 500 MB cap, retries with backoff, and spills to /tmp before extraction
 (src/datasus/datasus.service.ts:251-275; queue/backoff R2). Spark-first:
-the download manifest IS a DataFrame, and the fetch runs executor-side via
-``mapInPandas`` — one task per manifest partition, so a 10k-file catalog
-fetches with cluster parallelism and no driver byte ever moves. The staging
-directory is shared storage (NFS/object store via local mount); downstream
-reads go through ``read_binary_files`` → ``extract_archive_members`` →
-the DBC DataSource, completing the ingest chain without leaving the engine.
+the download manifest IS a DataFrame, and :func:`fetch_to_staging` runs
+executor-side as a Java UDF of the package's JVM codec under ``inline`` —
+one task per manifest partition and no Python worker, so a 10k-file
+catalog fetches with cluster parallelism and no driver byte ever moves.
+The staging directory is shared storage (NFS/object store via local
+mount); downstream reads go through ``read_binary_files`` →
+``extract_archive_members`` → ``read_dbc``, completing the ingest chain
+without leaving the JVM.
 
 Semantics carried over from the reference:
 - size cap (default 500 MB): oversized bodies become structured error rows,
@@ -25,9 +27,9 @@ Semantics carried over from the reference:
 - structured error payloads (R5): failures are (status, error) COLUMNS, not
   exceptions — one bad URL cannot kill a 10k-file job.
 
-``urllib`` handles ``file://`` URLs natively, so the unit tests exercise the
-full path with zero network; the sandbox has no egress, which is why no
-registered driver query covers this module (unit-tested only).
+``file://`` URLs take the same path, so the unit tests exercise it with
+zero network. :func:`fetch_ranges` and :func:`fetch_conditional` (the
+web-crawl reads) stay executor-side ``mapInPandas`` over ``urllib``.
 """
 
 from __future__ import annotations
@@ -37,9 +39,7 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 
-FETCH_SCHEMA = (
-    "url string, dest string, n_bytes long, status string, attempts int, error string"
-)
+from etl_lala_spark.sources._jvm import codec
 
 
 class _CapExceeded(ValueError):
@@ -57,79 +57,27 @@ def fetch_to_staging(
     retries: int = 2,
     backoff_s: float = 0.5,
 ) -> DataFrame:
-    """Fetch every URL in ``manifest`` into ``staging_dir``, executor-side.
+    """Fetch every URL in ``manifest`` into ``staging_dir``, executor-side in
+    the JVM codec's ``Fetch`` UDF (:mod:`etl_lala_spark.sources._jvm`).
 
     Returns one row per manifest entry: (url, dest, n_bytes, status,
     attempts, error) with status in {ok, skipped, error}. Destination name
     defaults to the URL basename; pass ``name_col`` to control it (e.g. the
     parsed DATASUS filename). Control fetch concurrency by partitioning the
     manifest (``manifest.repartition(n)`` → n concurrent fetch tasks).
+
+    Error classes are urllib's: ``HTTPError`` for a status outside 2xx,
+    ``URLError`` for a failure to open (missing file, refused connection,
+    unknown host or scheme), ``ValueError`` for the cap. Unlike urllib, a
+    redirect is followed only within one protocol, and proxies come from
+    the JVM's system properties, not from ``http_proxy``.
     """
-
-    def fetch_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import os
-        import time
-        import urllib.request
-
-        os.makedirs(staging_dir, exist_ok=True)
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in (
-                "url", "dest", "n_bytes", "status", "attempts", "error")}
-            names = pdf[name_col] if name_col else [
-                u.rstrip("/").rsplit("/", 1)[-1] or "index" for u in pdf[url_col]
-            ]
-            for url, name in zip(pdf[url_col], names):
-                dest = os.path.join(staging_dir, str(name))
-                row = dict(url=url, dest=dest, n_bytes=0, status="error",
-                           attempts=0, error=None)
-                if os.path.isfile(dest) and os.path.getsize(dest) > 0:
-                    row.update(n_bytes=os.path.getsize(dest), status="skipped")
-                else:
-                    tmp = f"{dest}.part"
-                    for attempt in range(1, retries + 2):
-                        row["attempts"] = attempt
-                        try:
-                            # Stream to disk in chunks under a running cap:
-                            # task memory is chunk-sized, and an oversized
-                            # body aborts at cap+1 bytes, not at EOF.
-                            got = 0
-                            with urllib.request.urlopen(url) as resp, open(
-                                tmp, "wb"
-                            ) as fh:
-                                while True:
-                                    chunk = resp.read(1 << 20)
-                                    if not chunk:
-                                        break
-                                    got += len(chunk)
-                                    if got > max_bytes:
-                                        raise _CapExceeded(
-                                            f"body exceeds max_bytes={max_bytes}"
-                                        )
-                                    fh.write(chunk)
-                            # write-then-rename so a killed task never leaves
-                            # a half-written file that a replay would skip
-                            os.replace(tmp, dest)
-                            row.update(n_bytes=got, status="ok", error=None)
-                            break
-                        except Exception as exc:  # noqa: BLE001 — R5 contract
-                            cls = (
-                                "ValueError"
-                                if isinstance(exc, _CapExceeded)
-                                else type(exc).__name__
-                            )
-                            row["error"] = f"{cls}: {exc}"[:500]
-                            if isinstance(exc, _CapExceeded):
-                                break  # permanent: the body will never shrink
-                            if attempt <= retries:
-                                time.sleep(backoff_s * (2 ** (attempt - 1)))
-                    if os.path.exists(tmp):
-                        os.remove(tmp)  # no half-file survives a failed fetch
-                for k, v in row.items():
-                    out[k].append(v)
-            yield pd.DataFrame(out)
-
-    cols = [url_col] + ([name_col] if name_col else [])
-    return manifest.select(*cols).mapInPandas(fetch_batch, schema=FETCH_SCHEMA)
+    spark = manifest.sparkSession
+    jdf = codec(spark).fetch(
+        manifest._jdf, url_col, name_col, staging_dir,
+        int(max_bytes), int(retries), float(backoff_s),
+    )
+    return DataFrame(jdf, spark)
 
 
 RANGE_FETCH_SCHEMA = (
@@ -168,7 +116,7 @@ def fetch_ranges(
     - HTTP/network failures retry with backoff and land as structured
       error rows (R5) — one dead URL cannot kill a 10k-range job.
 
-    Executor-side ``mapInPandas`` like :func:`fetch_to_staging`; output
+    Executor-side ``mapInPandas``, one task per plan partition; output
     keeps (url, offset, length) so callers join results back to their
     selection at key grain."""
 
@@ -285,8 +233,8 @@ def fetch_conditional(
     PRIOR validators carried forward — RFC 9110: a 304 leaves stored
     validators in force) / ``error`` (R5 structured row; network failures
     retry with backoff, over-cap bodies are permanent). Executor-side
-    ``mapInPandas``, the :func:`fetch_to_staging` discipline — no driver
-    byte ever moves."""
+    ``mapInPandas``, one task per plan partition — no driver byte ever
+    moves."""
 
     def fetch_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import time

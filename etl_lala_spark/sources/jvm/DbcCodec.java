@@ -1,19 +1,34 @@
 package etl_lala_spark.sources.jvm;
 
 import java.io.ByteArrayOutputStream;
+import java.io.File;
+import java.io.FileOutputStream;
 import java.io.IOException;
 import java.io.InputStream;
+import java.io.OutputStream;
+import java.net.HttpURLConnection;
+import java.net.MalformedURLException;
+import java.net.URL;
+import java.net.URLConnection;
 import java.nio.charset.Charset;
 import java.nio.charset.StandardCharsets;
+import java.nio.file.CopyOption;
+import java.nio.file.Files;
+import java.nio.file.StandardCopyOption;
 import java.util.ArrayList;
 import java.util.Arrays;
 import java.util.Enumeration;
+import java.util.List;
 import java.util.Locale;
 import java.util.zip.CRC32;
 
+import com.fasterxml.jackson.databind.ObjectMapper;
 import org.apache.commons.compress.archivers.zip.ZipArchiveEntry;
 import org.apache.commons.compress.archivers.zip.ZipFile;
 import org.apache.commons.compress.utils.SeekableInMemoryByteChannel;
+import org.apache.spark.sql.Column;
+import org.apache.spark.sql.Dataset;
+import org.apache.spark.sql.Row;
 import org.apache.spark.sql.RowFactory;
 import org.apache.spark.sql.api.java.UDF2;
 import org.apache.spark.sql.expressions.UserDefinedFunction;
@@ -23,9 +38,11 @@ import org.apache.spark.sql.types.DataTypes;
 import org.apache.spark.sql.types.StructField;
 
 /**
- * JVM decode of the DATASUS read path: ZIP member expansion, PKWare DCL
- * explode and the dBase III record split, as Spark Java UDFs so the read
- * side runs no Python worker between the binaryFile scan and the sink.
+ * JVM side of the DATASUS ingest chain: the fetch to staging, ZIP member
+ * expansion, PKWare DCL explode and the dBase III record split, as Spark
+ * Java UDFs so the chain runs no Python worker from the manifest to the
+ * sink. An instance's public methods build each plan in one call, so the
+ * driver makes a fixed number of py4j round trips whatever the width.
  *
  * <p>Compiled at first use by Spark's bundled Janino (see
  * {@code etl_lala_spark/sources/_jvm.py}), so it keeps to the subset Janino
@@ -37,7 +54,7 @@ import org.apache.spark.sql.types.StructField;
  */
 public class DbcCodec {
 
-    /** A decode failure tagged with the Python exception class it stands for. */
+    /** A codec failure tagged with the Python exception class it stands for. */
     public static class DecodeError extends RuntimeException {
         public final String kind;
         public final String detail;
@@ -523,5 +540,231 @@ public class DbcCodec {
             }
             return out.toArray();
         }
+    }
+
+    // ---- fetch to staging (reference S5: urllib semantics) -----------------
+
+    /** Python's {@code os.path.join(dir, name)}. */
+    static String pyJoin(String dir, String name) {
+        if (name.startsWith("/") || dir.isEmpty()) {
+            return name;
+        }
+        return dir.endsWith("/") ? dir + name : dir + "/" + name;
+    }
+
+    /** Python's {@code url.rstrip("/").rsplit("/", 1)[-1] or "index"}. */
+    static String basename(String url) {
+        int end = url.length();
+        while (end > 0 && url.charAt(end - 1) == '/') {
+            end--;
+        }
+        String base = url.substring(url.lastIndexOf('/', end - 1) + 1, end);
+        return base.isEmpty() ? "index" : base;
+    }
+
+    /**
+     * Open {@code url} as {@code urllib.request.urlopen} would: a status
+     * outside 2xx is an {@code HTTPError} with urllib's text, a URL without
+     * a scheme a {@code ValueError}, and every other failure to open a
+     * {@code URLError}.
+     */
+    static InputStream open(String url) {
+        URL u;
+        try {
+            u = new URL(url);
+        } catch (MalformedURLException ex) {
+            int colon = url == null ? -1 : url.indexOf(':');
+            if (colon < 0) {
+                throw new DecodeError("ValueError", "unknown url type: '" + url + "'");
+            }
+            throw new DecodeError("URLError", "<urlopen error unknown url type: " + url.substring(0, colon) + ">");
+        }
+        try {
+            if ("file".equals(u.getProtocol()) && new File(u.getPath()).isDirectory()) {
+                throw new IOException("[Errno 21] Is a directory: '" + u.getPath() + "'");
+            }
+            URLConnection conn = u.openConnection();
+            if (conn instanceof HttpURLConnection) {
+                HttpURLConnection http = (HttpURLConnection) conn;
+                int code = http.getResponseCode();
+                if (code < 200 || code >= 300) {
+                    String reason = http.getResponseMessage();
+                    http.disconnect();
+                    throw new DecodeError("HTTPError", "HTTP Error " + code + ": " + reason);
+                }
+            }
+            return conn.getInputStream();
+        } catch (IOException ex) {
+            throw new DecodeError("URLError", "<urlopen error " + ex.getMessage() + ">");
+        }
+    }
+
+    /** Stream {@code url} into {@code part} in 1 MiB reads; past {@code maxBytes} it fails. */
+    static long download(String url, File part, long maxBytes) throws IOException {
+        InputStream in = open(url);
+        try {
+            OutputStream out = new FileOutputStream(part);
+            try {
+                byte[] chunk = new byte[1 << 20];
+                long got = 0;
+                int n;
+                while ((n = in.read(chunk)) >= 0) {
+                    got += n;
+                    if (got > maxBytes) {
+                        throw new CapExceeded("body exceeds max_bytes=" + maxBytes);
+                    }
+                    out.write(chunk, 0, n);
+                }
+                return got;
+            } finally {
+                out.close();
+            }
+        } finally {
+            in.close();
+        }
+    }
+
+    /** The body crossed the cap: permanent, never retried, reported as ValueError. */
+    static final class CapExceeded extends DecodeError {
+        CapExceeded(String detail) {
+            super("ValueError", detail);
+        }
+    }
+
+    /**
+     * (url, name) to a one-element array of
+     * {@code struct<url, dest, n_bytes, status, attempts, error>}: the
+     * contract of {@code fetch.fetch_to_staging}. {@code name} is ignored
+     * unless {@code named}; the URL's basename stands in for it.
+     */
+    public static class Fetch extends Codec {
+        private final String stagingDir;
+        private final boolean named;
+        private final long maxBytes;
+        private final int retries;
+        private final double backoffS;
+
+        public Fetch(String stagingDir, boolean named, long maxBytes, int retries, double backoffS) {
+            this.stagingDir = stagingDir;
+            this.named = named;
+            this.maxBytes = maxBytes;
+            this.retries = retries;
+            this.backoffS = backoffS;
+        }
+
+        StructField[] fields() {
+            return new StructField[] {
+                field("url", DataTypes.StringType),
+                field("dest", DataTypes.StringType),
+                field("n_bytes", DataTypes.LongType),
+                field("status", DataTypes.StringType),
+                field("attempts", DataTypes.IntegerType),
+                field("error", DataTypes.StringType)};
+        }
+
+        static Object[] result(Object url, String dest, long nBytes, String status, int attempts, String error) {
+            return new Object[] {RowFactory.create(new Object[] {
+                url, dest, Long.valueOf(nBytes), status, Integer.valueOf(attempts), error})};
+        }
+
+        public Object call(Object url, Object name) throws Exception {
+            String dest = pyJoin(stagingDir, named ? String.valueOf(name) : basename((String) url));
+            File target = new File(dest);
+            if (target.isFile() && target.length() > 0) {
+                return result(url, dest, target.length(), "skipped", 0, null);
+            }
+            new File(stagingDir).mkdirs();
+            // write-then-rename, so a killed task never leaves a file a replay would skip
+            File part = new File(dest + ".part");
+            String error = null;
+            int attempt = 0;
+            try {
+                while (attempt <= retries) {
+                    attempt++;
+                    try {
+                        long got = download((String) url, part, maxBytes);
+                        Files.move(part.toPath(), target.toPath(), new CopyOption[] {StandardCopyOption.ATOMIC_MOVE});
+                        return result(url, dest, got, "ok", attempt, null);
+                    } catch (Exception ex) {
+                        error = clip(errorText(ex, ex.getClass().getSimpleName(), 500), 500);
+                        if (ex instanceof CapExceeded) {
+                            break;
+                        }
+                        if (attempt <= retries) {
+                            Thread.sleep(Math.round(backoffS * 1000.0 * Math.pow(2, attempt - 1)));
+                        }
+                    }
+                }
+            } finally {
+                part.delete();
+            }
+            return result(url, dest, 0, "error", attempt, error);
+        }
+    }
+
+    // ---- plan builders -----------------------------------------------------
+
+    static final ObjectMapper JSON = new ObjectMapper();
+
+    /** A JSON list of names, or JSON null: one py4j argument at any length. */
+    static String[] names(String json) throws IOException {
+        return (String[]) JSON.readValue(json, String[].class);
+    }
+
+    static Column col(String name) {
+        return functions.col(name);
+    }
+
+    /**
+     * fetch_to_staging: the nondeterministic Fetch UDF under inline, so it
+     * runs once per manifest row in the manifest's tasks (a Generate is not
+     * folded into a local relation, which would run it while optimizing).
+     */
+    public Dataset fetch(Dataset manifest, String urlCol, String nameCol, String stagingDir,
+                         long maxBytes, int retries, double backoffS) {
+        Column name = nameCol == null ? functions.lit(null) : col(nameCol);
+        Column fetched = new Fetch(stagingDir, nameCol != null, maxBytes, retries, backoffS).udf()
+            .asNondeterministic().apply(new Column[] {col(urlCol), name});
+        return manifest.select(new Column[] {functions.inline(fetched)});
+    }
+
+    /** extract_archive_members: the Members UDF per archive, exploded. */
+    public Dataset members(Dataset archives, String suffix, long maxMemberBytes, boolean permissive) {
+        Column members = new Members(suffix, maxMemberBytes, permissive).udf()
+            .apply(new Column[] {col("path"), col("content")});
+        String[] out = {"archive", "member", "substring_index(member, '/', -1) AS member_basename", "content",
+            "CAST(coalesce(length(content), 0) AS BIGINT) AS n_bytes", "error AS _error"};
+        return archives.select(new Column[] {col("path").alias("archive"), functions.inline(members)})
+            .selectExpr(permissive ? out : (String[]) Arrays.copyOf(out, out.length - 1));
+    }
+
+    /** infer_dbf_columns: the first row's leading 64 KiB of {@code contentCol}, or null. */
+    public byte[] head(Dataset binaries, String contentCol) {
+        List rows = binaries.select(new Column[] {functions.substring(col(contentCol), 1, 65535).alias("head")})
+            .limit(1).collectAsList();
+        return rows.isEmpty() ? null : (byte[]) ((Row) rows.get(0)).get(0);
+    }
+
+    /**
+     * read_dbc / read_dbf: the Records UDF per file, exploded, its
+     * positional fields renamed to {@code columns} (JSON), then
+     * arquivo_origem and, under permissive, _decode_error.
+     */
+    public Dataset records(Dataset binaries, String nameCol, String contentCol, boolean dbc, int limit,
+                           String project, String columns, boolean permissive) throws IOException {
+        String[] cols = names(columns);
+        Column records = new Records(dbc, limit, names(project), cols, permissive).udf()
+            .apply(new Column[] {col(nameCol), col(contentCol)});
+        Column origem = functions.regexp_replace(col(nameCol), "\\.[^.]*\\z", ""); // rsplit(".", 1)[0]
+        Dataset split = binaries.select(new Column[] {origem.alias("_o"), functions.inline(records)});
+        Column[] out = new Column[cols.length + (permissive ? 2 : 1)];
+        for (int i = 0; i < cols.length; i++) {
+            out[i] = col("_c" + i).alias(cols[i]);
+        }
+        out[cols.length] = col("_o").alias("arquivo_origem");
+        if (permissive) {
+            out[cols.length + 1] = col("_e").alias("_decode_error");
+        }
+        return split.select(out);
     }
 }

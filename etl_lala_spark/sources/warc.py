@@ -46,24 +46,32 @@ WARC_RECORD_SCHEMA = (
 )
 
 
+_GZIP_CHUNK = 64 * 1024
+
+
 def _iter_gzip_members(blob: bytes):
     """Yield (compressed_offset, compressed_len, decompressed_bytes) per gzip
     member. Member boundaries come from the decompressor's ``unused_data``
     (the spec-true split); a member that ends mid-stream (truncated upload)
     raises ``ValueError`` carrying the offset so permissive mode can emit a
-    structured error row for it."""
+    structured error row for it. The decompressor is fed ``_GZIP_CHUNK``
+    views, so no member copies the rest of the file: linear in its size."""
+    view = memoryview(blob)
     pos, total = 0, len(blob)
     while pos < total:
         d = zlib.decompressobj(31)
+        parts, end = [], pos
         try:
-            data = d.decompress(blob[pos:])
+            while not d.eof and end < total:
+                chunk = view[end : end + _GZIP_CHUNK]
+                parts.append(d.decompress(chunk))
+                end += len(chunk) - len(d.unused_data)
         except zlib.error as exc:
             raise ValueError(f"bad gzip member at offset {pos}: {exc}") from exc
         if not d.eof:
             raise ValueError(f"truncated gzip member at offset {pos}")
-        consumed = (total - pos) - len(d.unused_data)
-        yield pos, consumed, data
-        pos += consumed
+        yield pos, end - pos, b"".join(parts)
+        pos = end
 
 
 def _parse_headers(block: bytes) -> tuple[dict[str, str], str]:

@@ -55,6 +55,46 @@ def test_incremental_load_is_idempotent(spark, out_dir):
     assert total.filter(F.col("competencia") == "202501").count() == 5
 
 
+def test_load_incremental_skip_filter_edge_values(spark, out_dir):
+    """The replay skip is a literal filter on the loaded partition values:
+    rows with a NULL partition value are appended on every load, as a
+    left-anti join appends them; an int-typed partition column skips the
+    rows the anti-join skipped; and a value holding a quote and a
+    backslash is found on disk and skipped on replay."""
+    from etl_lala_spark.io import tiny_df
+
+    assert writer.skip_loaded("c`x", ["a'b\\", None]) == (
+        "`c``x` IS NULL OR `c``x` NOT IN ('a\\'b\\\\')"
+    )
+
+    nulls = os.path.join(out_dir, "nulls")
+    batch = spark.createDataFrame([("202501", "a"), (None, "b")], "competencia string, v string")
+    assert writer.load_incremental(spark, batch, nulls)["registros_inseridos"] == 2
+    again = writer.load_incremental(spark, batch, nulls)
+    assert again["registros_inseridos"] == 1
+    assert again["competencias_existentes"] == ["202501"]
+    assert spark.read.parquet(nulls).filter("competencia IS NULL").count() == 2
+
+    ints = os.path.join(out_dir, "ints")
+    first = spark.createDataFrame([(1, "a"), (2, "b")], "p int, v string")
+    writer.load_incremental(spark, first, ints, part_col="p")
+    replay = spark.createDataFrame([(1, "c"), (2, "d"), (3, "e"), (3, "f")], "p int, v string")
+    loaded = writer.existing_partitions(spark, ints, "p")
+    anti = replay.join(tiny_df(spark, [(v,) for v in loaded], "p string"), "p", "left_anti")
+    res = writer.load_incremental(spark, replay, ints, part_col="p")
+    assert res["registros_inseridos"] == anti.count() == 2
+    assert sorted(r.v for r in spark.read.parquet(ints).collect()) == ["a", "b", "e", "f"]
+
+    quoted = os.path.join(out_dir, "quoted")
+    odd = "it's C:\\dir"
+    batch = spark.createDataFrame([(odd, "a"), ("plain", "b")], "competencia string, v string")
+    assert writer.load_incremental(spark, batch, quoted)["registros_inseridos"] == 2
+    again = writer.load_incremental(spark, batch, quoted)
+    assert again["registros_inseridos"] == 0
+    assert sorted(again["competencias_existentes"]) == sorted([odd, "plain"])
+    assert {r.competencia for r in spark.read.parquet(quoted).collect()} == {odd, "plain"}
+
+
 def test_json_sink_with_manifest(spark, out_dir):
     df = _batch(spark, ["202501"])
     manifest = writer.write_json_with_manifest(df, out_dir, "PAPE2501")

@@ -6,6 +6,7 @@ from __future__ import annotations
 import io
 import json
 import os
+import sys
 import zipfile
 
 import pytest
@@ -623,6 +624,169 @@ def test_fetch_cap_exceeded_not_retried(spark, tmp_path):
     assert not os.path.exists(os.path.join(staging, "big.zip.part"))
 
 
+def test_fetch_to_staging_http_contract(spark, tmp_path):
+    """The fetch keeps urllib's contract over loopback HTTP: a 404 is an
+    HTTPError after retries + 1 attempts, a 503 once ends ok on attempt 2,
+    a missing file:// path is a URLError and a URL without a scheme a
+    ValueError. Building the frame (explain, schema) stages nothing, a
+    local manifest fetches inside a Spark job, every attempt is one
+    request, and names default to the URL's basename, or ``index``."""
+    import threading
+    from collections import Counter
+
+    from etl_lala_spark.io import tiny_df
+    from etl_lala_spark.plans._gates import QuietHandler, loopback_server
+    from etl_lala_spark.sources.fetch import fetch_to_staging
+
+    hits: Counter = Counter()
+    lock = threading.Lock()
+
+    class Handler(QuietHandler):
+        def do_GET(self):
+            with lock:
+                hits[self.path] += 1
+                n = hits[self.path]
+            if self.path == "/gone.zip" or (self.path == "/flaky.zip" and n == 1):
+                self.send_error(404 if self.path == "/gone.zip" else 503)
+                return
+            body = self.path.encode()
+            self.send_response(200)
+            self.send_header("Content-Length", str(len(body)))
+            self.end_headers()
+            self.wfile.write(body)
+
+    staging = str(tmp_path / "staging")
+    sc = spark.sparkContext
+    with loopback_server(Handler) as base:
+        urls = ["gone.zip", "flaky.zip", "ok.zip", "dir/"]
+        mf = tiny_df(
+            spark,
+            [(f"{base}/{u}",) for u in urls] + [(f"file://{tmp_path}/missing.zip",), ("/",)],
+            "url string",
+        )
+        fetched = fetch_to_staging(mf, staging, retries=2, backoff_s=0.01)
+        fetched.explain()
+        assert fetched.schema.simpleString() == (
+            "struct<url:string,dest:string,n_bytes:bigint,status:string,attempts:int,error:string>"
+        )
+        assert not os.path.exists(staging) and not hits
+        sc.setJobGroup("fetch_contract", "fetch")
+        try:
+            rows = {os.path.basename(r.dest): r for r in fetched.collect()}
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("fetch_contract")) >= 1
+
+    gone = rows["gone.zip"]
+    assert (gone.status, gone.attempts, gone.n_bytes) == ("error", 3, 0)
+    assert gone.error == "HTTPError: HTTP Error 404: Not Found"
+    flaky = rows["flaky.zip"]
+    assert (flaky.status, flaky.attempts, flaky.n_bytes) == ("ok", 2, len("/flaky.zip"))
+    assert rows["ok.zip"].status == "ok" and rows["dir"].status == "ok"
+    with open(os.path.join(staging, "dir"), "rb") as fh:
+        assert fh.read() == b"/dir/"
+    missing = rows["missing.zip"]
+    assert (missing.status, missing.attempts) == ("error", 3)
+    assert missing.error.startswith("URLError: ")
+    index = rows["index"]
+    assert index.dest == os.path.join(staging, "index")
+    assert index.error == "ValueError: unknown url type: '/'"
+    # one request per attempt: no row is fetched twice
+    assert hits == {"/gone.zip": 3, "/flaky.zip": 2, "/ok.zip": 1, "/dir/": 1}
+    assert not [n for n in os.listdir(staging) if n.endswith(".part")]
+
+
+def test_ingest_chain_driver_budget(spark, tmp_path, monkeypatch):
+    """Driver cost of one DATASUS ingest op (fetch → binaryFile → ZIP →
+    DBC → incremental load) on a 12-column table, cold and replayed with a
+    new month: 3 Spark jobs per op (fetch, schema inference, load), no
+    Python eval node in the fetch or decode plans, at most 300 py4j round
+    trips per op and 500 for a 120-column ``read_dbc`` plan. Round trips
+    are py4j commands sent, less py4j's own garbage-collection deletes."""
+    import py4j.clientserver
+    from pyspark.sql import functions as F
+
+    from etl_lala_spark.io import tiny_df
+    from etl_lala_spark.sinks import writer
+    from etl_lala_spark.sources.fetch import fetch_to_staging
+
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    from plan_audit import executed_scan_counts
+
+    sent = [0]
+    send = py4j.clientserver.ClientServerConnection.send_command
+
+    def counted(self, command):
+        if not command.startswith("m\nd\n"):
+            sent[0] += 1
+        return send(self, command)
+
+    monkeypatch.setattr(py4j.clientserver.ClientServerConnection, "send_command", counted)
+
+    cols = [f"PA_C{i:02d}" for i in range(11)] + ["PA_MVM"]
+    remote = tmp_path / "remote"
+    remote.mkdir()
+    months = ["202501", "202502", "202503"]
+    for m in months:
+        rows = [[f"{m}{i}{j}" for j in range(11)] + [m] for i in range(5)]
+        (remote / f"PA{m}.zip").write_bytes(
+            _zip_bytes({f"PAPE{m[2:]}.dbc": dbc.dbf_to_dbc(dbc.write_dbf(cols, rows))})
+        )
+    staging, table = str(tmp_path / "staging"), str(tmp_path / "table")
+    sc = spark.sparkContext
+
+    def op(phase: str, manifest: list[str]):
+        sc.setJobGroup(phase, phase)
+        before = sent[0]
+        try:
+            fetched = fetch_to_staging(
+                tiny_df(spark, [(f"file://{remote}/PA{m}.zip", f"PA{m}.zip") for m in manifest],
+                        "url string, name string"),
+                staging, name_col="name",
+            )
+            statuses = [r.status for r in fetched.collect()]
+            members = arc.extract_archive_members(arc.read_binary_files(spark, staging, glob="*.zip"))
+            records = dbc.read_dbc(members)
+            res = writer.load_incremental(
+                spark, records.withColumn("competencia", F.col("PA_MVM")), table
+            )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return statuses, res, fetched, sent[0] - before, len(sc.statusTracker().getJobIdsForGroup(phase))
+
+    statuses, res, fetched, trips, jobs = op("ingest_budget_cold", months[:2])
+    assert statuses == ["ok", "ok"] and res["registros_inseridos"] == 10
+    assert jobs == 3, jobs
+    assert trips <= 300, trips
+    statuses, res, fetched, trips, jobs = op("ingest_budget_replay", months)
+    assert statuses == ["skipped", "skipped", "ok"] and res["registros_inseridos"] == 5
+    assert jobs == 3, jobs
+    assert trips <= 300, trips
+
+    assert executed_scan_counts(fetched)["python_eval"] == 0
+    members = arc.extract_archive_members(arc.read_binary_files(spark, staging, glob="*.zip"))
+    decoded = dbc.read_dbc(members, columns=cols)
+    assert decoded.count() == 15
+    assert executed_scan_counts(decoded)["python_eval"] == 0
+
+    wide = [f"C{i:03d}" for i in range(120)]
+    before = sent[0]
+    dbc.read_dbc(members, columns=wide)
+    assert sent[0] - before <= 500, sent[0] - before
+
+
+def test_read_dbf_keeps_odd_and_duplicate_names(spark):
+    """Column names with a dot, a space or a backtick, and a repeated DBF
+    name, come out as written, each with its own field's values."""
+    names = ["A.B", "C D", "E`F", "A.B"]
+    data = dbc.write_dbf(names, [["1", "2", "3", "4"], ["5", "6", "7", "8"]], field_len=3)
+    df = spark.createDataFrame([("T.dbf", bytearray(data))], "member_basename string, content binary")
+    out = dbc.read_dbf(df)
+    assert out.columns == names + ["arquivo_origem"]
+    assert [tuple(r) for r in out.collect()] == [("1", "2", "3", "4", "T"), ("5", "6", "7", "8", "T")]
+    assert [tuple(r) for r in dbc.read_dbf(df, project=["E`F"]).collect()] == [("3", "T"), ("7", "T")]
+
+
 def test_dbf_wide_header_inference(spark, tmp_path):
     """A >126-field DBF has a header past 4 KiB; schema inference (both the
     mapInPandas helper and the DataSource planner) must read the declared
@@ -822,6 +986,33 @@ def test_warc_extract_permissive_errors_and_cap(spark):
     assert "truncated" in str(exc_info.value) or isinstance(
         exc_info.value, Py4JJavaError
     )
+
+
+def test_warc_gzip_member_split_is_linear():
+    """The gzip member split feeds the decompressor bounded chunks, so 4×
+    the members costs at most about 5× the time; a split that hands each
+    member the rest of the file is O(n²) and fails here."""
+    import gzip
+    import random
+    import time
+
+    from etl_lala_spark.sources import warc as w
+
+    rng = random.Random(7)
+
+    def blob(n: int) -> bytes:
+        return b"".join(gzip.compress(b"WARC/1.0\r\n" + rng.randbytes(200)) for _ in range(n))
+
+    def split(data: bytes) -> float:
+        t = time.perf_counter()
+        sum(1 for _ in w._iter_gzip_members(data))
+        return time.perf_counter() - t
+
+    small, large = blob(4000), blob(16000)
+    assert sum(1 for _ in w._iter_gzip_members(large)) == 16000
+    # interleaved, best of 7: the least disturbed run of each size
+    times = [(split(small), split(large)) for _ in range(7)]
+    assert min(t[1] for t in times) <= 5 * min(t[0] for t in times)
 
 
 def test_warc_to_main_content_line_dedup_chain(spark):
