@@ -1,16 +1,23 @@
 #!/usr/bin/env python
-"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line: {"metric", "value", "unit": "sec", "queries": {...}, "sf"}.
+"""Benchmark harness: the headline queries at $SPARK_GRAFT_SF_DIR (default
+/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
 
-Each query is forced to full materialization via the noop sink (no driver
-collect — measures the distributed plan, not row transfer). Each query is
-timed N times (default 3, env SPARK_GRAFT_BENCH_RUNS) with the Spark cache
-cleared in between; the MIN is reported as the query's figure, plus a
-population stddev per query so round-over-round deltas can be judged
-against run noise: host-level CPU steal on shared machines is strictly
-additive noise (identical runs were measured at 6.5 s and 28 s in one
-JVM), and min-of-N recovers the machine-limited figure.
+    python bench.py                     # the whole headline suite
+    python bench.py <query> [query...]  # one min line per query, no file
+
+Every figure comes from one sample function: Spark cache cleared, the
+gate fixture and build clocks reset, the query forced to full
+materialization through the noop sink (no driver collect — it measures the
+distributed plan, not row transfer), fixture seconds subtracted, and the
+Spark jobs the run started counted. Each query is sampled N times (default
+5, env SPARK_GRAFT_BENCH_RUNS) and the MIN is its figure, with a population
+stddev so deltas can be judged against run noise: host CPU steal on shared
+machines is strictly additive (identical runs were measured at 6.5 s and
+28 s in one JVM), and min-of-N recovers the machine-limited figure.
+
+The suite prints ONE JSON line last on stdout, {"metric", "value", "unit":
+"sec", "queries": {...}, "sf"}, and writes the full record, per-query job
+counts included, to BENCH_DETAIL_c{cpus}.json.
 """
 
 from __future__ import annotations
@@ -20,6 +27,7 @@ import os
 import statistics
 import sys
 import time
+from typing import NamedTuple
 
 HEADLINE = [
     "q1_pricing_summary",
@@ -285,7 +293,7 @@ HEADLINE = [
 # stdout line instead, so cross-round and cross-cpu per-query comparison
 # works driver-side. Fixed, not dynamic top-N: entry names must never
 # disappear between rounds or between the cpus=32 and cpus=8 runs. The
-# FULL dict still lands in BENCH_DETAIL.json and on stderr, unchanged.
+# FULL dict still lands in BENCH_DETAIL_c{cpus}.json and on stderr.
 _STDOUT_TOP = [
     "web_corpus_build", "web_recrawl_incremental",
     "stream_twin_url_frontier_sketch", "langid_trained",
@@ -312,6 +320,125 @@ _STDOUT_TOP = [
 ]
 
 
+class Sample(NamedTuple):
+    seconds: float  # wall time less fixture time
+    fixture: float
+    build: float
+    jobs: int
+
+
+def session(cpus: int):
+    from etl_lala_spark.session import get_spark
+
+    return get_spark(
+        app_name="etl_lala_spark_bench",
+        master=f"local[{cpus}]",
+        shuffle_partitions=cpus,
+        # Console-progress \r spam interleaves with stdout and can blow the
+        # driver's stdout-tail budget, truncating the JSON metric line.
+        extra_confs={"spark.ui.showConsoleProgress": "false"},
+    )
+
+
+def warm_up(spark, fns) -> None:
+    """JVM/codegen warm-up on the smallest sf, so timings measure the plan,
+    not first-call JIT + class loading."""
+    fns["q1_pricing_summary"](spark, "/root/testdata/sf0.001").write.format(
+        "noop"
+    ).mode("overwrite").save()
+
+
+def sample(spark, fns, name: str, sf_dir: str) -> Sample:
+    """One timed run of query ``name``.
+
+    Gate queries build on-disk fixtures before exercising the operator
+    under test and account that wall time via ``plans._gates.fixture_region``;
+    it is subtracted here, so the figure is operator cost, not fixture
+    render. Jobs are the delta of DAGScheduler's job-id counter, not a job
+    group: a streaming twin's micro-batches run under the stream's own
+    group, which a group set around the call never sees.
+    """
+    from etl_lala_spark.plans import _gates
+
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    spark.catalog.clearCache()
+    _gates.reset_fixture(name)
+    _gates.reset_build(name)
+    jobs0 = dag.nextJobId()
+    t0 = time.perf_counter()
+    fns[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+    wall = time.perf_counter() - t0
+    jobs = dag.nextJobId() - jobs0
+    fixture = _gates.FIXTURE_SECONDS.get(name, 0.0)
+    return Sample(wall - fixture, fixture, _gates.BUILD_SECONDS.get(name, 0.0), jobs)
+
+
+def measure(spark, fns, name: str, sf_dir: str, n_runs: int) -> dict:
+    """Min-of-N figures of query ``name``.
+
+    A spread above 30% of the median means host load contaminated the
+    window, so up to ``n_runs`` extra samples hunt a quiet one; min-of-N
+    stays the figure and ``reruns`` records the hunt. ANN gates split the
+    figure (still build+probe) into ``build`` (driver-elected quantizer
+    training) and ``probe`` legs, each min-of-N on its own, so a probe
+    regression cannot hide inside training noise. ``jobs`` is the most any
+    sample started, fixture jobs included.
+    """
+    samples = [sample(spark, fns, name, sf_dir) for _ in range(n_runs)]
+    secs = [s.seconds for s in samples]
+    while len(secs) < 2 * n_runs and statistics.pstdev(secs) > 0.30 * statistics.median(secs):
+        samples.append(sample(spark, fns, name, sf_dir))
+        secs.append(samples[-1].seconds)
+    row = {
+        "min": round(min(secs), 3),
+        "stddev": round(statistics.pstdev(secs), 3),
+        "samples": len(secs),
+        "reruns": len(secs) - n_runs,
+        "fixture": round(min(s.fixture for s in samples), 3),
+        "jobs": max(s.jobs for s in samples),
+    }
+    if max(s.build for s in samples) > 0:
+        row["build"] = round(min(s.build for s in samples), 3)
+        row["probe"] = round(min(s.seconds - s.build for s in samples), 3)
+    return row
+
+
+def min_line(name: str, row: dict) -> str:
+    notes = [f"jobs {row['jobs']}"]
+    if row["fixture"]:
+        notes.append(f"fixture {row['fixture']:.3f}s excluded")
+    if "build" in row:
+        notes.append(f"build {row['build']:.3f}s / probe {row['probe']:.3f}s")
+    if row["reruns"]:
+        notes.append(f"{row['reruns']} noise reruns")
+    return (
+        f"{name}: min {row['min']:.3f}s over {row['samples']} "
+        f"(±{row['stddev']:.3f}, {', '.join(notes)})"
+    )
+
+
+def stdout_line(total: float, timings: dict[str, float], sf: str) -> str:
+    """The driver's metric line. It must fit the driver's 2000-byte stdout
+    tail capture (r2's line overflowed it and parsed as null), so it stays
+    ≤ 1900 bytes: the full per-query dict when it fits, else the fixed
+    ``_STDOUT_TOP`` rows, else ``{}``."""
+    top = {n: timings[n] for n in _STDOUT_TOP if n in timings}
+    for queries in (timings, top, {}):
+        line = json.dumps(
+            {
+                "metric": "headline_queries_total_wall",
+                "value": round(total, 3),
+                "unit": "sec",
+                "queries": queries,
+                "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+            },
+            separators=(",", ":"),
+        )
+        if len(line) <= 1900:
+            break
+    return line
+
+
 def _canary_sample(spark, li, F) -> float:
     spark.catalog.clearCache()
     t0 = time.perf_counter()
@@ -336,189 +463,62 @@ def _canary_python_sample(spark, li, F) -> float:
     return time.perf_counter() - t0
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
+def suite(spark, fns, sf_dir: str, cpus: int, n_runs: int) -> None:
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-
-    from etl_lala_spark.plans import query_fns
-    from etl_lala_spark.session import get_spark
-
-    spark = get_spark(
-        app_name="etl_lala_spark_bench",
-        master=f"local[{cpus}]",
-        shuffle_partitions=cpus,
-        # Console-progress \r spam interleaves with stdout and can blow the
-        # driver's stdout-tail budget, truncating the JSON metric line.
-        extra_confs={"spark.ui.showConsoleProgress": "false"},
-    )
-    fns = query_fns()
-
-    # JVM/codegen warm-up on the smallest sf so headline timings measure the
-    # plan, not first-call JIT + class-loading.
-    fns["q1_pricing_summary"](spark, "/root/testdata/sf0.001").write.format(
-        "noop"
-    ).mode("overwrite").save()
-
-    # Host-speed canary (round-7 adjudication, SCALE.md): a bare
-    # lineitem scan+sum whose plan has not changed since round 1. Bench
-    # totals are only comparable ACROSS rounds relative to this number —
-    # the r6→r7 investigation measured the host baseline itself drifting
-    # 1.3× between windows (uniform, class-independent, plan-free).
+    # Host-speed canaries (SCALE.md): a bare lineitem scan+sum whose plan
+    # has not changed since round 1, and a fixed-size mapInPandas round trip
+    # for the Python-worker path the scan never leaves the JVM for. Bench
+    # totals are only comparable ACROSS rounds relative to them — the host
+    # baseline itself was measured drifting 1.3× between windows. Same
+    # min-of-N discipline as the figures they normalize.
     from pyspark.sql import functions as F  # noqa: PLC0415
-
-    # Min-of-5 by default since round 4: the r3 round burned a verdict cycle
-    # on steal-noise deltas that min-of-3 failed to filter (SCALE.md
-    # methodology note); 5 samples on this host reliably catch a quiet
-    # window per query.
-    n_runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "5"))
 
     li = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
     li.agg(F.sum("l_extendedprice")).collect()  # warm
-    # Same min-of-N discipline as the queries it normalizes — a canary
-    # filtered differently than the figures would skew the cross-round
-    # comparison it exists for.
     canary = min(_canary_sample(spark, li, F) for _ in range(n_runs))
-    print(
-        f"# canary bare-scan+sum: min {canary:.3f}s over {n_runs}",
-        file=sys.stderr,
-    )
-    # Second canary, Python-worker path (r10 gif-resize adjudication): a
-    # fixed-size mapInPandas round trip. The bare-scan canary never leaves
-    # the JVM, so host drift in Python worker fork + Arrow transfer cost —
-    # which dominates the multimodal/mapInPandas gate class — was invisible
-    # and burned an r9→r10 adjudication. Plan has no data dependence; the
-    # figure is comparable across rounds like the scan canary.
-    canary_py = min(
-        _canary_python_sample(spark, li, F) for _ in range(n_runs)
-    )
+    print(f"# canary bare-scan+sum: min {canary:.3f}s over {n_runs}", file=sys.stderr)
+    canary_py = min(_canary_python_sample(spark, li, F) for _ in range(n_runs))
     print(
         f"# canary python mapInPandas: min {canary_py:.3f}s over {n_runs}",
         file=sys.stderr,
     )
-    timings: dict[str, float] = {}
-    spreads: dict[str, float] = {}
-    fixtures: dict[str, float] = {}
-    builds: dict[str, dict[str, float]] = {}
-    reruns: dict[str, int] = {}
-    # Interleaved canary series (r11 verdict task 1): host load during the
-    # r11 driver window inflated Python-worker rows up to 8x with nothing
-    # but the host changing, and end-of-window canaries could not show
-    # WHEN the load arrived. One scan + one Python-worker canary sample
-    # every _CANARY_STRIDE queries timestamps host speed THROUGH the
-    # window; per-query nearest-canary values land in BENCH_DETAIL so a
-    # round-over-round delta can be read relative to host speed at the
-    # moment the query ran, not at the window's edges.
+    # One scan + one Python-worker canary sample every _CANARY_STRIDE
+    # queries timestamps host speed THROUGH the window, so a delta can be
+    # read against host speed at the moment the query ran, not at the
+    # window's edges; a trailing sample closes the series.
     canary_series: list[dict[str, float | int | str]] = []
     canary_at: dict[str, dict[str, float]] = {}
     _CANARY_STRIDE = 15
 
-    def _canary_point(qi: int, name: str) -> dict[str, float | int | str]:
-        entry: dict[str, float | int | str] = {
+    def _canary_point(qi: int, name: str) -> dict[str, float]:
+        entry = {
             "at_query_index": qi,
             "at_query": name,
             "scan_s": round(_canary_sample(spark, li, F), 3),
             "python_s": round(_canary_python_sample(spark, li, F), 3),
         }
         canary_series.append(entry)
-        return entry
-    total = 0.0
-    # Gate queries build on-disk fixtures before exercising the operator
-    # under test; they account that wall time via plans._gates.fixture_region
-    # and the bench SUBTRACTS it per sample, so per-query figures reflect
-    # operator cost, not fixture render (round-6 verdict #6). The fixture
-    # share is reported on stderr per query.
-    from etl_lala_spark.plans import _gates
+        return {"scan_s": entry["scan_s"], "python_s": entry["python_s"]}
 
-    def _one_sample(name, samples, fix_samples, build_samples):
-        spark.catalog.clearCache()
-        _gates.reset_fixture(name)
-        _gates.reset_build(name)
-        t0 = time.perf_counter()
-        fns[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        wall = time.perf_counter() - t0
-        fix = _gates.FIXTURE_SECONDS.get(name, 0.0)
-        samples.append(wall - fix)
-        fix_samples.append(fix)
-        build_samples.append(_gates.BUILD_SECONDS.get(name, 0.0))
-
-    last_canary: dict[str, float | int | str] | None = None
+    rows: dict[str, dict] = {}
     for qi, name in enumerate(HEADLINE):
         if qi % _CANARY_STRIDE == 0:
             last_canary = _canary_point(qi, name)
-        if last_canary is not None:
-            canary_at[name] = {
-                "scan_s": float(last_canary["scan_s"]),
-                "python_s": float(last_canary["python_s"]),
-            }
-        samples: list[float] = []
-        fix_samples: list[float] = []
-        build_samples: list[float] = []
-        for _ in range(n_runs):
-            _one_sample(name, samples, fix_samples, build_samples)
-        # Noise defence (r11 verdict task 1): a spread above 30% of the
-        # median means host load contaminated the window — take up to
-        # n_runs extra samples hunting a quiet one. min-of-N stays the
-        # figure; the reruns count is recorded so the record says which
-        # rows needed the extra hunt.
-        extra = 0
-        while (
-            extra < n_runs
-            and statistics.pstdev(samples)
-            > 0.30 * statistics.median(samples)
-        ):
-            _one_sample(name, samples, fix_samples, build_samples)
-            extra += 1
-        if extra:
-            reruns[name] = extra
-        dt = round(min(samples), 3)
-        timings[name] = dt
-        spreads[name] = round(statistics.pstdev(samples), 3)
-        fix_min = round(min(fix_samples), 3)
-        if fix_min > 0:
-            fixtures[name] = fix_min
-        # ANN gates split their headline figure (which stays build+probe —
-        # the round-over-round comparable number) into *_build (driver-
-        # elected quantizer training) and *_probe (plan execution) sub-rows
-        # so a probe-path regression cannot hide inside training noise
-        # (round-8 verdict task 5). min-of-N per LEG: the legs come from
-        # the same samples but each takes its own quiet window.
-        if max(build_samples) > 0:
-            builds[name] = {
-                "build": round(min(build_samples), 3),
-                "probe": round(
-                    # samples[] is already fixture-excluded wall time
-                    min(s - b for s, b in zip(samples, build_samples)),
-                    3,
-                ),
-            }
-        total += dt
-        fix_note = f", fixture {fix_min:.3f}s excluded" if fix_min else ""
-        build_note = (
-            f", build {builds[name]['build']:.3f}s /"
-            f" probe {builds[name]['probe']:.3f}s"
-            if name in builds
-            else ""
-        )
-        rerun_note = f", {extra} noise reruns" if extra else ""
-        print(
-            f"# {name}: min {dt:.3f}s over {len(samples)} (±{spreads[name]:.3f}"
-            f"{fix_note}{build_note}{rerun_note})",
-            file=sys.stderr,
-        )
-
-    # Trailing canary sample closes the series: without it, load arriving
-    # during the window's last stretch is indistinguishable from a real
-    # regression in the final queries.
+        canary_at[name] = last_canary
+        rows[name] = measure(spark, fns, name, sf_dir, n_runs)
+        print(f"# {min_line(name, rows[name])}", file=sys.stderr, flush=True)
     _canary_point(len(HEADLINE), "(end)")
 
-    # Full per-query detail ALSO lands in a repo file: with 70+ headline
-    # queries the stdout metric line exceeds the driver's 2000-byte tail
-    # capture and drops its queries dict (r6's record kept only the total,
-    # and the stderr copy was front-truncated by the same tail budget).
-    # The file survives in git regardless of capture limits.
-    detail_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                               "BENCH_DETAIL.json")
+    timings = {n: r["min"] for n, r in rows.items()}
+    total = sum(timings.values())
+    spreads = {n: r["stddev"] for n, r in rows.items()}
+    fixtures = {n: r["fixture"] for n, r in rows.items() if r["fixture"] > 0}
+    # The full per-query record lands in a repo file per core count: the
+    # stdout line cannot carry it, and the stderr copy is front-truncated
+    # by the same tail budget.
+    detail_path = os.path.join(
+        os.path.dirname(os.path.abspath(__file__)), f"BENCH_DETAIL_c{cpus}.json"
+    )
     with open(detail_path, "w") as fh:
         json.dump(
             {
@@ -530,15 +530,16 @@ def main() -> None:
                 "canary_python_s": round(canary_py, 3),
                 "queries": timings,
                 "stddev": spreads,
+                "jobs": {n: r["jobs"] for n, r in rows.items()},
                 "fixture_seconds_excluded": fixtures,
-                "build_probe_split": builds,
-                # r11 verdict task 1 — noise defence record: host-speed
-                # samples THROUGH the window, the canary values current
-                # when each query ran, and which rows needed extra
-                # samples to find a quiet window.
+                "build_probe_split": {
+                    n: {"build": r["build"], "probe": r["probe"]}
+                    for n, r in rows.items()
+                    if "build" in r
+                },
                 "canary_series": canary_series,
                 "canary_at": canary_at,
-                "noise_reruns": reruns,
+                "noise_reruns": {n: r["reruns"] for n, r in rows.items() if r["reruns"]},
             },
             fh,
             indent=1,
@@ -546,9 +547,6 @@ def main() -> None:
         )
         fh.write("\n")
 
-    # The metric line must be the LAST line on stdout AND fit the driver's
-    # 2000-byte stdout-tail capture (r2's line overflowed it and parsed as
-    # null), so: stddev detail goes to stderr, the stdout line is compact.
     print(
         json.dumps(
             {
@@ -562,42 +560,41 @@ def main() -> None:
         file=sys.stderr,
         flush=True,
     )
-    line = json.dumps(
-        {
-            "metric": "headline_queries_total_wall",
-            "value": round(total, 3),
-            "unit": "sec",
-            "queries": timings,
-            "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-        },
-        separators=(",", ":"),
-    )
-    if len(line) > 1900:  # never let per-query detail overflow the capture
-        # Keep the FIXED heavy-query subset on the stdout line (r12
-        # verdict task 2: the driver's per-query/scaling adjudication
-        # needs SOME per-query data inside its tail capture); worst-case
-        # ~1.7 KB. Degrade to {} only if even the subset overflows.
-        sub = {n: timings[n] for n in _STDOUT_TOP if n in timings}
-        for queries in (sub, {}):
-            line = json.dumps(
-                {
-                    "metric": "headline_queries_total_wall",
-                    "value": round(total, 3),
-                    "unit": "sec",
-                    "queries": queries,
-                    "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-                },
-                separators=(",", ":"),
-            )
-            if len(line) <= 1900:
-                break
-        print("# full queries dict exceeds the stdout 2000-byte budget; "
-              f"stdout line carries {len(line)} bytes / "
-              f"{len(sub)} fixed heavy rows, full detail on stderr",
-              file=sys.stderr)
+    line = stdout_line(total, timings, sf)
+    carried = len(json.loads(line)["queries"])
+    if carried < len(timings):
+        print(
+            "# full queries dict exceeds the stdout 2000-byte budget; "
+            f"stdout line carries {len(line)} bytes / {carried} fixed heavy "
+            "rows, full detail on stderr",
+            file=sys.stderr,
+        )
         print(json.dumps({"queries": timings}), file=sys.stderr, flush=True)
+    # The metric line must be the LAST line on stdout.
     print(line, flush=True)
 
 
+def main(names: list[str]) -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
+    # Min-of-5 by default since round 4: min-of-3 failed to filter the
+    # steal noise of one round (SCALE.md methodology note); 5 samples on
+    # this host reliably catch a quiet window per query.
+    n_runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "5"))
+
+    from etl_lala_spark.plans import query_fns
+
+    fns = query_fns()
+    unknown = [n for n in names if n not in fns]
+    if unknown:
+        raise SystemExit(f"unknown queries: {' '.join(unknown)}")
+    spark = session(cpus)
+    warm_up(spark, fns)
+    if not names:
+        suite(spark, fns, sf_dir, cpus, n_runs)
+    for name in names:
+        print(min_line(name, measure(spark, fns, name, sf_dir, n_runs)), flush=True)
+
+
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])

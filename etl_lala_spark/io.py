@@ -82,9 +82,25 @@ def spread(df: DataFrame, multiplier: int = 1, by: str | None = None) -> DataFra
     — measured ~3× cheaper on a single-row-group scan — and stays
     deterministic under stage retries, which round-robin only achieves via
     that sort. Round-robin remains the fallback when no key is available.
+
+    Probing the input's partition count runs no job unless its plan is
+    adaptive (it holds an exchange): AQE answers by running the shuffle
+    stages, then may coalesce them below what the plan says. So an adaptive
+    input is repartitioned unprobed, unless its root is a repartition to a
+    fixed count, which AQE leaves as planned.
     """
     target = df.sparkSession.sparkContext.defaultParallelism * multiplier
-    if df.rdd.getNumPartitions() < target:
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() != "AdaptiveSparkPlan":
+        n = df.rdd.getNumPartitions()
+    else:
+        root = plan.inputPlan()
+        fixed = (
+            root.nodeName() == "Exchange"
+            and root.shuffleOrigin().toString() == "REPARTITION_BY_NUM"
+        )
+        n = root.outputPartitioning().numPartitions() if fixed else 0
+    if n < target:
         if by is not None:
             return df.repartition(target, F.col(by))
         return df.repartition(target)

@@ -203,7 +203,7 @@ def reset_fixture(name: str) -> None:
 # probe regression could hide inside training noise in a single wall
 # figure (round-8 verdict task 5). Gates wrap the build in
 # ``build_region(name)``; bench.py reports *_build / *_probe sub-rows in
-# BENCH_DETAIL.json while the headline figure stays build+probe (the
+# BENCH_DETAIL_c{cpus}.json while the headline figure stays build+probe (the
 # round-over-round comparable number).
 
 BUILD_SECONDS: dict[str, float] = {}

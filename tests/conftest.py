@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 import pytest
 
@@ -18,3 +19,25 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def job_group(spark):
+    """``with job_group(name) as jobs:`` runs the body under Spark job group
+    ``name``; on exit, however the body ends, the group is cleared and
+    ``jobs`` holds the ids of the jobs the body ran."""
+    sc = spark.sparkContext
+
+    @contextmanager
+    def counted(name: str):
+        jobs: list[int] = []
+        sc.setJobGroup(name, name)
+        try:
+            yield jobs
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            # the status tracker is fed by the listener bus; drain it first
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            jobs.extend(sc.statusTracker().getJobIdsForGroup(name))
+
+    return counted

@@ -246,6 +246,24 @@ def test_spread_is_noop_when_parallel_enough(spark, sf_dir):
     assert spread(li).rdd.getNumPartitions() >= spark.sparkContext.defaultParallelism
 
 
+def test_spread_over_shuffled_or_checkpointed_input_runs_no_job(spark, job_group):
+    """Building a spread plan starts no Spark job: an adaptive (shuffled)
+    input is repartitioned without probing its partition count, which AQE
+    could only answer by running the shuffle; a checkpoint's count is read
+    without a job. The rows are unchanged."""
+    base = spark.range(200).withColumn("k", F.col("id") % 7)
+    target = spark.sparkContext.defaultParallelism
+    for name, df in (
+        ("groupBy", base.groupBy("k").agg(F.sum("id").alias("s"))),
+        ("checkpoint", base.localCheckpoint()),
+    ):
+        with job_group(f"spread_{name}") as jobs:
+            out = spread(df, multiplier=2, by="k")
+        assert jobs == [], name
+        assert sorted(map(tuple, out.collect())) == sorted(map(tuple, df.collect()))
+        assert out.rdd.getNumPartitions() == 2 * target, name
+
+
 def test_udtf_matches_posexplode(spark, sf_dir):
     from etl_lala_spark.plans import query_fns
 
@@ -698,7 +716,7 @@ def test_canonical_components_matches_union_find(spark, pairs):
     assert got == _union_find_labels(pairs)
 
 
-def test_canonical_components_job_budget(spark):
+def test_canonical_components_job_budget(spark, job_group):
     """8 planted 4-member cliques (48 pairs, the corpus gates' near-dup
     shape): a round is a propagate checkpoint plus a pointer-jump
     checkpoint that also observes convergence, so the whole operator stays
@@ -710,14 +728,8 @@ def test_canonical_components_job_budget(spark):
         for j in range(i + 1, 4)
     ]
     df = spark.createDataFrame(pairs, "doc_a long, doc_b long")
-    sc = spark.sparkContext
-    group = "canonical_components_job_budget"
-    sc.setJobGroup(group, "canonical_components")
-    try:
+    with job_group("canonical_components_job_budget") as jobs:
         comp = dd.canonical_components(df)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    jobs = sc.statusTracker().getJobIdsForGroup(group)
     assert {r["doc"]: r["canonical"] for r in comp.collect()} == (
         _union_find_labels(pairs)
     )

@@ -705,10 +705,11 @@ print(json.dumps({"events": events, "in_order": list(fns) == list(_REGISTRY)}))
     assert seen["in_order"]
 
 
-def test_bench_one_starts_from_repo_root_without_pythonpath(sf_dir):
-    """``python tools/bench_one.py <query>`` runs as its docstring says:
-    from the repo root, with PYTHONPATH unset, the tool finds the engine
-    itself and prints one min line per query."""
+def test_bench_subset_starts_from_repo_root_without_pythonpath(sf_dir):
+    """``python bench.py <query>`` runs as its docstring says: from the repo
+    root, with PYTHONPATH unset, it prints one min line per query with the
+    query's job count, and writes no detail file."""
+    import re
     import subprocess
     import sys
 
@@ -719,15 +720,52 @@ def test_bench_one_starts_from_repo_root_without_pythonpath(sf_dir):
         SPARK_GRAFT_CPUS="2",
         SPARK_DRIVER_MEMORY="1g",
     )
+
+    def status() -> str:
+        return subprocess.run(
+            ["git", "status", "--porcelain"], cwd=REPO, capture_output=True, text=True
+        ).stdout
+
+    before = status()
     out = subprocess.run(
-        [sys.executable, "tools/bench_one.py", "q1_pricing_summary"],
+        [sys.executable, "bench.py", "q1_pricing_summary"],
         cwd=REPO, env=env, capture_output=True, text=True, timeout=300,
     )
     assert out.returncode == 0, out.stderr[-3000:]
-    assert any(
-        line.startswith("q1_pricing_summary: min ")
-        for line in out.stdout.splitlines()
+    assert re.search(
+        r"^q1_pricing_summary: min \d+\.\d{3}s over 1 \(.*jobs [1-9]\d*",
+        out.stdout, re.M,
     ), out.stdout
+    assert status() == before
+    assert not os.path.exists(os.path.join(REPO, "BENCH_DETAIL_c2.json"))
+
+
+def test_bench_stdout_line_contract():
+    """The driver reads the last stdout line of ``python bench.py`` from a
+    2000-byte tail: the line stays within 1900 bytes with all headline
+    names, carries exactly the fixed heavy rows when the full dict
+    overflows, and falls back to ``{}`` when even those do not fit."""
+    import json
+    import sys
+
+    sys.path.insert(0, REPO)
+    from bench import _STDOUT_TOP, HEADLINE, stdout_line
+
+    assert len(HEADLINE) == len(set(HEADLINE)) == 124
+    assert set(_STDOUT_TOP) <= set(HEADLINE)
+    for value in (0.0, 999.999, 123456.789):
+        timings = {n: value for n in HEADLINE}
+        line = stdout_line(value * len(timings), timings, "0.1")
+        got = json.loads(line)
+        assert len(line) <= 1900
+        assert sorted(got) == ["metric", "queries", "sf", "unit", "value"]
+        assert got["metric"] == "headline_queries_total_wall" and got["sf"] == 0.1
+        assert list(got["queries"]) == _STDOUT_TOP
+    few = {n: 1.5 for n in HEADLINE[:5]}
+    assert json.loads(stdout_line(7.5, few, "0.1"))["queries"] == few
+    huge = {n: 10.0**12 + 0.123 for n in HEADLINE}
+    line = stdout_line(1.0, huge, "0.1")
+    assert len(line) <= 1900 and json.loads(line)["queries"] == {}
 
 
 def test_per_host_shuffle_skew_posture(spark):
@@ -838,7 +876,7 @@ def test_counted_checkpoint_observes_row_count(spark):
     assert total == sum(i for i in range(37) if i % 4)
 
 
-def test_stage_log_frame_orders_rows(spark):
+def test_stage_log_frame_orders_rows(spark, job_group):
     from etl_lala_spark.plans._gates import StageLog
 
     log = StageLog()
@@ -848,17 +886,13 @@ def test_stage_log_frame_orders_rows(spark):
     assert df.schema.simpleString() == (
         "struct<stage_ord:int,stage:string,n:bigint>"
     )
-    sc = spark.sparkContext
-    sc.setJobGroup("stage_log_frame", "StageLog.frame")
-    try:
+    with job_group("stage_log_frame") as jobs:
         rows = [tuple(r) for r in df.collect()]
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
     assert rows == [
         (0, "cdx_lines", 192), (1, "cdx_selected", 64), (2, "shards", 3)
     ]
     # A gate's result frame costs no Spark job of its own.
-    assert list(sc.statusTracker().getJobIdsForGroup("stage_log_frame")) == []
+    assert jobs == []
 
 
 def test_shuffle_width_restores_when_body_raises(spark):
@@ -919,21 +953,15 @@ def test_ranged_file_handler_serves_only_files_directly_under_root(tmp_path):
             assert _get(base, path)[0] == 404, path
 
 
-def test_corpus_gates_job_budget(spark, sf_dir):
+def test_corpus_gates_job_budget(spark, sf_dir, job_group):
     """Spark jobs per call of the two corpus gates, counted with a job group
     as in test_canonical_components_job_budget: both enter the shared
     curation tail through one counted checkpoint, so a stage count that
     re-scans a frame, or a seam that loses its checkpoint, fails here."""
     from etl_lala_spark.plans import gates_io
 
-    sc = spark.sparkContext
     for gate, budget in (("web_corpus_wet_build", 54), ("web_corpus_build", 80)):
-        group = f"{gate}_job_budget"
-        sc.setJobGroup(group, gate)
-        try:
+        with job_group(f"{gate}_job_budget") as jobs:
             rows = getattr(gates_io, gate)(spark, sf_dir).collect()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        jobs = sc.statusTracker().getJobIdsForGroup(group)
         assert rows[-1]["stage"] == "shards" and rows[-1]["n"] > 0
         assert 0 < len(jobs) <= budget, (gate, len(jobs))

@@ -624,7 +624,7 @@ def test_fetch_cap_exceeded_not_retried(spark, tmp_path):
     assert not os.path.exists(os.path.join(staging, "big.zip.part"))
 
 
-def test_fetch_to_staging_http_contract(spark, tmp_path):
+def test_fetch_to_staging_http_contract(spark, tmp_path, job_group):
     """The fetch keeps urllib's contract over loopback HTTP: a 404 is an
     HTTPError after retries + 1 attempts, a 503 once ends ok on attempt 2,
     a missing file:// path is a URLError and a URL without a scheme a
@@ -656,7 +656,6 @@ def test_fetch_to_staging_http_contract(spark, tmp_path):
             self.wfile.write(body)
 
     staging = str(tmp_path / "staging")
-    sc = spark.sparkContext
     with loopback_server(Handler) as base:
         urls = ["gone.zip", "flaky.zip", "ok.zip", "dir/"]
         mf = tiny_df(
@@ -670,12 +669,9 @@ def test_fetch_to_staging_http_contract(spark, tmp_path):
             "struct<url:string,dest:string,n_bytes:bigint,status:string,attempts:int,error:string>"
         )
         assert not os.path.exists(staging) and not hits
-        sc.setJobGroup("fetch_contract", "fetch")
-        try:
+        with job_group("fetch_contract") as jobs:
             rows = {os.path.basename(r.dest): r for r in fetched.collect()}
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-    assert len(sc.statusTracker().getJobIdsForGroup("fetch_contract")) >= 1
+    assert len(jobs) >= 1
 
     gone = rows["gone.zip"]
     assert (gone.status, gone.attempts, gone.n_bytes) == ("error", 3, 0)
@@ -696,7 +692,7 @@ def test_fetch_to_staging_http_contract(spark, tmp_path):
     assert not [n for n in os.listdir(staging) if n.endswith(".part")]
 
 
-def test_ingest_chain_driver_budget(spark, tmp_path, monkeypatch):
+def test_ingest_chain_driver_budget(spark, tmp_path, monkeypatch, job_group):
     """Driver cost of one DATASUS ingest op (fetch → binaryFile → ZIP →
     DBC → incremental load) on a 12-column table, cold and replayed with a
     new month: 3 Spark jobs per op (fetch, schema inference, load), no
@@ -733,12 +729,10 @@ def test_ingest_chain_driver_budget(spark, tmp_path, monkeypatch):
             _zip_bytes({f"PAPE{m[2:]}.dbc": dbc.dbf_to_dbc(dbc.write_dbf(cols, rows))})
         )
     staging, table = str(tmp_path / "staging"), str(tmp_path / "table")
-    sc = spark.sparkContext
 
     def op(phase: str, manifest: list[str]):
-        sc.setJobGroup(phase, phase)
-        before = sent[0]
-        try:
+        with job_group(phase) as jobs:
+            before = sent[0]
             fetched = fetch_to_staging(
                 tiny_df(spark, [(f"file://{remote}/PA{m}.zip", f"PA{m}.zip") for m in manifest],
                         "url string, name string"),
@@ -750,9 +744,8 @@ def test_ingest_chain_driver_budget(spark, tmp_path, monkeypatch):
             res = writer.load_incremental(
                 spark, records.withColumn("competencia", F.col("PA_MVM")), table
             )
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        return statuses, res, fetched, sent[0] - before, len(sc.statusTracker().getJobIdsForGroup(phase))
+            trips = sent[0] - before
+        return statuses, res, fetched, trips, len(jobs)
 
     statuses, res, fetched, trips, jobs = op("ingest_budget_cold", months[:2])
     assert statuses == ["ok", "ok"] and res["registros_inseridos"] == 10

@@ -2,16 +2,17 @@
 
 Runs a selected headline-query subset at sf0.1 (driver testdata) AND at the
 locally generated sf1.0 (``tools/make_scale_sf.py`` — 10x FK-consistent
-copies, content-decorrelated), min-of-N wall-clock each, on the same
-local[$SPARK_GRAFT_CPUS] session configuration bench.py uses. Emits one
-JSON line with per-query times at both SFs and the time ratio; a query is
-flagged when its ratio exceeds DATA_RATIO * TOLERANCE (super-linear).
+copies, content-decorrelated), min-of-N each, with bench.py's session,
+warm-up and sample: noop sink, cache cleared, fixture seconds excluded.
+Emits one JSON line with per-query times at both SFs and the time ratio; a
+query is flagged when its ratio exceeds DATA_RATIO * TOLERANCE
+(super-linear).
 
 The selection: q1/q3/q5 (the canonical scan/join/agg shapes) + the 10 most
 expensive headline queries from the round-5 bench — iteration-heavy ANN /
 k-means training, streaming-lifecycle twins, graph, minhash dedup.
 
-Usage: python tools/scale_curve.py [runs_per_query]
+Usage: python tools/scale_curve.py [--all] [runs_per_query]
 Env: SPARK_GRAFT_CPUS (default: all), SCALE_SF_DIR (default .scale/sf1.0).
 """
 
@@ -20,7 +21,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -57,35 +57,16 @@ def main() -> None:
     sf_small = "/root/testdata/sf0.1"
     sf_big = os.environ.get("SCALE_SF_DIR", os.path.join(REPO, ".scale", "sf1.0"))
 
+    from bench import HEADLINE, sample, session, warm_up
     from etl_lala_spark.plans import query_fns
-    from etl_lala_spark.session import get_spark
 
-    # Same session shape as bench.py so the two measurements compare.
-    spark = get_spark(
-        app_name="etl_lala_spark_scale_curve",
-        master=f"local[{cpus}]",
-        shuffle_partitions=cpus,
-        extra_confs={"spark.ui.showConsoleProgress": "false"},
-    )
+    spark = session(cpus)
     fns = query_fns()
-    queries = QUERIES
-    if sweep_all:
-        from bench import HEADLINE
-
-        queries = HEADLINE
-
-    # JVM/codegen warm-up (mirrors bench.py).
-    fns["q1_pricing_summary"](spark, "/root/testdata/sf0.001").write.format(
-        "noop"
-    ).mode("overwrite").save()
+    warm_up(spark, fns)
+    queries = HEADLINE if sweep_all else QUERIES
 
     def run(name: str, sf_dir: str) -> float:
-        best = float("inf")
-        for _ in range(runs):
-            t0 = time.perf_counter()
-            fns[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-        return round(best, 3)
+        return round(min(sample(spark, fns, name, sf_dir).seconds for _ in range(runs)), 3)
 
     out: dict = {"runs_per_query": runs, "cpus": cpus, "queries": {}}
     for name in queries:
