@@ -374,26 +374,18 @@ def sample(spark, fns, name: str, sf_dir: str) -> Sample:
 
 
 def measure(spark, fns, name: str, sf_dir: str, n_runs: int) -> dict:
-    """Min-of-N figures of query ``name``.
-
-    A spread above 30% of the median means host load contaminated the
-    window, so up to ``n_runs`` extra samples hunt a quiet one; min-of-N
-    stays the figure and ``reruns`` records the hunt. ANN gates split the
-    figure (still build+probe) into ``build`` (driver-elected quantizer
-    training) and ``probe`` legs, each min-of-N on its own, so a probe
-    regression cannot hide inside training noise. ``jobs`` is the most any
-    sample started, fixture jobs included.
+    """Min-of-N figures of query ``name``. ANN gates split the figure
+    (still build+probe) into ``build`` (driver-elected quantizer training)
+    and ``probe`` legs, each min-of-N on its own, so a probe regression
+    cannot hide inside training noise. ``jobs`` is the most any sample
+    started, fixture jobs included.
     """
     samples = [sample(spark, fns, name, sf_dir) for _ in range(n_runs)]
     secs = [s.seconds for s in samples]
-    while len(secs) < 2 * n_runs and statistics.pstdev(secs) > 0.30 * statistics.median(secs):
-        samples.append(sample(spark, fns, name, sf_dir))
-        secs.append(samples[-1].seconds)
     row = {
         "min": round(min(secs), 3),
         "stddev": round(statistics.pstdev(secs), 3),
         "samples": len(secs),
-        "reruns": len(secs) - n_runs,
         "fixture": round(min(s.fixture for s in samples), 3),
         "jobs": max(s.jobs for s in samples),
     }
@@ -409,8 +401,6 @@ def min_line(name: str, row: dict) -> str:
         notes.append(f"fixture {row['fixture']:.3f}s excluded")
     if "build" in row:
         notes.append(f"build {row['build']:.3f}s / probe {row['probe']:.3f}s")
-    if row["reruns"]:
-        notes.append(f"{row['reruns']} noise reruns")
     return (
         f"{name}: min {row['min']:.3f}s over {row['samples']} "
         f"(±{row['stddev']:.3f}, {', '.join(notes)})"
@@ -539,7 +529,6 @@ def suite(spark, fns, sf_dir: str, cpus: int, n_runs: int) -> None:
                 },
                 "canary_series": canary_series,
                 "canary_at": canary_at,
-                "noise_reruns": {n: r["reruns"] for n, r in rows.items() if r["reruns"]},
             },
             fh,
             indent=1,

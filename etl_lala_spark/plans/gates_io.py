@@ -2410,9 +2410,9 @@ def web_cdx_ranged_fetch(spark: SparkSession, sf_dir: str) -> DataFrame:
     lands on a different hash.
 
     Scale: this gate IS the 100 TB argument — bytes moved = Σ selected
-    member lengths (the point of index-first access); the fetch is one
-    mapInPandas task per plan partition, and extraction is the same
-    Arrow-batched one-to-many kernel as ``web_warc_extract``."""
+    member lengths (the point of index-first access); the fetch runs in the
+    JVM in the plan's own tasks, and extraction is the same Arrow-batched
+    one-to-many kernel as ``web_warc_extract``."""
     import gzip
     import re as _re
 
@@ -2804,9 +2804,8 @@ def web_corpus_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     # gate's own constant, not a data-dependent sniff): run the WHOLE
     # chain — CDX selection and the fetch leg included, not just the tail —
     # at a matching shuffle width. The width also sizes the fetch plan:
-    # select_captures' shuffle output is what fetch_ranges maps over, so 64
-    # one-row HTTP gets ride 8 Python-worker tasks instead of 32 task
-    # launches with 2 rows each.
+    # select_captures' shuffle output is what fetch_ranges runs over, so 64
+    # one-row HTTP gets ride 8 tasks instead of 32 with 2 rows each.
     with shuffle_width(spark, 8):
         log("cdx_lines", len(cdx_lines))
         idx = spark.createDataFrame([(x,) for x in cdx_lines], "line string")
@@ -3719,11 +3718,10 @@ def web_recrawl_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "etag",
                     "last_modified",
                 # fetch-concurrency sizing: the driver-built 48-row plan
-                # parallelizes across defaultParallelism partitions, so the
-                # conditional-GET leg paid 32 Python-worker task launches for
-                # ~1.5 rows each; 8 tasks of 6 loopback gets amortize the
-                # worker round trip and still saturate the loopback server
-                # (production fetch waves bound per-host concurrency anyway)
+                # parallelizes across defaultParallelism partitions; 8 tasks
+                # of 6 loopback gets amortize the task launches and still
+                # saturate the loopback server (production fetch waves bound
+                # per-host concurrency anyway)
                 ).coalesce(8),
                 retries=1,
                 backoff_s=0.05,

@@ -33,24 +33,24 @@ import org.apache.spark.sql.RowFactory;
 import org.apache.spark.sql.api.java.UDF2;
 import org.apache.spark.sql.expressions.UserDefinedFunction;
 import org.apache.spark.sql.functions;
-import org.apache.spark.sql.types.DataType;
 import org.apache.spark.sql.types.DataTypes;
-import org.apache.spark.sql.types.StructField;
+import org.apache.spark.sql.types.StructType;
 
 /**
- * JVM side of the DATASUS ingest chain: the fetch to staging, ZIP member
- * expansion, PKWare DCL explode and the dBase III record split, as Spark
- * Java UDFs so the chain runs no Python worker from the manifest to the
- * sink. An instance's public methods build each plan in one call, so the
- * driver makes a fixed number of py4j round trips whatever the width.
+ * JVM side of the DATASUS ingest chain and the web crawl's fetches: the
+ * staging, ranged and conditional HTTP fetches, ZIP member expansion,
+ * PKWare DCL explode and the dBase III record split, as Spark Java UDFs so
+ * they run no Python worker. An instance's public methods build each plan
+ * in one call, so the driver makes a fixed number of py4j round trips
+ * whatever the width.
  *
  * <p>Compiled at first use by Spark's bundled Janino (see
  * {@code etl_lala_spark/sources/_jvm.py}), so it keeps to the subset Janino
  * compiles: raw collection types, no diamond operator, no
  * try-with-resources. Each decode mirrors its Python reference
  * ({@code implode.decompress}, {@code dbc.parse_dbf_columns},
- * {@code zipfile}) including the Python exception class names that error
- * rows report.
+ * {@code zipfile}) and each fetch {@code urllib}, including the Python
+ * exception class names that error rows report.
  */
 public class DbcCodec {
 
@@ -85,16 +85,18 @@ public class DbcCodec {
 
     /** A two-argument UDF that returns an array of structs of its own shape. */
     public abstract static class Codec implements UDF2 {
-        abstract StructField[] fields();
+        /** The struct's fields, as DDL. */
+        abstract String schema();
 
         /** The UDF with its return type, the overload py4j cannot pick itself. */
         public UserDefinedFunction udf() {
-            return functions.udf(this, DataTypes.createArrayType(DataTypes.createStructType(fields())));
+            return functions.udf(this, DataTypes.createArrayType(StructType.fromDDL(schema())));
         }
     }
 
-    static StructField field(String name, DataType type) {
-        return DataTypes.createStructField(name, type, true);
+    /** The one-row array a single-row codec returns. */
+    static Object[] one(Object[] values) {
+        return new Object[] {RowFactory.create(values)};
     }
 
     static String clip(String s, int max) {
@@ -406,13 +408,12 @@ public class DbcCodec {
             this.permissive = permissive;
         }
 
-        StructField[] fields() {
-            StructField[] out = new StructField[expected.length + 1];
+        String schema() {
+            StringBuilder ddl = new StringBuilder();
             for (int i = 0; i < expected.length; i++) {
-                out[i] = field("_c" + i, DataTypes.StringType);
+                ddl.append("_c").append(i).append(" string, ");
             }
-            out[expected.length] = field("_e", DataTypes.StringType);
-            return out;
+            return ddl.append("_e string").toString();
         }
 
         public Object call(Object name, Object content) throws Exception {
@@ -429,7 +430,7 @@ public class DbcCodec {
                 }
                 Object[] vals = new Object[expected.length + 1];
                 vals[expected.length] = errorText(ex, ex.getClass().getSimpleName(), 100);
-                return new Object[] {RowFactory.create(vals)};
+                return one(vals);
             }
         }
     }
@@ -496,11 +497,8 @@ public class DbcCodec {
             this.permissive = permissive;
         }
 
-        StructField[] fields() {
-            return new StructField[] {
-                field("member", DataTypes.StringType),
-                field("content", DataTypes.BinaryType),
-                field("error", DataTypes.StringType)};
+        String schema() {
+            return "member string, content binary, error string";
         }
 
         public Object call(Object path, Object content) throws Exception {
@@ -542,7 +540,7 @@ public class DbcCodec {
         }
     }
 
-    // ---- fetch to staging (reference S5: urllib semantics) -----------------
+    // ---- HTTP fetch (reference S5 + R2/R5: urllib semantics) ---------------
 
     /** Python's {@code os.path.join(dir, name)}. */
     static String pyJoin(String dir, String name) {
@@ -563,17 +561,19 @@ public class DbcCodec {
     }
 
     /**
-     * Open {@code url} as {@code urllib.request.urlopen} would: a status
-     * outside 2xx is an {@code HTTPError} with urllib's text, a URL without
-     * a scheme a {@code ValueError}, and every other failure to open a
-     * {@code URLError}.
+     * Open {@code url} as {@code urllib.request.urlopen} would, sending
+     * {@code headers} (name, value pairs; a pair whose value is null is not
+     * sent): a status outside 2xx is an {@code HTTPError} with urllib's
+     * text, except a 304 answering a validator ({@code If-*}) header; a URL
+     * without a scheme is a {@code ValueError}, and every other failure to
+     * open a {@code URLError}. The returned connection is connected.
      */
-    static InputStream open(String url) {
+    static URLConnection open(String url, String[] headers) {
         URL u;
         try {
             u = new URL(url);
         } catch (MalformedURLException ex) {
-            int colon = url == null ? -1 : url.indexOf(':');
+            int colon = url.indexOf(':');
             if (colon < 0) {
                 throw new DecodeError("ValueError", "unknown url type: '" + url + "'");
             }
@@ -584,44 +584,52 @@ public class DbcCodec {
                 throw new IOException("[Errno 21] Is a directory: '" + u.getPath() + "'");
             }
             URLConnection conn = u.openConnection();
+            boolean validators = false;
+            for (int i = 0; i < headers.length; i += 2) {
+                if (headers[i + 1] != null) {
+                    conn.setRequestProperty(headers[i], headers[i + 1]);
+                    validators = validators || headers[i].startsWith("If-");
+                }
+            }
+            conn.connect();
             if (conn instanceof HttpURLConnection) {
                 HttpURLConnection http = (HttpURLConnection) conn;
                 int code = http.getResponseCode();
-                if (code < 200 || code >= 300) {
+                if ((code < 200 || code >= 300) && !(code == 304 && validators)) {
                     String reason = http.getResponseMessage();
                     http.disconnect();
                     throw new DecodeError("HTTPError", "HTTP Error " + code + ": " + reason);
                 }
             }
-            return conn.getInputStream();
+            return conn;
         } catch (IOException ex) {
             throw new DecodeError("URLError", "<urlopen error " + ex.getMessage() + ">");
         }
     }
 
-    /** Stream {@code url} into {@code part} in 1 MiB reads; past {@code maxBytes} it fails. */
-    static long download(String url, File part, long maxBytes) throws IOException {
-        InputStream in = open(url);
-        try {
-            OutputStream out = new FileOutputStream(part);
-            try {
-                byte[] chunk = new byte[1 << 20];
-                long got = 0;
-                int n;
-                while ((n = in.read(chunk)) >= 0) {
-                    got += n;
-                    if (got > maxBytes) {
-                        throw new CapExceeded("body exceeds max_bytes=" + maxBytes);
-                    }
-                    out.write(chunk, 0, n);
-                }
-                return got;
-            } finally {
-                out.close();
+    /** The HTTP status of an open connection, or null for a non-HTTP source. */
+    static Integer status(URLConnection conn) throws IOException {
+        return conn instanceof HttpURLConnection ? Integer.valueOf(((HttpURLConnection) conn).getResponseCode()) : null;
+    }
+
+    /**
+     * Move at most {@code limit} bytes from {@code in} to {@code out} (null
+     * discards them) in reads of at most 1 MiB; returns how many moved.
+     */
+    static long copy(InputStream in, OutputStream out, long limit) throws IOException {
+        byte[] chunk = new byte[(int) Math.max(1L, Math.min(limit, 1L << 20))];
+        long got = 0;
+        while (got < limit) {
+            int n = in.read(chunk, 0, (int) Math.min(chunk.length, limit - got));
+            if (n < 0) {
+                break;
             }
-        } finally {
-            in.close();
+            if (out != null) {
+                out.write(chunk, 0, n);
+            }
+            got += n;
         }
+        return got;
     }
 
     /** The body crossed the cap: permanent, never retried, reported as ValueError. */
@@ -632,73 +640,237 @@ public class DbcCodec {
     }
 
     /**
-     * (url, name) to a one-element array of
-     * {@code struct<url, dest, n_bytes, status, attempts, error>}: the
-     * contract of {@code fetch.fetch_to_staging}. {@code name} is ignored
-     * unless {@code named}; the URL's basename stands in for it.
+     * A fetch request shape: a UDF of (url, the request's argument) to a
+     * one-row array, made by the one attempt loop in {@link #call}.
      */
-    public static class Fetch extends Codec {
-        private final String stagingDir;
-        private final boolean named;
-        private final long maxBytes;
-        private final int retries;
-        private final double backoffS;
+    public abstract static class Fetch extends Codec {
+        final long maxBytes;
+        final int retries;
+        final double backoffS;
 
-        public Fetch(String stagingDir, boolean named, long maxBytes, int retries, double backoffS) {
-            this.stagingDir = stagingDir;
-            this.named = named;
+        Fetch(long maxBytes, int retries, double backoffS) {
             this.maxBytes = maxBytes;
             this.retries = retries;
             this.backoffS = backoffS;
         }
 
-        StructField[] fields() {
-            return new StructField[] {
-                field("url", DataTypes.StringType),
-                field("dest", DataTypes.StringType),
-                field("n_bytes", DataTypes.LongType),
-                field("status", DataTypes.StringType),
-                field("attempts", DataTypes.IntegerType),
-                field("error", DataTypes.StringType)};
+        /** One request: its row, or an exception that fails the attempt. */
+        abstract Object[] attempt(String url, Object arg, int attempt) throws Exception;
+
+        /** The row of a fetch that ended in {@code error} after {@code attempts}. */
+        abstract Object[] failed(Object url, Object arg, int attempts, String error);
+
+        /** The row of a request that is not sent (no attempt is made), or null. */
+        Object[] unsent(String url, Object arg) {
+            return null;
         }
 
-        static Object[] result(Object url, String dest, long nBytes, String status, int attempts, String error) {
-            return new Object[] {RowFactory.create(new Object[] {
-                url, dest, Long.valueOf(nBytes), status, Integer.valueOf(attempts), error})};
-        }
-
-        public Object call(Object url, Object name) throws Exception {
-            String dest = pyJoin(stagingDir, named ? String.valueOf(name) : basename((String) url));
-            File target = new File(dest);
-            if (target.isFile() && target.length() > 0) {
-                return result(url, dest, target.length(), "skipped", 0, null);
+        /**
+         * A NULL url is an error row after 0 attempts; otherwise up to
+         * {@code retries + 1} attempts, {@code backoffS * 2^(attempt-1)}
+         * seconds apart. The cap is never retried, and the last error,
+         * clipped to 500 characters, lands in the row.
+         */
+        public Object call(Object url, Object arg) throws Exception {
+            Object[] unsent = url == null ? failed(url, arg, 0, "ValueError: url is NULL") : unsent((String) url, arg);
+            if (unsent != null) {
+                return unsent;
             }
-            new File(stagingDir).mkdirs();
-            // write-then-rename, so a killed task never leaves a file a replay would skip
-            File part = new File(dest + ".part");
             String error = null;
             int attempt = 0;
-            try {
-                while (attempt <= retries) {
-                    attempt++;
-                    try {
-                        long got = download((String) url, part, maxBytes);
-                        Files.move(part.toPath(), target.toPath(), new CopyOption[] {StandardCopyOption.ATOMIC_MOVE});
-                        return result(url, dest, got, "ok", attempt, null);
-                    } catch (Exception ex) {
-                        error = clip(errorText(ex, ex.getClass().getSimpleName(), 500), 500);
-                        if (ex instanceof CapExceeded) {
-                            break;
-                        }
-                        if (attempt <= retries) {
-                            Thread.sleep(Math.round(backoffS * 1000.0 * Math.pow(2, attempt - 1)));
-                        }
+            while (attempt <= retries) {
+                attempt++;
+                try {
+                    return attempt((String) url, arg, attempt);
+                } catch (Exception ex) {
+                    error = clip(errorText(ex, ex.getClass().getSimpleName(), 500), 500);
+                    if (ex instanceof CapExceeded) {
+                        break;
+                    }
+                    if (attempt <= retries) {
+                        Thread.sleep(Math.round(backoffS * 1000.0 * Math.pow(2, attempt - 1)));
                     }
                 }
+            }
+            return failed(url, arg, attempt, error);
+        }
+
+        /** Stream a whole body to {@code out}; past {@code maxBytes} it fails. */
+        long capped(InputStream in, OutputStream out) throws IOException {
+            try {
+                long got = copy(in, out, maxBytes + 1);
+                if (got > maxBytes) {
+                    throw new CapExceeded("body exceeds max_bytes=" + maxBytes);
+                }
+                return got;
             } finally {
+                in.close();
+            }
+        }
+    }
+
+    /**
+     * (url, name) to (url, dest, n_bytes, status, attempts, error): the
+     * contract of {@code fetch.fetch_to_staging}. {@code name} is ignored
+     * unless {@code named}; the URL's basename stands in for it.
+     */
+    public static class Staging extends Fetch {
+        private final String stagingDir;
+        private final boolean named;
+
+        public Staging(String stagingDir, boolean named, long maxBytes, int retries, double backoffS) {
+            super(maxBytes, retries, backoffS);
+            this.stagingDir = stagingDir;
+            this.named = named;
+        }
+
+        String schema() {
+            return "url string, dest string, n_bytes bigint, status string, attempts int, error string";
+        }
+
+        static Object[] row(Object url, String dest, long nBytes, String status, int attempts, String error) {
+            return one(new Object[] {url, dest, Long.valueOf(nBytes), status, Integer.valueOf(attempts), error});
+        }
+
+        String dest(Object url, Object name) {
+            if (named) {
+                return pyJoin(stagingDir, String.valueOf(name));
+            }
+            return url == null ? null : pyJoin(stagingDir, basename((String) url));
+        }
+
+        Object[] unsent(String url, Object name) {
+            String dest = dest(url, name);
+            File target = new File(dest);
+            if (target.isFile() && target.length() > 0) {
+                return row(url, dest, target.length(), "skipped", 0, null);
+            }
+            new File(stagingDir).mkdirs();
+            return null;
+        }
+
+        /** Write-then-rename, so a killed task never leaves a file a replay would skip. */
+        Object[] attempt(String url, Object name, int attempt) throws Exception {
+            String dest = dest(url, name);
+            File part = new File(dest + ".part");
+            OutputStream out = new FileOutputStream(part);
+            try {
+                long got = capped(open(url, new String[0]).getInputStream(), out);
+                out.close();
+                Files.move(part.toPath(), new File(dest).toPath(), new CopyOption[] {StandardCopyOption.ATOMIC_MOVE});
+                return row(url, dest, got, "ok", attempt, null);
+            } finally {
+                out.close();
                 part.delete();
             }
-            return result(url, dest, 0, "error", attempt, error);
+        }
+
+        Object[] failed(Object url, Object name, int attempts, String error) {
+            return row(url, dest(url, name), 0, "error", attempts, error);
+        }
+    }
+
+    /**
+     * (url, struct(offset, length)) to (url, offset, length, content,
+     * fetch_status, status, attempts, error): the contract of
+     * {@code fetch.fetch_ranges}.
+     */
+    public static class Ranged extends Fetch {
+        public Ranged(long maxBytes, int retries, double backoffS) {
+            super(maxBytes, retries, backoffS);
+        }
+
+        String schema() {
+            return "url string, offset bigint, length bigint, content binary, fetch_status int, status string,"
+                + " attempts int, error string";
+        }
+
+        static Object[] row(Object url, Row range, byte[] content, Integer code, String status, int attempts,
+                            String error) {
+            return one(new Object[] {
+                url, range.get(0), range.get(1), content, code, status, Integer.valueOf(attempts), error});
+        }
+
+        Object[] unsent(String url, Object arg) {
+            Row range = (Row) arg;
+            String error = range.isNullAt(0) ? "offset is NULL" : range.isNullAt(1) ? "length is NULL"
+                : range.getLong(1) > maxBytes ? "range exceeds max_bytes=" + maxBytes : null;
+            return error == null ? null : failed(url, arg, 0, "ValueError: " + error);
+        }
+
+        Object[] attempt(String url, Object arg, int attempt) throws Exception {
+            Row range = (Row) arg;
+            long off = range.getLong(0);
+            long n = range.getLong(1);
+            URLConnection conn = open(url, new String[] {"Range", "bytes=" + off + "-" + (off + n - 1)});
+            Integer code = status(conn);
+            InputStream in = conn.getInputStream();
+            ByteArrayOutputStream body = new ByteArrayOutputStream();
+            try {
+                // a 206 body is the range as it came; from a source without
+                // range support the bytes before the offset are discarded
+                // while streaming, so the cap bounds the range length only
+                if (code != null && code.intValue() == 206) {
+                    copy(in, body, n + 1);
+                } else if (copy(in, null, off) == off) {
+                    copy(in, body, n);
+                }
+            } finally {
+                in.close();
+            }
+            if (body.size() != n) { // not retried: the file will not grow
+                return row(url, range, null, code, "error", attempt, "short_range: got " + body.size() + " of " + n);
+            }
+            return row(url, range, body.toByteArray(), code, "ok", attempt, null);
+        }
+
+        Object[] failed(Object url, Object arg, int attempts, String error) {
+            return row(url, (Row) arg, null, null, "error", attempts, error);
+        }
+    }
+
+    /**
+     * (url, struct(etag, last_modified)) to (url, status, fetch_status,
+     * content, n_bytes, etag, last_modified, attempts, error): the contract
+     * of {@code fetch.fetch_conditional}.
+     */
+    public static class Conditional extends Fetch {
+        public Conditional(long maxBytes, int retries, double backoffS) {
+            super(maxBytes, retries, backoffS);
+        }
+
+        String schema() {
+            return "url string, status string, fetch_status int, content binary, n_bytes bigint, etag string,"
+                + " last_modified string, attempts int, error string";
+        }
+
+        static Object[] row(Object url, String status, Integer code, byte[] content, String etag,
+                            String lastModified, int attempts, String error) {
+            Long n = Long.valueOf(content == null ? 0 : content.length);
+            return one(new Object[] {url, status, code, content, n, etag, lastModified, Integer.valueOf(attempts), error});
+        }
+
+        Object[] attempt(String url, Object arg, int attempt) throws Exception {
+            Row prior = (Row) arg;
+            String etag = prior.getString(0);
+            String lastModified = prior.getString(1);
+            URLConnection conn = open(url, new String[] {"If-None-Match", etag, "If-Modified-Since", lastModified});
+            Integer code = status(conn);
+            if (code != null && code.intValue() == 304) {
+                conn.getInputStream().close();
+                // RFC 9110 §15.4.5: stored validators stay in force
+                return row(url, "not_modified", code, null, etag, lastModified, attempt, null);
+            }
+            ByteArrayOutputStream body = new ByteArrayOutputStream();
+            capped(conn.getInputStream(), body);
+            return code == null
+                ? row(url, "ok", null, body.toByteArray(), null, null, attempt, null)
+                : row(url, "ok", code, body.toByteArray(), conn.getHeaderField("ETag"),
+                      conn.getHeaderField("Last-Modified"), attempt, null);
+        }
+
+        Object[] failed(Object url, Object arg, int attempts, String error) {
+            return row(url, "error", null, null, null, null, attempts, error);
         }
     }
 
@@ -716,16 +888,34 @@ public class DbcCodec {
     }
 
     /**
-     * fetch_to_staging: the nondeterministic Fetch UDF under inline, so it
-     * runs once per manifest row in the manifest's tasks (a Generate is not
+     * A fetch shape over (url, arg) under inline: nondeterministic, so it
+     * runs once per plan row in the plan's own tasks (a Generate is not
      * folded into a local relation, which would run it while optimizing).
      */
+    static Dataset fetched(Dataset plan, Fetch shape, String urlCol, Column arg) {
+        Column rows = shape.udf().asNondeterministic().apply(new Column[] {col(urlCol), arg});
+        return plan.select(new Column[] {functions.inline(rows)});
+    }
+
+    /** fetch_to_staging. */
     public Dataset fetch(Dataset manifest, String urlCol, String nameCol, String stagingDir,
                          long maxBytes, int retries, double backoffS) {
         Column name = nameCol == null ? functions.lit(null) : col(nameCol);
-        Column fetched = new Fetch(stagingDir, nameCol != null, maxBytes, retries, backoffS).udf()
-            .asNondeterministic().apply(new Column[] {col(urlCol), name});
-        return manifest.select(new Column[] {functions.inline(fetched)});
+        return fetched(manifest, new Staging(stagingDir, nameCol != null, maxBytes, retries, backoffS), urlCol, name);
+    }
+
+    /** fetch_ranges. */
+    public Dataset fetchRanges(Dataset plan, String urlCol, String offsetCol, String lengthCol,
+                               long maxBytes, int retries, double backoffS) {
+        Column range = functions.struct(new Column[] {col(offsetCol).cast("bigint"), col(lengthCol).cast("bigint")});
+        return fetched(plan, new Ranged(maxBytes, retries, backoffS), urlCol, range);
+    }
+
+    /** fetch_conditional. */
+    public Dataset fetchConditional(Dataset plan, String urlCol, String etagCol, String lastModifiedCol,
+                                    long maxBytes, int retries, double backoffS) {
+        Column prior = functions.struct(new Column[] {col(etagCol).cast("string"), col(lastModifiedCol).cast("string")});
+        return fetched(plan, new Conditional(maxBytes, retries, backoffS), urlCol, prior);
     }
 
     /** extract_archive_members: the Members UDF per archive, exploded. */

@@ -627,10 +627,11 @@ def test_fetch_cap_exceeded_not_retried(spark, tmp_path):
 def test_fetch_to_staging_http_contract(spark, tmp_path, job_group):
     """The fetch keeps urllib's contract over loopback HTTP: a 404 is an
     HTTPError after retries + 1 attempts, a 503 once ends ok on attempt 2,
-    a missing file:// path is a URLError and a URL without a scheme a
-    ValueError. Building the frame (explain, schema) stages nothing, a
-    local manifest fetches inside a Spark job, every attempt is one
-    request, and names default to the URL's basename, or ``index``."""
+    a missing file:// path is a URLError, a URL without a scheme a
+    ValueError, and a NULL url a ValueError row with no request. Building
+    the frame (explain, schema) stages nothing, a local manifest fetches
+    inside a Spark job, every attempt is one request, and names default to
+    the URL's basename, or ``index``."""
     import threading
     from collections import Counter
 
@@ -660,7 +661,8 @@ def test_fetch_to_staging_http_contract(spark, tmp_path, job_group):
         urls = ["gone.zip", "flaky.zip", "ok.zip", "dir/"]
         mf = tiny_df(
             spark,
-            [(f"{base}/{u}",) for u in urls] + [(f"file://{tmp_path}/missing.zip",), ("/",)],
+            [(f"{base}/{u}",) for u in urls]
+            + [(f"file://{tmp_path}/missing.zip",), ("/",), (None,)],
             "url string",
         )
         fetched = fetch_to_staging(mf, staging, retries=2, backoff_s=0.01)
@@ -670,8 +672,13 @@ def test_fetch_to_staging_http_contract(spark, tmp_path, job_group):
         )
         assert not os.path.exists(staging) and not hits
         with job_group("fetch_contract") as jobs:
-            rows = {os.path.basename(r.dest): r for r in fetched.collect()}
+            collected = fetched.collect()
     assert len(jobs) >= 1
+    rows = {os.path.basename(r.dest): r for r in collected if r.url is not None}
+    (null,) = [r for r in collected if r.url is None]
+    assert (null.dest, null.status, null.attempts, null.error) == (
+        None, "error", 0, "ValueError: url is NULL"
+    )
 
     gone = rows["gone.zip"]
     assert (gone.status, gone.attempts, gone.n_bytes) == ("error", 3, 0)
@@ -1186,21 +1193,29 @@ def test_warc_record_level_decode_error_isolation(spark):
     assert rows[2]["_error"] is None
 
 
+def _python_nodes(df) -> list[str]:
+    """Python-worker nodes in ``df``'s executed plan (collect it first)."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    names = ("MapInPandas", "ArrowEvalPython", "BatchEvalPython", "PythonUDF")
+    return [n for n in names if n in plan]
+
+
 def test_fetch_ranges_semantics(spark, tmp_path):
     """Ranged fetch over file-backed loopback HTTP: exact 206 ranges, the
     200 no-range-support fallback slices locally, a short range and an
-    over-cap range become structured error rows, a 404 exhausts retries."""
-    import http.server
-    import threading
+    over-cap range become structured error rows, a 404 exhausts retries,
+    a file:// source is sliced from its stream, and a NULL url, offset or
+    length is a ValueError row with no request. The plan runs no Python
+    worker."""
+    import re
 
+    from etl_lala_spark.plans._gates import QuietHandler, loopback_server
     from etl_lala_spark.sources.fetch import fetch_ranges
 
     data = bytes(range(256)) * 4  # 1024 bytes
+    (tmp_path / "f.bin").write_bytes(data)
 
-    class H(http.server.BaseHTTPRequestHandler):
-        def log_message(self, *a):
-            pass
-
+    class H(QuietHandler):
         def do_GET(self):
             if self.path == "/missing":
                 self.send_error(404)
@@ -1209,7 +1224,6 @@ def test_fetch_ranges_semantics(spark, tmp_path):
             if self.path == "/norange" or not rng:
                 body, code = data, 200
             else:
-                import re
                 m = re.match(r"bytes=(\d+)-(\d+)$", rng)
                 lo, hi = int(m.group(1)), int(m.group(2))
                 body, code = data[lo : hi + 1], 206
@@ -1218,23 +1232,30 @@ def test_fetch_ranges_semantics(spark, tmp_path):
             self.end_headers()
             self.wfile.write(body)
 
-    srv = http.server.ThreadingHTTPServer(("127.0.0.1", 0), H)
-    port = srv.server_address[1]
-    threading.Thread(target=srv.serve_forever, daemon=True).start()
-    try:
+    with loopback_server(H) as base:
         plan = spark.createDataFrame(
             [
-                (f"http://127.0.0.1:{port}/f", 10, 20),      # true 206
-                (f"http://127.0.0.1:{port}/norange", 5, 7),  # 200 fallback
-                (f"http://127.0.0.1:{port}/f", 1000, 100),   # short range
-                (f"http://127.0.0.1:{port}/f", 0, 10_000),   # over cap
-                (f"http://127.0.0.1:{port}/missing", 0, 4),  # 404
+                (f"{base}/f", 10, 20),      # true 206
+                (f"{base}/norange", 5, 7),  # 200 fallback
+                (f"{base}/f", 1000, 100),   # short range
+                (f"{base}/f", 0, 10_000),   # over cap
+                (f"{base}/missing", 0, 4),  # 404
+                (f"file://{tmp_path}/f.bin", 100, 30),  # no range support
+                (None, 0, 4),
+                (f"{base}/f", None, 4),
+                (f"{base}/f", 7, None),
             ],
             "url string, offset long, length long",
         )
         rows = fetch_ranges(plan, max_bytes=2048, retries=1, backoff_s=0.01)
+        assert rows.schema.simpleString() == (
+            "struct<url:string,offset:bigint,length:bigint,content:binary,"
+            "fetch_status:int,status:string,attempts:int,error:string>"
+        )
+        collected = rows.collect()
+        assert _python_nodes(rows) == []
         got = {(r["url"].rsplit("/", 1)[-1], r["offset"]): r
-               for r in rows.collect()}
+               for r in collected if r["url"] is not None}
         r206 = got[("f", 10)]
         assert r206["status"] == "ok" and r206["fetch_status"] == 206
         assert bytes(r206["content"]) == data[10:30]
@@ -1248,37 +1269,43 @@ def test_fetch_ranges_semantics(spark, tmp_path):
         miss = got[("missing", 0)]
         assert miss["status"] == "error" and miss["attempts"] == 2
         assert "HTTPError" in miss["error"]
+        local = got[("f.bin", 100)]
+        assert (local["status"], local["fetch_status"], local["attempts"]) == ("ok", None, 1)
+        assert bytes(local["content"]) == data[100:130]
+        nulls = [got[("f", None)], got[("f", 7)]] + [r for r in collected if r["url"] is None]
+        assert [(r["status"], r["attempts"], r["error"]) for r in nulls] == [
+            ("error", 0, "ValueError: offset is NULL"),
+            ("error", 0, "ValueError: length is NULL"),
+            ("error", 0, "ValueError: url is NULL"),
+        ]
+        assert nulls[1]["offset"] == 7 and nulls[2]["length"] == 4
 
         # deep offset on a range-less server: offset+length far exceeds the
         # cap but the RANGE LENGTH is under it — the prefix is discarded
         # while streaming, so the fetch succeeds (advice r9)
         deep = fetch_ranges(
             spark.createDataFrame(
-                [(f"http://127.0.0.1:{port}/norange", 900, 50)],
+                [(f"{base}/norange", 900, 50)],
                 "url string, offset long, length long",
             ),
             max_bytes=100, retries=0, backoff_s=0.01,
         ).collect()[0]
         assert deep["status"] == "ok" and deep["fetch_status"] == 200
         assert bytes(deep["content"]) == data[900:950]
-    finally:
-        srv.shutdown()
-        srv.server_close()
 
 
-def test_fetch_conditional_error_paths(spark):
+def test_fetch_conditional_error_paths(spark, tmp_path):
     """Conditional fetch R5 semantics: a 404 exhausts retries into an
     error row; an over-cap body is a permanent error on attempt 1; a 304
-    carries prior validators forward even when only one was sent."""
-    import http.server
-    import threading
-
+    carries prior validators forward even when only one was sent; a
+    file:// source is ok with NULL validators; a NULL url is a ValueError
+    row with no request. The plan runs no Python worker."""
+    from etl_lala_spark.plans._gates import QuietHandler, loopback_server
     from etl_lala_spark.sources.fetch import fetch_conditional
 
-    class H(http.server.BaseHTTPRequestHandler):
-        def log_message(self, *a):
-            pass
+    (tmp_path / "local").write_bytes(b"on disk")
 
+    class H(QuietHandler):
         def do_GET(self):
             if self.path == "/missing":
                 self.send_error(404)
@@ -1296,22 +1323,25 @@ def test_fetch_conditional_error_paths(spark):
             self.end_headers()
             self.wfile.write(body)
 
-    srv = http.server.ThreadingHTTPServer(("127.0.0.1", 0), H)
-    port = srv.server_address[1]
-    threading.Thread(target=srv.serve_forever, daemon=True).start()
-    try:
+    with loopback_server(H) as base:
         plan = spark.createDataFrame(
             [
-                (f"http://127.0.0.1:{port}/missing", None, None),
-                (f"http://127.0.0.1:{port}/big", None, None),
-                (f"http://127.0.0.1:{port}/page", '"e1"', None),
+                (f"{base}/missing", None, None),
+                (f"{base}/big", None, None),
+                (f"{base}/page", '"e1"', None),
+                (f"file://{tmp_path}/local", '"e1"', "Wed, 01 Jan 2025 00:00:00 GMT"),
+                (None, '"e1"', None),
             ],
             "url string, etag string, last_modified string",
         )
-        got = {r["url"].rsplit("/", 1)[-1]: r
-               for r in fetch_conditional(
-                   plan, max_bytes=1024, retries=1, backoff_s=0.01
-               ).collect()}
+        fetched = fetch_conditional(plan, max_bytes=1024, retries=1, backoff_s=0.01)
+        assert fetched.schema.simpleString() == (
+            "struct<url:string,status:string,fetch_status:int,content:binary,"
+            "n_bytes:bigint,etag:string,last_modified:string,attempts:int,error:string>"
+        )
+        collected = fetched.collect()
+        assert _python_nodes(fetched) == []
+        got = {r["url"].rsplit("/", 1)[-1]: r for r in collected if r["url"] is not None}
         miss = got["missing"]
         assert miss["status"] == "error" and miss["attempts"] == 2
         assert "HTTPError" in miss["error"]
@@ -1322,6 +1352,11 @@ def test_fetch_conditional_error_paths(spark):
         assert nm["status"] == "not_modified" and nm["fetch_status"] == 304
         assert nm["etag"] == '"e1"' and nm["last_modified"] is None
         assert nm["content"] is None and nm["n_bytes"] == 0
-    finally:
-        srv.shutdown()
-        srv.server_close()
+        local = got["local"]
+        assert (local["status"], local["fetch_status"], local["attempts"]) == ("ok", None, 1)
+        assert bytes(local["content"]) == b"on disk" and local["n_bytes"] == 7
+        assert local["etag"] is None and local["last_modified"] is None
+        (null,) = [r for r in collected if r["url"] is None]
+        assert (null["status"], null["attempts"], null["error"], null["etag"]) == (
+            "error", 0, "ValueError: url is NULL", None
+        )
