@@ -11,13 +11,14 @@ materialization through the noop sink (no driver collect — it measures the
 distributed plan, not row transfer), fixture seconds subtracted, and the
 Spark jobs the run started counted. Each query is sampled N times (default
 5, env SPARK_GRAFT_BENCH_RUNS) and the MIN is its figure, with a population
-stddev so deltas can be judged against run noise: host CPU steal on shared
-machines is strictly additive (identical runs were measured at 6.5 s and
-28 s in one JVM), and min-of-N recovers the machine-limited figure.
+stddev of samples 2..N (the first runs cold) so deltas can be judged
+against run noise: host CPU steal on shared machines is strictly additive
+(identical runs were measured at 6.5 s and 28 s in one JVM), and min-of-N
+recovers the machine-limited figure.
 
 The suite prints ONE JSON line last on stdout, {"metric", "value", "unit":
 "sec", "queries": {...}, "sf"}, and writes the full record, per-query job
-counts included, to BENCH_DETAIL_c{cpus}.json.
+and codegen-compile counts included, to BENCH_DETAIL_c{cpus}.json.
 """
 
 from __future__ import annotations
@@ -325,6 +326,14 @@ class Sample(NamedTuple):
     fixture: float
     build: float
     jobs: int
+    compiles: int  # generated classes Janino compiled during the run
+
+
+def codegen_compiles(spark) -> int:
+    """Generated classes compiled so far in this JVM (Spark's CodegenMetrics;
+    a codegen-cache hit is not counted)."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
 
 
 def session(cpus: int):
@@ -356,7 +365,8 @@ def sample(spark, fns, name: str, sf_dir: str) -> Sample:
     it is subtracted here, so the figure is operator cost, not fixture
     render. Jobs are the delta of DAGScheduler's job-id counter, not a job
     group: a streaming twin's micro-batches run under the stream's own
-    group, which a group set around the call never sees.
+    group, which a group set around the call never sees. Compiles are the
+    delta of ``codegen_compiles``.
     """
     from etl_lala_spark.plans import _gates
 
@@ -364,13 +374,14 @@ def sample(spark, fns, name: str, sf_dir: str) -> Sample:
     spark.catalog.clearCache()
     _gates.reset_fixture(name)
     _gates.reset_build(name)
-    jobs0 = dag.nextJobId()
+    jobs0, compiles0 = dag.nextJobId(), codegen_compiles(spark)
     t0 = time.perf_counter()
     fns[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
     wall = time.perf_counter() - t0
-    jobs = dag.nextJobId() - jobs0
+    jobs, compiles = dag.nextJobId() - jobs0, codegen_compiles(spark) - compiles0
     fixture = _gates.FIXTURE_SECONDS.get(name, 0.0)
-    return Sample(wall - fixture, fixture, _gates.BUILD_SECONDS.get(name, 0.0), jobs)
+    build = _gates.BUILD_SECONDS.get(name, 0.0)
+    return Sample(wall - fixture, fixture, build, jobs, compiles)
 
 
 def measure(spark, fns, name: str, sf_dir: str, n_runs: int) -> dict:
@@ -378,16 +389,24 @@ def measure(spark, fns, name: str, sf_dir: str, n_runs: int) -> dict:
     (still build+probe) into ``build`` (driver-elected quantizer training)
     and ``probe`` legs, each min-of-N on its own, so a probe regression
     cannot hide inside training noise. ``jobs`` is the most any sample
-    started, fixture jobs included.
+    started, fixture jobs included. The first sample plans and compiles
+    the query cold (the warm-up covers only q1), so ``stddev`` is taken
+    over samples 2..N and ``codegen_compiles`` gives the first sample's
+    compiles and the most of any later one.
     """
     samples = [sample(spark, fns, name, sf_dir) for _ in range(n_runs)]
     secs = [s.seconds for s in samples]
+    later = samples[1:] or samples
     row = {
         "min": round(min(secs), 3),
-        "stddev": round(statistics.pstdev(secs), 3),
+        "stddev": round(statistics.pstdev(s.seconds for s in later), 3),
         "samples": len(secs),
         "fixture": round(min(s.fixture for s in samples), 3),
         "jobs": max(s.jobs for s in samples),
+        "codegen_compiles": {
+            "first": samples[0].compiles,
+            "later_max": max(s.compiles for s in later),
+        },
     }
     if max(s.build for s in samples) > 0:
         row["build"] = round(min(s.build for s in samples), 3)
@@ -396,7 +415,11 @@ def measure(spark, fns, name: str, sf_dir: str, n_runs: int) -> dict:
 
 
 def min_line(name: str, row: dict) -> str:
-    notes = [f"jobs {row['jobs']}"]
+    compiles = row["codegen_compiles"]
+    notes = [
+        f"jobs {row['jobs']}",
+        f"codegen {compiles['first']}/{compiles['later_max']}",
+    ]
     if row["fixture"]:
         notes.append(f"fixture {row['fixture']:.3f}s excluded")
     if "build" in row:
@@ -521,6 +544,7 @@ def suite(spark, fns, sf_dir: str, cpus: int, n_runs: int) -> None:
                 "queries": timings,
                 "stddev": spreads,
                 "jobs": {n: r["jobs"] for n, r in rows.items()},
+                "codegen_compiles": {n: r["codegen_compiles"] for n, r in rows.items()},
                 "fixture_seconds_excluded": fixtures,
                 "build_probe_split": {
                     n: {"build": r["build"], "probe": r["probe"]}

@@ -14,6 +14,17 @@ on CPython < 3.12, which cut the executor run time of a one-row Python task
 from a median 0.24 s to 0.065 s on a 4-core host (SCALE.md, Python-boundary
 policy). The package's parent directory goes on the workers' ``PYTHONPATH``,
 so the daemon and the engine functions that UDFs call resolve from any cwd.
+
+Spark's generated-code cache holds 1024 classes, not the 100 of
+``spark.sql.codegen.cache.maxEntries``'s default. At 100 entries the
+heaviest gates evict their own classes before reusing them, so every run
+compiled ~180 (``web_corpus_wet_build``) to ~275 (``web_corpus_build``,
+``web_recrawl_incremental``) classes again: 1.3-1.6 s of Janino time per
+warm WET gate run (SCALE.md, generated-code cache). The conf is static: it
+is read once per JVM, when the cache is first built, so it goes on the
+builder, not into ``SESSION_CONFS``, where ``apply_session_confs`` could not
+set it on a live session. A session built outside ``get_spark`` (the
+correctness driver's, handed to ``__spark_entry__.entry``) keeps Spark's 100.
 """
 
 from __future__ import annotations
@@ -89,6 +100,9 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
+        # Static, so set here (module docstring); 1024 holds the five
+        # heaviest gates' ~600 generated classes together.
+        .config("spark.sql.codegen.cache.maxEntries", "1024")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.python.daemon.module", "etl_lala_spark._pydaemon")
         .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)

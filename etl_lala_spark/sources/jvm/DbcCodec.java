@@ -712,7 +712,9 @@ public class DbcCodec {
     /**
      * (url, name) to (url, dest, n_bytes, status, attempts, error): the
      * contract of {@code fetch.fetch_to_staging}. {@code name} is ignored
-     * unless {@code named}; the URL's basename stands in for it.
+     * unless {@code named}; the URL's basename stands in for it. A NULL
+     * name, like a NULL url, is an error row after 0 attempts: two NULL
+     * names would otherwise share one destination.
      */
     public static class Staging extends Fetch {
         private final String stagingDir;
@@ -734,12 +736,15 @@ public class DbcCodec {
 
         String dest(Object url, Object name) {
             if (named) {
-                return pyJoin(stagingDir, String.valueOf(name));
+                return name == null ? null : pyJoin(stagingDir, String.valueOf(name));
             }
             return url == null ? null : pyJoin(stagingDir, basename((String) url));
         }
 
         Object[] unsent(String url, Object name) {
+            if (named && name == null) {
+                return failed(url, name, 0, "ValueError: name is NULL");
+            }
             String dest = dest(url, name);
             File target = new File(dest);
             if (target.isFile() && target.length() > 0) {

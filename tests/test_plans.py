@@ -965,3 +965,27 @@ def test_corpus_gates_job_budget(spark, sf_dir, job_group):
             rows = getattr(gates_io, gate)(spark, sf_dir).collect()
         assert rows[-1]["stage"] == "shards" and rows[-1]["n"] > 0
         assert 0 < len(jobs) <= budget, (gate, len(jobs))
+
+
+def test_wet_gate_rerun_reuses_generated_code(spark, sf_dir):
+    """A second ``web_corpus_wet_build`` run in one session compiles almost
+    no generated classes: a run needs ~180 of them, so a codegen cache of
+    Spark's default 100 entries evicts each class before its reuse and the
+    rerun compiled ~180 again. Counted by Spark's own CodegenMetrics, so
+    host load cannot move it."""
+    import sys
+    import time
+
+    sys.path.insert(0, REPO)
+    from bench import codegen_compiles
+    from etl_lala_spark.plans import gates_io
+
+    gates_io.web_corpus_wet_build(spark, sf_dir).collect()
+    before = codegen_compiles(spark)
+    gates_io.web_corpus_wet_build(spark, sf_dir).collect()
+    rerun = codegen_compiles(spark) - before
+    # the counter is live: a literal no earlier plan held compiles afresh
+    before = codegen_compiles(spark)
+    spark.range(1).selectExpr(f"id + {time.time_ns()} AS x").collect()
+    assert codegen_compiles(spark) > before
+    assert rerun <= 10, rerun

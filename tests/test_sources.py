@@ -628,10 +628,10 @@ def test_fetch_to_staging_http_contract(spark, tmp_path, job_group):
     """The fetch keeps urllib's contract over loopback HTTP: a 404 is an
     HTTPError after retries + 1 attempts, a 503 once ends ok on attempt 2,
     a missing file:// path is a URLError, a URL without a scheme a
-    ValueError, and a NULL url a ValueError row with no request. Building
-    the frame (explain, schema) stages nothing, a local manifest fetches
-    inside a Spark job, every attempt is one request, and names default to
-    the URL's basename, or ``index``."""
+    ValueError, and a NULL url or ``name_col`` value a ValueError row with
+    no request. Building the frame (explain, schema) stages nothing, a local
+    manifest fetches inside a Spark job, every attempt is one request, and
+    names default to the URL's basename, or ``index``."""
     import threading
     from collections import Counter
 
@@ -673,7 +673,23 @@ def test_fetch_to_staging_http_contract(spark, tmp_path, job_group):
         assert not os.path.exists(staging) and not hits
         with job_group("fetch_contract") as jobs:
             collected = fetched.collect()
+        named = fetch_to_staging(
+            tiny_df(
+                spark,
+                [(f"{base}/named.zip", "a.zip"), (f"{base}/null1.zip", None),
+                 (f"{base}/null2.zip", None)],
+                "url string, name string",
+            ),
+            staging, name_col="name", retries=2, backoff_s=0.01,
+        ).collect()
     assert len(jobs) >= 1
+    assert sorted(
+        (r.url.rsplit("/", 1)[1], r.dest, r.status, r.attempts, r.error) for r in named
+    ) == [
+        ("named.zip", os.path.join(staging, "a.zip"), "ok", 1, None),
+        ("null1.zip", None, "error", 0, "ValueError: name is NULL"),
+        ("null2.zip", None, "error", 0, "ValueError: name is NULL"),
+    ]
     rows = {os.path.basename(r.dest): r for r in collected if r.url is not None}
     (null,) = [r for r in collected if r.url is None]
     assert (null.dest, null.status, null.attempts, null.error) == (
@@ -695,7 +711,7 @@ def test_fetch_to_staging_http_contract(spark, tmp_path, job_group):
     assert index.dest == os.path.join(staging, "index")
     assert index.error == "ValueError: unknown url type: '/'"
     # one request per attempt: no row is fetched twice
-    assert hits == {"/gone.zip": 3, "/flaky.zip": 2, "/ok.zip": 1, "/dir/": 1}
+    assert hits == {"/gone.zip": 3, "/flaky.zip": 2, "/ok.zip": 1, "/dir/": 1, "/named.zip": 1}
     assert not [n for n in os.listdir(staging) if n.endswith(".part")]
 
 
