@@ -107,6 +107,32 @@ def spread(df: DataFrame, multiplier: int = 1, by: str | None = None) -> DataFra
     return df
 
 
+def map_rows(df: DataFrame, fn, schema: str) -> DataFrame:
+    """Run ``fn`` on each row of ``df`` inside Arrow batches, with the
+    row's columns as positional arguments; ``fn`` returns that row's output
+    tuples (zero, one or many), laid out by the DDL ``schema``.
+
+    This is the engine's one per-row Python loop: one ``mapInPandas`` node
+    per call, the pandas frame built once per batch from the schema's
+    column names. Values reach ``fn`` as Python objects (``bytes`` for
+    binary, ``int`` for integral columns); a NULL in an integral column
+    arrives as ``nan``, so filter NULL keys out before the map.
+    """
+    import pandas as pd
+    from pyspark.sql.types import DataType
+
+    struct = DataType.fromDDL(schema)
+    names = struct.names
+
+    def batches(it):
+        for batch in it:
+            cols = [batch[c].tolist() for c in batch.columns]
+            rows = [out for args in zip(*cols) for out in fn(*args)]
+            yield pd.DataFrame(rows, columns=names)
+
+    return df.mapInPandas(batches, struct)
+
+
 def tiny_df(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
     """Build a metadata-sized DataFrame as a VALUES-backed LocalRelation.
 

@@ -1,8 +1,12 @@
 """Multimodal column plumbing (north star: image/audio/video at 100 TB).
 
 Media are opaque ``binary`` columns plus typed metadata structs; the heavy
-decode/feature steps run as Arrow-batched pandas over ``mapInPandas`` so each
-task streams batches without materializing a partition. The decode kernels
+decode/feature steps are per-row kernels run by ``io.map_rows`` (one
+``mapInPandas`` node over Arrow batches), so each task streams batches
+without materializing a partition. In the pixel, audio and video
+operators an undecodable or NULL cell degrades to one NULL-padded row
+(``_degrading``) and NULL keys are filtered out before the map
+(``_keyed``), instead of failing the task. The decode kernels
 are REAL and in-repo: PNG (``decode_png``: zlib inflate + all five unfilter
 paths, CRC-checked), GIF (LZW), WAV, baseline JPEG
 (``operators/jpeg.py``: Annex-K tables, canonical Huffman, DCT — which also
@@ -15,11 +19,10 @@ pure-Python baseline (progressive JPEG, inter-frame video codecs), with
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from etl_lala_spark.io import map_rows
 
 MEDIA_SCHEMA = "doc_id long, media binary, mime string, n_bytes int"
 DECODED_SCHEMA = "doc_id long, n_bytes int, width int, height int, n_channels int, digest string"
@@ -343,52 +346,32 @@ def fake_decode(data: bytes) -> tuple[int, int, int]:
 
 
 def decode_media(df: DataFrame, kernel=fake_decode) -> DataFrame:
-    """Arrow-batched decode over mapInPandas: batches stream through each
+    """Arrow-batched decode over ``map_rows``: batches stream through each
     task (constant memory — the reference's T1 requirement), the kernel runs
     per value inside the batch, and output is a typed DataFrame.
     """
     import hashlib
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            meta = pdf["media"].map(kernel)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "n_bytes": pdf["media"].map(len).astype("int32"),
-                    "width": meta.map(lambda m: m[0]).astype("int32"),
-                    "height": meta.map(lambda m: m[1]).astype("int32"),
-                    "n_channels": meta.map(lambda m: m[2]).astype("int32"),
-                    "digest": pdf["media"].map(lambda b: hashlib.md5(bytes(b)).hexdigest()),
-                }
-            )
+    def row(doc_id, media):
+        w, h, ch = kernel(media)[:3]
+        return [(doc_id, len(media), w, h, ch, hashlib.md5(bytes(media)).hexdigest())]
 
-    return df.mapInPandas(batches, schema=DECODED_SCHEMA)
+    return map_rows(df.select("doc_id", "media"), row, DECODED_SCHEMA)
 
 
 SNIFFED_SCHEMA = "doc_id long, kind string, dim1 int, dim2 int, dim3 int"
 
 
 def sniff_media_df(df: DataFrame) -> DataFrame:
-    """Arrow-batched header sniffing over mapInPandas: real (codec-free)
+    """Arrow-batched header sniffing over ``map_rows``: real (codec-free)
     media metadata per row — (kind, width, height, channels) for images,
     (kind, sample_rate, n_channels, bits) for WAV. Input needs (doc_id,
     media binary)."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            sniffed = pdf["media"].map(lambda b: sniff_media(bytes(b)))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "kind": sniffed.map(lambda s: s[0]),
-                    "dim1": sniffed.map(lambda s: s[1]).astype("int32"),
-                    "dim2": sniffed.map(lambda s: s[2]).astype("int32"),
-                    "dim3": sniffed.map(lambda s: s[3]).astype("int32"),
-                }
-            )
+    def row(doc_id, media):
+        return [(doc_id, *sniff_media(bytes(media)))]
 
-    return df.mapInPandas(batches, schema=SNIFFED_SCHEMA)
+    return map_rows(df.select("doc_id", "media"), row, SNIFFED_SCHEMA)
 
 
 def frame_sample(df: DataFrame, every_n_bytes: int = 64) -> DataFrame:
@@ -402,33 +385,6 @@ def frame_sample(df: DataFrame, every_n_bytes: int = 64) -> DataFrame:
             F.sequence(F.lit(0), F.greatest(F.col("n_bytes") - 1, F.lit(0)), F.lit(every_n_bytes))
         ).alias("frame_offset"),
     )
-
-
-def sniff_media_df_arrow(df: DataFrame) -> DataFrame:
-    """``mapInArrow`` variant of ``sniff_media_df``: RecordBatches pass
-    straight from the JVM into pyarrow with zero pandas conversion, so the
-    binary column is touched as Arrow buffers, never boxed into Python
-    object Series — the preferred boundary when rows carry MB-sized media
-    blobs. Same output schema/semantics as the pandas form (agreement is
-    pytest-enforced)."""
-    import pyarrow as pa
-
-    def batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for rb in it:
-            media = rb.column(rb.schema.get_field_index("media"))
-            sniffed = [sniff_media(b.as_py()) for b in media]
-            yield pa.RecordBatch.from_arrays(
-                [
-                    rb.column(rb.schema.get_field_index("doc_id")),
-                    pa.array([s[0] for s in sniffed], pa.string()),
-                    pa.array([s[1] for s in sniffed], pa.int32()),
-                    pa.array([s[2] for s in sniffed], pa.int32()),
-                    pa.array([s[3] for s in sniffed], pa.int32()),
-                ],
-                names=["doc_id", "kind", "dim1", "dim2", "dim3"],
-            )
-
-    return df.mapInArrow(batches, schema=SNIFFED_SCHEMA)
 
 
 def _lzw_encode(indices, mcs):
@@ -795,6 +751,30 @@ def avi_extract_frames(
     return out
 
 
+def _degrading(kernel, width: int, errors: tuple):
+    """Row function for ``map_rows`` over (passthrough..., data) rows: the
+    passthrough cells followed by each of ``kernel(data)``'s tuples. A cell
+    the kernel cannot decode (it raises one of ``errors``; ``TypeError`` is
+    ``bytes(None)`` on a NULL cell) becomes ONE row of the passthrough cells
+    and ``width`` NULLs — the multimodal degrade-don't-raise contract: one
+    corrupt or missing blob must not kill a scan task."""
+
+    def row(*cells):
+        *keys, data = cells
+        try:
+            return [(*keys, *out) for out in kernel(data)]
+        except errors:
+            return [(*keys, *(None,) * width)]
+
+    return row
+
+
+def _keyed(df: DataFrame, id_col: str, data_col: str) -> DataFrame:
+    """(id, data) rows with a non-NULL id: a NULL key has no meaningful
+    output row to attach a result or a degrade row to."""
+    return df.select(id_col, data_col).filter(F.col(id_col).isNotNull())
+
+
 def video_frame_sample(
     df: DataFrame,
     stride: int = 2,
@@ -803,31 +783,29 @@ def video_frame_sample(
 ) -> DataFrame:
     """Distributed AVI frame sampling: one-to-many explode of each video
     row into its every-``stride``-th frame — (id, frame_idx, frame_bytes,
-    width, height, fps). Arrow-batched ``mapInPandas`` (container walking
+    width, height, fps). Arrow-batched ``map_rows`` (container walking
     is per-file imperative byte logic — the legitimate Python boundary);
     partition-parallel across files, so at 100 TB throughput scales with
-    file count exactly like the DBC decode path."""
-    import pandas as pd
-
+    file count exactly like the DBC decode path. A NULL or undecodable
+    video (not an AVI, or cut inside its header so the walk finds no frame
+    dimensions — ``sniff_media``'s "unknown") degrades to one NULL-frame
+    row; NULL keys are skipped."""
     schema = (
         f"{id_col} long, frame_idx int, frame_bytes binary, "
         "width int, height int, fps int"
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for _, r in pdf.iterrows():
-                data = bytes(r[data_col])
-                w, h, _n, fps = decode_avi(data)
-                for idx, fb in avi_extract_frames(data, stride=stride):
-                    rows.append((int(r[id_col]), idx, fb, w, h, fps))
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "frame_idx", "frame_bytes", "width", "height", "fps"],
-            )
+    def kernel(data: bytes) -> list[tuple]:
+        data = bytes(data)
+        w, h, _n, fps = decode_avi(data)
+        if w <= 0 or h <= 0:
+            raise ValueError("AVI header walk found no frame dimensions")
+        return [
+            (idx, fb, w, h, fps) for idx, fb in avi_extract_frames(data, stride=stride)
+        ]
 
-    return df.select(id_col, data_col).mapInPandas(batches, schema=schema)
+    row = _degrading(kernel, 5, (ValueError, TypeError))
+    return map_rows(_keyed(df, id_col, data_col), row, schema)
 
 
 def mjpeg_frame_decode(
@@ -836,16 +814,18 @@ def mjpeg_frame_decode(
 ) -> DataFrame:
     """Distributed pixel decode of sampled MJPEG frames: the output of
     ``video_frame_sample`` flows through a second Arrow-batched
-    ``mapInPandas`` that runs the in-repo baseline JPEG decoder
+    ``map_rows`` that runs the in-repo baseline JPEG decoder
     (``operators/jpeg.py``) per frame and emits per-frame pixel statistics
     (decoded dims/channels, min/max/mean luma) — the feature-extraction
     stage of a video training-data pipeline. Undecodable frames (truncated,
-    non-baseline) degrade to a NULL-stats row instead of failing the task,
-    per the multimodal degrade-don't-raise contract.
+    non-baseline, NULL) degrade to a NULL-stats row instead of failing the
+    task, per the multimodal degrade-don't-raise contract.
 
     Scale: pure per-frame CPU, no shuffle; throughput scales with frame
     count exactly like the container walk that feeds it."""
     import numpy as np
+
+    from etl_lala_spark.operators.jpeg import decode_jpeg
 
     in_cols = [c for c in frames.columns if c != frame_col]
     passthrough = ", ".join(f"{f.name} {f.dataType.simpleString()}"
@@ -855,31 +835,13 @@ def mjpeg_frame_decode(
         "px_min int, px_max int, px_mean double"
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from etl_lala_spark.operators.jpeg import decode_jpeg
+    def kernel(data: bytes) -> list[tuple]:
+        w, h, ch, px = decode_jpeg(bytes(data))
+        a = np.frombuffer(px, np.uint8)
+        return [(w, h, ch, int(a.min()), int(a.max()), float(a.mean()))]
 
-        for pdf in it:
-            rows = []
-            for _, r in pdf.iterrows():
-                base = [r[c] for c in in_cols]
-                try:
-                    w, h, ch, px = decode_jpeg(bytes(r[frame_col]))
-                    a = np.frombuffer(px, np.uint8)
-                    rows.append(
-                        base
-                        + [w, h, ch, int(a.min()), int(a.max()), float(a.mean())]
-                    )
-                except (ValueError, NotImplementedError, TypeError):
-                    # TypeError: NULL frame_bytes (bytes(None)) — the
-                    # degrade-don't-raise contract covers missing cells too.
-                    rows.append(base + [None, None, None, None, None, None])
-            yield pd.DataFrame(
-                rows,
-                columns=in_cols
-                + ["px_width", "px_height", "n_channels", "px_min", "px_max", "px_mean"],
-            )
-
-    return frames.mapInPandas(batches, schema=schema)
+    row = _degrading(kernel, 6, (ValueError, NotImplementedError, TypeError))
+    return map_rows(frames.select(*in_cols, frame_col), row, schema)
 
 
 def decode_pixels(data: bytes) -> tuple[int, int, int, bytes]:
@@ -920,7 +882,7 @@ def image_resize(
     centers with edge clamping (reproduces linear gradients exactly on
     downscale — the pytest invariant). Undecodable rows degrade to NULLs.
 
-    Scale: one Arrow-batched mapInPandas pass, pure per-value CPU, no
+    Scale: one Arrow-batched ``map_rows`` pass, pure per-value CPU, no
     shuffle; numpy fancy-indexing does the resample, so the Python cost is
     per-image, not per-pixel-in-Python."""
     import numpy as np
@@ -931,7 +893,7 @@ def image_resize(
         f"{id_col} long, width int, height int, n_channels int, pixels binary"
     )
 
-    def kernel(data: bytes) -> tuple[int, int, int, bytes]:
+    def kernel(data: bytes) -> list[tuple]:
         w, h, ch, px = decode_pixels(bytes(data))
         a = np.frombuffer(px, np.uint8).reshape(h, w, ch)
         if method == "nearest":
@@ -951,26 +913,10 @@ def image_resize(
             top = af[y0[:, None], x0[None, :], :] * (1 - fx) + af[y0[:, None], x1[None, :], :] * fx
             bot = af[y1[:, None], x0[None, :], :] * (1 - fx) + af[y1[:, None], x1[None, :], :] * fx
             r = np.clip(np.round(top * (1 - fy) + bot * fy), 0, 255).astype(np.uint8)
-        return out_w, out_h, ch, r.tobytes()
+        return [(out_w, out_h, ch, r.tobytes())]
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for _, row in pdf.iterrows():
-                if pd.isna(row[id_col]):
-                    continue  # NULL key: no meaningful output row
-                try:
-                    w, h, ch, px = kernel(row[data_col])
-                    rows.append((int(row[id_col]), w, h, ch, px))
-                except (ValueError, NotImplementedError, TypeError):
-                    # TypeError: NULL media cell (bytes(None)) degrades
-                    # like any undecodable image.
-                    rows.append((int(row[id_col]), None, None, None, None))
-            yield pd.DataFrame(
-                rows, columns=[id_col, "width", "height", "n_channels", "pixels"]
-            )
-
-    return df.select(id_col, data_col).mapInPandas(batches, schema=schema)
+    row = _degrading(kernel, 4, (ValueError, NotImplementedError, TypeError))
+    return map_rows(_keyed(df, id_col, data_col), row, schema)
 
 
 def image_augment(
@@ -990,7 +936,7 @@ def image_augment(
     oracle can replay the output pixel sums arithmetically. Undecodable
     rows degrade to NULLs per the multimodal contract.
 
-    Scale: identical to ``image_resize`` — one Arrow-batched mapInPandas
+    Scale: identical to ``image_resize`` — one Arrow-batched ``map_rows``
     pass, numpy slicing per image (no per-pixel Python), no shuffle."""
     import numpy as np
 
@@ -998,7 +944,7 @@ def image_augment(
         f"{id_col} long, width int, height int, n_channels int, pixels binary"
     )
 
-    def kernel(data: bytes) -> tuple[int, int, int, bytes]:
+    def kernel(data: bytes) -> list[tuple]:
         w, h, ch, px = decode_pixels(bytes(data))
         a = np.frombuffer(px, np.uint8).reshape(h, w, ch)
         if crop is not None:
@@ -1014,24 +960,10 @@ def image_augment(
             a = a[:, ::-1, :]
         if vflip:
             a = a[::-1, :, :]
-        return a.shape[1], a.shape[0], ch, np.ascontiguousarray(a).tobytes()
+        return [(a.shape[1], a.shape[0], ch, np.ascontiguousarray(a).tobytes())]
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for _, row in pdf.iterrows():
-                if pd.isna(row[id_col]):
-                    continue
-                try:
-                    w, h, ch, px = kernel(row[data_col])
-                    rows.append((int(row[id_col]), w, h, ch, px))
-                except (ValueError, NotImplementedError, TypeError):
-                    rows.append((int(row[id_col]), None, None, None, None))
-            yield pd.DataFrame(
-                rows, columns=[id_col, "width", "height", "n_channels", "pixels"]
-            )
-
-    return df.select(id_col, data_col).mapInPandas(batches, schema=schema)
+    row = _degrading(kernel, 4, (ValueError, NotImplementedError, TypeError))
+    return map_rows(_keyed(df, id_col, data_col), row, schema)
 
 
 def audio_window_energy(
@@ -1049,7 +981,7 @@ def audio_window_energy(
     VAD/segmentation consumers expect. Undecodable rows degrade to a
     single NULL-stats row per the multimodal contract.
 
-    Scale: one Arrow-batched mapInPandas pass; numpy does the framing
+    Scale: one Arrow-batched ``map_rows`` pass; numpy does the framing
     (per-file Python cost), one-to-many explode scales with audio hours,
     no shuffle."""
     import numpy as np
@@ -1061,39 +993,25 @@ def audio_window_energy(
         "abs_sum long, energy long, peak int"
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for _, r in pdf.iterrows():
-                if pd.isna(r[id_col]):
-                    continue  # NULL key: no meaningful output row
-                try:
-                    _rate, _nch, _bits, samples = decode_wav(bytes(r[data_col]))
-                except (ValueError, IndexError, TypeError):
-                    # TypeError: NULL media cell (bytes(None)).
-                    rows.append((int(r[id_col]), None, None, None, None, None))
-                    continue  # degrade row emitted; next file
-                a = np.asarray(samples, dtype=np.int64)
-                for wi in range(0, max(1, -(-len(a) // window_samples))):
-                    seg = a[wi * window_samples : (wi + 1) * window_samples]
-                    if len(seg) == 0:
-                        seg = np.zeros(0, dtype=np.int64)
-                    rows.append(
-                        (
-                            int(r[id_col]),
-                            wi,
-                            int(len(seg)),
-                            int(np.abs(seg).sum()),
-                            int((seg * seg).sum()),
-                            int(np.abs(seg).max()) if len(seg) else 0,
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "window_idx", "n_samples", "abs_sum", "energy", "peak"],
+    def kernel(data: bytes) -> list[tuple]:
+        _rate, _nch, _bits, samples = decode_wav(bytes(data))
+        a = np.asarray(samples, dtype=np.int64)
+        out = []
+        for wi in range(0, max(1, -(-len(a) // window_samples))):
+            seg = a[wi * window_samples : (wi + 1) * window_samples]
+            out.append(
+                (
+                    wi,
+                    int(len(seg)),
+                    int(np.abs(seg).sum()),
+                    int((seg * seg).sum()),
+                    int(np.abs(seg).max()) if len(seg) else 0,
+                )
             )
+        return out
 
-    return df.select(id_col, data_col).mapInPandas(batches, schema=schema)
+    row = _degrading(kernel, 5, (ValueError, IndexError, TypeError))
+    return map_rows(_keyed(df, id_col, data_col), row, schema)
 
 
 def audio_window_spectral(
@@ -1119,7 +1037,7 @@ def audio_window_spectral(
     the samples present. NULL media degrades to a NULL-stats row; NULL
     keys are skipped.
 
-    Scale: one Arrow-batched ``mapInPandas`` pass, numpy per-window sums
+    Scale: one Arrow-batched ``map_rows`` pass, numpy per-window sums
     (per-file Python cost), one-to-many explode, no shuffle — identical
     plan shape to the framing stage it follows."""
     import numpy as np
@@ -1131,39 +1049,27 @@ def audio_window_spectral(
         "dc_re long, quarter_re long, quarter_im long, nyquist_re long, "
         "dc_power long, quarter_power long, nyquist_power long"
     )
-    cols = [
-        id_col, "window_idx", "n_samples", "dc_re", "quarter_re",
-        "quarter_im", "nyquist_re", "dc_power", "quarter_power",
-        "nyquist_power",
-    ]
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for _, r in pdf.iterrows():
-                if pd.isna(r[id_col]):
-                    continue  # NULL key: no meaningful output row
-                try:
-                    _rate, _nch, _bits, samples = decode_wav(bytes(r[data_col]))
-                except (ValueError, IndexError, TypeError):
-                    rows.append((int(r[id_col]),) + (None,) * 9)
-                    continue
-                a = np.asarray(samples, dtype=np.int64)
-                for wi in range(0, max(1, -(-len(a) // window_samples))):
-                    seg = a[wi * window_samples : (wi + 1) * window_samples]
-                    n = np.arange(len(seg))
-                    m4 = n % 4
-                    dc = int(seg.sum())
-                    ny = int(((1 - 2 * (n % 2)) * seg).sum())
-                    q_re = int(seg[m4 == 0].sum() - seg[m4 == 2].sum())
-                    q_im = int(seg[m4 == 3].sum() - seg[m4 == 1].sum())
-                    rows.append(
-                        (
-                            int(r[id_col]), wi, int(len(seg)),
-                            dc, q_re, q_im, ny,
-                            dc * dc, q_re * q_re + q_im * q_im, ny * ny,
-                        )
-                    )
-            yield pd.DataFrame(rows, columns=cols)
+    def kernel(data: bytes) -> list[tuple]:
+        _rate, _nch, _bits, samples = decode_wav(bytes(data))
+        a = np.asarray(samples, dtype=np.int64)
+        out = []
+        for wi in range(0, max(1, -(-len(a) // window_samples))):
+            seg = a[wi * window_samples : (wi + 1) * window_samples]
+            n = np.arange(len(seg))
+            m4 = n % 4
+            dc = int(seg.sum())
+            ny = int(((1 - 2 * (n % 2)) * seg).sum())
+            q_re = int(seg[m4 == 0].sum() - seg[m4 == 2].sum())
+            q_im = int(seg[m4 == 3].sum() - seg[m4 == 1].sum())
+            out.append(
+                (
+                    wi, int(len(seg)),
+                    dc, q_re, q_im, ny,
+                    dc * dc, q_re * q_re + q_im * q_im, ny * ny,
+                )
+            )
+        return out
 
-    return df.select(id_col, data_col).mapInPandas(batches, schema=schema)
+    row = _degrading(kernel, 9, (ValueError, IndexError, TypeError))
+    return map_rows(_keyed(df, id_col, data_col), row, schema)

@@ -492,7 +492,6 @@ def datasus_dbc_source(spark: SparkSession, sf_dir: str) -> DataFrame:
             [("PAPE2501", 0, 100), ("PAPE2502", 100, 200)], n_rows=200,
         )
 
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     register_dbc_source(spark)
     records = (
         spark.read.format("dbc")

@@ -20,7 +20,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_lala_spark.io import load_table
+from etl_lala_spark.io import load_table, map_rows
 from etl_lala_spark.plans import register
 
 _ARCHIVE_ORACLE = """
@@ -60,31 +60,23 @@ def archive_expand_members(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one JVM UDF call per archive, one-to-many expansion inside the
     task — the 100 TB shape (S7 spilling is the memory manager's job)."""
     import zipfile
-    from collections.abc import Iterator
     from io import BytesIO
-
-    import pandas as pd
 
     from etl_lala_spark.sources.archive import extract_archive_members
 
-    def build(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                buf = BytesIO()
-                with zipfile.ZipFile(buf, "w", zipfile.ZIP_STORED) as zf:
-                    zf.writestr(f"d{d}/", b"")  # directory entry: skipped
-                    zf.writestr(f"d{d}/notes.txt", b"decoy")  # suffix-filtered
-                    for i in range(d % 3 + 1):
-                        ext = ".DBC" if i % 2 == 0 else ".dbc"
-                        body = (f"doc{d}:member{i};" * (i % 2 + 1)).encode()
-                        zf.writestr(f"d{d}/m{i}{ext}", body)
-                rows.append((f"mem://arc{d}.zip", buf.getvalue()))
-            yield pd.DataFrame(rows, columns=["path", "content"])
+    def render(d: int) -> list[tuple]:
+        buf = BytesIO()
+        with zipfile.ZipFile(buf, "w", zipfile.ZIP_STORED) as zf:
+            zf.writestr(f"d{d}/", b"")  # directory entry: skipped
+            zf.writestr(f"d{d}/notes.txt", b"decoy")  # suffix-filtered
+            for i in range(d % 3 + 1):
+                ext = ".DBC" if i % 2 == 0 else ".dbc"
+                body = (f"doc{d}:member{i};" * (i % 2 + 1)).encode()
+                zf.writestr(f"d{d}/m{i}{ext}", body)
+        return [(f"mem://arc{d}.zip", buf.getvalue())]
 
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 120)
-    archives = docs.select("doc_id").mapInPandas(build, "path string, content binary")
+    archives = map_rows(docs.select("doc_id"), render, "path string, content binary")
     members = extract_archive_members(archives, suffix=".dbc")
     return members.select(
         F.col("archive"),
@@ -781,38 +773,28 @@ def archive_permissive_errors(spark: SparkSession, sf_dir: str) -> DataFrame:
     so a 1 MB archive declaring a 100 GB member is rejected in O(1) —
     the guard a 100 TB backfill needs against hostile inputs."""
     import zipfile
-    from collections.abc import Iterator
     from io import BytesIO
-
-    import pandas as pd
 
     from etl_lala_spark.sources.archive import extract_archive_members
 
     cap = 64
 
-    def build(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                if d % 4 == 0:
-                    blob = b"PK\x03\x04 definitely not a zip " + bytes(
-                        [d % 251] * (d % 13 + 1)
-                    )
-                else:
-                    buf = BytesIO()
-                    with zipfile.ZipFile(buf, "w", zipfile.ZIP_STORED) as zf:
-                        zf.writestr(f"m{d}.dbc", b"x" * (d % 7 + 3))
-                        if d % 4 == 1:
-                            zf.writestr(f"big{d}.dbc", b"B" * (cap + 1))
-                    blob = buf.getvalue()
-                rows.append((f"mem://perm{d}.zip", blob))
-            yield pd.DataFrame(rows, columns=["path", "content"])
+    def render(d: int) -> list[tuple]:
+        if d % 4 == 0:
+            blob = b"PK\x03\x04 definitely not a zip " + bytes(
+                [d % 251] * (d % 13 + 1)
+            )
+        else:
+            buf = BytesIO()
+            with zipfile.ZipFile(buf, "w", zipfile.ZIP_STORED) as zf:
+                zf.writestr(f"m{d}.dbc", b"x" * (d % 7 + 3))
+                if d % 4 == 1:
+                    zf.writestr(f"big{d}.dbc", b"B" * (cap + 1))
+            blob = buf.getvalue()
+        return [(f"mem://perm{d}.zip", blob)]
 
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 160)
-    archives = docs.select("doc_id").mapInPandas(
-        build, "path string, content binary"
-    )
+    archives = map_rows(docs.select("doc_id"), render, "path string, content binary")
     members = extract_archive_members(
         archives, suffix=".dbc", max_member_bytes=cap, permissive=True
     )
@@ -891,47 +873,32 @@ def web_warc_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     (src/datasus/datasus.service.ts:390-413); the one-to-many shape of
     ``sources/archive.py``, in mapInPandas. Scale: one Arrow-batched pass, per-file
     parallelism, no shuffle before the final order-by."""
-    import gzip
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     from etl_lala_spark.sources.warc import (
         extract_warc_records,
         http_response_bytes,
+        warc_file_bytes,
         warc_record_bytes,
     )
 
-    def build(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                members = [
-                    warc_record_bytes("warcinfo", b"software: etl-lala-gate")
-                ]
-                for i in range(d % 3 + 1):
-                    uri = f"http://example.com/doc{d}/page{i}"
-                    members.append(
-                        warc_record_bytes("request", b"GET / HTTP/1.1",
-                                          target_uri=uri)
-                    )
-                    body = (f"doc{d}:record{i};" * (i % 2 + 1)).encode()
-                    status = 200 if i % 2 == 0 else 404
-                    members.append(
-                        warc_record_bytes(
-                            "response", http_response_bytes(status, body),
-                            target_uri=uri,
-                        )
-                    )
-                blob = b"".join(
-                    gzip.compress(m, compresslevel=1) for m in members
+    def render(d: int) -> list[tuple]:
+        members = [warc_record_bytes("warcinfo", b"software: etl-lala-gate")]
+        for i in range(d % 3 + 1):
+            uri = f"http://example.com/doc{d}/page{i}"
+            members.append(
+                warc_record_bytes("request", b"GET / HTTP/1.1", target_uri=uri)
+            )
+            body = (f"doc{d}:record{i};" * (i % 2 + 1)).encode()
+            status = 200 if i % 2 == 0 else 404
+            members.append(
+                warc_record_bytes(
+                    "response", http_response_bytes(status, body),
+                    target_uri=uri,
                 )
-                rows.append((f"mem://crawl{d}.warc.gz", blob))
-            yield pd.DataFrame(rows, columns=["path", "content"])
+            )
+        return [(f"mem://crawl{d}.warc.gz", warc_file_bytes(members))]
 
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 120)
-    warcs = docs.select("doc_id").mapInPandas(build, "path string, content binary")
+    warcs = map_rows(docs.select("doc_id"), render, "path string, content binary")
     recs = extract_warc_records(warcs, types=("response",))
     return recs.select(
         "file",
@@ -991,48 +958,37 @@ def web_warc_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     mangling) lands on different content_chars even when record accounting
     is right. Scale: mapInPandas expansion + codegen extraction, one
     groupBy(doc) shuffle."""
-    import gzip
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     from etl_lala_spark.plans.llm_text import _MC_PARA
     from etl_lala_spark.sources.warc import (
         extract_warc_records,
         http_response_bytes,
+        warc_file_bytes,
         warc_record_bytes,
     )
 
-    def build(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                paras = "\n".join(
-                    f"<p>{_MC_PARA} w{d}x{i}</p>" for i in range(1, d % 3 + 2)
-                )
-                html = (
-                    '<html><body>\n<script>var a = "<p>not text</p>";'
-                    '</script>\n<div class="nav"><a href="/">home</a>'
-                    f' <a href="/about">about us now</a></div>\n<h1>Doc {d}'
-                    f"</h1>\n{paras}\n<p>we saw the old boat by the"
-                    ' <a href="/x">long pier</a> and the cold sea</p>\n'
-                    '<div class="footer"><a href="/t">t&amp;c</a>'
-                    ' <a href="/p">privacy</a> <a href="/c">contact</a>'
-                    "</div>\n</body></html>"
-                )
-                rec = warc_record_bytes(
-                    "response",
-                    http_response_bytes(200, html.encode()),
-                    target_uri=f"http://example.com/doc{d}",
-                )
-                rows.append(
-                    (f"mem://pipe{d}.warc.gz", gzip.compress(rec, 1))
-                )
-            yield pd.DataFrame(rows, columns=["path", "content"])
+    def render(d: int) -> list[tuple]:
+        paras = "\n".join(
+            f"<p>{_MC_PARA} w{d}x{i}</p>" for i in range(1, d % 3 + 2)
+        )
+        html = (
+            '<html><body>\n<script>var a = "<p>not text</p>";'
+            '</script>\n<div class="nav"><a href="/">home</a>'
+            f' <a href="/about">about us now</a></div>\n<h1>Doc {d}'
+            f"</h1>\n{paras}\n<p>we saw the old boat by the"
+            ' <a href="/x">long pier</a> and the cold sea</p>\n'
+            '<div class="footer"><a href="/t">t&amp;c</a>'
+            ' <a href="/p">privacy</a> <a href="/c">contact</a>'
+            "</div>\n</body></html>"
+        )
+        rec = warc_record_bytes(
+            "response",
+            http_response_bytes(200, html.encode()),
+            target_uri=f"http://example.com/doc{d}",
+        )
+        return [(f"mem://pipe{d}.warc.gz", warc_file_bytes([rec]))]
 
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 30)
-    warcs = docs.select("doc_id").mapInPandas(build, "path string, content binary")
+    warcs = map_rows(docs.select("doc_id"), render, "path string, content binary")
     pages = extract_warc_records(warcs, types=("response",)).select(
         F.regexp_extract("target_uri", r"doc(\d+)$", 1)
         .cast("long")
@@ -3052,46 +3008,30 @@ def web_wet_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     the token count per record. Scale: identical shape to WARC ingestion
     — Arrow-batched member split, per-file parallelism, no shuffle before
     the final order."""
-    import gzip
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     from etl_lala_spark.operators.text import token_count
     from etl_lala_spark.sources.warc import (
         extract_warc_records,
+        warc_file_bytes,
         warc_record_bytes,
     )
 
-    def build(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                members = [
-                    warc_record_bytes(
-                        "warcinfo", b"software: etl-lala-gate-wet"
-                    )
-                ]
-                for i in range(d % 3 + 1):
-                    body = " ".join(
-                        [f"the wet text of doc {d} record {i}"] * (i + 1)
-                    ).encode()
-                    members.append(
-                        warc_record_bytes(
-                            "conversion",
-                            body,
-                            target_uri=f"http://example.com/doc{d}/page{i}",
-                        )
-                    )
-                blob = b"".join(
-                    gzip.compress(m, compresslevel=1) for m in members
+    def render(d: int) -> list[tuple]:
+        members = [warc_record_bytes("warcinfo", b"software: etl-lala-gate-wet")]
+        for i in range(d % 3 + 1):
+            body = " ".join(
+                [f"the wet text of doc {d} record {i}"] * (i + 1)
+            ).encode()
+            members.append(
+                warc_record_bytes(
+                    "conversion",
+                    body,
+                    target_uri=f"http://example.com/doc{d}/page{i}",
                 )
-                rows.append((f"mem://seg{d}.warc.wet.gz", blob))
-            yield pd.DataFrame(rows, columns=["path", "content"])
+            )
+        return [(f"mem://seg{d}.warc.wet.gz", warc_file_bytes(members))]
 
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
-    wets = docs.select("doc_id").mapInPandas(build, "path string, content binary")
+    wets = map_rows(docs.select("doc_id"), render, "path string, content binary")
     recs = extract_warc_records(wets, types=("conversion",))
     text = F.col("payload").cast("string")
     return recs.select(
@@ -3137,67 +3077,44 @@ def web_wat_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     different rows. Scale: member split + one from_json scan + one
     explode — the WAT path to a 100 TB link graph never shuffles before
     the edge aggregate."""
-    import gzip
     import json as _json
-    from collections.abc import Iterator
-
-    import pandas as pd
 
     from etl_lala_spark.sources.warc import (
         extract_warc_records,
+        warc_file_bytes,
         warc_record_bytes,
     )
 
-    def build(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                members = [
-                    warc_record_bytes(
-                        "warcinfo", b"software: etl-lala-gate-wat"
-                    )
-                ]
-                for i in range(d % 3 + 1):
-                    uri = f"http://example.com/doc{d}/page{i}"
-                    envelope = {
-                        "Envelope": {
-                            "WARC-Header-Metadata": {"WARC-Target-URI": uri},
-                            "Payload-Metadata": {
-                                "HTTP-Response-Metadata": {
-                                    "HTML-Metadata": {
-                                        "Head": {
-                                            "Title": f"Doc {d} page {i}"
-                                        },
-                                        "Links": [
-                                            {
-                                                "url": (
-                                                    f"http://out{(d + i + j) % 7}"
-                                                    f".example.com/t{j}"
-                                                )
-                                            }
-                                            for j in range(2)
-                                        ],
-                                    }
-                                }
-                            },
+    def render(d: int) -> list[tuple]:
+        members = [warc_record_bytes("warcinfo", b"software: etl-lala-gate-wat")]
+        for i in range(d % 3 + 1):
+            uri = f"http://example.com/doc{d}/page{i}"
+            links = [
+                {"url": f"http://out{(d + i + j) % 7}.example.com/t{j}"}
+                for j in range(2)
+            ]
+            envelope = {
+                "Envelope": {
+                    "WARC-Header-Metadata": {"WARC-Target-URI": uri},
+                    "Payload-Metadata": {
+                        "HTTP-Response-Metadata": {
+                            "HTML-Metadata": {
+                                "Head": {"Title": f"Doc {d} page {i}"},
+                                "Links": links,
+                            }
                         }
-                    }
-                    members.append(
-                        warc_record_bytes(
-                            "metadata",
-                            _json.dumps(envelope).encode(),
-                            target_uri=uri,
-                        )
-                    )
-                blob = b"".join(
-                    gzip.compress(m, compresslevel=1) for m in members
+                    },
+                }
+            }
+            members.append(
+                warc_record_bytes(
+                    "metadata", _json.dumps(envelope).encode(), target_uri=uri
                 )
-                rows.append((f"mem://seg{d}.warc.wat.gz", blob))
-            yield pd.DataFrame(rows, columns=["path", "content"])
+            )
+        return [(f"mem://seg{d}.warc.wat.gz", warc_file_bytes(members))]
 
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
-    wats = docs.select("doc_id").mapInPandas(build, "path string, content binary")
+    wats = map_rows(docs.select("doc_id"), render, "path string, content binary")
     recs = extract_warc_records(wats, types=("metadata",))
     wat_schema = (
         "Envelope struct<`WARC-Header-Metadata` struct<`WARC-Target-URI` string>,"
@@ -3894,11 +3811,6 @@ def web_corpus_wet_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the WET member split is Arrow-batched per-file parallelism
     (same kernel as WARC), and every curation stage inherits its own
     operator's documented 100 TB argument."""
-    import gzip
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     from etl_lala_spark.functions.scalars import canonicalize_url
     from etl_lala_spark.plans._gates import (
         StageLog,
@@ -3907,38 +3819,25 @@ def web_corpus_wet_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from etl_lala_spark.sources.warc import (
         extract_warc_records,
+        warc_file_bytes,
         warc_record_bytes,
     )
 
-    def build(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                c = d % 8
-                text = " ".join(_cb_paras(c)).encode()
-                members = [
-                    warc_record_bytes(
-                        "warcinfo", b"software: etl-lala-gate-wet-corpus"
-                    )
-                ]
-                for uri in (
-                    f"http://www.site{c}.example.com/doc{d}?utm_source=feed",
-                    f"http://site{c}.example.com/doc{d}",
-                ):
-                    members.append(
-                        warc_record_bytes("conversion", text, target_uri=uri)
-                    )
-                blob = b"".join(
-                    gzip.compress(m, compresslevel=1) for m in members
-                )
-                rows.append((f"mem://wetseg{d}.warc.wet.gz", blob))
-            yield pd.DataFrame(rows, columns=["path", "content"])
+    def render(d: int) -> list[tuple]:
+        c = d % 8
+        text = " ".join(_cb_paras(c)).encode()
+        members = [
+            warc_record_bytes("warcinfo", b"software: etl-lala-gate-wet-corpus")
+        ]
+        for uri in (
+            f"http://www.site{c}.example.com/doc{d}?utm_source=feed",
+            f"http://site{c}.example.com/doc{d}",
+        ):
+            members.append(warc_record_bytes("conversion", text, target_uri=uri))
+        return [(f"mem://wetseg{d}.warc.wet.gz", warc_file_bytes(members))]
 
     docs32 = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 32)
-    wets = docs32.select("doc_id").mapInPandas(
-        build, "path string, content binary"
-    )
+    wets = map_rows(docs32.select("doc_id"), render, "path string, content binary")
     recs = extract_warc_records(wets, types=("conversion",))
 
     log = StageLog()

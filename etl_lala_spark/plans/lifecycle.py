@@ -14,12 +14,11 @@ oracle so the next rotation materializes hard driver rows for them.
 from __future__ import annotations
 
 import os
-from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_lala_spark.io import load_table
+from etl_lala_spark.io import load_table, map_rows
 from etl_lala_spark.plans import register
 
 _PSI_NUMERIC_ORACLE = """
@@ -216,7 +215,7 @@ def multimodal_avi_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     frames of deterministic ASCII payload, shipped through Arrow as a
     binary column, and every 2nd frame is extracted by the distributed
     container walk (`operators/multimodal.py:video_frame_sample` —
-    one-to-many mapInPandas explode). Width/height/fps come from the parsed
+    one-to-many ``map_rows`` explode). Width/height/fps come from the parsed
     headers and each sampled frame's byte length + md5 must match the
     oracle's arithmetic reconstruction — any chunk-walk, stride, index, or
     header bug hash-mismatches.
@@ -224,26 +223,17 @@ def multimodal_avi_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: container walking is a per-file kernel inside one
     mapInPandas pass — constant task memory, parallel across files; the
     pixel decode of sampled frames is the documented pluggable codec seam."""
-    import pandas as pd
-
     from etl_lala_spark.operators import multimodal as mm
 
-    def build(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                frames = [
-                    (f"doc{d}:frame{f};" * ((f % 3) + 1)).encode()
-                    for f in range((d % 7) + 2)
-                ]
-                rows.append(
-                    (d, mm.encode_avi_mjpeg((d % 31) + 2, (d % 17) + 2, 8 + d % 5, frames))
-                )
-            yield pd.DataFrame(rows, columns=["doc_id", "data"])
+    def render(d: int) -> list[tuple]:
+        frames = [
+            (f"doc{d}:frame{f};" * ((f % 3) + 1)).encode()
+            for f in range((d % 7) + 2)
+        ]
+        return [(d, mm.encode_avi_mjpeg((d % 31) + 2, (d % 17) + 2, 8 + d % 5, frames))]
 
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
-    vids = docs.select("doc_id").mapInPandas(build, "doc_id long, data binary")
+    vids = map_rows(docs.select("doc_id"), render, "doc_id long, data binary")
     frames = mm.video_frame_sample(vids, stride=2)
     return frames.select(
         "doc_id",
@@ -452,31 +442,24 @@ def multimodal_mjpeg_pixel_decode(spark: SparkSession, sf_dir: str) -> DataFrame
     Scale shape: two chained mapInPandas kernels (container walk, frame
     decode), both pure per-value CPU, zero shuffle; at 100 TB the decode
     stage is where a SIMD codec would drop in without touching the plan."""
-    import pandas as pd
-
     from etl_lala_spark.operators import multimodal as mm
     from etl_lala_spark.operators.jpeg import encode_jpeg
 
-    def build(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                frames = [
-                    encode_jpeg(
-                        16,
-                        16,
-                        bytes([2 * ((d * 7 + f) % 64) + 64]) * 256,
-                        channels=1,
-                        quality=50,
-                    )
-                    for f in range((d % 5) + 2)
-                ]
-                rows.append((d, mm.encode_avi_mjpeg(16, 16, 12, frames)))
-            yield pd.DataFrame(rows, columns=["doc_id", "data"])
+    def render(d: int) -> list[tuple]:
+        frames = [
+            encode_jpeg(
+                16,
+                16,
+                bytes([2 * ((d * 7 + f) % 64) + 64]) * 256,
+                channels=1,
+                quality=50,
+            )
+            for f in range((d % 5) + 2)
+        ]
+        return [(d, mm.encode_avi_mjpeg(16, 16, 12, frames))]
 
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 120)
-    vids = docs.select("doc_id").mapInPandas(build, "doc_id long, data binary")
+    vids = map_rows(docs.select("doc_id"), render, "doc_id long, data binary")
     sampled = mm.video_frame_sample(vids, stride=2)
     decoded = mm.mjpeg_frame_decode(sampled)
     return decoded.select(

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_lala_spark.io import load_table
+from etl_lala_spark.io import load_table, map_rows
 from etl_lala_spark.operators import multimodal as mm
 from etl_lala_spark.plans import register
 
@@ -125,33 +125,26 @@ def multimodal_sniff(spark: SparkSession, sf_dir: str) -> DataFrame:
     misreads any field hash-mismatches. This is the manifest/partition plane
     of a media pipeline (full pixel decode stays behind decode_image)."""
     import struct
-    from collections.abc import Iterator
 
-    import pandas as pd
-
-    def build(doc_id: int) -> bytes:
+    def render(doc_id: int) -> list[tuple]:
         if doc_id % 2 == 0:
             rate = 8000 + (doc_id % 8) * 1000
             ch = 1 + doc_id % 2
-            return (
+            media = (
                 b"RIFF" + struct.pack("<I", 36) + b"WAVE" + b"fmt "
                 + struct.pack("<I", 16)
                 + struct.pack("<HHIIHH", 1, ch, rate, rate * ch * 2, ch * 2, 16)
             )
-        w, h = (doc_id % 1024) + 1, (doc_id % 768) + 1
-        return (
-            b"\x89PNG\r\n\x1a\n" + b"\x00\x00\x00\x0dIHDR"
-            + struct.pack(">II", w, h) + b"\x08\x02" + b"\x00" * 8
-        )
-
-    def make_media(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "media": pdf["doc_id"].map(build)}
+        else:
+            w, h = (doc_id % 1024) + 1, (doc_id % 768) + 1
+            media = (
+                b"\x89PNG\r\n\x1a\n" + b"\x00\x00\x00\x0dIHDR"
+                + struct.pack(">II", w, h) + b"\x08\x02" + b"\x00" * 8
             )
+        return [(doc_id, media)]
 
     d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 500)
-    media = d.select("doc_id").mapInPandas(make_media, "doc_id long, media binary")
+    media = map_rows(d.select("doc_id"), render, "doc_id long, media binary")
     sniffed = mm.sniff_media_df(media)
     return (
         sniffed.groupBy("kind")
@@ -197,41 +190,22 @@ def multimodal_decode_png(spark: SparkSession, sf_dir: str) -> DataFrame:
     mapInPandas pass — constant task memory, embarrassingly parallel; a
     libjpeg/PIL kernel drops into the same seam for formats whose math
     stdlib can't do."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    def roundtrip(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {"doc_id": [], "width": [], "height": [], "n_channels": [],
-                   "n_pixel_bytes": [], "pixel_sum": []}
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                w, h = (doc_id % 32) + 1, (doc_id % 24) + 1
-                pixels = bytes(
-                    (doc_id + 3 * x + 7 * y + 11 * c) % 256
-                    for y in range(h) for x in range(w) for c in range(3)
-                )
-                png = mm.encode_png(w, h, pixels, channels=3)
-                dw, dh, dc, recon = mm.decode_png(png)
-                out["doc_id"].append(doc_id)
-                out["width"].append(dw)
-                out["height"].append(dh)
-                out["n_channels"].append(dc)
-                out["n_pixel_bytes"].append(len(recon))
-                out["pixel_sum"].append(sum(recon))
-            yield pd.DataFrame(out)
+    def roundtrip(doc_id: int) -> list[tuple]:
+        w, h = (doc_id % 32) + 1, (doc_id % 24) + 1
+        pixels = bytes(
+            (doc_id + 3 * x + 7 * y + 11 * c) % 256
+            for y in range(h) for x in range(w) for c in range(3)
+        )
+        dw, dh, dc, recon = mm.decode_png(mm.encode_png(w, h, pixels, channels=3))
+        return [(doc_id, dw, dh, dc, len(recon), sum(recon))]
 
     d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
-    return (
-        d.select("doc_id")
-        .mapInPandas(
-            roundtrip,
-            "doc_id long, width int, height int, n_channels int, "
-            "n_pixel_bytes long, pixel_sum long",
-        )
-        .orderBy("doc_id")
-    )
+    return map_rows(
+        d.select("doc_id"),
+        roundtrip,
+        "doc_id long, width int, height int, n_channels int, "
+        "n_pixel_bytes long, pixel_sum long",
+    ).orderBy("doc_id")
 
 
 @register(
@@ -274,44 +248,27 @@ def multimodal_decode_wav(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: identical to the PNG path — encode/decode are per-value
     kernels in one mapInPandas pass, constant task memory; an MP3/FLAC
     codec drops into the same seam."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    def roundtrip(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {"doc_id": [], "sample_rate": [], "n_channels": [], "bits": [],
-                   "n_samples": [], "sum_abs": [], "peak_abs": [], "energy": []}
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                ch = (doc_id % 2) + 1
-                n = ((doc_id % 50) + 10) * ch
-                samples = [(doc_id * 7 + 13 * i) % 4097 - 2048 for i in range(n)]
-                wav = mm.encode_wav(
-                    8000 + (doc_id % 4) * 4000, samples, channels=ch,
-                    junk_chunk=(doc_id % 3 == 0),
-                )
-                rate, nch, bits, dec = mm.decode_wav(wav)
-                out["doc_id"].append(doc_id)
-                out["sample_rate"].append(rate)
-                out["n_channels"].append(nch)
-                out["bits"].append(bits)
-                out["n_samples"].append(len(dec))
-                out["sum_abs"].append(sum(abs(s) for s in dec))
-                out["peak_abs"].append(max(abs(s) for s in dec))
-                out["energy"].append(sum(s * s for s in dec))
-            yield pd.DataFrame(out)
+    def roundtrip(doc_id: int) -> list[tuple]:
+        ch = (doc_id % 2) + 1
+        n = ((doc_id % 50) + 10) * ch
+        samples = [(doc_id * 7 + 13 * i) % 4097 - 2048 for i in range(n)]
+        wav = mm.encode_wav(
+            8000 + (doc_id % 4) * 4000, samples, channels=ch,
+            junk_chunk=(doc_id % 3 == 0),
+        )
+        rate, nch, bits, dec = mm.decode_wav(wav)
+        return [(
+            doc_id, rate, nch, bits, len(dec), sum(abs(s) for s in dec),
+            max(abs(s) for s in dec), sum(s * s for s in dec),
+        )]
 
     d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
-    return (
-        d.select("doc_id")
-        .mapInPandas(
-            roundtrip,
-            "doc_id long, sample_rate int, n_channels int, bits int, "
-            "n_samples long, sum_abs long, peak_abs long, energy long",
-        )
-        .orderBy("doc_id")
-    )
+    return map_rows(
+        d.select("doc_id"),
+        roundtrip,
+        "doc_id long, sample_rate int, n_channels int, bits int, "
+        "n_samples long, sum_abs long, peak_abs long, energy long",
+    ).orderBy("doc_id")
 
 
 @register(
@@ -350,45 +307,28 @@ def multimodal_decode_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: identical to the PNG/WAV paths — per-value kernels in one
     mapInPandas pass, constant task memory."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    def roundtrip(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {"doc_id": [], "width": [], "height": [], "n_palette": [],
-                   "n_pixels": [], "index_sum": [], "rgb_sum": []}
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                w, h = (doc_id % 21) + 1, (doc_id % 13) + 1
-                pal = [
-                    ((doc_id * 3 + c * 17) % 256,
-                     (doc_id * 5 + c * 29) % 256,
-                     (doc_id * 7 + c * 41) % 256)
-                    for c in range(8)
-                ]
-                idx = [(x + y + doc_id) % 8 for y in range(h) for x in range(w)]
-                gif = mm.encode_gif(w, h, pal, idx)
-                dw, dh, dpal, didx = mm.decode_gif(gif)
-                out["doc_id"].append(doc_id)
-                out["width"].append(dw)
-                out["height"].append(dh)
-                out["n_palette"].append(len([p for p in dpal[:8]]))
-                out["n_pixels"].append(len(didx))
-                out["index_sum"].append(sum(didx))
-                out["rgb_sum"].append(sum(sum(dpal[i]) for i in didx))
-            yield pd.DataFrame(out)
+    def roundtrip(doc_id: int) -> list[tuple]:
+        w, h = (doc_id % 21) + 1, (doc_id % 13) + 1
+        pal = [
+            ((doc_id * 3 + c * 17) % 256,
+             (doc_id * 5 + c * 29) % 256,
+             (doc_id * 7 + c * 41) % 256)
+            for c in range(8)
+        ]
+        idx = [(x + y + doc_id) % 8 for y in range(h) for x in range(w)]
+        dw, dh, dpal, didx = mm.decode_gif(mm.encode_gif(w, h, pal, idx))
+        return [(
+            doc_id, dw, dh, len(dpal[:8]), len(didx), sum(didx),
+            sum(sum(dpal[i]) for i in didx),
+        )]
 
     d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
-    return (
-        d.select("doc_id")
-        .mapInPandas(
-            roundtrip,
-            "doc_id long, width int, height int, n_palette int, "
-            "n_pixels long, index_sum long, rgb_sum long",
-        )
-        .orderBy("doc_id")
-    )
+    return map_rows(
+        d.select("doc_id"),
+        roundtrip,
+        "doc_id long, width int, height int, n_palette int, "
+        "n_pixels long, index_sum long, rgb_sum long",
+    ).orderBy("doc_id")
 
 
 _RESIZE_ORACLE = """
@@ -419,45 +359,28 @@ def multimodal_image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     The preprocessing shape every vision training pipeline runs between
     decode and featurization: one Arrow-batched pass, numpy fancy-indexed
     resample (per-image Python cost, not per-pixel), no shuffle."""
-    from collections.abc import Iterator as _Iterator
-
     import numpy as np
-    import pandas as pd
 
-    def build(it: _Iterator[pd.DataFrame]) -> _Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                px = bytes(
-                    (3 * x + 7 * y + 11 * c + d) % 256
-                    for y in range(20)
-                    for x in range(32)
-                    for c in range(3)
-                )
-                rows.append((d, mm.encode_png(32, 20, px, channels=3)))
-            yield pd.DataFrame(rows, columns=["doc_id", "media"])
+    def render(d: int) -> list[tuple]:
+        px = bytes(
+            (3 * x + 7 * y + 11 * c + d) % 256
+            for y in range(20)
+            for x in range(32)
+            for c in range(3)
+        )
+        return [(d, mm.encode_png(32, 20, px, channels=3))]
 
-    def pixel_sum(it: _Iterator[pd.DataFrame]) -> _Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = [
-                (
-                    int(r["doc_id"]),
-                    int(r["width"]),
-                    int(r["height"]),
-                    int(r["n_channels"]),
-                    int(np.frombuffer(r["pixels"], np.uint8).sum()),
-                )
-                for _, r in pdf.iterrows()
-            ]
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "width", "height", "n_channels", "px_sum"]
-            )
+    def pixel_sum(doc_id, width, height, n_channels, pixels) -> list[tuple]:
+        return [(
+            doc_id, width, height, n_channels,
+            int(np.frombuffer(pixels, np.uint8).sum()),
+        )]
 
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 150)
-    imgs = docs.select("doc_id").mapInPandas(build, "doc_id long, media binary")
+    imgs = map_rows(docs.select("doc_id"), render, "doc_id long, media binary")
     resized = mm.image_resize(imgs, 16, 10, method="nearest")
-    return resized.mapInPandas(
+    return map_rows(
+        resized,
         pixel_sum,
         "doc_id long, width int, height int, n_channels int, px_sum long",
     ).orderBy("doc_id")
@@ -501,21 +424,12 @@ def multimodal_audio_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The framing stage every audio training pipeline runs before spectral
     features; one Arrow-batched pass, no shuffle."""
-    from collections.abc import Iterator as _Iterator
-
-    import pandas as pd
-
-    def build(it: _Iterator[pd.DataFrame]) -> _Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                samples = [((7 * i + d) % 201) - 100 for i in range((d % 50) + 40)]
-                rows.append((d, mm.encode_wav(8000, samples, junk_chunk=True)))
-            yield pd.DataFrame(rows, columns=["doc_id", "media"])
+    def render(d: int) -> list[tuple]:
+        samples = [((7 * i + d) % 201) - 100 for i in range((d % 50) + 40)]
+        return [(d, mm.encode_wav(8000, samples, junk_chunk=True))]
 
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 150)
-    wavs = docs.select("doc_id").mapInPandas(build, "doc_id long, media binary")
+    wavs = map_rows(docs.select("doc_id"), render, "doc_id long, media binary")
     return mm.audio_window_energy(wavs, window_samples=16).orderBy(
         "doc_id", "window_idx"
     )
@@ -573,21 +487,12 @@ def multimodal_audio_spectral(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     One Arrow-batched pass, no shuffle — the featurize stage a multimodal
     training pipeline runs right after framing."""
-    from collections.abc import Iterator as _Iterator
-
-    import pandas as pd
-
-    def build(it: _Iterator[pd.DataFrame]) -> _Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                samples = [((7 * i + d) % 201) - 100 for i in range((d % 50) + 40)]
-                rows.append((d, mm.encode_wav(8000, samples, junk_chunk=True)))
-            yield pd.DataFrame(rows, columns=["doc_id", "media"])
+    def render(d: int) -> list[tuple]:
+        samples = [((7 * i + d) % 201) - 100 for i in range((d % 50) + 40)]
+        return [(d, mm.encode_wav(8000, samples, junk_chunk=True))]
 
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 150)
-    wavs = docs.select("doc_id").mapInPandas(build, "doc_id long, media binary")
+    wavs = map_rows(docs.select("doc_id"), render, "doc_id long, media binary")
     return mm.audio_window_spectral(wavs, window_samples=16).orderBy(
         "doc_id", "window_idx"
     )
@@ -621,10 +526,7 @@ def multimodal_progressive_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     or scan-script bug flips pixels and breaks the hash.
 
     One Arrow-batched pass, per-image Python cost, no shuffle."""
-    from collections.abc import Iterator as _Iterator
-
     import numpy as np
-    import pandas as pd
 
     from etl_lala_spark.operators.jpeg import (
         decode_jpeg,
@@ -632,34 +534,24 @@ def multimodal_progressive_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
         encode_jpeg_progressive,
     )
 
-    def roundtrip(it: _Iterator[pd.DataFrame]) -> _Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                w, h = 16 + d % 17, 8 + d % 13
-                px = bytes((5 * x + 3 * y + d) % 256 for y in range(h) for x in range(w))
-                base = encode_jpeg(w, h, px, channels=1, quality=75)
-                prog = encode_jpeg_progressive(w, h, px, channels=1, quality=75)
-                wb, hb, _, pb = decode_jpeg(base)
-                wp, hp, _, pp = decode_jpeg(prog)
-                mism = int(
-                    (np.frombuffer(pb, np.uint8) != np.frombuffer(pp, np.uint8)).sum()
-                ) if (wb, hb) == (wp, hp) else len(pb)
-                rows.append((d, wp, hp, len(pp), mism))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "width", "height", "n_pixels", "n_mismatch"]
-            )
+    def roundtrip(d: int) -> list[tuple]:
+        w, h = 16 + d % 17, 8 + d % 13
+        px = bytes((5 * x + 3 * y + d) % 256 for y in range(h) for x in range(w))
+        base = encode_jpeg(w, h, px, channels=1, quality=75)
+        prog = encode_jpeg_progressive(w, h, px, channels=1, quality=75)
+        wb, hb, _, pb = decode_jpeg(base)
+        wp, hp, _, pp = decode_jpeg(prog)
+        mism = int(
+            (np.frombuffer(pb, np.uint8) != np.frombuffer(pp, np.uint8)).sum()
+        ) if (wb, hb) == (wp, hp) else len(pb)
+        return [(d, wp, hp, len(pp), mism)]
 
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 120)
-    return (
-        docs.select("doc_id")
-        .mapInPandas(
-            roundtrip,
-            "doc_id long, width int, height int, n_pixels long, n_mismatch long",
-        )
-        .orderBy("doc_id")
-    )
+    return map_rows(
+        docs.select("doc_id"),
+        roundtrip,
+        "doc_id long, width int, height int, n_pixels long, n_mismatch long",
+    ).orderBy("doc_id")
 
 
 _GIF_RESIZE_ORACLE = """
@@ -698,41 +590,26 @@ def multimodal_gif_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     under the driver gate.
 
     Same one-pass Arrow-batched shape as ``multimodal_image_resize``."""
-    from collections.abc import Iterator as _Iterator
-
     import numpy as np
-    import pandas as pd
 
-    def build(it: _Iterator[pd.DataFrame]) -> _Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                w, h = 20 + d % 13, 10 + d % 7
-                pal = [((5 * i + d) % 256, (7 * i + d) % 256, (11 * i + d) % 256)
-                       for i in range(64)]
-                idx = [(x + 2 * y + d) % 64 for y in range(h) for x in range(w)]
-                rows.append((d, mm.encode_gif(w, h, pal, idx)))
-            yield pd.DataFrame(rows, columns=["doc_id", "media"])
+    def render(d: int) -> list[tuple]:
+        w, h = 20 + d % 13, 10 + d % 7
+        pal = [((5 * i + d) % 256, (7 * i + d) % 256, (11 * i + d) % 256)
+               for i in range(64)]
+        idx = [(x + 2 * y + d) % 64 for y in range(h) for x in range(w)]
+        return [(d, mm.encode_gif(w, h, pal, idx))]
 
-    def pixel_sum(it: _Iterator[pd.DataFrame]) -> _Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = [
-                (
-                    int(r["doc_id"]), int(r["width"]), int(r["height"]),
-                    int(r["n_channels"]),
-                    int(np.frombuffer(r["pixels"], np.uint8).sum()),
-                )
-                for _, r in pdf.iterrows()
-            ]
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "width", "height", "n_channels", "px_sum"]
-            )
+    def pixel_sum(doc_id, width, height, n_channels, pixels) -> list[tuple]:
+        return [(
+            doc_id, width, height, n_channels,
+            int(np.frombuffer(pixels, np.uint8).sum()),
+        )]
 
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 120)
-    gifs = docs.select("doc_id").mapInPandas(build, "doc_id long, media binary")
+    gifs = map_rows(docs.select("doc_id"), render, "doc_id long, media binary")
     resized = mm.image_resize(gifs, 16, 10, method="nearest")
-    return resized.mapInPandas(
+    return map_rows(
+        resized,
         pixel_sum,
         "doc_id long, width int, height int, n_channels int, px_sum long",
     ).orderBy("doc_id")
@@ -770,59 +647,36 @@ def multimodal_augment_crop_flip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The augmentation shape every vision pipeline runs after decode: one
     Arrow-batched pass, numpy slicing per image, no shuffle."""
-    from collections.abc import Iterator as _Iterator
-
     import numpy as np
-    import pandas as pd
 
-    def build(it: _Iterator[pd.DataFrame]) -> _Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                px = bytes(
-                    (3 * x + 7 * y + 11 * c + d) % 256
-                    for y in range(16)
-                    for x in range(24)
-                    for c in range(3)
-                )
-                rows.append((d, mm.encode_png(24, 16, px, channels=3)))
-            yield pd.DataFrame(rows, columns=["doc_id", "media"])
+    def render(d: int) -> list[tuple]:
+        px = bytes(
+            (3 * x + 7 * y + 11 * c + d) % 256
+            for y in range(16)
+            for x in range(24)
+            for c in range(3)
+        )
+        return [(d, mm.encode_png(24, 16, px, channels=3))]
 
-    def checksums(it: _Iterator[pd.DataFrame]) -> _Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for _, r in pdf.iterrows():
-                a = (
-                    np.frombuffer(r["pixels"], np.uint8)
-                    .reshape(int(r["height"]), int(r["width"]), int(r["n_channels"]))
-                    .astype(np.int64)
-                )
-                wgrid = (
-                    np.arange(a.shape[1])[None, :, None]
-                    + 2 * np.arange(a.shape[0])[:, None, None]
-                )
-                rows.append(
-                    (
-                        int(r["doc_id"]),
-                        int(r["width"]),
-                        int(r["height"]),
-                        int(r["n_channels"]),
-                        int(a.sum()),
-                        int((a * wgrid).sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "width", "height", "n_channels", "px_sum", "wsum"
-                ],
-            )
+    def checksums(doc_id, width, height, n_channels, pixels) -> list[tuple]:
+        a = (
+            np.frombuffer(pixels, np.uint8)
+            .reshape(height, width, n_channels)
+            .astype(np.int64)
+        )
+        wgrid = (
+            np.arange(a.shape[1])[None, :, None]
+            + 2 * np.arange(a.shape[0])[:, None, None]
+        )
+        return [(
+            doc_id, width, height, n_channels, int(a.sum()), int((a * wgrid).sum())
+        )]
 
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 150)
-    imgs = docs.select("doc_id").mapInPandas(build, "doc_id long, media binary")
+    imgs = map_rows(docs.select("doc_id"), render, "doc_id long, media binary")
     aug = mm.image_augment(imgs, crop=(5, 3, 12, 9), hflip=True)
-    return aug.mapInPandas(
+    return map_rows(
+        aug,
         checksums,
         "doc_id long, width int, height int, n_channels int, "
         "px_sum long, wsum long",

@@ -84,6 +84,46 @@ def _decode_file(path: str, limit: int | None) -> tuple[list[str], list[list[str
     return parse_dbf_columns(data, limit=limit)
 
 
+def _read_partition(
+    path: str,
+    columns: list[str],
+    limit: int | None,
+    corrupt_col: str | None,
+    schema_kind: str,
+):
+    """One file's Arrow ``RecordBatch`` for the batch and the stream reader:
+    its data columns (which must be ``columns``), the provenance column and,
+    with ``corrupt_col``, the error column. PERMISSIVE: a corrupt file is
+    one error row — data columns NULL, provenance + error message set — so
+    a batch read keeps going and a stream still marks the file consumed."""
+    import pyarrow as pa
+
+    origem = _basename_no_ext(path)
+    names = [*columns, PROVENANCE_COL]
+    if corrupt_col:
+        names.append(corrupt_col)
+    try:
+        cols, colvals = _decode_file(path, limit)
+        if cols != columns:
+            raise ValueError(
+                f"{path}: columns {cols[:3]}... != {schema_kind} "
+                f"schema {columns[:3]}... (heterogeneous file set)"
+            )
+    except Exception as exc:
+        if not corrupt_col:
+            raise
+        arrays = [pa.array([None], type=pa.string()) for _ in columns]
+        arrays.append(pa.array([origem], type=pa.string()))
+        arrays.append(pa.array([str(exc)[:500]], type=pa.string()))
+        return pa.RecordBatch.from_arrays(arrays, names=names)
+    n = len(colvals[0]) if colvals else 0
+    arrays = [pa.array(vals, type=pa.string()) for vals in colvals]
+    arrays.append(pa.array([origem] * n, type=pa.string()))
+    if corrupt_col:
+        arrays.append(pa.array([None] * n, type=pa.string()))
+    return pa.RecordBatch.from_arrays(arrays, names=names)
+
+
 @dataclass
 class DbcInputPartition(InputPartition):
     path: str
@@ -133,35 +173,9 @@ class DbcReader(DataSourceReader):
         return [DbcInputPartition(p) for p in self.files]
 
     def read(self, partition: DbcInputPartition) -> Iterator["object"]:
-        import pyarrow as pa
-
-        origem = _basename_no_ext(partition.path)
-        names = [*self.columns, PROVENANCE_COL]
-        if self.corrupt_col:
-            names.append(self.corrupt_col)
-        try:
-            cols, colvals = _decode_file(partition.path, self.limit)
-            if cols != self.columns:
-                raise ValueError(
-                    f"{partition.path}: columns {cols[:3]}... != inferred "
-                    f"schema {self.columns[:3]}... (heterogeneous file set)"
-                )
-        except Exception as exc:
-            if not self.corrupt_col:
-                raise
-            # PERMISSIVE: one error row per corrupt file — data columns
-            # NULL, provenance + error message set.
-            arrays = [pa.array([None], type=pa.string()) for _ in self.columns]
-            arrays.append(pa.array([origem], type=pa.string()))
-            arrays.append(pa.array([str(exc)[:500]], type=pa.string()))
-            yield pa.RecordBatch.from_arrays(arrays, names=names)
-            return
-        n = len(colvals[0]) if colvals else 0
-        arrays = [pa.array(vals, type=pa.string()) for vals in colvals]
-        arrays.append(pa.array([origem] * n, type=pa.string()))
-        if self.corrupt_col:
-            arrays.append(pa.array([None] * n, type=pa.string()))
-        yield pa.RecordBatch.from_arrays(arrays, names=names)
+        yield _read_partition(
+            partition.path, self.columns, self.limit, self.corrupt_col, "inferred"
+        )
 
 
 class DbcStreamReader(DataSourceStreamReader):
@@ -204,36 +218,9 @@ class DbcStreamReader(DataSourceStreamReader):
         return [DbcInputPartition(p) for p in new]
 
     def read(self, partition: DbcInputPartition) -> Iterator["object"]:
-        import pyarrow as pa
-
-        origem = _basename_no_ext(partition.path)
-        names = [*self.columns, PROVENANCE_COL]
-        if self.corrupt_col:
-            names.append(self.corrupt_col)
-        try:
-            cols, colvals = _decode_file(partition.path, self.limit)
-            if cols != self.columns:
-                raise ValueError(
-                    f"{partition.path}: columns {cols[:3]}... != stream "
-                    f"schema {self.columns[:3]}..."
-                )
-        except Exception as exc:
-            if not self.corrupt_col:
-                raise
-            # PERMISSIVE (same contract as the batch reader): the corrupt
-            # arrival becomes one provenance-tagged error row; the stream
-            # keeps running and the file is still marked consumed.
-            arrays = [pa.array([None], type=pa.string()) for _ in self.columns]
-            arrays.append(pa.array([origem], type=pa.string()))
-            arrays.append(pa.array([str(exc)[:500]], type=pa.string()))
-            yield pa.RecordBatch.from_arrays(arrays, names=names)
-            return
-        n = len(colvals[0]) if colvals else 0
-        arrays = [pa.array(vals, type=pa.string()) for vals in colvals]
-        arrays.append(pa.array([origem] * n, type=pa.string()))
-        if self.corrupt_col:
-            arrays.append(pa.array([None] * n, type=pa.string()))
-        yield pa.RecordBatch.from_arrays(arrays, names=names)
+        yield _read_partition(
+            partition.path, self.columns, self.limit, self.corrupt_col, "stream"
+        )
 
     def commit(self, end: dict) -> None:
         pass
@@ -372,16 +359,20 @@ class DbcDataSource(DataSource):
             [StructField(c, StringType()) for c in cols] + extra
         )
 
-    def reader(self, schema: StructType) -> DbcReader:
+    def _read_options(self, schema: StructType) -> tuple:
+        """(data columns, per-file record limit, corrupt column) — the
+        options the batch and the stream reader share."""
         limit = self.options.get("limit")
         corrupt_col = self.options.get("corruptColumn")
         skip = {PROVENANCE_COL, corrupt_col}
-        return DbcReader(
-            self._files(),
+        return (
             [f.name for f in schema.fields if f.name not in skip],
             int(limit) if limit is not None else None,
-            corrupt_col=corrupt_col,
+            corrupt_col,
         )
+
+    def reader(self, schema: StructType) -> DbcReader:
+        return DbcReader(self._files(), *self._read_options(schema))
 
     def writer(self, schema: StructType, overwrite: bool) -> DbcWriter:
         import glob as g
@@ -408,15 +399,7 @@ class DbcDataSource(DataSource):
         return DbcWriter(path, cols, int(self.options.get("field_len", 20)))
 
     def streamReader(self, schema: StructType) -> DbcStreamReader:
-        limit = self.options.get("limit")
-        corrupt_col = self.options.get("corruptColumn")
-        skip = {PROVENANCE_COL, corrupt_col}
-        return DbcStreamReader(
-            self.options.get("path"),
-            [f.name for f in schema.fields if f.name not in skip],
-            int(limit) if limit is not None else None,
-            corrupt_col=corrupt_col,
-        )
+        return DbcStreamReader(self.options.get("path"), *self._read_options(schema))
 
 
 def register_dbc_source(spark) -> None:

@@ -246,6 +246,16 @@ def warc_record_bytes(
     return b"\r\n".join(lines) + b"\r\n\r\n" + block + b"\r\n\r\n"
 
 
+def warc_file_bytes(members: list[bytes]) -> bytes:
+    """Serialize a ``.warc.gz`` file: each record gzipped as its OWN member
+    (the Common Crawl layout), members concatenated — the inverse of
+    ``_iter_gzip_members``; the writer half used by gates/tests to build
+    crawl fixtures (level 1: fixtures favor speed over size)."""
+    import gzip
+
+    return b"".join(gzip.compress(m, compresslevel=1) for m in members)
+
+
 def http_response_bytes(
     status: int,
     body: bytes,

@@ -264,6 +264,31 @@ def test_spread_over_shuffled_or_checkpointed_input_runs_no_job(spark, job_group
         assert out.rdd.getNumPartitions() == 2 * target, name
 
 
+def test_map_rows_contract(spark):
+    """``map_rows`` calls ``fn`` once per row with the row's cells as
+    positional arguments and keeps every tuple it returns — none, one or
+    several — while an empty partition yields nothing; output names and
+    types come from the DDL schema, not from the input."""
+    from etl_lala_spark.io import map_rows
+
+    # 3 rows over 4 range splits: the first partition is empty
+    df = spark.range(0, 3, 1, 4).selectExpr(
+        "id AS n", "substr('abc', id + 1, 1) AS s"
+    )
+    assert [len(p) for p in df.rdd.glom().collect()] == [0, 1, 1, 1]
+
+    def fn(n, s):
+        assert isinstance(n, int) and isinstance(s, str)
+        return [(n, s * (i + 1), i / 2) for i in range(n)]
+
+    out = map_rows(df, fn, "k int, rep string, half double")
+    assert out.schema.simpleString() == "struct<k:int,rep:string,half:double>"
+    assert sorted(map(tuple, out.collect())) == [
+        (1, "b", 0.0), (2, "c", 0.0), (2, "cc", 0.5)
+    ]
+    assert map_rows(df.filter("n < 0"), fn, "k int, rep string, half double").collect() == []
+
+
 def test_udtf_matches_posexplode(spark, sf_dir):
     from etl_lala_spark.plans import query_fns
 
@@ -496,18 +521,6 @@ def test_scd2_apply_closes_reopens_and_is_idempotent(spark):
     # Re-applying the same batch is a no-op: MERGE semantics are idempotent.
     again = rel.scd2_apply(out, updates, "k", ["seg"])
     assert sorted(map(tuple, again.collect())) == sorted(map(tuple, out.collect()))
-
-
-def test_sniff_media_arrow_agrees_with_pandas(spark, sf_dir):
-    """The mapInArrow fast path must produce exactly the pandas-path rows."""
-    from etl_lala_spark.operators import multimodal as mm
-    from etl_lala_spark.io import load_table
-
-    docs = load_table(spark, sf_dir, "documents").limit(50)
-    media = mm.attach_binary(docs)
-    a = sorted(map(tuple, mm.sniff_media_df(media).collect()))
-    b = sorted(map(tuple, mm.sniff_media_df_arrow(media).collect()))
-    assert a == b and len(a) == 50
 
 
 def test_kmeans_objective_nondecreasing_and_covers_corpus(spark, sf_dir):
@@ -1375,6 +1388,23 @@ def test_multimodal_degrade_survives_null_cells(spark):
     assert [(r["doc_id"], r["pixels"]) for r in rows] == [(7, None)]
     rows = mm.audio_window_energy(ddf, 8).collect()
     assert [(r["doc_id"], r["energy"]) for r in rows] == [(7, None)]
+
+    # video_frame_sample: a NULL cell, a non-AVI cell and an AVI cut inside
+    # its header each degrade to one NULL-frame row; a NULL id is skipped
+    avi = mm.encode_avi_mjpeg(8, 8, 10, [b"\xff\xd8frame\xff\xd9"] * 3)
+    vdf = spark.createDataFrame(
+        [(1, None), (2, bytearray(b"RIFF not a video")), (3, bytearray(avi[:40])),
+         (None, bytearray(avi)), (4, bytearray(avi))],
+        "doc_id long, data binary",
+    )
+    rows = sorted(mm.video_frame_sample(vdf, stride=1).collect(),
+                  key=lambda r: (r["doc_id"], r["frame_idx"] or 0))
+    assert [tuple(r) for r in rows[:3]] == [
+        (d, None, None, None, None, None) for d in (1, 2, 3)
+    ]
+    assert [(r["doc_id"], r["frame_idx"], r["width"]) for r in rows[3:]] == [
+        (4, 0, 8), (4, 1, 8), (4, 2, 8)
+    ]
 
 
 def test_jpeg_bitreader_skips_fill_bytes_before_marker():
