@@ -819,67 +819,6 @@ def substring_dedup_runs(
     )
 
 
-def substring_dedup_clean(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_tokens: int = 8,
-    cross_doc_only: bool = True,
-) -> DataFrame:
-    """Apply the ExactSubstr removal: cut every maximal duplicated run found
-    by ``substring_dedup_runs`` out of every document and reassemble the
-    survivors in order (Lee et al. remove all duplicated occurrences; the
-    deduplicated corpus keeps only text that is globally unique at the
-    ≥ min_tokens grain). Returns ``(id_col, n_tokens, n_removed,
-    clean_text)`` for every input document — untouched docs pass through
-    with ``n_removed = 0``.
-
-    Scale: the runs table (small — only duplicated regions) aggregates to
-    one interval array per affected doc and joins back to the corpus on the
-    doc id; the cut is a codegen higher-order filter over the token array
-    (per-token interval test against the doc's own intervals — bounded by
-    runs-per-doc, not corpus size).
-    """
-    runs = substring_dedup_runs(df, text_col, id_col, min_tokens, cross_doc_only)
-    intervals = runs.groupBy("doc_id").agg(
-        F.collect_list(
-            F.struct(
-                F.col("start_pos").alias("lo"),
-                (F.col("start_pos") + F.col("run_tokens") - 1).alias("hi"),
-            )
-        ).alias("cuts")
-    )
-    # filter-out-empty matches word_spans' tokenization: split(trim(''))
-    # yields [''], which would count a phantom token for empty/whitespace
-    # docs and over-state n_tokens in corpus mass accounting
-    toks = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.coalesce(
-            F.filter(
-                F.split(F.trim(F.col(text_col)), r"\s+"), lambda t: t != ""
-            ),
-            F.expr("CAST(array() AS array<string>)"),
-        ).alias("toks"),  # NULL text -> 0 tokens, not size(NULL) = -1
-    )
-    joined = toks.join(intervals, "doc_id", "left").select(
-        "doc_id",
-        "toks",
-        F.coalesce(
-            "cuts", F.expr("CAST(array() AS array<struct<lo:bigint,hi:bigint>>)")
-        ).alias("cuts"),
-    )
-    kept = F.expr(
-        "filter(transform(toks, (t, i) -> struct(t as t, CAST(i AS BIGINT) as i)),"
-        " x -> !exists(cuts, c -> x.i >= c.lo AND x.i <= c.hi))"
-    )
-    return joined.select(
-        F.col("doc_id").alias(id_col),
-        F.size("toks").alias("n_tokens"),
-        (F.size("toks") - F.size(kept)).alias("n_removed"),
-        F.array_join(F.transform(kept, lambda x: x["t"]), " ").alias("clean_text"),
-    )
-
-
 # ---------------------------------------------------------------------------
 # Incremental MinHash: persisted signature store + batch-vs-store dedup
 # ---------------------------------------------------------------------------

@@ -24,7 +24,6 @@ from pyspark.sql import functions as F
 
 from etl_lala_spark.io import map_rows
 
-MEDIA_SCHEMA = "doc_id long, media binary, mime string, n_bytes int"
 DECODED_SCHEMA = "doc_id long, n_bytes int, width int, height int, n_channels int, digest string"
 
 
@@ -121,9 +120,13 @@ def decode_png(data: bytes) -> tuple[int, int, int, bytes]:
         pos += 12 + length
     if width < 0 or not idat:
         raise ValueError("PNG missing IHDR or IDAT")
-    raw = _zlib.decompress(bytes(idat))
+    # IHDR fixes the inflated size, so the inflate stops one byte past it:
+    # a decompression bomb costs expected + 1 bytes, not its full output
     stride = width * channels
-    if len(raw) != (stride + 1) * height:
+    expected = (stride + 1) * height
+    inflater = _zlib.decompressobj()
+    raw = inflater.decompress(idat, expected + 1)
+    if len(raw) != expected or inflater.unconsumed_tail or not inflater.eof:
         raise ValueError("PNG pixel payload size mismatch")
     out = bytearray(stride * height)
     prior = bytes(stride)
@@ -713,7 +716,9 @@ def avi_extract_frames(
 ) -> list[tuple[int, bytes]]:
     """Every ``stride``-th video frame's raw bytes ('00dc'/'00db' chunks in
     the movi list), as (frame_index, frame_bytes) — the in-cluster half of
-    frame sampling; pixel decode of each frame is the pluggable kernel."""
+    frame sampling; pixel decode of each frame is the pluggable kernel. A
+    frame cut short (its declared size runs past its LIST or the end of
+    the file) is left out."""
     import struct
 
     if len(data) < 12 or data[:4] != b"RIFF" or data[8:12] != b"AVI ":
@@ -744,7 +749,9 @@ def avi_extract_frames(
                 pos, end = body + 4, avail
                 continue
         elif fcc[2:4] in (b"dc", b"db"):
-            if idx % stride == 0:
+            # a chunk cut short by truncation is no frame, but it keeps its
+            # index so the frames after it keep theirs
+            if idx % stride == 0 and avail == body + size:
                 out.append((idx, data[body:avail]))
             idx += 1
         pos = nxt

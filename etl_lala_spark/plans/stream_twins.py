@@ -259,9 +259,8 @@ def stream_twin_progress(spark: SparkSession, sf_dir: str) -> DataFrame:
     stride arithmetic (state fold, boundary crossing, emission count)
     end-to-end through the streaming engine, not a batch re-implementation.
     The float-valued running sum is deliberately NOT compared here (Python
-    vs SQL summation order); its exactness is pinned by the
-    streaming-vs-batch pytest agreement tests."""
-    from etl_lala_spark.streaming import stateful, windows
+    vs SQL summation order)."""
+    from etl_lala_spark.streaming import stateful
 
     work = gate_workdir(spark, "stream_twin_progress")
     src = os.path.join(work, "src")
@@ -270,7 +269,7 @@ def stream_twin_progress(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.coalesce(1).write.mode("overwrite").parquet(src)  # one file -> one batch
     stream = spark.readStream.schema(ev.schema).parquet(src)
     _PROGRESS_RUNS[0] += 1
-    got = windows.run_to_memory(
+    got = stateful.run_to_memory(
         stateful.attach_progress(stream), f"t_gate_progress_{_PROGRESS_RUNS[0]}"
     )
     return got.select("user_id", "total_events", "emitted").orderBy(
@@ -405,7 +404,7 @@ def stream_twin_tagged_ndjson(spark: SparkSession, sf_dir: str) -> DataFrame:
     work = gate_workdir(spark, "stream_twin_tagged_ndjson")
     src = os.path.join(work, "src")
     from etl_lala_spark.sources.ndjson import read_tagged_ndjson
-    from etl_lala_spark.streaming.windows import run_to_memory
+    from etl_lala_spark.streaming.stateful import run_to_memory
 
     k = F.col("o_orderkey")
     line = F.when(

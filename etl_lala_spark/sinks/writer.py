@@ -208,64 +208,6 @@ def write_json_with_manifest(
     return manifest
 
 
-def write_bucketed(
-    df: DataFrame,
-    table_name: str,
-    bucket_col: str,
-    n_buckets: int = 32,
-    sort_col: str | None = None,
-) -> None:
-    """Bucketed managed table: pre-shuffles once at write time so every later
-    equi-join or aggregation on ``bucket_col`` between co-bucketed tables
-    runs with NO exchange (verified in tests via the physical plan).
-
-    This is the 100 TB fact⨝fact strategy: lineitem and orders bucketed by
-    orderkey join shuffle-free forever after; the one-time write cost is
-    amortized across every downstream query. ``sort_col`` additionally
-    sorts within buckets so sort-merge joins skip their sort.
-    """
-    w = df.write.mode("overwrite").format("parquet").bucketBy(n_buckets, bucket_col)
-    if sort_col:
-        w = w.sortBy(sort_col)
-    w.saveAsTable(table_name)
-
-
-def join_cobucketed(
-    spark: SparkSession, left_table: str, right_table: str, on: str
-) -> DataFrame:
-    """Equi-join of two co-bucketed tables on the bucket key — planned as a
-    zero-exchange sort-merge join when bucket counts match."""
-    return spark.table(left_table).join(spark.table(right_table), on)
-
-
-def stream_incremental(
-    stream_df: DataFrame,
-    table_path: str,
-    part_col: str = "competencia",
-    checkpoint: str | None = None,
-):
-    """Streaming form of the idempotent load (reference T5): each micro-batch
-    flows through ``load_incremental``, so partitions already on disk are
-    skipped even across restarts and replays — at-least-once delivery
-    upstream becomes effectively-once at the table.
-
-    CONTRACT: the skip is PARTITION-granular, so each partition value must
-    arrive whole within one micro-batch — the reference's delivery unit (a
-    competência lands as one file). A partition whose rows straddle two
-    batches would have its second half anti-joined away. For row-granular
-    sources use ``stream_versioned_append`` (batch-id exactly-once) or
-    ``stream_dedup_ingest`` (content-fingerprint) instead. Returns the
-    started StreamingQuery (caller owns trigger/stop)."""
-
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        load_incremental(batch_df.sparkSession, batch_df, table_path, part_col)
-
-    writer = stream_df.writeStream.foreachBatch(upsert).trigger(availableNow=True)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
-
-
 def stream_dedup_ingest(
     stream_df: DataFrame,
     table_path: str,
@@ -461,27 +403,6 @@ def compact_partitions(
         "files_after": count_files(table_path),
         "rows": rows,
     }
-
-
-def write_sorted(
-    df: DataFrame,
-    table_path: str,
-    part_col: str = "competencia",
-    sort_cols: tuple[str, ...] = (),
-) -> None:
-    """Partitioned write with rows sorted inside each file: parquet row-group
-    min/max statistics become tight, so selective scans skip whole row
-    groups (the zone-map lever — at 100 TB this turns point lookups on the
-    sort key from full-partition scans into a handful of row groups).
-    ``sortWithinPartitions`` keeps the sort shuffle-free after the
-    partition-key repartition."""
-    (
-        df.repartition(F.col(part_col))
-        .sortWithinPartitions(*([part_col] + list(sort_cols)))
-        .write.mode("overwrite")
-        .partitionBy(part_col)
-        .parquet(table_path)
-    )
 
 
 def retain_latest_runs(base_dir: str, keep: int = 5) -> list[str]:
@@ -752,52 +673,6 @@ def ivf_index_search(
     return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
-def backfill_partitions(
-    spark: SparkSession,
-    table_path: str,
-    expected: list[str],
-    compute,
-    part_col: str = "competencia",
-) -> LoadResult:
-    """Backfill: materialize exactly the partitions that SHOULD exist but
-    don't — the completion of the reference's idempotent month loads
-    (``competencias_existentes`` tells it what to skip; backfill also knows
-    what is *missing* and repairs holes after failed or never-run months).
-
-    ``expected`` is the full partition-key list (e.g. the competence_months
-    dimension rendered to strings); ``compute(spark, [keys])`` produces the
-    rows for the missing keys only — so a backfill of 2 missing months in a
-    10-year table touches 2 partitions' worth of source data, never the
-    table. The gap check is directory-listing arithmetic (O(partitions),
-    no data scan), and the write appends only new partition directories, so
-    concurrent readers never see a partition half-replaced.
-    """
-    existing = set(existing_partitions(spark, table_path, part_col))
-    missing = [k for k in expected if k not in existing]
-    created = not os.path.isdir(table_path)
-    inserted = 0
-    if missing:
-        batch = compute(spark, missing)
-        # Safety: keep only the requested keys even if compute over-produces.
-        batch = batch.where(F.col(part_col).isin(missing))
-        # Materialize once: a nondeterministic/non-idempotent compute() must
-        # not run twice (count vs write could disagree, and it's a double
-        # scan). persist() pins the counted rows; the write reuses them.
-        batch = batch.persist()
-        try:
-            inserted = batch.count()
-            if inserted:
-                batch.write.mode("append").partitionBy(part_col).parquet(table_path)
-        finally:
-            batch.unpersist()
-    return LoadResult(
-        tabela={"nome": os.path.basename(table_path), "criada_agora": created},
-        registros_inseridos=inserted,
-        competencias_existentes=sorted(existing),
-        competencias_backfilled=missing,
-    )
-
-
 def delete_rows(
     spark: SparkSession,
     table_path: str,
@@ -887,212 +762,6 @@ def delete_rows(
     shutil.rmtree(backup)
     shutil.rmtree(tmp, ignore_errors=True)
     return {"partitions_rewritten": affected, "rows_deleted": deleted}
-
-
-def write_dataset_card(
-    docs: DataFrame,
-    out_dir: str,
-    name: str = "dataset_card.json",
-    text_col: str = "text",
-) -> dict:
-    """Write the dataset card for a document corpus — the standard artifact
-    shipped beside curated training data: sizes, token accounting,
-    per-source/per-language composition, dedup rate, and length profile.
-
-    ONE aggregation job computes every global number (count / tokens /
-    distinct fingerprints / length quantiles together); composition rolls
-    up in a second tiny grouped pass. Everything else is arithmetic on the
-    collected scalars — at 100 TB the card costs two scans, no collect of
-    data rows. Extends the run-manifest idea (`write_json_with_manifest`,
-    reference `_indice.json`) from bookkeeping to data documentation.
-    """
-    t = F.col(text_col)
-    n_tok = F.size(F.split(t, r"\s+"))
-    g = docs.agg(
-        F.count("*").alias("n_docs"),
-        F.sum(n_tok).alias("total_ws_tokens"),
-        F.countDistinct(F.md5(t)).alias("n_distinct_contents"),
-        F.expr(f"percentile(length({text_col}), array(0.05, 0.5, 0.95))").alias(
-            "len_q"
-        ),
-        F.min(F.length(t)).alias("min_chars"),
-        F.max(F.length(t)).alias("max_chars"),
-    ).first()
-    comp = (
-        docs.groupBy("lang", "source")
-        .agg(F.count("*").alias("n_docs"), F.sum(n_tok).alias("ws_tokens"))
-        .collect()
-    )
-    # empty corpus: aggregates come back NULL — emit a zero card rather
-    # than crashing on int(None)/None[0] (empty-after-filtering is a
-    # plausible pipeline state)
-    len_q = g["len_q"] if g["len_q"] is not None else [None, None, None]
-    card = {
-        "n_docs": g["n_docs"],
-        "total_ws_tokens": int(g["total_ws_tokens"] or 0),
-        "n_distinct_contents": g["n_distinct_contents"],
-        "duplicate_rate": round(1.0 - g["n_distinct_contents"] / g["n_docs"], 6)
-        if g["n_docs"]
-        else 0.0,
-        "char_length": {
-            "min": g["min_chars"],
-            "p05": len_q[0],
-            "p50": len_q[1],
-            "p95": len_q[2],
-            "max": g["max_chars"],
-        },
-        "composition": sorted(
-            (
-                {
-                    "lang": r["lang"],
-                    "source": r["source"],
-                    "n_docs": r["n_docs"],
-                    "ws_tokens": int(r["ws_tokens"]),
-                }
-                for r in comp
-            ),
-            key=lambda d: (d["lang"], d["source"]),
-        ),
-    }
-    os.makedirs(out_dir, exist_ok=True)
-    with open(os.path.join(out_dir, name), "w") as fh:
-        json.dump(card, fh, indent=2)
-    return card
-
-
-def stream_neardup_ingest(
-    stream_df: DataFrame,
-    table_path: str,
-    band_path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
-    n_hashes: int = 32,
-    bands: int = 8,
-    checkpoint: str | None = None,
-):
-    """NEAR-dup-on-ingest: the incremental form of MinHash-LSH dedup — each
-    micro-batch is checked against the persistent band index accumulated
-    from every previously ingested document, so continuous crawling dedups
-    against the full corpus history without ever re-scanning it. This is
-    the production companion to `minhash_lsh_pairs` (batch) the same way
-    `stream_ivf_index` productionizes `ann_cosine_ivf`.
-
-    Per batch: (1) replay filter — anti-join batch ids against the data
-    table; (2) within-batch LSH dedup — band-bucket self-collisions keep
-    the smallest id; (3) history check — a LEFT SEMI join of the batch's
-    (band, bucket) rows against the stored index, excluding a doc's own
-    rows, flags near-dups of ANY prior document from band equality alone
-    (the index stores 8 longs per doc, never shingles or text); (4) the
-    survivors' bands are appended to the index (skipping docs whose bands
-    already landed), then their rows to the table — this write ORDER plus
-    the own-doc exclusion makes every crash window replay-safe: bands
-    written but table missed → the replay is not self-flagged, skips the
-    band re-write, and lands the row; table written → step (1) drops it.
-
-    Scale: the index is (doc, band, bucket) — bands × 8 bytes per corpus
-    document, shuffled on uniform hash buckets; at 100 TB the semi-join is
-    the only cost that grows, and it moves band keys, not content. Returns
-    the started StreamingQuery.
-    """
-    from etl_lala_spark.operators.dedup import minhash_signatures, word_shingles
-
-    rows = n_hashes // bands
-
-    def ingest(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        base = (
-            batch_df.dropDuplicates([id_col])
-            .select(
-                F.col(id_col).alias("doc"),
-                F.col(text_col).alias("_text"),
-                word_shingles(F.col(text_col), k).alias("shingles"),
-            )
-            .select(
-                "doc",
-                "_text",
-                F.size("shingles").alias("n_shingles"),
-                F.expr("transform(shingles, s -> xxhash64(s))").alias("hashes"),
-            )
-        )
-        # (1) replay filter against the data table.
-        if os.path.isdir(table_path) and any(
-            f.endswith(".parquet") for f in os.listdir(table_path)
-        ):
-            seen_ids = spark.read.parquet(table_path).select(
-                F.col(id_col).alias("doc")
-            )
-            base = base.join(seen_ids, "doc", "left_anti")
-        base = base.cache()
-        sig = minhash_signatures(base, n_hashes)
-        band_rows = (
-            sig.select(
-                "doc",
-                F.expr(
-                    f"explode(transform(sequence(0, {bands - 1}), b -> named_struct("
-                    f"'band', b, "
-                    f"'bucket', xxhash64(slice(sig, b * {rows} + 1, {rows})))))"
-                ).alias("bb"),
-            )
-            .select("doc", "bb.band", "bb.bucket")
-            .cache()
-        )
-        # (2) within-batch: band collision → keep the smallest colliding id.
-        x, y = band_rows.alias("x"), band_rows.alias("y")
-        batch_dups = (
-            x.join(
-                y,
-                (F.col("x.band") == F.col("y.band"))
-                & (F.col("x.bucket") == F.col("y.bucket"))
-                & (F.col("x.doc") > F.col("y.doc")),
-                "left_semi",
-            )
-            .select(F.col("x.doc").alias("doc"))
-            .distinct()
-        )
-        keep_bands = band_rows.join(batch_dups, "doc", "left_anti")
-        # (3) history check, excluding the doc's own previously-landed rows.
-        have_index = os.path.isdir(band_path) and any(
-            f.endswith(".parquet") for f in os.listdir(band_path)
-        )
-        idx = spark.read.parquet(band_path) if have_index else None
-        if have_index:
-            hist_dups = (
-                keep_bands.alias("n")
-                .join(
-                    idx.alias("i"),
-                    (F.col("n.band") == F.col("i.band"))
-                    & (F.col("n.bucket") == F.col("i.bucket"))
-                    & (F.col("n.doc") != F.col("i.doc")),
-                    "left_semi",
-                )
-                .select("doc")
-                .distinct()
-            )
-            keep_bands = keep_bands.join(hist_dups, "doc", "left_anti")
-        novel = base.join(keep_bands.select("doc").distinct(), "doc", "left_semi")
-        # (4) bands first (skip docs already indexed), then rows.
-        new_bands = keep_bands
-        if have_index:
-            # reuse the idx frame read above — a second read.parquet would
-            # re-list the index per batch for no reason
-            indexed_docs = idx.select("doc").distinct()
-            new_bands = new_bands.join(indexed_docs, "doc", "left_anti")
-        try:
-            new_bands.write.mode("append").parquet(band_path)
-            novel.select(
-                F.col("doc").alias(id_col), F.col("_text").alias(text_col)
-            ).write.mode("append").parquet(table_path)
-        finally:
-            # a failing batch must not leave the caches pinned for the
-            # stream's lifetime (they would accumulate across retries)
-            base.unpersist()
-            band_rows.unpersist()
-
-    w = stream_df.writeStream.foreachBatch(ingest).trigger(availableNow=True)
-    if checkpoint:
-        w = w.option("checkpointLocation", checkpoint)
-    return w.start()
 
 
 def shard_assignments(

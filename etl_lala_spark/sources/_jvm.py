@@ -82,7 +82,3 @@ def codec(spark: SparkSession):
     return instance
 
 
-def codec_class(spark: SparkSession, name: str = CLASS):
-    """The codec class ``name``, from the loader of :func:`codec`'s class."""
-    loader = codec(spark).getClass().getClassLoader()
-    return spark._jvm.java.lang.Class.forName(name, True, loader)

@@ -14,15 +14,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-METADATA_SCHEMA = T.StructType(
-    [
-        T.StructField("tipo", T.StringType()),
-        T.StructField("arquivo", T.StringType()),
-        T.StructField("total_colunas", T.IntegerType()),
-        T.StructField("colunas", T.ArrayType(T.StringType())),
-    ]
-)
-
 
 def tagged_schema(record_fields: list[str]) -> T.StructType:
     """Union schema: metadata envelope fields + a map for record payloads

@@ -33,10 +33,10 @@ one decompressed record set, and the engine's memory manager does the rest
 from __future__ import annotations
 
 import zlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from etl_lala_spark.io import map_rows
 
 WARC_RECORD_SCHEMA = (
     "file string, record_index int, member_offset bigint, member_bytes bigint,"
@@ -304,90 +304,75 @@ def extract_warc_records(
     """
     schema = WARC_RECORD_SCHEMA + (", _error string" if permissive else "")
     keep = set(types) if types is not None else None
+    cols = [f.split(" ")[0] for f in schema.split(", ")]
 
-    def expand(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.split(" ")[0] for f in schema.split(", ")]
-        for pdf in batches:
-            out: dict[str, list] = {c: [] for c in cols}
+    def expand(path, blob):
+        rows = []
 
-            def emit(path, idx=None, rec=None, err=None, **http):
-                row = dict.fromkeys(cols)
-                row["file"] = path
-                row["record_index"] = idx
-                if rec is not None:
-                    row.update(
-                        member_offset=rec["member_offset"],
-                        member_bytes=rec["member_bytes"],
-                        warc_type=rec["warc_type"],
-                        target_uri=rec["target_uri"],
-                        record_id=rec["record_id"],
-                        warc_date=rec["warc_date"],
-                        content_length=rec["content_length"],
-                    )
-                row.update(http)
-                row["n_payload_bytes"] = (
-                    len(row["payload"]) if row["payload"] is not None else 0
+        def emit(idx=None, rec=None, err=None, **http):
+            row = dict.fromkeys(cols)
+            row["file"] = path
+            row["record_index"] = idx
+            if rec is not None:
+                row.update(
+                    member_offset=rec["member_offset"],
+                    member_bytes=rec["member_bytes"],
+                    warc_type=rec["warc_type"],
+                    target_uri=rec["target_uri"],
+                    record_id=rec["record_id"],
+                    warc_date=rec["warc_date"],
+                    content_length=rec["content_length"],
                 )
-                if permissive:
-                    row["_error"] = err
-                for c in cols:
-                    out[c].append(row[c])
+            row.update(http)
+            row["n_payload_bytes"] = (
+                len(row["payload"]) if row["payload"] is not None else 0
+            )
+            if permissive:
+                row["_error"] = err
+            rows.append(tuple(row[c] for c in cols))
 
-            for path, blob in zip(pdf["path"], pdf["content"]):
-                blob = bytes(blob)
-                try:
-                    if blob[:2] == b"\x1f\x8b":
-                        members = _iter_gzip_members(blob)
-                    else:  # plain concatenated .warc
-                        members = iter([(0, len(blob), blob)])
-                    idx = 0
-                    for off, clen, data in members:
-                        for rec in _parse_warc_records(data, off, clen):
-                            i, cl = idx, rec["content_length"]
-                            idx += 1
-                            if keep is not None and rec["warc_type"] not in keep:
-                                continue
-                            if (
-                                max_payload_bytes is not None
-                                and cl > max_payload_bytes
-                            ):
-                                msg = (
-                                    f"record {i} declares {cl} bytes > cap"
-                                    f" {max_payload_bytes}"
-                                )
-                                if not permissive:
-                                    raise ValueError(f"{path}: {msg}")
-                                emit(
-                                    path, i, rec, err=f"ValueError: {msg}",
-                                    payload=None,
-                                )
-                                continue
-                            # body wire-decode failures are PER-RECORD: one
-                            # mis-framed chunked body must become one error
-                            # row, never abort the file's remaining records
-                            try:
-                                status, ctype, hraw, body = (
-                                    _split_http_response(rec["block"])
-                                )
-                            except (ValueError, zlib.error) as exc:
-                                if not permissive:
-                                    raise
-                                emit(
-                                    path, i, rec, payload=None,
-                                    err=f"{type(exc).__name__}: {exc}"[:500],
-                                )
-                                continue
-                            emit(
-                                path, i, rec,
-                                http_status=status,
-                                http_content_type=ctype,
-                                http_headers=hraw,
-                                payload=body,
-                            )
-                except Exception as exc:  # noqa: BLE001 — per-file boundary
-                    if not permissive:
-                        raise
-                    emit(path, err=f"{type(exc).__name__}: {exc}"[:500])
-            yield pd.DataFrame(out)
+        try:
+            if blob[:2] == b"\x1f\x8b":
+                members = _iter_gzip_members(blob)
+            else:  # plain concatenated .warc
+                members = iter([(0, len(blob), blob)])
+            idx = 0
+            for off, clen, data in members:
+                for rec in _parse_warc_records(data, off, clen):
+                    i, cl = idx, rec["content_length"]
+                    idx += 1
+                    if keep is not None and rec["warc_type"] not in keep:
+                        continue
+                    if max_payload_bytes is not None and cl > max_payload_bytes:
+                        msg = f"record {i} declares {cl} bytes > cap {max_payload_bytes}"
+                        if not permissive:
+                            raise ValueError(f"{path}: {msg}")
+                        emit(i, rec, err=f"ValueError: {msg}", payload=None)
+                        continue
+                    # body wire-decode failures are PER-RECORD: one
+                    # mis-framed chunked body must become one error row,
+                    # never abort the file's remaining records
+                    try:
+                        status, ctype, hraw, body = _split_http_response(rec["block"])
+                    except (ValueError, zlib.error) as exc:
+                        if not permissive:
+                            raise
+                        emit(
+                            i, rec, payload=None,
+                            err=f"{type(exc).__name__}: {exc}"[:500],
+                        )
+                        continue
+                    emit(
+                        i, rec,
+                        http_status=status,
+                        http_content_type=ctype,
+                        http_headers=hraw,
+                        payload=body,
+                    )
+        except Exception as exc:  # noqa: BLE001 — per-file boundary
+            if not permissive:
+                raise
+            emit(err=f"{type(exc).__name__}: {exc}"[:500])
+        return rows
 
-    return warcs.select("path", "content").mapInPandas(expand, schema)
+    return map_rows(warcs.select("path", "content"), expand, schema)

@@ -1,3 +1,3 @@
-"""Structured Streaming layer (reference §2.9 T1-T6 + §2.12 completions):
-event-time windows with watermarks, stateful dedup, tagged streams, progress
-listeners — the live forms of the batch plans in ``plans.events``."""
+"""Structured Streaming layer (reference §2.9 A6/T4): the stride-progress
+``applyInPandasWithState`` operator and the memory-sink driver the stream
+twins in ``plans.stream_twins`` run on."""

@@ -13,6 +13,7 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
+from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 PROGRESS_OUTPUT_SCHEMA = "user_id long, total_events long, total_value double, emitted long"
@@ -53,44 +54,19 @@ def attach_progress(events):
     )
 
 
-EWMA_OUTPUT_SCHEMA = "user_id long, n_events long, ewma_value double"
-EWMA_STATE_SCHEMA = "s double, n long"
-EWMA_ALPHA = 0.3
-
-
-def ewma_update(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-    """Streaming EWMA — the graduation path of the batch
-    ``events_ewma_smoothing`` fold when per-key history is unbounded: state
-    is exactly TWO scalars per key (current smoothed value + count), not
-    the value sequence, so memory is O(active keys) for any stream length.
-
-    Rows inside a micro-batch are folded in (ts, event_id) order; batches
-    are assumed time-ordered across triggers (a file stream fed in arrival
-    order — the reference's competência-ordered ingest). Python floats are
-    IEEE doubles folding the same sequence as the batch JVM fold, so the
-    smoothed values agree exactly (asserted in tests)."""
-    if state.exists:
-        s, n = state.get
-    else:
-        s, n = None, 0
-    for pdf in pdfs:
-        for v in pdf.sort_values(["ts", "event_id"])["value"]:
-            x = float(v)
-            s = x if n == 0 else s * (1.0 - EWMA_ALPHA) + x * EWMA_ALPHA
-            n += 1
-    state.update((s, n))
-    yield pd.DataFrame(
-        [(key[0], n, s)], columns=["user_id", "n_events", "ewma_value"]
+def run_to_memory(
+    stream_df: DataFrame, name: str, output_mode: str = "append"
+) -> DataFrame:
+    """Drive a (bounded) streaming query to completion into a memory sink and
+    return the result table — the test/bench harness path. ``output_mode``
+    must be "complete" for unwatermarked aggregations."""
+    q = (
+        stream_df.writeStream.outputMode(output_mode)
+        .format("memory")
+        .queryName(name)
+        .trigger(availableNow=True)
+        .start()
     )
-
-
-def attach_ewma(events):
-    """Wire the streaming EWMA onto a streaming events DataFrame (grouped per
-    user); each trigger emits the current per-user smoothed value."""
-    return events.groupBy("user_id").applyInPandasWithState(
-        ewma_update,
-        outputStructType=EWMA_OUTPUT_SCHEMA,
-        stateStructType=EWMA_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    q.processAllAvailable()
+    q.stop()
+    return stream_df.sparkSession.table(name)

@@ -28,7 +28,7 @@ def _jvm_explode(spark, data: bytes) -> tuple[str, bytes | None]:
     """("ok", output) or (error class, None) from ``DbcCodec.explode``."""
     from py4j.protocol import Py4JJavaError
 
-    from etl_lala_spark.sources._jvm import codec_class
+    from etl_lala_spark.sources._jvm import codec
 
     jvm, gateway = spark._jvm, spark.sparkContext._gateway
     types = gateway.new_array(jvm.java.lang.Class, 1)
@@ -36,7 +36,7 @@ def _jvm_explode(spark, data: bytes) -> tuple[str, bytes | None]:
     args = gateway.new_array(jvm.java.lang.Object, 1)
     args[0] = bytearray(data)
     try:
-        return "ok", bytes(codec_class(spark).getMethod("explode", types).invoke(None, args))
+        return "ok", bytes(codec(spark).getClass().getMethod("explode", types).invoke(None, args))
     except Py4JJavaError as exc:  # InvocationTargetException around DecodeError
         return exc.java_exception.getCause().getMessage().split(":", 1)[0], None
 

@@ -239,6 +239,60 @@ def test_png_codec_roundtrip_all_filters():
         mm.decode_png(b"not a png at all")
 
 
+def test_png_idat_bomb_is_an_error_row(spark, monkeypatch):
+    """A valid IHDR over an IDAT that inflates to 64 MB: the inflate stops
+    one byte past the size IHDR fixes, so the decode never holds more than
+    expected + 1 output bytes, raises the size-mismatch ValueError, and the
+    image operator turns the row into its NULL error row."""
+    import struct
+    import zlib
+
+    def chunk(ctype: bytes, body: bytes) -> bytes:
+        crc = zlib.crc32(ctype + body) & 0xFFFFFFFF
+        return struct.pack(">I", len(body)) + ctype + body + struct.pack(">I", crc)
+
+    w, h = 4, 4
+    expected = (w * 3 + 1) * h
+    packer = zlib.compressobj(9)
+    zeros = bytes(1 << 20)
+    idat = b"".join(packer.compress(zeros) for _ in range(64)) + packer.flush()
+    bomb = (
+        b"\x89PNG\r\n\x1a\n"
+        + chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0))
+        + chunk(b"IDAT", idat)
+        + chunk(b"IEND", b"")
+    )
+
+    held = []
+    inflater = zlib.decompressobj
+
+    class Recording:
+        def __init__(self):
+            self._inflater = inflater()
+
+        def decompress(self, data, max_length=0):
+            out = self._inflater.decompress(data, max_length)
+            held.append((max_length, len(out)))
+            return out
+
+        def __getattr__(self, name):
+            return getattr(self._inflater, name)
+
+    monkeypatch.setattr(zlib, "decompressobj", Recording)
+    with pytest.raises(ValueError, match="pixel payload size mismatch"):
+        mm.decode_png(bomb)
+    monkeypatch.undo()
+    assert held == [(expected + 1, expected + 1)]
+
+    good = mm.encode_png(w, h, bytes(range(w * h * 3)), channels=3)
+    df = spark.createDataFrame(
+        [(1, bytearray(good)), (2, bytearray(bomb))], "doc_id long, media binary"
+    )
+    rows = {r["doc_id"]: r for r in mm.image_resize(df, 2, 2).collect()}
+    assert rows[1]["width"] == 2 and rows[1]["pixels"] is not None
+    assert rows[2]["width"] is None and rows[2]["pixels"] is None
+
+
 def test_spread_is_noop_when_parallel_enough(spark, sf_dir):
     li = load_table(spark, sf_dir, "lineitem")
     wide = li.repartition(64)
@@ -1211,6 +1265,30 @@ def test_avi_list_nesting_bomb_does_not_recurse():
     assert mm.avi_extract_frames(good, stride=2) == [(0, b"f0"), (2, b"f2")]
 
 
+def test_avi_truncated_frame_is_not_returned():
+    """A frame cut short is no frame: three 24-byte frames cut 6 bytes
+    before idx1 give frames 0 and 1, not 24, 24 and 18 bytes. A frame cut
+    off by its LIST still counts, so the frames after it keep their
+    indices."""
+    import struct
+
+    frames = [bytes([i]) * 24 for i in range(3)]
+    avi = mm.encode_avi_mjpeg(8, 8, 10, frames)
+    assert mm.avi_extract_frames(avi, stride=1) == list(enumerate(frames))
+    cut = avi[: avi.index(b"idx1") - 6]
+    assert mm.avi_extract_frames(cut, stride=1) == [(0, frames[0]), (1, frames[1])]
+
+    def chunk(fcc: bytes, body: bytes) -> bytes:
+        return fcc + struct.pack("<I", len(body)) + body
+
+    # frame 1 declares 24 bytes, but its 'rec ' LIST holds only 10 of them
+    rec = b"rec " + b"00dc" + struct.pack("<I", 24) + frames[1][:10]
+    movi = b"movi" + chunk(b"00dc", frames[0]) + chunk(b"LIST", rec) + chunk(b"00dc", frames[2])
+    riff = b"AVI " + chunk(b"LIST", movi)
+    short_list = b"RIFF" + struct.pack("<I", len(riff)) + riff
+    assert mm.avi_extract_frames(short_list, stride=1) == [(0, frames[0]), (2, frames[2])]
+
+
 def test_jpeg_codec_solid_gray_exact_roundtrip():
     """Quantization is exactly invertible for a solid block: DC = 8·(v−128),
     and at quality 50 the luma DC quantizer is 16, so EVEN gray values
@@ -1725,10 +1803,7 @@ def test_substring_dedup_runs_recovers_unaligned_plants(spark):
     fixed-block dedup misses — must come back as exactly one maximal run
     per occurrence with the right start and length; unique text, sub-k
     repeats, and within-doc-only repeats (under cross_doc_only) must not."""
-    from etl_lala_spark.operators.dedup import (
-        substring_dedup_clean,
-        substring_dedup_runs,
-    )
+    from etl_lala_spark.operators.dedup import substring_dedup_runs
 
     plant = " ".join(f"p{t}" for t in range(10))  # 10 shared tokens
     uniq = lambda d, n, tag="u": " ".join(f"{tag}{d}x{i}" for i in range(n))
@@ -1758,17 +1833,6 @@ def test_substring_dedup_runs_recovers_unaligned_plants(spark):
     got4 = [r for r in wd.collect() if r["doc_id"] == 4]
     assert sorted(r["start_pos"] for r in got4) == [0, 12]
     assert all(r["run_tokens"] == 8 for r in got4)
-
-    # the removal pass cuts exactly the planted tokens and keeps the rest
-    clean = {
-        r["doc_id"]: r for r in substring_dedup_clean(df, min_tokens=8).collect()
-    }
-    assert clean[0]["n_removed"] == 10
-    assert clean[0]["clean_text"] == f"{uniq(0, 3)} {uniq(0, 5, 'v')}"
-    assert clean[1]["clean_text"] == uniq(1, 7)
-    assert clean[2]["clean_text"] == uniq(2, 4)
-    assert clean[3]["n_removed"] == 0 and clean[3]["clean_text"] == uniq(3, 20)
-    assert clean[5]["n_removed"] == 0  # short doc passes through untouched
 
 
 def test_substring_dedup_run_maximality_and_boundaries(spark):
@@ -2018,18 +2082,6 @@ def test_ngram_jaccard_null_blocks_pair(spark):
     )
     pairs = ngram_jaccard_pairs(df, block_cols=("lang",)).collect()
     assert [(r["doc_a"], r["doc_b"]) for r in pairs] == [(1, 2)]
-
-
-def test_substring_clean_null_text_zero_tokens(spark):
-    """NULL-text docs report 0 tokens, not size(NULL) = -1."""
-    from etl_lala_spark.operators.dedup import substring_dedup_clean
-
-    df = spark.createDataFrame(
-        [(1, None), (2, "w1 w2 w3")], "doc_id long, text string"
-    )
-    out = {r["doc_id"]: r for r in substring_dedup_clean(df, min_tokens=2).collect()}
-    assert out[1]["n_tokens"] == 0 and out[1]["n_removed"] == 0
-    assert out[2]["n_tokens"] == 3
 
 
 def test_minhash_incremental_index_roundtrip(spark, tmp_path):

@@ -106,40 +106,6 @@ def test_json_sink_with_manifest(spark, out_dir):
     assert back.count() == 5
 
 
-def test_bucketed_join_has_no_exchange(spark, sf_dir):
-    """Co-bucketed fact⨝fact joins must plan with zero shuffles — the
-    bucket layout replaces the exchange (100 TB join strategy)."""
-    from etl_lala_spark.io import load_table
-
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_quantity", "l_extendedprice"
-    )
-    o = load_table(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("l_orderkey"), "o_totalprice"
-    )
-    warehouse = spark.conf.get("spark.sql.warehouse.dir", "").removeprefix("file:")
-    for t in ("bkt_lineitem", "bkt_orders"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        if warehouse:
-            shutil.rmtree(os.path.join(warehouse, t), ignore_errors=True)
-    writer.write_bucketed(li, "bkt_lineitem", "l_orderkey", n_buckets=8)
-    writer.write_bucketed(o, "bkt_orders", "l_orderkey", n_buckets=8)
-    # Force the fact⨝fact scenario: at 100 TB neither side broadcasts.
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = writer.join_cobucketed(
-            spark, "bkt_lineitem", "bkt_orders", "l_orderkey"
-        )
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange hashpartitioning" not in plan, plan
-        assert "Bucketed: true" in plan, plan
-        # and the join result matches the plain (shuffling) join
-        assert joined.count() == li.join(o, "l_orderkey").count()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-
-
 def test_compact_partitions_reduces_files_preserves_rows(spark, out_dir):
     """Incremental appends leave small files; compaction must shrink the
     file count without changing the data."""
@@ -159,36 +125,6 @@ def test_compact_partitions_reduces_files_preserves_rows(spark, out_dir):
     assert after.count() == before_rows == stats["rows"]
     # partition pruning still works on the compacted layout
     assert after.filter(F.col("competencia") == "202402").count() == before_rows // 3
-
-
-def test_write_sorted_tightens_row_group_stats(spark, out_dir):
-    """Sorted files must have non-overlapping, ordered row-group min/max on
-    the sort key (the data-skipping precondition)."""
-    import pyarrow.parquet as pq
-    from etl_lala_spark.io import load_table
-
-    path = os.path.join(out_dir, "sorted_t")
-    li = load_table(spark, "/root/testdata/sf0.001", "lineitem").withColumn(
-        "competencia", F.date_format("l_shipdate", "yyyy")
-    )
-    writer.write_sorted(li, path, part_col="competencia", sort_cols=("l_partkey",))
-    assert spark.read.parquet(path).count() == li.count()
-    checked = 0
-    for dirpath, _dirs, files in os.walk(path):
-        for f in files:
-            if not f.endswith(".parquet"):
-                continue
-            md = pq.ParquetFile(os.path.join(dirpath, f)).metadata
-            idx = {md.schema.column(i).name: i for i in range(md.num_columns)}["l_partkey"]
-            prev_max = None
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(idx).statistics
-                assert st.min <= st.max
-                if prev_max is not None:
-                    assert st.min >= prev_max  # ordered, non-overlapping
-                prev_max = st.max
-                checked += 1
-    assert checked > 0
 
 
 def test_retain_latest_runs(spark, out_dir):
@@ -263,7 +199,6 @@ def test_maintain_summary_incremental_matches_batch(spark, sf_dir, out_dir):
     trigger), the summary equals the batch groupBy; re-running the stream
     (replay without checkpoint) must not double-count."""
     from etl_lala_spark.io import load_events
-    from etl_lala_spark.streaming import windows as sw
 
     src = os.path.join(out_dir, "mv_src")
     summary = os.path.join(out_dir, "mv_summary")
@@ -272,7 +207,9 @@ def test_maintain_summary_incremental_matches_batch(spark, sf_dir, out_dir):
 
     def run():
         q = writer.maintain_summary(
-            sw.read_event_stream(spark, src, max_files_per_trigger=1),
+            spark.readStream.schema(ev.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src),
             summary,
             keys=["event_type"],
             value_col="value",
@@ -327,52 +264,6 @@ def test_schema_evolution_merge_on_read(spark, tmp_path):
     assert rows["202502"]["ap_extra"] == "NEW"
 
 
-def test_backfill_fills_only_missing_partitions(spark, sf_dir, tmp_path):
-    """Backfill computes rows for exactly the missing months: pre-loaded
-    partitions are untouched (same file set), holes are filled, and a
-    second backfill is a no-op."""
-    import os
-
-    from etl_lala_spark.io import load_table
-    from etl_lala_spark.sinks.writer import backfill_partitions
-
-    table = str(tmp_path / "orders_monthly")
-    o = load_table(spark, sf_dir, "orders").withColumn(
-        "competencia", F.date_format("o_orderdate", "yyyyMM")
-    )
-    months = sorted(r.competencia for r in o.select("competencia").distinct().collect())
-    assert len(months) >= 3
-    seed, holes = months[:1] + months[2:], [months[1]]
-    o.where(F.col("competencia").isin(seed)).write.partitionBy("competencia").parquet(table)
-    before = set()
-    for d in os.listdir(table):
-        if d.startswith("competencia="):
-            for f in os.listdir(os.path.join(table, d)):
-                before.add((d, f))
-
-    calls = []
-
-    def compute(spark_, keys):
-        calls.append(list(keys))
-        return o.where(F.col("competencia").isin(keys))
-
-    res = backfill_partitions(spark, table, months, compute)
-    assert res["competencias_backfilled"] == holes
-    assert calls == [holes]
-    got = spark.read.parquet(table)
-    assert got.count() == o.count()
-    # pre-existing partition files untouched (append created new dirs only)
-    after = set()
-    for d in os.listdir(table):
-        if d.startswith("competencia="):
-            for f in os.listdir(os.path.join(table, d)):
-                after.add((d, f))
-    assert before <= after
-
-    res2 = backfill_partitions(spark, table, months, compute)
-    assert res2["competencias_backfilled"] == [] and len(calls) == 1
-
-
 def test_delete_rows_rewrites_only_affected_partitions(spark, sf_dir, tmp_path):
     """Deleting a key rewrites just the partitions containing it: other
     partitions' files stay byte-identical, the key is gone, all other rows
@@ -421,32 +312,6 @@ def test_delete_rows_rewrites_only_affected_partitions(spark, sf_dir, tmp_path):
 
     res2 = delete_rows(spark, table, keys, "o_custkey")
     assert res2 == {"partitions_rewritten": [], "rows_deleted": 0}
-
-
-def test_dataset_card_accounting(spark, sf_dir, tmp_path):
-    """The dataset card's global numbers must agree with directly-computed
-    counts, and composition must cover the whole corpus exactly."""
-    import json
-    import os
-
-    from etl_lala_spark.io import load_table
-    from etl_lala_spark.sinks.writer import write_dataset_card
-
-    docs = load_table(spark, sf_dir, "documents")
-    card = write_dataset_card(docs, str(tmp_path))
-    with open(os.path.join(str(tmp_path), "dataset_card.json")) as fh:
-        on_disk = json.load(fh)
-    assert on_disk == card
-    assert card["n_docs"] == docs.count()
-    assert sum(c["n_docs"] for c in card["composition"]) == card["n_docs"]
-    total_tok = sum(c["ws_tokens"] for c in card["composition"])
-    assert total_tok == card["total_ws_tokens"]
-    assert 0.0 <= card["duplicate_rate"] < 1.0
-    assert (
-        card["char_length"]["min"]
-        <= card["char_length"]["p50"]
-        <= card["char_length"]["max"]
-    )
 
 
 def test_delete_rows_staging_invisible_to_readers(spark, sf_dir, tmp_path):
@@ -1239,13 +1104,3 @@ def test_stream_scd2_recovers_interrupted_swap(spark, out_dir):
     assert sorted((r["attr"], r["is_current"]) for r in rows) == [
         ("a0", False), ("a1", True)
     ]
-
-
-def test_dataset_card_empty_corpus(spark, out_dir):
-    """A zero-row corpus yields a zero card, not a TypeError."""
-    docs = spark.createDataFrame(
-        [], "doc_id long, text string, lang string, source string"
-    )
-    card = writer.write_dataset_card(docs, os.path.join(out_dir, "card0"))
-    assert card["n_docs"] == 0 and card["total_ws_tokens"] == 0
-    assert card["char_length"]["p50"] is None

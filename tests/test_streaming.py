@@ -1,5 +1,6 @@
-"""Structured Streaming tests: watermarked windows, stateful dedup, custom
-stateful progress operator, tagged NDJSON stream (reference §2.9)."""
+"""Structured Streaming tests: custom stateful progress operator, tagged
+NDJSON stream, checkpointed recovery and the streaming sinks (reference
+§2.9)."""
 
 from __future__ import annotations
 
@@ -11,7 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from etl_lala_spark.io import load_events
-from etl_lala_spark.streaming import stateful, windows
+from etl_lala_spark.streaming import stateful
 
 TMP = os.path.join(os.path.dirname(__file__), ".tmp", "stream")
 
@@ -25,58 +26,11 @@ def event_dir(spark, sf_dir):
     return path
 
 
-def test_streaming_tumbling_matches_batch(spark, sf_dir, event_dir):
-    stream = windows.read_event_stream(spark, event_dir)
-    got = windows.run_to_memory(windows.tumbling_counts(stream), "t_tumbling")
-    batch = (
-        load_events(spark, sf_dir)
-        .groupBy(F.window("ts", "5 minutes").alias("w"), "event_type")
-        .agg(F.count("*").alias("n_events"), F.round(F.sum("value"), 2).alias("value_sum"))
-    )
-    # append mode only emits windows the watermark has passed: the tail
-    # window (containing max ts) stays open at end-of-stream, everything
-    # else must match batch exactly
-    assert batch.count() - got.count() in (0, 1, 2)
-    emitted_match = got.join(
-        batch.select(
-            F.col("w.start").alias("w_start"), "event_type", "n_events", "value_sum"
-        ),
-        ["w_start", "event_type", "n_events", "value_sum"],
-        "inner",
-    )
-    assert emitted_match.count() == got.count(), "emitted windows must equal batch"
-
-
-def test_streaming_session_windows(spark, event_dir):
-    stream = windows.read_event_stream(spark, event_dir)
-    got = windows.run_to_memory(windows.session_aggregates(stream), "t_session")
-    rows = got.collect()
-    assert len(rows) > 0
-    for r in rows:
-        assert r["session_end"] >= r["session_start"]
-        assert r["n_events"] >= 1
-
-
-def test_streaming_dedup_collapses_replay(spark, event_dir):
-    # replay the same files twice under one stream dir -> dedup collapses
-    dup_dir = os.path.join(TMP, "events_dup")
-    shutil.rmtree(dup_dir, ignore_errors=True)
-    os.makedirs(dup_dir)
-    for f in os.listdir(event_dir):
-        if f.endswith(".parquet"):
-            shutil.copy(os.path.join(event_dir, f), os.path.join(dup_dir, "a_" + f))
-            shutil.copy(os.path.join(event_dir, f), os.path.join(dup_dir, "b_" + f))
-    stream = windows.read_event_stream(spark, dup_dir, max_files_per_trigger=1)
-    deduped = windows.run_to_memory(
-        windows.dedup_stream(stream).select("event_id"), "t_dedup"
-    )
-    n_unique = spark.read.parquet(event_dir).select("event_id").distinct().count()
-    assert deduped.count() == n_unique
-
-
 def test_stateful_progress_operator(spark, event_dir):
-    stream = windows.read_event_stream(spark, event_dir)
-    got = windows.run_to_memory(stateful.attach_progress(stream), "t_progress")
+    stream = spark.readStream.schema(spark.read.parquet(event_dir).schema).parquet(
+        event_dir
+    )
+    got = stateful.run_to_memory(stateful.attach_progress(stream), "t_progress")
     rows = got.collect()
     assert len(rows) > 0
     # one row per crossed stride per user; totals are monotone per user
@@ -107,7 +61,7 @@ def test_tagged_ndjson_streaming(spark):
             )
         )
     meta, recs = ndjson.read_tagged_ndjson(spark, ndir, record_fields=["A"], streaming=True)
-    out = windows.run_to_memory(recs, "t_ndjson")
+    out = stateful.run_to_memory(recs, "t_ndjson")
     assert sorted(r["A"] for r in out.collect()) == ["1", "2"]
 
 
@@ -118,7 +72,9 @@ def test_stream_static_enrichment_matches_batch(spark, sf_dir, event_dir):
     from etl_lala_spark.plans import query_fns
 
     c = load_table(spark, sf_dir, "customer")
-    stream = windows.read_event_stream(spark, event_dir)
+    stream = spark.readStream.schema(spark.read.parquet(event_dir).schema).parquet(
+        event_dir
+    )
     # streaming forbids exact distinct aggregates — the live form carries the
     # supported columns; the batch twin's n_users is checked by its oracle.
     enriched = (
@@ -131,7 +87,7 @@ def test_stream_static_enrichment_matches_batch(spark, sf_dir, event_dir):
     )
     got = {
         tuple(r)
-        for r in windows.run_to_memory(enriched, "enrich_test", output_mode="complete")
+        for r in stateful.run_to_memory(enriched, "enrich_test", output_mode="complete")
         .orderBy("c_mktsegment", "event_type")
         .collect()
     }
@@ -158,7 +114,8 @@ def test_checkpoint_recovery_no_double_count(spark, sf_dir, tmp_path):
 
     def run_once():
         q = (
-            windows.read_event_stream(spark, src)
+            spark.readStream.schema(ev.schema)
+            .parquet(src)
             .writeStream.format("parquet")
             .option("path", out)
             .option("checkpointLocation", ckpt)
@@ -178,98 +135,6 @@ def test_checkpoint_recovery_no_double_count(spark, sf_dir, tmp_path):
     half2.write.mode("append").parquet(src)
     run_once()
     assert spark.read.parquet(out).count() == ev.count()
-
-
-def test_stream_incremental_load_skips_existing_partitions(spark, sf_dir, tmp_path):
-    """T5 streaming form: a replayed stream (same files seen twice, no
-    checkpoint) must not duplicate partitions already loaded."""
-    from etl_lala_spark.sinks import writer as w
-
-    src = str(tmp_path / "src")
-    table = str(tmp_path / "table")
-    ev = load_events(spark, sf_dir).withColumn(
-        "competencia", F.date_format("ts", "yyyyMM")
-    )
-    ev.write.mode("overwrite").parquet(src)
-
-    def run():
-        stream = (
-            spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
-        )
-        q = w.stream_incremental(stream, table)
-        q.awaitTermination(120)
-        q.stop()
-
-    run()
-    n1 = spark.read.parquet(table).count()
-    assert n1 == ev.count()
-    # no checkpoint: the second run re-reads every file, but the partition
-    # skip-list makes the reload a no-op
-    run()
-    assert spark.read.parquet(table).count() == n1
-
-
-def test_transform_with_state_progress_matches_legacy(spark, event_dir):
-    """The Spark 4 transformWithState form agrees with the
-    applyInPandasWithState form on the same input: same per-user stride
-    rows, same final totals.
-
-    transformWithState's driver worker imports protobuf at runtime; this
-    environment ships no google.protobuf, so the agreement check only runs
-    where the dependency exists (the processor itself is plain pandas)."""
-    pytest.importorskip("google.protobuf.descriptor")
-    from etl_lala_spark.streaming import tws
-
-    stream = windows.read_event_stream(spark, event_dir)
-    new_rows = windows.run_to_memory(
-        tws.attach_progress_tws(stream), "t_progress_tws"
-    ).collect()
-    legacy_rows = windows.run_to_memory(
-        stateful.attach_progress(windows.read_event_stream(spark, event_dir)),
-        "t_progress_legacy",
-    ).collect()
-    key = lambda r: (r["user_id"], r["emitted"])
-    new_set = {(r["user_id"], r["total_events"], r["total_value"], r["emitted"]) for r in new_rows}
-    legacy_set = {
-        (r["user_id"], r["total_events"], r["total_value"], r["emitted"]) for r in legacy_rows
-    }
-    assert len(new_rows) > 0
-    assert new_set == legacy_set
-
-
-def test_stream_stream_interval_join_matches_batch(spark, sf_dir, event_dir):
-    """Stream-stream watermarked interval join produces exactly the batch
-    join's pairs (availableNow processes everything, so no rows are lost to
-    the watermark in this bounded run)."""
-    views_s = windows.read_event_stream(spark, event_dir).filter(
-        F.col("event_type") == "view"
-    )
-    clicks_s = windows.read_event_stream(spark, event_dir).filter(
-        F.col("event_type") == "click"
-    )
-    got = windows.run_to_memory(
-        windows.stream_stream_interval_join(views_s, clicks_s), "t_ssjoin"
-    )
-    stream_pairs = {(r["view_id"], r["click_id"]) for r in got.collect()}
-
-    ev = load_events(spark, sf_dir)
-    v = ev.filter(F.col("event_type") == "view").select(
-        F.col("user_id").alias("vu"), F.col("ts").alias("vts"), F.col("event_id").alias("vid")
-    )
-    c = ev.filter(F.col("event_type") == "click").select(
-        F.col("user_id").alias("cu"), F.col("ts").alias("cts"), F.col("event_id").alias("cid")
-    )
-    batch_pairs = {
-        (r["vid"], r["cid"])
-        for r in v.join(
-            c,
-            (F.col("vu") == F.col("cu"))
-            & (F.col("cts") >= F.col("vts"))
-            & (F.col("cts") <= F.col("vts") + F.expr("interval 10 minutes")),
-        ).collect()
-    }
-    assert len(batch_pairs) > 0
-    assert stream_pairs == batch_pairs
 
 
 def test_stream_scd2_merges_batches_and_replay_is_noop(spark, tmp_path):
@@ -378,26 +243,6 @@ def test_dbc_streaming_source_incremental_and_recovery(spark, tmp_path):
         q2.stop()
 
 
-def test_streaming_dedup_bounded_state_collapses_replay(spark, event_dir):
-    """`dropDuplicatesWithinWatermark` — the bounded-state dedup (state
-    evicted as the watermark passes, O(window) not O(all keys)) — collapses
-    replayed files exactly like the unbounded-state form when duplicates
-    arrive within the watermark horizon."""
-    dup_dir = os.path.join(TMP, "events_dup_bounded")
-    shutil.rmtree(dup_dir, ignore_errors=True)
-    os.makedirs(dup_dir)
-    for f in os.listdir(event_dir):
-        if f.endswith(".parquet"):
-            shutil.copy(os.path.join(event_dir, f), os.path.join(dup_dir, "a_" + f))
-            shutil.copy(os.path.join(event_dir, f), os.path.join(dup_dir, "b_" + f))
-    stream = windows.read_event_stream(spark, dup_dir)
-    deduped = windows.run_to_memory(
-        windows.dedup_stream_bounded(stream).select("event_id"), "t_dedup_bounded"
-    )
-    n_unique = spark.read.parquet(event_dir).select("event_id").distinct().count()
-    assert deduped.count() == n_unique
-
-
 def test_stream_dedup_ingest_only_novel_docs(spark, sf_dir, tmp_path):
     """Dedup-on-ingest (exact dedup ∘ T5): across micro-batches only
     never-seen content is appended, and a full replay of the stream (no
@@ -497,103 +342,6 @@ def test_stream_ivf_index_incremental_and_pruned_search(spark, sf_dir, tmp_path)
     )._jdf.queryExecution().executedPlan().toString()
     scan = plan[plan.index("Scan parquet") :]
     assert "dynamicpruningexpression" in scan  # unprobed cells never read
-
-
-def test_streaming_ewma_matches_batch(spark, sf_dir, tmp_path):
-    """The bounded-state streaming EWMA (two scalars per key) agrees exactly
-    with the batch ordered-array fold when batches arrive in time order."""
-    from etl_lala_spark.io import load_events
-    from etl_lala_spark.plans import query_fns
-    from etl_lala_spark.streaming import stateful
-
-    ev = load_events(spark, sf_dir)
-    # Two time-ordered files: all of file1's events precede file2's.
-    mid = ev.selectExpr("percentile(cast(ts as double), 0.5) AS m").first().m
-    early = ev.where(F.col("ts").cast("double") <= mid)
-    late = ev.where(F.col("ts").cast("double") > mid)
-    src = str(tmp_path / "ewma_src")
-    early.write.mode("overwrite").parquet(src + "/b1")
-    late.write.mode("overwrite").parquet(src + "/b2")
-
-    out = str(tmp_path / "ewma_out")
-    stream = (
-        spark.readStream.schema(early.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src + "/b*")
-    )
-    q = (
-        stateful.attach_ewma(stream)
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", str(tmp_path / "ewma_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    q.stop()
-
-    got_rows = spark.read.parquet(out).collect()
-    # keep the final emission per user (largest n_events)
-    final = {}
-    for r in got_rows:
-        if r.user_id not in final or r.n_events > final[r.user_id][0]:
-            final[r.user_id] = (r.n_events, round(r.ewma_value, 6))
-    want = {
-        r.user_id: (r.n_events, r.ewma_value)
-        for r in query_fns()["events_ewma_smoothing"](spark, sf_dir).collect()
-    }
-    assert final == want
-
-
-def test_transform_with_state_ewma_matches_legacy(spark, event_dir):
-    """The transformWithState EWMA twin agrees with the
-    applyInPandasWithState form: same final per-user (n, smoothed value).
-    Self-skips where google.protobuf (the tws driver-worker dependency) is
-    absent — the processor itself is plain pandas."""
-    pytest.importorskip("google.protobuf.descriptor")
-    from etl_lala_spark.streaming import tws
-
-    def finals(rows):
-        out = {}
-        for r in rows:
-            if r["user_id"] not in out or r["n_events"] > out[r["user_id"]][0]:
-                out[r["user_id"]] = (r["n_events"], round(r["ewma_value"], 6))
-        return out
-
-    new = finals(
-        windows.run_to_memory(
-            tws.attach_ewma_tws(windows.read_event_stream(spark, event_dir)),
-            "t_ewma_tws",
-        ).collect()
-    )
-    legacy = finals(
-        windows.run_to_memory(
-            stateful.attach_ewma(windows.read_event_stream(spark, event_dir)),
-            "t_ewma_legacy",
-        ).collect()
-    )
-    assert len(new) > 0 and new == legacy
-
-
-def test_live_leaderboard_matches_batch(spark, sf_dir, event_dir):
-    """Complete-mode top-k: the streamed leaderboard equals the batch
-    ranking (sorting is legal only because complete mode re-emits the whole
-    result each trigger)."""
-    got = [
-        tuple(r)
-        for r in windows.run_to_memory(
-            windows.live_leaderboard(windows.read_event_stream(spark, event_dir)),
-            "t_leaderboard",
-            output_mode="complete",
-        )
-        .orderBy(F.col("n_events").desc(), "event_type")
-        .collect()
-    ]
-    want = [
-        tuple(r)
-        for r in windows.live_leaderboard(load_events(spark, sf_dir)).collect()
-    ]
-    assert got == want and len(got) > 0
 
 
 def test_ivf_index_compaction_preserves_search(spark, sf_dir, tmp_path):
@@ -712,61 +460,6 @@ def test_dbc_stream_permissive_corrupt_arrival(spark, tmp_path):
     bad = [r for r in rows if r["_error"] is not None]
     assert good == ["1", "2", "3"]
     assert len(bad) == 1 and bad[0]["arquivo_origem"] == "ZBAD"
-
-
-def test_stream_neardup_ingest_blocks_history_dups_and_replay(spark, sf_dir, tmp_path):
-    """Near-dup-on-ingest: batch 2's disguised copies of batch-1 documents
-    (text + 3 appended tokens, jaccard ≈ 0.95) are blocked by band
-    collisions against the persistent index — without re-scanning batch 1's
-    text — while genuinely novel documents land; a full replay inserts
-    nothing."""
-    from etl_lala_spark.io import load_table
-    from etl_lala_spark.sinks import writer as w
-
-    src = str(tmp_path / "src")
-    table = str(tmp_path / "table")
-    band_idx = str(tmp_path / "bands")
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    b1 = docs.filter(F.col("doc_id") < 60)
-    b1.write.mode("overwrite").parquet(src)
-
-    def run():
-        q = w.stream_neardup_ingest(
-            spark.readStream.schema(docs.schema).parquet(src), table, band_idx
-        )
-        q.awaitTermination(120)
-        q.stop()
-
-    run()
-    n1 = spark.read.parquet(table).count()
-    assert 0 < n1 <= 60  # within-batch LSH dedup may trim exact dups
-
-    # batch 2: novel docs 60..99 + near-dup copies of docs < 50
-    novel = docs.filter((F.col("doc_id") >= 60) & (F.col("doc_id") < 100))
-    copies = (
-        docs.filter(F.col("doc_id") < 50)
-        .select(
-            (F.col("doc_id") + 100000).alias("doc_id"),
-            F.concat(F.col("text"), F.lit(" xq zz qq")).alias("text"),
-        )
-    )
-    n_copies = copies.count()
-    novel.unionByName(copies).write.mode("append").parquet(src)
-    run()
-    got = spark.read.parquet(table)
-    landed_copies = got.filter(F.col("doc_id") >= 100000).count()
-    # ≈0.9999 per-pair recall at j≈0.95 with 8×4 banding
-    assert landed_copies <= 0.1 * n_copies, (landed_copies, n_copies)
-    # genuinely novel docs land (minus any true near-dups among them)
-    landed_novel = got.filter((F.col("doc_id") >= 60) & (F.col("doc_id") < 100)).count()
-    assert landed_novel >= 35
-    n2 = got.count()
-
-    # replay: nothing new, no duplicate band rows
-    run()
-    assert spark.read.parquet(table).count() == n2
-    bands_df = spark.read.parquet(band_idx)
-    assert bands_df.count() == bands_df.dropDuplicates(["doc", "band"]).count()
 
 
 def test_stream_versioned_append_exactly_once(spark, tmp_path):
