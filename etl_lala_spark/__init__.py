@@ -19,7 +19,8 @@ Package layout
 - ``functions/`` scalar function surface (reference §2.8)
 - ``operators/`` relational extensions (as-of/range join, top-k), dedup,
                  similarity search, text analysis, multimodal columns
-- ``streaming/`` event-time windows, watermark, stateful ops (reference §2.9)
+- ``streaming/`` the stride-progress ``applyInPandasWithState`` operator and
+                 the memory-sink driver the stream twins run on (reference §2.9)
 - ``plans/``     the named-query registry: every operator exposed as a
                  (spark, sf_dir) -> DataFrame callable with a DuckDB oracle
 """

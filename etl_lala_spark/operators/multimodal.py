@@ -89,6 +89,7 @@ def decode_png(data: bytes) -> tuple[int, int, int, bytes]:
     a PIL/turbojpeg kernel drops into at 100 TB.
     """
     import struct as _struct
+    import sys as _sys
     import zlib as _zlib
 
     if data[:8] != b"\x89PNG\r\n\x1a\n":
@@ -121,9 +122,12 @@ def decode_png(data: bytes) -> tuple[int, int, int, bytes]:
     if width < 0 or not idat:
         raise ValueError("PNG missing IHDR or IDAT")
     # IHDR fixes the inflated size, so the inflate stops one byte past it:
-    # a decompression bomb costs expected + 1 bytes, not its full output
+    # a decompression bomb costs expected + 1 bytes, not its full output.
+    # zlib's max_length is a C ssize_t, and no real image comes near it.
     stride = width * channels
     expected = (stride + 1) * height
+    if expected >= _sys.maxsize:
+        raise ValueError("PNG pixel payload size mismatch")
     inflater = _zlib.decompressobj()
     raw = inflater.decompress(idat, expected + 1)
     if len(raw) != expected or inflater.unconsumed_tail or not inflater.eof:

@@ -243,7 +243,9 @@ def test_png_idat_bomb_is_an_error_row(spark, monkeypatch):
     """A valid IHDR over an IDAT that inflates to 64 MB: the inflate stops
     one byte past the size IHDR fixes, so the decode never holds more than
     expected + 1 output bytes, raises the size-mismatch ValueError, and the
-    image operator turns the row into its NULL error row."""
+    image operator turns the row into its NULL error row. An IHDR at the
+    format's 2^31-1 maximum, whose size overflows zlib's output bound, is
+    the same error row."""
     import struct
     import zlib
 
@@ -284,13 +286,25 @@ def test_png_idat_bomb_is_an_error_row(spark, monkeypatch):
     monkeypatch.undo()
     assert held == [(expected + 1, expected + 1)]
 
+    side = 2**31 - 1
+    huge = (
+        b"\x89PNG\r\n\x1a\n"
+        + chunk(b"IHDR", struct.pack(">IIBBBBB", side, side, 8, 6, 0, 0, 0))
+        + chunk(b"IDAT", zlib.compress(bytes(16)))
+        + chunk(b"IEND", b"")
+    )
+    with pytest.raises(ValueError, match="pixel payload size mismatch"):
+        mm.decode_png(huge)
+
     good = mm.encode_png(w, h, bytes(range(w * h * 3)), channels=3)
     df = spark.createDataFrame(
-        [(1, bytearray(good)), (2, bytearray(bomb))], "doc_id long, media binary"
+        [(1, bytearray(good)), (2, bytearray(bomb)), (3, bytearray(huge))],
+        "doc_id long, media binary",
     )
     rows = {r["doc_id"]: r for r in mm.image_resize(df, 2, 2).collect()}
     assert rows[1]["width"] == 2 and rows[1]["pixels"] is not None
-    assert rows[2]["width"] is None and rows[2]["pixels"] is None
+    for bad in (2, 3):
+        assert rows[bad]["width"] is None and rows[bad]["pixels"] is None
 
 
 def test_spread_is_noop_when_parallel_enough(spark, sf_dir):

@@ -1004,7 +1004,11 @@ def test_every_engine_definition_is_reached():
     ``tools/``, ``perfbench/``, ``bench.py``, ``__spark_entry__.py`` or
     ``plan_audit.py``. A query registered with ``@register`` is reached
     through the registry. Code that only tests call is dead weight: delete
-    it with its tests, or name it in REACHED_FROM_OUTSIDE with a reason."""
+    it with its tests, or name it in REACHED_FROM_OUTSIDE with a reason.
+
+    "Named" is textual: a whole-word mention in a docstring, comment or
+    string of another definition counts too, so this catches code nothing
+    mentions, not every definition that no code calls."""
     import ast
     import pathlib
     import re

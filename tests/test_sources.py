@@ -938,8 +938,9 @@ def test_warc_extract_members_offsets_and_http_split(spark):
 
 def test_warc_extract_permissive_errors_and_cap(spark):
     """R5 convention at the web layer: a truncated gzip member, a malformed
-    version line, and an over-cap Content-Length each become ONE structured
-    error row; good files are unaffected; strict mode raises."""
+    version line, an over-cap Content-Length and a NULL content cell each
+    become ONE structured error row; good files are unaffected; strict mode
+    raises."""
     import pandas as pd
 
     from etl_lala_spark.sources import warc as w
@@ -965,8 +966,9 @@ def test_warc_extract_permissive_errors_and_cap(spark):
                     "mem://trunc.warc.gz",
                     "mem://badver.warc.gz",
                     "mem://big.warc.gz",
+                    "mem://null.warc.gz",
                 ],
-                "content": [good, truncated, bad_version, big],
+                "content": [good, truncated, bad_version, big, None],
             }
         )
     )
@@ -989,6 +991,8 @@ def test_warc_extract_permissive_errors_and_cap(spark):
     (bg,) = by_file["mem://big.warc.gz"]
     assert "> cap 200" in bg["_error"] and bg["payload"] is None
     assert bg["target_uri"] == "http://example.com/big"  # headers survive
+    (nl,) = by_file["mem://null.warc.gz"]  # a NULL content cell is a file error
+    assert nl["_error"].startswith("TypeError") and nl["record_index"] is None
 
     import pytest as _pytest
 
