@@ -414,45 +414,20 @@ def _fold_bits(vote_col) -> Column:
     return out
 
 
-def simhash64(text: Column) -> Column:
-    """64-bit SimHash from token hashes, as a single per-row expression: bit i
-    of the fingerprint is the sign of sum(±1 over tokens, + if token-hash bit
-    i set).
-
-    Zero-shuffle but SLOW on wide corpora: the 64 `aggregate` folds are
-    higher-order-function lambdas, which Spark evaluates interpreted (outside
-    whole-stage codegen) — 64 passes over the token array per row. Prefer
-    ``simhash_fingerprints`` (explode + one codegen'd aggregation) anywhere
-    the corpus is non-trivial; this form remains for per-row contexts
-    (e.g. streaming expressions) where a groupBy is unavailable.
-    """
-    toks = F.array_distinct(tokens(text))
-    hashes = F.transform(toks, lambda t: F.xxhash64(t))
-
-    def bit_vote(i: int):
-        return lambda acc, h: acc + F.when(
-            F.shiftright(h, i).bitwiseAND(F.lit(1)) == 1, 1
-        ).otherwise(-1)
-
-    def vote(i: int):
-        return F.aggregate(hashes, F.lit(0), bit_vote(i))
-
-    return _fold_bits(vote)
-
-
 def simhash_fingerprints(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
-    """(doc, fp) SimHash-64 fingerprints via explode + one hash aggregation.
+    """(doc, fp) SimHash-64 fingerprints via explode + one hash aggregation:
+    bit i of the fingerprint is the sign of sum(±1 over distinct tokens, +
+    if token-hash bit i set).
 
-    Same fingerprint values as ``simhash64`` but the 64 bit-votes are 64
-    conditional-sum aggregate columns over exploded token hashes — a single
-    whole-stage-codegen pass per token instead of 64 interpreted array folds
-    per doc (measured ~10× faster at sf0.1). The explode is partitioned by
-    doc id (``spread``), so the partial aggregation collapses map-side and
-    the exchange moves one 64-long vote row per doc — constant per-doc state
-    at 100 TB. ``explode_outer`` keeps empty/short docs (fp = 0, matching the
-    per-row form's empty-array fold).
+    The 64 bit-votes are 64 conditional-sum aggregate columns over exploded
+    token hashes — a single whole-stage-codegen pass per token instead of
+    64 interpreted array folds per doc (measured ~10× faster at sf0.1). The
+    explode is partitioned by doc id (``spread``), so the partial
+    aggregation collapses map-side and the exchange moves one 64-long vote
+    row per doc — constant per-doc state at 100 TB. ``explode_outer`` keeps
+    empty/short docs (fp = 0: no token casts a vote).
     """
     from etl_lala_spark.io import spread
 
@@ -976,15 +951,14 @@ def minhash_index_append(
     :func:`minhash_incremental_pairs`, then append the survivors so
     TOMORROW's batch dedups against them too). Shingles only the batch;
     parameters come from the store's meta file, so appended signatures are
-    comparable with stored ones by construction. Replay-safe like
-    ``stream_ivf_index``: the batch left-joins on doc id against the
-    store's (doc, sig) columns (a thin, column-pruned scan), so an
-    at-least-once redelivery of UNCHANGED content appends nothing — and a
-    redelivered doc id whose TEXT changed (stored signature differs from
-    the batch's) raises ``ValueError`` instead of silently keeping the
-    stale signature: content updates must go through
-    :func:`minhash_index_delete` + append. Returns the number of docs
-    appended.
+    comparable with stored ones by construction. Replay-safe: the batch
+    left-joins on doc id against the store's (doc, sig) columns (a thin,
+    column-pruned scan), so an at-least-once redelivery of UNCHANGED
+    content appends nothing — and a redelivered doc id whose TEXT changed
+    (stored signature differs from the batch's) raises ``ValueError``
+    instead of silently keeping the stale signature: content updates must
+    go through :func:`minhash_index_delete` + append. Returns the number
+    of docs appended.
 
     Scale: O(batch) shingling + one id anti-join against a column-pruned
     scan of sigs; appends land as new files in existing partitions —

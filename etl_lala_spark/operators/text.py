@@ -136,14 +136,14 @@ def word_bigrams(text: Column) -> Column:
     )
 
 
-def _gram_run_stats(grams: Column) -> Column:
+def gram_run_stats(grams: Column) -> Column:
     """struct(best = longest equal run, dist = distinct count) of a gram
     array, via ONE fold over its sorted form — both Gopher repetition
-    signals from a single O(d log d) pass (the sort), where computing
-    them separately paid the sort AND an `array_distinct` hash pass over
-    the same array (r13; measured ~0.6 s of the sf0.1 coverage row).
-    Sharing this subtree also lets codegen's common-subexpression
-    elimination fold the two public fractions below into one evaluation.
+    signals (duplicate n-gram fraction = 1 - dist/size, top n-gram
+    coverage = best/size) from a single O(d log d) pass (the sort), where
+    computing them separately paid the sort AND an `array_distinct` hash
+    pass over the same array (r13; measured ~0.6 s of the sf0.1 coverage
+    row). Within-row only — no shuffle, runs in codegen at scan speed.
     Contract: gram ELEMENTS must be non-null (word n-grams are — concat_ws
     never yields NULL); the NULL `prev` seed makes the first element open
     a run without a sentinel value colliding with a real gram."""
@@ -166,36 +166,6 @@ def _gram_run_stats(grams: Column) -> Column:
             ).alias("dist"),
         ),
         lambda a: F.struct(a.best.alias("best"), a.dist.alias("dist")),
-    )
-
-
-def dup_gram_fraction(grams: Column) -> Column:
-    """Fraction of n-gram occurrences that repeat an earlier occurrence in
-    the same document (Gopher-style `duplicate n-gram fraction` repetition
-    signal). Within-row only — no shuffle, runs in codegen at scan speed.
-    The distinct count comes from the shared sorted-array fold
-    (:func:`_gram_run_stats` — boundary count of the sorted array equals
-    `size(array_distinct(...))` exactly for non-null elements).
-    NULL for an empty gram array (a sub-2-token doc has no bigrams, so the
-    fraction is undefined) — the unguarded division is a DIVIDE_BY_ZERO
-    job abort under Spark 4's default ANSI mode."""
-    return F.when(
-        F.size(grams) > 0,
-        F.lit(1.0)
-        - _gram_run_stats(grams)["dist"].cast("double") / F.size(grams),
-    )
-
-
-def top_gram_fraction(grams: Column) -> Column:
-    """Occurrences of the single most frequent n-gram over total n-grams
-    (Gopher's `top n-gram coverage`). Computed within-row as the longest
-    equal run of the sorted gram array (shared fold, see
-    :func:`_gram_run_stats`) — O(d log d) per doc, no per-gram groupBy,
-    no shuffle; the fold lambda never re-touches the gram array."""
-    # Same empty-array guard as dup_gram_fraction: NULL, not a crash.
-    return F.when(
-        F.size(grams) > 0,
-        _gram_run_stats(grams)["best"].cast("double") / F.size(grams),
     )
 
 
@@ -750,87 +720,11 @@ def unigram_lm_train(
     return {
         "vocab": vocab,
         "vocab_budget": vocab_size,
-        # Recorded so unigram_apply segments with the SAME window the
-        # model was trained with — a caller-supplied mismatch would make
-        # long trained pieces silently unselectable at apply time.
-        "max_piece_len": max_piece_len,
         "ll_per_iter": ll_per_iter,
         "chars": chars,
         "recon_violations": recon_viol,
         "pieces_char_total": pieces_char_total,
     }
-
-
-def unigram_apply(
-    df,
-    model: dict,
-    text_col: str = "text",
-    max_piece_len: int | None = None,
-):
-    """Tokenize a corpus with a trained unigram-LM model (the deploy half
-    of `unigram_lm_train`, mirroring `bpe_apply`): per document, Viterbi-
-    segment each whitespace word under the trained piece probabilities and
-    emit the piece sequence plus its length.
-
-    Narrow `mapInPandas` — the piece log-probs ride in the task closure
-    (O(vocab) bytes), no shuffle, no corpus rescan. Returns the input
-    columns plus ``pieces`` (\\x01-joined) and ``n_pieces``; a word that
-    the vocab cannot segment (impossible when the model seeded all its
-    characters) falls back to its raw characters."""
-    import math
-
-    import pandas as pd
-
-    import re
-
-    # The segmentation window defaults to what the model was TRAINED with
-    # (recorded by unigram_lm_train) — an independent default here would
-    # silently diverge train and apply whenever training used a non-default
-    # max_piece_len, making long trained pieces unselectable. An explicit
-    # caller override still wins; legacy models without the key fall back
-    # to the longest vocab piece (exactly sufficient).
-    if max_piece_len is None:
-        max_piece_len = model.get("max_piece_len") or max(
-            (len(v["piece"]) for v in model["vocab"]), default=4
-        )
-    logp = {
-        v["piece"]: math.log(v["prob"])
-        for v in model["vocab"]
-        if v["prob"] > 0.0
-    }
-    char_fallback = {c: math.log(1e-12) for c in model.get("chars", [])}
-    # Built ONCE — the fallback path previously rebuilt this O(vocab) dict
-    # per unsegmentable word inside the hot mapInPandas loop.
-    fallback_logp = {**char_fallback, **logp}
-    schema = ", ".join(f"{c} {t}" for c, t in df.dtypes) + ", pieces string, n_pieces long"
-    # Same word boundaries as training: Java's \s is ASCII-only, so the
-    # Python side must NOT use str.split() (Unicode whitespace — NBSP etc.
-    # would silently diverge train and apply on non-ASCII corpora).
-    ws = re.compile(r"[ \t\n\x0b\f\r]+")
-
-    def tok(batches):
-        for pdf in batches:
-            pieces_col = []
-            n_col = []
-            for t in pdf[text_col]:
-                out = []
-                for w in ws.split(t or ""):
-                    if not w:
-                        continue
-                    seg, _ = _viterbi_segment(w, logp, max_piece_len)
-                    if seg is None:
-                        seg, _ = _viterbi_segment(w, fallback_logp, max_piece_len)
-                        if seg is None:
-                            seg = list(w)
-                    out.extend(seg)
-                pieces_col.append("\x01".join(out))
-                n_col.append(len(out))
-            pdf = pdf.copy()
-            pdf["pieces"] = pieces_col
-            pdf["n_pieces"] = n_col
-            yield pdf
-
-    return df.mapInPandas(tok, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -1181,20 +1075,20 @@ def wordpiece_greedy_apply(
     unk: str = "[UNK]",
 ):
     """Greedy longest-match-first subword segmentation — BERT WordPiece's
-    INFERENCE algorithm (Devlin et al. 2019; the deploy half next to
-    ``unigram_apply``'s Viterbi form): per whitespace word, repeatedly take
-    the LONGEST vocabulary piece that prefixes the remaining suffix;
-    continuation pieces are emitted with the conventional ``##`` marker
-    (presentational only — matching is against the plain piece, so any
-    piece vocabulary works, including one trained by ``unigram_lm_train``
-    or ``wordpiece_train``). A word with an unmatchable position becomes
-    ONE ``unk`` token (the whole word, BERT's behavior) — impossible when
-    the vocab contains every character of the corpus.
+    INFERENCE algorithm (Devlin et al. 2019): per whitespace word,
+    repeatedly take the LONGEST vocabulary piece that prefixes the
+    remaining suffix; continuation pieces are emitted with the
+    conventional ``##`` marker (presentational only — matching is against
+    the plain piece, so any piece vocabulary works, including one trained
+    by ``unigram_lm_train`` or ``wordpiece_train``). A word with an
+    unmatchable position becomes ONE ``unk`` token (the whole word, BERT's
+    behavior) — impossible when the vocab contains every character of the
+    corpus.
 
     Narrow ``mapInPandas``: the vocab rides in the task closure (O(vocab)
-    bytes), no shuffle, no corpus rescan — the same 100 TB shape as
-    ``unigram_apply``; greedy is O(|word| × max_piece_len) per word with
-    no DP table, which is why it is the standard serving-time tokenizer.
+    bytes), no shuffle, no corpus rescan; greedy is O(|word| ×
+    max_piece_len) per word with no DP table, which is why it is the
+    standard serving-time tokenizer.
     Returns the input columns plus ``pieces`` (\\x01-joined, ##-marked)
     and ``n_pieces``."""
     import re

@@ -357,13 +357,13 @@ def render_dbc_fixtures(
     n_rows: int,
 ) -> str:
     """Shared "ordered lineitem rows -> .dbc fixture files" builder for the
-    three DBC gates (roundtrip, DataSource, limit pushdown): collect the
-    first ``n_rows`` lineitem rows in (l_orderkey, l_linenumber) order,
-    project them to the requested DATASUS column set, and render each
-    ``(basename, lo, hi)`` slice as one ``.dbc`` under the gate's
-    session-scoped workdir. Bounded driver collect (fixture generation,
-    not an operator path); call inside ``fixture_region(gate)`` so the
-    bench excludes the render time."""
+    DBC gates (roundtrip, provenance pruning, limit pushdown, permissive
+    errors): collect the first ``n_rows`` lineitem rows in (l_orderkey,
+    l_linenumber) order, project them to the requested DATASUS column set,
+    and render each ``(basename, lo, hi)`` slice as one ``.dbc`` under the
+    gate's session-scoped workdir. Bounded driver collect (fixture
+    generation, not an operator path); call inside
+    ``fixture_region(gate)`` so the bench excludes the render time."""
     import os
 
     from etl_lala_spark.plans._gates import gate_workdir
@@ -393,6 +393,15 @@ def render_dbc_fixtures(
         with open(os.path.join(fixture_dir, name + ".dbc"), "wb") as fh:
             fh.write(dbf_to_dbc(write_dbf(dbf_cols, rows[lo:hi])))
     return fixture_dir
+
+
+def dbc_members(spark: SparkSession, fixture_dir: str) -> DataFrame:
+    """The fixture directory as ``read_dbc`` input: one (member_basename,
+    content) row per file."""
+    return spark.read.format("binaryFile").load(fixture_dir).select(
+        F.element_at(F.split("path", "/"), -1).alias("member_basename"),
+        "content",
+    )
 
 
 @register(
@@ -434,15 +443,7 @@ def datasus_dbc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             ["AP_CONDIC", "AP_VL_TOTAL"], [("PAPE2501", 0, 200)], n_rows=200,
         )
 
-    members = (
-        spark.read.format("binaryFile")
-        .load(fixture_dir)
-        .select(
-            F.element_at(F.split("path", "/"), -1).alias("member_basename"),
-            "content",
-        )
-    )
-    records = read_dbc(members)
+    records = read_dbc(dbc_members(spark, fixture_dir))
     return (
         records.groupBy(F.col("AP_CONDIC").alias("condic"))
         .agg(
@@ -472,18 +473,18 @@ ORDER BY 2
 """,
 )
 def datasus_dbc_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S8 as a first-class Spark 4 Python DataSource
-    (``spark.read.format("dbc")``, SURVEY.md §4 "optionally a DSv2 source
-    later"): 200 deterministic lineitem rows are split across two ``.dbc``
-    files (two competências), and the query reads the format with an
-    equality predicate on the ``arquivo_origem`` provenance column — Spark
-    4.1 ``pushFilters`` prunes the second file at planning time, so only
-    file 1 is ever decompressed. The oracle recomputes the same aggregate
-    from the first 100 lineitem rows directly, pinning schema inference,
-    the implode codec, partition planning, and the pruning logic under the
-    hash gate."""
+    """S8 with provenance pruning: 200 deterministic lineitem rows are
+    split across two ``.dbc`` files (two competências), and the query
+    keeps one competência with an equality predicate on ``read_dbc``'s
+    ``arquivo_origem`` provenance column. The column is a function of the
+    member name alone and the decode UDF is deterministic, so Catalyst
+    pushes the predicate below the ``inline`` to the ``binaryFile`` scan
+    and the second file is never exploded. The oracle recomputes the same
+    aggregate from the first 100 lineitem rows directly, pinning schema
+    inference, the implode codec and the pruned read under the hash
+    gate."""
     from etl_lala_spark.plans._gates import fixture_region
-    from etl_lala_spark.sources.dbc_datasource import register_dbc_source
+    from etl_lala_spark.sources.dbc import read_dbc
 
     with fixture_region("datasus_dbc_source"):
         fixture_dir = render_dbc_fixtures(
@@ -492,11 +493,8 @@ def datasus_dbc_source(spark: SparkSession, sf_dir: str) -> DataFrame:
             [("PAPE2501", 0, 100), ("PAPE2502", 100, 200)], n_rows=200,
         )
 
-    register_dbc_source(spark)
-    records = (
-        spark.read.format("dbc")
-        .load(fixture_dir)
-        .filter(F.col("arquivo_origem") == "PAPE2501")
+    records = read_dbc(dbc_members(spark, fixture_dir)).filter(
+        F.col("arquivo_origem") == "PAPE2501"
     )
     return (
         records.groupBy("arquivo_origem", F.col("AP_CONDIC").alias("condic"))

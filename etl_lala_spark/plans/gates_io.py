@@ -266,7 +266,7 @@ def dbc_limit_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     source — the difference between sampling a 100 TB archive collection
     and decoding it."""
     from etl_lala_spark.plans._gates import fixture_region
-    from etl_lala_spark.plans.datasus import render_dbc_fixtures
+    from etl_lala_spark.plans.datasus import dbc_members, render_dbc_fixtures
     from etl_lala_spark.sources.dbc import read_dbc
 
     # Session-scoped gate workdir like the sibling gates (shared builder in
@@ -280,15 +280,7 @@ def dbc_limit_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
             [("PAPE2501", 0, 120), ("PAPE2502", 120, 150)], n_rows=150,
         )
 
-    members = (
-        spark.read.format("binaryFile")
-        .load(fixture_dir)
-        .select(
-            F.element_at(F.split("path", "/"), -1).alias("member_basename"),
-            "content",
-        )
-    )
-    records = read_dbc(members, limit=50)
+    records = read_dbc(dbc_members(spark, fixture_dir), limit=50)
     return (
         records.groupBy("arquivo_origem")
         .agg(
@@ -681,7 +673,7 @@ def dbc_permissive_errors(spark: SparkSession, sf_dir: str) -> DataFrame:
     closed form; a decoder that drops good rows after an error, double-
     emits error rows, or dies on garbage lands on a different hash."""
     from etl_lala_spark.plans._gates import fixture_region
-    from etl_lala_spark.plans.datasus import render_dbc_fixtures
+    from etl_lala_spark.plans.datasus import dbc_members, render_dbc_fixtures
     from etl_lala_spark.sources.dbc import read_dbc
 
     with fixture_region("dbc_permissive_errors"):
@@ -705,15 +697,9 @@ def dbc_permissive_errors(spark: SparkSession, sf_dir: str) -> DataFrame:
             hl = struct.unpack("<H", dbf[8:10])[0]
             fh.write(dbf[:hl] + b"\x00\x00\x00\x00" + b"\xff" * 32)
 
-    members = (
-        spark.read.format("binaryFile")
-        .load(fixture_dir)
-        .select(
-            F.element_at(F.split("path", "/"), -1).alias("member_basename"),
-            "content",
-        )
+    records = read_dbc(
+        dbc_members(spark, fixture_dir), columns=["AP_VL_TOTAL"], mode="PERMISSIVE"
     )
-    records = read_dbc(members, columns=["AP_VL_TOTAL"], mode="PERMISSIVE")
     return (
         records.groupBy("arquivo_origem")
         .agg(

@@ -836,8 +836,7 @@ def contrastive_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows (hard positives) — the pairs a margin/InfoNCE loss learns most
     from. Exact cosine, broadcast anchor cohort, one corpus scan, no
     corpus shuffle (see operators/similarity.py:hard_negative_mine for the
-    100 TB argument; anchor cohorts too big to broadcast route through
-    hard_negative_mine_ivf)."""
+    100 TB argument)."""
     emb = load_table(spark, sf_dir, "embeddings")
     anchors = emb.filter((F.col("vec_id") % 20 == 0) & (F.col("vec_id") < 400))
     return sim.hard_negative_mine(emb, anchors, k=3).orderBy(

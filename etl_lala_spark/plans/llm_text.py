@@ -1094,9 +1094,9 @@ def text_dup_ngram_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     and top-bigram coverage (share taken by the doc's single most frequent
     bigram), with a count of docs above the 0.2 duplicate cut.
 
-    Both signals are WITHIN-ROW codegen expressions
-    (`operators/text.py:dup_gram_fraction` / `top_gram_fraction` — the top
-    fraction folds the sorted gram array instead of a per-gram groupBy), so
+    Both signals are WITHIN-ROW codegen expressions from one fold of the
+    sorted gram array (`operators/text.py:gram_run_stats`, instead of a
+    per-gram groupBy), so
     unlike the oracle's explode+group formulation the corpus never shuffles:
     one scan, one per-source partial+final agg. The oracle re-derives the
     same numbers relationally to pin the arithmetic."""
@@ -1109,18 +1109,16 @@ def text_dup_ngram_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.filter(F.split("text", r"\s+"), lambda t: t != F.lit(""))
     )
     # Both repetition signals from ONE sorted-array fold, shared via an
-    # explicit intermediate projection (r13): the two public fraction
-    # helpers each build their own fold and codegen does NOT merge the
-    # twin aggregate subtrees (measured 1.88 s vs 0.97 s on this row) —
+    # explicit intermediate projection (r13): two folds, one per signal,
+    # are not merged by codegen (measured 1.88 s vs 0.97 s on this row) —
     # materializing struct + size once per row halves the per-row work.
-    # Same arithmetic bit-for-bit: boundary count of the sorted array ==
-    # size(array_distinct(...)), identical guards and divisions.
+    # Boundary count of the sorted array == size(array_distinct(...)).
     per_doc = (
         d.filter(real_toks >= 2)
         .select(
             "source",
             F.size(grams).alias("ng"),
-            tx._gram_run_stats(grams).alias("st"),
+            tx.gram_run_stats(grams).alias("st"),
         )
         .select(
             "source",

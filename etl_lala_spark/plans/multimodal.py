@@ -123,7 +123,7 @@ def multimodal_sniff(spark: SparkSession, sf_dir: str) -> DataFrame:
     sniffed back by the pure-Python header parser over Arrow batches — the
     oracle recomputes the expected metadata arithmetically, so a parser that
     misreads any field hash-mismatches. This is the manifest/partition plane
-    of a media pipeline (full pixel decode stays behind decode_image)."""
+    of a media pipeline (full pixel decode stays behind decode_pixels)."""
     import struct
 
     def render(doc_id: int) -> list[tuple]:

@@ -690,8 +690,7 @@ def diag_key_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shuffle-key skew diagnostic over orders.o_custkey (the key every
     customer join hashes on): hottest keys, their row share, and their
     multiple of the uniform expectation — the pre-flight check that decides
-    between a plain shuffle join, AQE skew splitting, and salting
-    (operators/relational.py:salted_join)."""
+    between a plain shuffle join, AQE skew splitting, and salting."""
     from etl_lala_spark.operators.relational import key_skew_profile
 
     return key_skew_profile(

@@ -77,7 +77,7 @@ def table_versions(table_path: str) -> list[dict]:
     out = []
     # Numeric order, not lexicographic: past v999999 the zero-padded name
     # grows a digit and '1000000.json' would sort BEFORE '999999.json',
-    # freezing latest_version and wedging every writer's CAS forever.
+    # freezing the latest version and wedging every writer's CAS forever.
     names = [
         n for n in os.listdir(vdir)
         if n.endswith(".json") and n[:-5].isdigit()
@@ -89,11 +89,6 @@ def table_versions(table_path: str) -> list[dict]:
         except (OSError, ValueError):
             continue  # torn write of an in-flight manifest: not committed
     return out
-
-
-def latest_version(table_path: str) -> int | None:
-    vs = table_versions(table_path)
-    return vs[-1]["version"] if vs else None
 
 
 def _commit(table_path: str, manifest: dict) -> int:
@@ -221,10 +216,7 @@ def write_version(
     retrying the CAS with a stale snapshot that would drop the rival's
     rows. Read-modify-write callers (merge/compact) must pass it.
     ``partition_col``: track this commit's distinct partition values in
-    the manifest (``parts``/``dir_rows``), enabling manifest-level
-    partition pruning (``read_partition``) and atomic partition reloads
-    (``replace_partition``) — the reference's per-competência reload
-    (src/datasus/datasus.service.ts:15-39) done as one atomic commit.
+    the manifest (``parts``/``dir_rows``).
     Returns the committed version id.
     """
     if mode not in ("overwrite", "append"):
@@ -252,8 +244,7 @@ def write_version(
             pcol = partition_col
         # Reserved keys win on collision for EVERY commit shape: the
         # partition trio must not survive from `extra` on an untracked
-        # commit, or read_partition/replace_partition would treat the
-        # table as tracked with bogus parts and prune wrongly.
+        # commit, or the table would read as tracked with bogus parts.
         reserved = (
             "version", "op", "dirs", "n_rows", "schema", "ts",
             "partition_col", "parts", "dir_rows",
@@ -441,157 +432,6 @@ def read_version(
     # month-over-month column additions, SURVEY §1.3); the union schema is
     # the snapshot's schema, with missing columns null-filled per dir.
     return spark.read.option("mergeSchema", "true").parquet(*paths)
-
-
-def replace_partition(
-    spark: SparkSession,
-    table_path: str,
-    df: DataFrame,
-    values: list,
-    partition_col: str | None = None,
-) -> int:
-    """Atomically replace one (or several) partition values of the latest
-    snapshot with ``df``'s rows — the versioned-log form of
-    ``replaceWhere``, and the exact upgrade of the reference's competência
-    reload, which DELETEs a month then re-INSERTs it in place and lets a
-    racing reader see half a table (src/datasus/datasus.service.ts:15-39).
-    Here the reload is ONE commit: readers see the old month or the new
-    month, never neither, and a bad feed is one ``rollback`` away.
-
-    Requires the table to be partition-tracked (written with
-    ``partition_col=``). Directories whose tracked values don't intersect
-    ``values`` are carried over untouched (pure metadata); directories that
-    mix affected and unaffected values are read once and their residue
-    rewritten alongside the new data — so a month-per-commit load pattern
-    replaces a month WITHOUT rewriting any other month's bytes, the same
-    file-level pruning a Delta replaceWhere does. Rows of ``df`` outside
-    ``values`` are dropped (the replaceWhere contract). Read-modify-write
-    conflict detection via ``expected_base`` re-derives on a racing commit.
-
-    Scale: cost = new partition bytes + residue of mixed dirs only;
-    untouched partitions move as manifest strings, never data."""
-    from pyspark.sql import functions as F
-
-    values_s = sorted({str(v) for v in values})
-    if not values_s:
-        raise ValueError("replace_partition requires at least one value")
-    for _ in range(20):
-        vs = table_versions(table_path)
-        if not vs:
-            raise FileNotFoundError(f"no committed versions at {table_path}")
-        m = vs[-1]
-        tracked = m.get("partition_col")
-        if partition_col and tracked and partition_col != tracked:
-            # a mismatched column would intersect against the WRONG value
-            # set: nothing matches, old rows are kept, df appends — silent
-            # duplication instead of replacement
-            raise ValueError(
-                f"replace_partition partition_col {partition_col!r} != "
-                f"table's tracked {tracked!r}"
-            )
-        pcol = partition_col or tracked
-        if not pcol or not m.get("parts"):
-            raise ValueError(
-                f"{table_path} is not partition-tracked; write versions with "
-                "partition_col= to enable replace_partition"
-            )
-        parts: dict = m["parts"]
-        dir_rows: dict = m.get("dir_rows") or {}
-        vset = set(values_s)
-        affected = [
-            d for d in m["dirs"]
-            if parts.get(d) is None or set(parts[d]) & vset
-        ]
-        kept = [d for d in m["dirs"] if d not in affected]
-        new_data = df.filter(F.col(pcol).cast("string").isin(values_s))
-        if affected:
-            residue = (
-                spark.read.option("mergeSchema", "true")
-                .parquet(*[os.path.join(table_path, d) for d in affected])
-                .filter(~F.col(pcol).cast("string").isin(values_s))
-            )
-            combined = residue.unionByName(new_data, allowMissingColumns=True)
-        else:
-            combined = new_data
-        staging, n_new, vals = _stage(combined, table_path, pcol)
-
-        def build(prev: list[dict], version: int, ddir_name: str) -> dict:
-            new_parts = {d: parts.get(d) for d in kept}
-            new_parts[ddir_name] = vals
-            new_dir_rows = {d: dir_rows[d] for d in kept if d in dir_rows}
-            new_dir_rows[ddir_name] = n_new
-            kept_rows = sum(dir_rows.get(d, 0) for d in kept)
-            return {
-                "version": version,
-                "op": f"replace:{pcol}={','.join(values_s)}",
-                "dirs": kept + [ddir_name],
-                "n_rows": kept_rows + n_new,
-                "schema": combined.schema.simpleString(),
-                "ts": time.time(),
-                "partition_col": pcol,
-                "parts": new_parts,
-                "dir_rows": new_dir_rows,
-            }
-
-        try:
-            return _publish(table_path, staging, m["version"], build)
-        except ConcurrentCommitError:
-            continue  # table advanced: recompute affected set and residue
-    raise RuntimeError(
-        f"replace_partition: lost the commit race 20 times at {table_path}"
-    )
-
-
-def read_partition(
-    spark: SparkSession,
-    table_path: str,
-    values: list,
-    version: int | None = None,
-    partition_col: str | None = None,
-) -> DataFrame:
-    """Partition-pruned snapshot read: resolve the manifest, keep ONLY the
-    data directories whose tracked partition values intersect ``values``
-    (directories with unknown tracking are conservatively included), and
-    filter the remainder. The pruning decision is made from manifest
-    metadata on the driver — at 100 TB a one-month read lists one month's
-    directories, not the table's."""
-    from pyspark.sql import functions as F
-
-    vs = table_versions(table_path)
-    if not vs:
-        raise FileNotFoundError(f"no committed versions at {table_path}")
-    by_id = {m["version"]: m for m in vs}
-    if version is not None and version not in by_id:
-        raise ValueError(
-            f"version {version} not found at {table_path} (committed: "
-            f"{sorted(by_id)}; earlier versions may have been vacuumed)"
-        )
-    m = by_id[version] if version is not None else vs[-1]
-    tracked = m.get("partition_col")
-    if partition_col and tracked and partition_col != tracked:
-        # pruning against the wrong tracked value set silently returns
-        # empty/incomplete results — refuse loudly instead
-        raise ValueError(
-            f"read_partition partition_col {partition_col!r} != table's "
-            f"tracked {tracked!r}"
-        )
-    pcol = partition_col or tracked
-    if not pcol:
-        raise ValueError(f"{table_path} is not partition-tracked")
-    values_s = {str(v) for v in values}
-    parts = m.get("parts") or {}
-    dirs = [
-        d for d in m["dirs"]
-        if parts.get(d) is None or set(parts[d]) & values_s
-    ]
-    pred = F.col(pcol).cast("string").isin(sorted(values_s))
-    if not dirs:
-        # no directory holds these values: empty result at snapshot schema
-        return read_version(spark, table_path, version=m["version"]).filter(
-            F.lit(False)
-        )
-    paths = [os.path.join(table_path, d) for d in dirs]
-    return spark.read.option("mergeSchema", "true").parquet(*paths).filter(pred)
 
 
 def rollback(table_path: str, to_version: int) -> int:

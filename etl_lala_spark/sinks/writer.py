@@ -208,50 +208,6 @@ def write_json_with_manifest(
     return manifest
 
 
-def stream_dedup_ingest(
-    stream_df: DataFrame,
-    table_path: str,
-    content_col: str = "text",
-    fp_col: str = "_fp",
-    checkpoint: str | None = None,
-):
-    """Dedup-on-ingest: append only documents whose content fingerprint has
-    never been seen — the "only ingest novel data" composition of exact
-    dedup with the idempotent incremental load (T5), the shape every
-    continuously-crawled training corpus runs.
-
-    Each micro-batch: fingerprint (md5 of content), collapse within-batch
-    duplicates, LEFT ANTI join against the fingerprints already IN the
-    table, append survivors. Storing the fingerprint as a column of the
-    data table itself (rather than a side index) makes the append atomic —
-    a replayed batch anti-joins against its own previous write and inserts
-    nothing, so at-least-once delivery is effectively-once with NO
-    two-store commit problem. The per-batch anti-join reads only the
-    fingerprint column (parquet column pruning) and broadcasts the batch
-    side when small; at 100 TB the same contract is served by a bucketed
-    fingerprint index maintained by compaction, with this scan-based form
-    as its correctness oracle. Returns the started StreamingQuery."""
-
-    def ingest(batch_df: DataFrame, batch_id: int) -> None:
-        import os
-
-        spark = batch_df.sparkSession
-        fresh = batch_df.withColumn(fp_col, F.md5(F.col(content_col))).dropDuplicates(
-            [fp_col]
-        )
-        if os.path.isdir(table_path) and any(
-            f.endswith(".parquet") for f in os.listdir(table_path)
-        ):
-            seen = spark.read.parquet(table_path).select(fp_col)
-            fresh = fresh.join(seen, fp_col, "left_anti")
-        fresh.write.mode("append").parquet(table_path)
-
-    writer = stream_df.writeStream.foreachBatch(ingest).trigger(availableNow=True)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
-
-
 def stream_scd2(
     stream_updates: DataFrame,
     table_path: str,
@@ -567,110 +523,6 @@ def maintain_summary(
     if checkpoint:
         w = w.option("checkpointLocation", checkpoint)
     return w.start()
-
-
-def stream_ivf_index(
-    stream_vecs: DataFrame,
-    index_path: str,
-    codebook: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    checkpoint: str | None = None,
-):
-    """Incremental ANN index maintenance — the production layout behind
-    `ann_cosine_ivf` (SCALE.md: "corpus written partitioned by cell"), kept
-    fresh by streaming.
-
-    Each micro-batch of vectors is coarse-quantized against the FIXED
-    broadcast codebook (`operators.similarity.ivf_assign`, a narrow map) and
-    appended to a parquet index partitioned by cell — so a query probing
-    nprobe cells reads nprobe/n_cells of the data via partition pruning
-    (`ivf_index_search`). Replay-safe like `stream_dedup_ingest`: the batch
-    anti-joins on id against the index itself (reads only the id column),
-    so at-least-once delivery is effectively-once with no side ledger. The
-    codebook must stay fixed once the index exists — re-clustering is a
-    rebuild (standard IVF contract). Returns the started StreamingQuery.
-    """
-    from etl_lala_spark.operators.similarity import ivf_assign
-
-    def ingest(batch_df: DataFrame, batch_id: int) -> None:
-        from etl_lala_spark.operators.similarity import norm
-
-        spark = batch_df.sparkSession
-        # The row norm is part of the index (one extra double per vector):
-        # search then scores each candidate with a single dot product
-        # instead of re-folding the vector norm per (query, candidate).
-        assigned = ivf_assign(
-            batch_df.dropDuplicates([id_col]),
-            codebook,
-            1,
-            id_col=id_col,
-            vec_col=vec_col,
-        ).withColumn("_norm", norm(F.col(vec_col)))
-        if os.path.isdir(index_path) and any(
-            not e.startswith("_") for e in os.listdir(index_path)
-        ):
-            seen = spark.read.parquet(index_path).select(id_col)
-            assigned = assigned.join(seen, id_col, "left_anti")
-        assigned.write.mode("append").partitionBy("cell").parquet(index_path)
-
-    w = stream_vecs.writeStream.foreachBatch(ingest).trigger(availableNow=True)
-    if checkpoint:
-        w = w.option("checkpointLocation", checkpoint)
-    return w.start()
-
-
-def ivf_index_search(
-    spark: SparkSession,
-    index_path: str,
-    queries: DataFrame,
-    codebook: DataFrame,
-    k: int = 5,
-    nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_digits: int = 4,
-) -> DataFrame:
-    """Route queries against a cell-partitioned IVF index: assign each query
-    to its nprobe nearest cells, then join on the index's PARTITION column —
-    Spark prunes every unprobed cell directory at planning time (asserted in
-    tests via the scan's PartitionFilters), so scan cost is
-    nprobe/n_cells of the index regardless of corpus size.
-    Returns (query_id, neighbor_id, cos_sim, rank).
-    """
-    from pyspark.sql import Window as W
-
-    from etl_lala_spark.operators.similarity import dot, ivf_assign, norm
-
-    raw = spark.read.parquet(index_path)
-    stored_norm = (
-        F.col("_norm") if "_norm" in raw.columns else norm(F.col(vec_col))
-    )
-    idx = raw.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        stored_norm.alias("c_n"),
-        "cell",
-    )
-    q = ivf_assign(queries, codebook, nprobe, id_col=id_col, vec_col=vec_col).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        norm(F.col(vec_col)).alias("q_n"),
-        "cell",
-    )
-    sim = F.round(
-        dot(F.col("q_vec"), F.col("c_vec")) / (F.col("q_n") * F.col("c_n")),
-        round_digits,
-    )
-    # No dedup: the index stores each vector in exactly one cell, so the
-    # routed join cannot produce a (query, neighbor) pair twice.
-    scored = (
-        idx.join(F.broadcast(q), "cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", sim.alias("cos_sim"))
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), "neighbor_id")
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
 def delete_rows(

@@ -3,17 +3,15 @@
 The reference ships each `.dbc` (PKWare-compressed DBF) to an external Python
 service that runs dbc2dbf + dbfread and streams records back
 (OTIMIZACAO_API_PYTHON.md:190-207,270-287). Here the decode runs *inside* the
-engine, in the JVM: :func:`read_dbc` and :func:`read_dbf` are a Java UDF per
-``binaryFile`` row (``jvm/DbcCodec.java``: PKWare DCL explode + dBase III
-record split, compiled at first use by Spark's bundled Janino, see
+engine, in the JVM: :func:`read_dbc`, the engine's one DBC reader, is a Java
+UDF per ``binaryFile`` row (``jvm/DbcCodec.java``: PKWare DCL explode +
+dBase III record split, compiled at first use by Spark's bundled Janino, see
 :mod:`etl_lala_spark.sources._jvm`) plus ``inline`` — no Python worker
 between the scan and the sink, and no third-party dependency.
 
 The Python codec in this module and :mod:`etl_lala_spark.sources.implode`
-stays as the fixture writer (:func:`write_dbf`, :func:`dbf_to_dbc`), the
-codec of the ``spark.read.format("dbc")`` DataSource (whose API runs in
-Python workers by design), and the reference the JVM codec is tested
-against (tests/test_jvm_codec.py).
+stays as the fixture writer (:func:`write_dbf`, :func:`dbf_to_dbc`) and the
+reference the JVM codec is tested against (tests/test_jvm_codec.py).
 
 Record data model matches the reference: every value stringified, latin1
 decoding, column names discovered from the file header (SURVEY.md §1.2).
@@ -44,37 +42,20 @@ def parse_dbf_header(data: bytes) -> list[str]:
     return names
 
 
-def parse_dbf(
-    data: bytes,
-    limit: int | None = None,
-    project: list[str] | None = None,
-) -> tuple[list[str], list[list[str]]]:
-    """Decode DBF bytes → (column names, rows of stringified latin1 values).
-
-    Mirrors the reference converter's semantics: ``str(value)`` for every
-    field (DIAGNOSTICO_TAMANHO_JSON.md:246-252), latin1 encoding
-    (OTIMIZACAO_API_PYTHON.md:202), deleted rows (0x2A flag) skipped, and
-    optional record-limit pushdown (S9, OTIMIZACAO_API_PYTHON.md:62-76).
-
-    ``project`` is projection pushdown into the decoder: only the named
-    fields are sliced/decoded (field offsets come from the header, so
-    non-projected bytes are skipped, never touched). Returned columns keep
-    file order. On a 92-column DATASUS file a 3-column projection does
-    ~1/30th of the per-record Python work — the custom-source analog of
-    Parquet column pruning.
-    """
-    names, cols = parse_dbf_columns(data, limit=limit, project=project)
-    return names, [list(t) for t in zip(*cols)]
-
-
 def parse_dbf_columns(
     data: bytes,
     limit: int | None = None,
     project: list[str] | None = None,
 ) -> tuple[list[str], list[list[str]]]:
-    """Columnar variant of :func:`parse_dbf`: returns (names, one value list
-    per column) — the natural shape for building Arrow RecordBatches, so
-    the DataSource read path skips the rows→columns re-transpose entirely.
+    """Decode DBF bytes → (column names, one value list per column), every
+    value stringified.
+
+    Mirrors the reference converter's semantics: ``str(value)`` for every
+    field (DIAGNOSTICO_TAMANHO_JSON.md:246-252), latin1 encoding
+    (OTIMIZACAO_API_PYTHON.md:202), deleted rows (0x2A flag) skipped, and
+    optional record-limit pushdown (S9, OTIMIZACAO_API_PYTHON.md:62-76).
+    ``project`` decodes only the named fields; returned columns keep file
+    order. This is the reference the JVM codec's split is tested against.
 
     Deleted-row filtering and row gathering run in numpy (one reshape +
     boolean mask over the record matrix); each column then decodes its
@@ -132,8 +113,8 @@ def dbc_to_dbf(data: bytes) -> bytes:
     a 4-byte CRC32, followed by the record section compressed with PKWare
     DCL implode — decoded here by the pure-Python
     :mod:`etl_lala_spark.sources.implode` codec, replacing the reference's
-    external converter service (OTIMIZACAO_API_PYTHON.md:190-207). The
-    DataFrame read path runs the JVM port of this function.
+    external converter service (OTIMIZACAO_API_PYTHON.md:190-207).
+    :func:`read_dbc` runs the JVM port of this function.
     """
     if len(data) < 12:
         raise ValueError("not a .dbc: shorter than a DBF header prefix")
@@ -164,64 +145,6 @@ def infer_dbf_columns(binaries: DataFrame, content_col: str = "content") -> list
     return [] if head is None else parse_dbf_header(head)
 
 
-def _decode_records(
-    binaries: DataFrame,
-    content_col: str,
-    name_col: str,
-    limit: int | None,
-    columns: list[str] | None,
-    project: list[str] | None,
-    *,
-    dbc: bool,
-    permissive: bool,
-) -> DataFrame:
-    """The shared body of :func:`read_dbf` and :func:`read_dbc`: the JVM
-    codec's ``Records`` UDF yields one struct per kept record, with fields
-    positional so duplicate DBF names keep their own values, and ``inline``
-    turns them into rows. The codec builds the plan in one py4j call; the
-    name lists travel as JSON, one argument whatever their length."""
-    cols = columns if columns is not None else infer_dbf_columns(binaries, content_col)
-    if project is not None:
-        cols = [c for c in cols if c in project]
-    spark = binaries.sparkSession
-    jdf = codec(spark).records(
-        binaries._jdf,
-        name_col,
-        content_col,
-        dbc,
-        _NO_LIMIT if limit is None else limit,
-        json.dumps(None if project is None else list(project)),
-        json.dumps(cols),
-        permissive,
-    )
-    return DataFrame(jdf, spark)
-
-
-def read_dbf(
-    binaries: DataFrame,
-    content_col: str = "content",
-    name_col: str = "member_basename",
-    limit: int | None = None,
-    columns: list[str] | None = None,
-    project: list[str] | None = None,
-) -> DataFrame:
-    """Decode DBF binary rows into an all-string record table with
-    ``arquivo_origem`` provenance (reference record shape,
-    ESTRUTURA_DADOS_PROCESSADOS.md:80-109).
-
-    Column list is discovered from the data unless supplied; files whose
-    header disagrees raise inside the task (fail-fast, like the reference's
-    ``sucesso !== true`` guard). ``project`` pushes column pruning into the
-    per-record decoder (see ``parse_dbf``); the output schema keeps the
-    projected fields in file order. The split runs in the JVM codec, with
-    :func:`parse_dbf_columns` as its reference.
-    """
-    return _decode_records(
-        binaries, content_col, name_col, limit, columns, project,
-        dbc=False, permissive=False,
-    )
-
-
 def read_dbc(
     binaries: DataFrame,
     content_col: str = "content",
@@ -232,7 +155,10 @@ def read_dbc(
     mode: str = "FAILFAST",
 ) -> DataFrame:
     """S8 end-to-end: decode ``.dbc`` binary rows (implode-compressed DBF)
-    into the all-string record table. Schema discovery needs no
+    into the all-string record table, one column per DBF field (positional,
+    so duplicate DBF names keep their own values) plus ``arquivo_origem``,
+    the member name without its extension (reference record shape,
+    ESTRUTURA_DADOS_PROCESSADOS.md:80-109). Schema discovery needs no
     decompression — the DBF header is stored verbatim at the front of a
     ``.dbc`` — and the per-file explode + record split runs distributed in
     the JVM codec (:mod:`etl_lala_spark.sources._jvm`), one UDF call per
@@ -253,15 +179,27 @@ def read_dbc(
     container and column checks)."""
     if mode not in ("FAILFAST", "PERMISSIVE"):
         raise ValueError(f"unknown mode {mode}")
-    return _decode_records(
-        binaries, content_col, name_col, limit, columns, project,
-        dbc=True, permissive=mode == "PERMISSIVE",
+    cols = columns if columns is not None else infer_dbf_columns(binaries, content_col)
+    if project is not None:
+        cols = [c for c in cols if c in project]
+    # The codec builds the plan in one py4j call; the name lists travel as
+    # JSON, one argument whatever their length.
+    spark = binaries.sparkSession
+    jdf = codec(spark).records(
+        binaries._jdf,
+        name_col,
+        content_col,
+        _NO_LIMIT if limit is None else limit,
+        json.dumps(None if project is None else list(project)),
+        json.dumps(cols),
+        mode == "PERMISSIVE",
     )
+    return DataFrame(jdf, spark)
 
 
 def write_dbf(columns: list[str], rows: list[list[str]], field_len: int = 20) -> bytes:
     """Produce minimal dBase III bytes (test fixture generator — the inverse
-    of parse_dbf; character fields only, latin1)."""
+    of parse_dbf_columns; character fields only, latin1)."""
     n, hlen = len(rows), 32 + 32 * len(columns) + 1
     rlen = 1 + field_len * len(columns)
     out = bytearray()

@@ -10,11 +10,10 @@ flag bit, canonical Huffman tables stored as nibble-packed run lengths with
 inverted code bits, length codes with base+extra tables where decoded length
 519 terminates the stream, and a 4/5/6-bit dictionary).
 
-No third-party codec is required. The DataFrame read path
+No third-party codec is required. The engine's one DBC reader
 (``dbc.read_dbc``) runs a JVM port of :func:`decompress`
 (``jvm/DbcCodec.java``); this module is the reference that port is tested
-against byte for byte, the codec of the ``dbc`` Python DataSource, and the
-fixture encoder.
+against byte for byte, and the fixture encoder.
 
 The encoder side below emits *literal-only* streams (valid implode output
 that never uses matches) — enough to build round-trip test fixtures; the

@@ -387,21 +387,19 @@ public class DbcCodec {
     }
 
     /**
-     * (member name, DBF or DBC bytes) to an array of
+     * (member name, DBC bytes) to an array of
      * {@code struct<_c0..._cN string, _e string>} rows. Under
      * {@code permissive} a failed file becomes one row of NULL fields with
      * {@code _e} set to {@code "<Class>: <message cut to 100 chars>"};
      * otherwise the failure is raised.
      */
     public static class Records extends Codec {
-        private final boolean dbc;
         private final int limit;
         private final String[] project;
         private final String[] expected;
         private final boolean permissive;
 
-        public Records(boolean dbc, int limit, String[] project, String[] expected, boolean permissive) {
-            this.dbc = dbc;
+        public Records(int limit, String[] project, String[] expected, boolean permissive) {
             this.limit = limit;
             this.project = project;
             this.expected = expected;
@@ -419,11 +417,8 @@ public class DbcCodec {
         public Object call(Object name, Object content) throws Exception {
             byte[] blob = (byte[]) content;
             try {
-                if (dbc) {
-                    Explode dbf = dbcToDbf(blob);
-                    return split(dbf.out, dbf.outLen, (String) name, limit, project, expected);
-                }
-                return split(blob, blob.length, (String) name, limit, project, expected);
+                Explode dbf = dbcToDbf(blob);
+                return split(dbf.out, dbf.outLen, (String) name, limit, project, expected);
             } catch (RuntimeException ex) {
                 if (!permissive) {
                     throw failFast(ex);
@@ -941,14 +936,14 @@ public class DbcCodec {
     }
 
     /**
-     * read_dbc / read_dbf: the Records UDF per file, exploded, its
+     * read_dbc: the Records UDF per file, exploded, its
      * positional fields renamed to {@code columns} (JSON), then
      * arquivo_origem and, under permissive, _decode_error.
      */
-    public Dataset records(Dataset binaries, String nameCol, String contentCol, boolean dbc, int limit,
+    public Dataset records(Dataset binaries, String nameCol, String contentCol, int limit,
                            String project, String columns, boolean permissive) throws IOException {
         String[] cols = names(columns);
-        Column records = new Records(dbc, limit, names(project), cols, permissive).udf()
+        Column records = new Records(limit, names(project), cols, permissive).udf()
             .apply(new Column[] {col(nameCol), col(contentCol)});
         Column origem = functions.regexp_replace(col(nameCol), "\\.[^.]*\\z", ""); // rsplit(".", 1)[0]
         Dataset split = binaries.select(new Column[] {origem.alias("_o"), functions.inline(records)});

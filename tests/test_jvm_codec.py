@@ -153,9 +153,10 @@ def test_explode_corrupt_inputs_match_python(spark):
 
 def _jvm_split(spark, data: bytes, limit=None, project=None) -> tuple[list, list]:
     df = spark.createDataFrame(
-        [("T.dbf", bytearray(data))], "member_basename string, content binary"
+        [("T.dbc", bytearray(dbc.dbf_to_dbc(data)))],
+        "member_basename string, content binary",
     )
-    got = dbc.read_dbf(
+    got = dbc.read_dbc(
         df, columns=dbc.parse_dbf_header(data), limit=limit, project=project
     )
     names = got.columns[:-1]

@@ -205,9 +205,9 @@ def test_multimodal_decode_stub_and_plumbing(spark, sf_dir):
     # bytes raise ValueError from the real decoder, and only formats with
     # no in-repo codec keep the NotImplementedError seam.
     with pytest.raises(ValueError):
-        mm.decode_image(b"\xff\xd8\xff\xe0 truncated jpeg, no SOF/SOS")
+        mm.decode_pixels(b"\xff\xd8\xff\xe0 truncated jpeg, no SOF/SOS")
     with pytest.raises(NotImplementedError):
-        mm.decode_image(b"BM no bitmap codec in this environment")
+        mm.decode_pixels(b"BM no bitmap codec in this environment")
 
 
 def test_png_codec_roundtrip_all_filters():
@@ -221,7 +221,7 @@ def test_png_codec_roundtrip_all_filters():
     dw, dh, dc, recon = mm.decode_png(png)
     assert (dw, dh, dc) == (w, h, 3)
     assert recon == pixels
-    assert mm.decode_image(png) == (w, h, 3)
+    assert mm.decode_pixels(png) == (w, h, 3, pixels)
 
     gray = bytes((5 * i) % 256 for i in range(w * h))
     dw, dh, dc, recon = mm.decode_png(mm.encode_png(w, h, gray, channels=1))
@@ -243,9 +243,9 @@ def test_png_idat_bomb_is_an_error_row(spark, monkeypatch):
     """A valid IHDR over an IDAT that inflates to 64 MB: the inflate stops
     one byte past the size IHDR fixes, so the decode never holds more than
     expected + 1 output bytes, raises the size-mismatch ValueError, and the
-    image operator turns the row into its NULL error row. An IHDR at the
-    format's 2^31-1 maximum, whose size overflows zlib's output bound, is
-    the same error row."""
+    image operator turns the row into its NULL error row. An IHDR over the
+    MAX_PIXELS cap (30000 x 30000 RGBA, or the format's 2^31-1 maximum)
+    is rejected before anything is inflated, and is the same error row."""
     import struct
     import zlib
 
@@ -286,25 +286,64 @@ def test_png_idat_bomb_is_an_error_row(spark, monkeypatch):
     monkeypatch.undo()
     assert held == [(expected + 1, expected + 1)]
 
-    side = 2**31 - 1
-    huge = (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", struct.pack(">IIBBBBB", side, side, 8, 6, 0, 0, 0))
-        + chunk(b"IDAT", zlib.compress(bytes(16)))
-        + chunk(b"IEND", b"")
-    )
-    with pytest.raises(ValueError, match="pixel payload size mismatch"):
-        mm.decode_png(huge)
+    def declared(side: int) -> bytes:
+        return (
+            b"\x89PNG\r\n\x1a\n"
+            + chunk(b"IHDR", struct.pack(">IIBBBBB", side, side, 8, 6, 0, 0, 0))
+            + chunk(b"IDAT", zlib.compress(bytes(16)))
+            + chunk(b"IEND", b"")
+        )
+
+    huge, largest = declared(30000), declared(2**31 - 1)
+    held.clear()
+    monkeypatch.setattr(zlib, "decompressobj", Recording)
+    for png in (huge, largest):
+        with pytest.raises(ValueError, match="exceeds"):
+            mm.decode_png(png)
+    monkeypatch.undo()
+    assert held == []
 
     good = mm.encode_png(w, h, bytes(range(w * h * 3)), channels=3)
     df = spark.createDataFrame(
-        [(1, bytearray(good)), (2, bytearray(bomb)), (3, bytearray(huge))],
+        [(1, bytearray(good)), (2, bytearray(bomb)), (3, bytearray(huge)),
+         (4, bytearray(largest))],
         "doc_id long, media binary",
     )
     rows = {r["doc_id"]: r for r in mm.image_resize(df, 2, 2).collect()}
     assert rows[1]["width"] == 2 and rows[1]["pixels"] is not None
+    for bad in (2, 3, 4):
+        assert rows[bad]["width"] is None and rows[bad]["pixels"] is None
+
+
+def test_gif_lzw_overrun_is_an_error_row(spark):
+    """A GIF whose LZW stream expands past its image descriptor's iw*ih
+    stops decoding there with a ValueError, and a descriptor over the
+    MAX_PIXELS cap is rejected before any LZW data is read; both are
+    NULL rows from the image operators."""
+    import struct
+
+    pal = [(0, 0, 0), (255, 255, 255)]
+    overrun = mm.encode_gif(2, 2, pal, [0, 1] * 5000)
+    with pytest.raises(ValueError, match="expands past 4 pixels"):
+        mm.decode_gif(overrun)
+    good = mm.encode_gif(2, 2, pal, [0, 1, 1, 0])
+    # the image descriptor's width and height sit 5 bytes after its ','
+    at = good.index(b",", 13) + 5
+    huge = good[:at] + struct.pack("<HH", 65535, 65535) + good[at + 4 :]
+    with pytest.raises(ValueError, match="exceeds"):
+        mm.decode_gif(huge)
+
+    df = spark.createDataFrame(
+        [(1, bytearray(good)), (2, bytearray(overrun)), (3, bytearray(huge))],
+        "doc_id long, media binary",
+    )
+    rows = {r["doc_id"]: r for r in mm.image_resize(df, 1, 1).collect()}
+    assert rows[1]["width"] == 1 and rows[1]["pixels"] is not None
     for bad in (2, 3):
         assert rows[bad]["width"] is None and rows[bad]["pixels"] is None
+    augmented = {r["doc_id"]: r for r in mm.image_augment(df, crop=(0, 0, 1, 1)).collect()}
+    assert augmented[1]["pixels"] is not None
+    assert augmented[2]["pixels"] is None and augmented[3]["pixels"] is None
 
 
 def test_spread_is_noop_when_parallel_enough(spark, sf_dir):
@@ -429,29 +468,6 @@ def test_approx_aggs_bounded_error(spark, sf_dir):
     for r in rows:
         rel_err = abs(r["approx_parts"] - exact[r["l_returnflag"]]) / exact[r["l_returnflag"]]
         assert rel_err < 0.1, (r["l_returnflag"], rel_err)
-
-
-def test_salted_join_matches_plain_join(spark, sf_dir):
-    """Salting must not change join semantics — same multiset of rows."""
-    from etl_lala_spark.operators import relational as rel
-
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
-    o = load_table(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("l_orderkey"), "o_totalprice"
-    )
-    plain = li.join(o, "l_orderkey")
-    salted = rel.salted_join(li, o, "l_orderkey", n_salts=8)
-    assert salted.count() == plain.count()
-    assert (
-        salted.groupBy("l_orderkey").count()
-        .exceptAll(plain.groupBy("l_orderkey").count())
-        .count() == 0
-    )
-    # left join with unmatched keys keeps them
-    li_extra = li.withColumn("l_orderkey", F.col("l_orderkey") + 10_000_000)
-    left = rel.salted_join(li_extra, o, "l_orderkey", n_salts=4, how="left")
-    assert left.count() == li_extra.count()
-    assert left.filter(F.col("o_totalprice").isNotNull()).count() == 0
 
 
 def test_canonical_components_transitive_closure(spark, sf_dir):
@@ -726,23 +742,20 @@ def test_repeated_block_dedup_removes_planted_boilerplate(spark):
 def test_dup_and_top_gram_fractions_known_values(spark):
     from pyspark.sql import functions as F
 
-    from etl_lala_spark.operators.text import (
-        dup_gram_fraction,
-        top_gram_fraction,
-        word_bigrams,
-    )
+    from etl_lala_spark.operators.text import gram_run_stats, word_bigrams
 
     # "a b a b a" → bigrams [a b, b a, a b, b a]: 4 total, 2 distinct →
     # dup 0.5; top gram "a b" covers 2/4 → 0.5.
     # "x y z" → bigrams [x y, y z]: dup 0, top 0.5.
     df = spark.createDataFrame([(1, "a b a b a"), (2, "x y z")], "id long, t string")
     g = word_bigrams(F.col("t"))
+    st = gram_run_stats(g)
     out = {
         r["id"]: r
         for r in df.select(
             "id",
-            dup_gram_fraction(g).alias("dup"),
-            top_gram_fraction(g).alias("top"),
+            (1.0 - st["dist"] / F.size(g)).alias("dup"),
+            (st["best"] / F.size(g)).alias("top"),
         ).collect()
     }
     assert out[1]["dup"] == 0.5 and out[1]["top"] == 0.5
@@ -1370,13 +1383,13 @@ def test_jpeg_decoder_rejects_non_baseline_explicitly():
 
 
 def test_jpeg_decode_image_and_frame_decode_wiring(spark):
-    """decode_image routes JPEG to the real decoder, and
+    """decode_pixels routes JPEG to the real decoder, and
     mjpeg_frame_decode degrades undecodable frames to NULL-stats rows
     instead of failing the task."""
     from etl_lala_spark.operators.jpeg import encode_jpeg
 
     jpg = encode_jpeg(24, 16, bytes([78]) * (24 * 16), channels=1, quality=50)
-    assert mm.decode_image(jpg) == (24, 16, 1)
+    assert mm.decode_pixels(jpg)[:3] == (24, 16, 1)
 
     avi = mm.encode_avi_mjpeg(24, 16, 10, [jpg, b"not-a-jpeg-frame"])
     df = spark.createDataFrame([(5, bytearray(avi))], "doc_id long, data binary")
@@ -1934,26 +1947,6 @@ def test_hard_negative_mine_labels_and_ranks(spark):
     assert all(r["neighbor_id"] != 0 for r in out)
 
 
-def test_unigram_apply_conserves_chars_and_matches_training(spark):
-    """Applying the trained model must reproduce the training E-step's
-    exact char-conservation law on the same corpus: the concatenated
-    pieces of every doc equal the doc's words, and the corpus-wide piece
-    char total equals the trainer's."""
-    from etl_lala_spark.operators.text import unigram_apply, unigram_lm_train
-
-    rows = [(i, ("wxyz" * (i % 3 + 1)) + " qq kj") for i in range(30)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    model = unigram_lm_train(df, vocab_size=40, max_piece_len=4, iters=3)
-    out = unigram_apply(df, model).collect()
-    total = 0
-    for r in out:
-        joined = r["pieces"].replace("\x01", "")
-        assert joined == r["text"].replace(" ", "")
-        assert r["n_pieces"] == len(r["pieces"].split("\x01"))
-        total += len(joined)
-    assert total == model["pieces_char_total"]
-
-
 def test_image_augment_crop_flip_semantics(spark):
     """Crop must clamp to the frame; vflip/hflip must move a marked corner
     pixel to the expected output corner; undecodable rows degrade to
@@ -2014,38 +2007,6 @@ def test_image_augment_negative_origin_intersects(spark):
     assert (out["width"], out["height"]) == (5, 4)
     a = np.frombuffer(out["pixels"], np.uint8).reshape(4, 5, 3)
     assert np.array_equal(a, px[:, :5, :])
-
-
-def test_hard_negative_mine_ivf_recall_vs_exact(spark):
-    """The cell-routed miner must emit only other-label rows and recover
-    most of the exact miner's hard negatives (negatives are near the
-    anchor, which cell routing preserves)."""
-    from etl_lala_spark.io import load_table
-    from etl_lala_spark.operators.similarity import (
-        hard_negative_mine,
-        hard_negative_mine_ivf,
-    )
-
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    anchors = emb.filter(F.col("vec_id") % 100 == 0)
-    exact = {
-        (r["anchor_id"], r["neighbor_id"])
-        for r in hard_negative_mine(emb, anchors, k=3).collect()
-        if r["kind"] == "hard_neg"
-    }
-    approx_rows = hard_negative_mine_ivf(
-        emb, anchors, k=3, n_cells=8, nprobe=4
-    ).collect()
-    labels = {r["vec_id"]: r["label"] for r in emb.collect()}
-    anchor_labels = {
-        r["vec_id"]: r["label"] for r in anchors.collect()
-    }
-    for r in approx_rows:
-        assert r["kind"] == "hard_neg"
-        assert labels[r["neighbor_id"]] != anchor_labels[r["anchor_id"]]
-    approx = {(r["anchor_id"], r["neighbor_id"]) for r in approx_rows}
-    recall = len(exact & approx) / len(exact)
-    assert recall >= 0.5, f"IVF hard-neg recall {recall:.2f} below floor"
 
 
 def test_word_shingles_whitespace_edges(spark):

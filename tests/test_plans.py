@@ -78,6 +78,18 @@ def test_q2_decorrelated_min_broadcasts_dims(spark, sf_dir):
     assert "TakeOrderedAndProject" in plan  # LIMIT 100 without global sort
 
 
+def test_datasus_dbc_source_prunes_below_the_decode(spark, sf_dir):
+    """The provenance predicate of datasus_dbc_source is pushed below the
+    decode's Generate to the binaryFile scan, so the second file is never
+    exploded, and the plan has no Python node (UDF, Arrow eval or Python
+    data source)."""
+    plan = plan_of(spark, "datasus_dbc_source", sf_dir)
+    assert "Python" not in plan
+    scan = plan.index("FileScan binaryFile")
+    assert plan.index("Generate inline") < plan.index("Filter") < scan
+    assert "PAPE2501" in plan[plan.index("Filter") : scan]
+
+
 def test_q21_single_wide_shuffle(spark, sf_dir):
     """The one-agg rewrite of Q21 must not re-shuffle lineitem per EXISTS:
     at most two exchanges touch lineitem-derived data (join + order agg)."""
@@ -991,27 +1003,29 @@ def test_wet_gate_rerun_reuses_generated_code(spark, sf_dir):
     assert rerun <= 10, rerun
 
 
-# Engine definitions kept although no code in this repository names them.
+# Engine definitions kept although no code in this repository refers to them.
 REACHED_FROM_OUTSIDE = {
     "load_incremental_jdbc": "the reference's PostgreSQL load",
     "register_views": "the spark.sql entry point its docstring documents",
+    "parse_dbf_columns": "the Python DBF split tests/test_jvm_codec.py checks the JVM codec against",
+    "dbc_to_dbf": "the Python DBC container tests/test_jvm_codec.py checks the JVM codec against",
 }
 
 
 def test_every_engine_definition_is_reached():
     """Every module-level function and class under ``etl_lala_spark/`` is
-    named, outside its own definition, by some non-test code: the engine,
-    ``tools/``, ``perfbench/``, ``bench.py``, ``__spark_entry__.py`` or
-    ``plan_audit.py``. A query registered with ``@register`` is reached
-    through the registry. Code that only tests call is dead weight: delete
-    it with its tests, or name it in REACHED_FROM_OUTSIDE with a reason.
+    referred to in code, outside its own definition, by some non-test code:
+    the engine, ``tools/``, ``perfbench/``, ``bench.py``,
+    ``__spark_entry__.py`` or ``plan_audit.py``. A query registered with
+    ``@register`` is reached through the registry. Code that only tests
+    call is dead weight: delete it with its tests, or name it in
+    REACHED_FROM_OUTSIDE with a reason.
 
-    "Named" is textual: a whole-word mention in a docstring, comment or
-    string of another definition counts too, so this catches code nothing
-    mentions, not every definition that no code calls."""
+    A reference is a name, an attribute or an imported name in the syntax
+    tree (``ast.Name``, ``ast.Attribute``, ``ast.alias``); a mention in a
+    docstring, comment or string does not count."""
     import ast
     import pathlib
-    import re
 
     root = pathlib.Path(REPO)
     engine = sorted((root / "etl_lala_spark").rglob("*.py"))
@@ -1021,7 +1035,21 @@ def test_every_engine_definition_is_reached():
         *sorted((root / "perfbench").rglob("*.py")),
         *(root / f for f in ("bench.py", "__spark_entry__.py", "plan_audit.py")),
     ]
-    texts = {path: path.read_text() for path in callers}
+    trees = {path: ast.parse(path.read_text()) for path in callers}
+
+    def references(tree) -> list[tuple[str, int]]:
+        """(name, line) of every code reference in one module."""
+        refs = []
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Name):
+                refs.append((node.id, node.lineno))
+            elif isinstance(node, ast.Attribute):
+                refs.append((node.attr, node.lineno))
+            elif isinstance(node, ast.alias):
+                refs.append((node.name.rsplit(".", 1)[-1], node.lineno))
+        return refs
+
+    refs = {path: references(tree) for path, tree in trees.items()}
 
     def registered(node) -> bool:
         return any(
@@ -1031,18 +1059,17 @@ def test_every_engine_definition_is_reached():
 
     unreached = []
     for path in engine:
-        lines = texts[path].splitlines(keepends=True)
-        for node in ast.parse(texts[path]).body:
+        for node in trees[path].body:
             if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
                 continue
             if registered(node) or node.name in REACHED_FROM_OUTSIDE:
                 continue
-            start = min([node.lineno] + [d.lineno for d in node.decorator_list]) - 1
-            outside = "".join(lines[:start] + lines[node.end_lineno :])
-            word = re.compile(rf"\b{re.escape(node.name)}\b")
+            start = min([node.lineno] + [d.lineno for d in node.decorator_list])
             if not any(
-                word.search(outside if other == path else text)
-                for other, text in texts.items()
+                name == node.name
+                and not (other == path and start <= line <= node.end_lineno)
+                for other, found in refs.items()
+                for name, line in found
             ):
                 unreached.append(f"{path.relative_to(root)}:{node.lineno} {node.name}")
     assert unreached == [], unreached

@@ -45,9 +45,9 @@ def tables(draw):
 def test_dbf_roundtrip(table):
     cols, rows = table
     data = dbc.write_dbf(cols, rows, field_len=20)
-    got_cols, got_rows = dbc.parse_dbf(data)
+    got_cols, got_values = dbc.parse_dbf_columns(data)
     assert got_cols == cols
-    assert got_rows == [[v.strip() for v in r] for r in rows]
+    assert got_values == [[r[i].strip() for r in rows] for i in range(len(cols))]
 
 
 @settings(max_examples=100, deadline=None)
@@ -56,9 +56,9 @@ def test_dbf_limit_pushdown(table, limit):
     """S9 record-limit pushdown: exactly min(limit, n) rows, same prefix."""
     cols, rows = table
     data = dbc.write_dbf(cols, rows, field_len=20)
-    _, got = dbc.parse_dbf(data, limit=limit)
-    _, full = dbc.parse_dbf(data)
-    assert got == full[:limit]
+    _, got = dbc.parse_dbf_columns(data, limit=limit)
+    _, full = dbc.parse_dbf_columns(data)
+    assert got == [values[:limit] for values in full]
 
 
 @settings(max_examples=100, deadline=None)

@@ -745,71 +745,6 @@ def test_vacuum_sweeps_unreferenced_orphan_dirs(spark, out_dir):
     assert got == {1, 2}
 
 
-def test_replace_partition_atomic_reload_and_pruned_read(spark, out_dir):
-    """The versioned-log replaceWhere: per-month commits tracked via
-    partition_col; reloading one month carries every other month's
-    directory over as pure metadata, a mixed-directory snapshot pays only
-    its own residue rewrite, read_partition prunes at the manifest, and a
-    bad reload is one rollback away."""
-    import os
-
-    from etl_lala_spark.sinks import versioned as vt
-
-    t = os.path.join(out_dir, "vt_months")
-
-    def month(m, v):
-        return spark.createDataFrame(
-            [(m, i, v) for i in range(3)], "month string, k int, val int"
-        )
-
-    vt.write_version(month("2025-01", 1), t, mode="overwrite", partition_col="month")
-    vt.write_version(month("2025-02", 2), t, mode="append", partition_col="month")
-    vt.write_version(month("2025-03", 3), t, mode="append", partition_col="month")
-    m = vt.table_versions(t)[-1]
-    assert m["parts"] == {
-        "d000001": ["2025-01"], "d000002": ["2025-02"], "d000003": ["2025-03"]
-    }
-    assert m["dir_rows"] == {"d000001": 3, "d000002": 3, "d000003": 3}
-
-    # reload feb: jan + mar dirs carried over untouched (pure metadata);
-    # out-of-partition rows in the feed are dropped (replaceWhere contract)
-    feed = month("2025-02", 99).unionByName(month("2025-07", 0))
-    v4 = vt.replace_partition(spark, t, feed, ["2025-02"])
-    m4 = vt.table_versions(t)[-1]
-    assert m4["op"] == "replace:month=2025-02"
-    assert "d000001" in m4["dirs"] and "d000003" in m4["dirs"]
-    assert m4["n_rows"] == 9
-    got = {(r.month, r.val) for r in vt.read_version(spark, t).collect()}
-    assert got == {("2025-01", 1), ("2025-02", 99), ("2025-03", 3)}
-
-    # pruned read resolves ONE directory from the manifest
-    feb = vt.read_partition(spark, t, ["2025-02"])
-    assert {r.val for r in feb.collect()} == {99}
-    assert vt.read_partition(spark, t, ["2099-12"]).count() == 0
-
-    # bad reload is one rollback away, tracking intact afterwards
-    vt.replace_partition(spark, t, month("2025-02", -1), ["2025-02"])
-    vt.rollback(t, v4)
-    assert {r.val for r in vt.read_partition(spark, t, ["2025-02"]).collect()} == {99}
-    assert vt.table_versions(t)[-1]["parts"] == m4["parts"]
-
-    # mixed-directory snapshot (compaction collapses months into one dir):
-    # replacing one month rewrites only that dir's residue
-    vt.compact_version(spark, t)
-    assert len(vt.table_versions(t)[-1]["dirs"]) == 1
-    vt.replace_partition(spark, t, month("2025-03", 33), ["2025-03"])
-    got = {(r.month, r.val) for r in vt.read_version(spark, t).collect()}
-    assert got == {("2025-01", 1), ("2025-02", 99), ("2025-03", 33)}
-
-    # untracked table refuses with a clear error
-    t2 = os.path.join(out_dir, "vt_untracked")
-    vt.write_version(month("2025-01", 1), t2)
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="not partition-tracked"):
-        vt.replace_partition(spark, t2, month("2025-01", 2), ["2025-01"])
-
-
 def test_append_partition_col_mismatch_does_not_wedge_version(spark, out_dir):
     """A build-time commit error (append with the wrong partition_col) must
     return the claimed data-dir name instead of wedging that version id
@@ -832,19 +767,6 @@ def test_append_partition_col_mismatch_does_not_wedge_version(spark, out_dir):
     assert vt.write_version(df, t, mode="append", partition_col="month") == 2
     assert _time.monotonic() - t0 < 5.0  # no orphan-grace stall
     assert vt.read_version(spark, t).count() == 4
-
-
-def test_read_partition_missing_version_raises_value_error(spark, out_dir):
-    """read_partition mirrors read_version's not-found guard: a vacuumed or
-    never-committed version id raises an informative ValueError, not a bare
-    KeyError (round-5 advice)."""
-    from etl_lala_spark.sinks import versioned as vt
-
-    t = os.path.join(out_dir, "vt_missing")
-    df = spark.createDataFrame([("2025-01", 1)], "month string, val int")
-    vt.write_version(df, t, partition_col="month")
-    with pytest.raises(ValueError, match="version 7 not found"):
-        vt.read_partition(spark, t, ["2025-01"], version=7)
 
 
 def test_vacuum_concurrent_pinned_readers_property(spark, out_dir):
@@ -901,25 +823,6 @@ def test_vacuum_concurrent_pinned_readers_property(spark, out_dir):
     assert v1 == 1  # version ids are stable history
 
 
-def test_versioned_partition_col_mismatch_refused(spark, out_dir):
-    """A partition_col that disagrees with the table's tracked column must
-    raise, not silently append duplicates (replace) or return empty
-    (read)."""
-    from etl_lala_spark.sinks import versioned as V
-
-    t = os.path.join(out_dir, "pmismatch")
-    df = spark.createDataFrame(
-        [(1, "a", "SP"), (2, "b", "RJ")], "k long, v string, uf string"
-    )
-    V.write_version(df, t, partition_col="uf")
-    with pytest.raises(ValueError, match="tracked"):
-        V.replace_partition(spark, t, df, ["a"], partition_col="v")
-    with pytest.raises(ValueError, match="tracked"):
-        V.read_partition(spark, t, ["a"], partition_col="v")
-    # matching / defaulted column still works
-    assert V.read_partition(spark, t, ["SP"]).count() == 1
-
-
 def test_versioned_manifest_order_numeric_past_padding(spark, out_dir):
     """Manifest ordering must be numeric: a 7-digit version id sorts after
     999999, not before it lexicographically."""
@@ -933,7 +836,7 @@ def test_versioned_manifest_order_numeric_past_padding(spark, out_dir):
         m = dict(V.table_versions(t)[-1])
         m["version"] = v
         V._commit(t, m)
-    assert V.latest_version(t) == 1000000
+    assert V.table_versions(t)[-1]["version"] == 1000000
     assert [m["version"] for m in V.table_versions(t)][-2:] == [999999, 1000000]
 
 
@@ -968,8 +871,6 @@ def test_versioned_extra_cannot_forge_partition_tracking(spark, out_dir):
     m = V.table_versions(t)[-1]
     assert "partition_col" not in m and "parts" not in m
     assert m["note"] == "ok"
-    with pytest.raises(ValueError, match="not partition-tracked"):
-        V.read_partition(spark, t, ["SP"])
 
 
 def test_versioned_vacuum_sweeps_leaked_staging(spark, out_dir):
@@ -1006,7 +907,7 @@ def test_versioned_concurrent_vacuum_idempotent(spark, out_dir):
     for d in victim["dirs"]:
         shutil.rmtree(os.path.join(t, d), ignore_errors=True)
     V.vacuum(t, keep_last=1)  # must not raise
-    assert V.latest_version(t) == vs[-1]["version"]
+    assert V.table_versions(t)[-1]["version"] == vs[-1]["version"]
 
 
 def test_jdbc_probe_failure_classification(spark, monkeypatch):

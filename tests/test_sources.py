@@ -54,20 +54,20 @@ def test_dbf_roundtrip_and_decode(spark, staging):
     rows = [["202501", "EP", "153.27"], ["202502", "PG", "99.10"], ["202501", "EP", "1.00"]]
     data = dbc.write_dbf(cols, rows)
     assert dbc.parse_dbf_header(data) == cols
-    got_cols, got_rows = dbc.parse_dbf(data)
-    assert got_cols == cols and got_rows == rows
+    got_cols, got_values = dbc.parse_dbf_columns(data)
+    assert got_cols == cols and [list(r) for r in zip(*got_values)] == rows
     # limit pushdown (reference S9)
-    assert len(dbc.parse_dbf(data, limit=2)[1]) == 2
+    assert len(dbc.parse_dbf_columns(data, limit=2)[1][0]) == 2
 
     # distributed decode path: zip -> members -> all-string record table
     zdir = os.path.join(staging, "dbfzips")
     os.makedirs(zdir, exist_ok=True)
     with open(os.path.join(zdir, "b.zip"), "wb") as fh:
-        fh.write(_zip_bytes({"PAPE2501.dbf": data}))
+        fh.write(_zip_bytes({"PAPE2501.dbc": dbc.dbf_to_dbc(data)}))
     members = arc.extract_archive_members(
-        arc.read_binary_files(spark, zdir, glob="*.zip"), suffix=".dbf"
+        arc.read_binary_files(spark, zdir, glob="*.zip"), suffix=".dbc"
     )
-    records = dbc.read_dbf(members)
+    records = dbc.read_dbc(members)
     out = records.collect()
     assert len(out) == 3
     assert out[0]["AP_MVM"] == "202501"
@@ -125,7 +125,7 @@ def test_latin1_roundtrip():
     cols = ["NOME"]
     rows = [["SÃO PAULO"]]
     data = dbc.write_dbf(cols, rows)
-    assert dbc.parse_dbf(data)[1] == rows
+    assert dbc.parse_dbf_columns(data)[1] == [["SÃO PAULO"]]
 
 
 def test_tagged_ndjson_split(spark, staging):
@@ -186,27 +186,22 @@ def test_dbf_projection_pushdown(spark, staging):
     data = dbc.write_dbf(cols, rows)
 
     # decoder-level pruning: only projected fields are decoded, file order kept
-    got_cols, got_rows = dbc.parse_dbf(data, project=["AP_VL_TOTAL", "AP_MVM"])
+    got_cols, got_values = dbc.parse_dbf_columns(data, project=["AP_VL_TOTAL", "AP_MVM"])
     assert got_cols == ["AP_MVM", "AP_VL_TOTAL"]
-    assert got_rows == [["202501", "153.27"], ["202502", "99.10"]]
+    assert got_values == [["202501", "202502"], ["153.27", "99.10"]]
 
     # distributed path: projected schema + provenance only
     zdir = os.path.join(staging, "dbfproj")
     os.makedirs(zdir, exist_ok=True)
     with open(os.path.join(zdir, "p.zip"), "wb") as fh:
-        fh.write(_zip_bytes({"PAPE2502.dbf": data}))
+        fh.write(_zip_bytes({"PAPE2502.dbc": dbc.dbf_to_dbc(data)}))
     members = arc.extract_archive_members(
-        arc.read_binary_files(spark, zdir, glob="*.zip"), suffix=".dbf"
+        arc.read_binary_files(spark, zdir, glob="*.zip"), suffix=".dbc"
     )
-    records = dbc.read_dbf(members, project=["AP_CONDIC"])
+    records = dbc.read_dbc(members, project=["AP_CONDIC"])
     assert records.columns == ["AP_CONDIC", "arquivo_origem"]
     assert sorted(r["AP_CONDIC"] for r in records.collect()) == ["EP", "PG"]
-
-    # and through the .dbc (implode) path
-    from pyspark.sql import functions as F
-
-    dbc_members = members.withColumn("content", F.udf(lambda b: dbc.dbf_to_dbc(bytes(b)), "binary")("content"))
-    rec2 = dbc.read_dbc(dbc_members, project=["AP_MVM"])
+    rec2 = dbc.read_dbc(members, project=["AP_MVM"])
     assert rec2.columns == ["AP_MVM", "arquivo_origem"]
     assert sorted(r["AP_MVM"] for r in rec2.collect()) == ["202501", "202502"]
 
@@ -252,18 +247,11 @@ def test_xml_roundtrip_format(spark, tmp_path):
     assert sorted(map(tuple, back.collect())) == sorted(map(tuple, df.collect()))
 
 
-def test_dbc_python_datasource(spark, tmp_path):
-    """Spark 4 Python DataSource wrapper around the S8 decode path
-    (``spark.read.format("dbc")``): schema inference from the header prefix,
-    one partition per file, per-file record-limit pushdown, and Spark 4.1
-    ``pushFilters`` pruning whole files on the ``arquivo_origem`` provenance
-    column at planning time — proven by a planted corrupt file that would
-    fail the decode if it were ever opened."""
-    from etl_lala_spark.sources.dbc_datasource import register_dbc_source
-
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    register_dbc_source(spark)
-
+def test_read_dbc_provenance_filter_prunes_files(spark, tmp_path):
+    """A filter on ``read_dbc``'s ``arquivo_origem`` provenance column is
+    pushed below the decode to the ``binaryFile`` scan, so a file it rules
+    out is never exploded — proven by a planted corrupt file that fails a
+    FAILFAST decode whenever it is opened."""
     d = str(tmp_path)
     cols = ["AP_CONDIC", "AP_VL_TOTAL"]
     for name, rows in [
@@ -272,68 +260,20 @@ def test_dbc_python_datasource(spark, tmp_path):
     ]:
         with open(os.path.join(d, name + ".dbc"), "wb") as fh:
             fh.write(dbc.dbf_to_dbc(dbc.write_dbf(cols, rows)))
-
-    df = spark.read.format("dbc").load(d)
-    assert df.columns == [*cols, "arquivo_origem"]
-    assert df.rdd.getNumPartitions() == 2  # one partition per file
-    got = sorted(tuple(r) for r in df.collect())
-    assert got == [
-        ("AB", "20.50", "PAPE2501"),
-        ("EP", "10.00", "PAPE2501"),
-        ("EP", "30.00", "PAPE2502"),
-    ]
-
-    # per-file record-limit pushdown (S9)
-    lim = spark.read.format("dbc").option("limit", 1).load(d)
-    assert lim.count() == 2  # 1 per file
-
-    # planning-time file pruning: the corrupt file decodes to an error, so a
-    # successful filtered read means it was pruned, never opened
     with open(os.path.join(d, "ZZZ9999.dbc"), "wb") as fh:
         fh.write(b"\x00" * 64)
-    eq = spark.read.format("dbc").load(d).filter("arquivo_origem = 'PAPE2501'")
-    assert eq.count() == 2
-    pre = spark.read.format("dbc").load(d).filter("arquivo_origem LIKE 'PAPE%'")
-    assert pre.count() == 3
-    isin = (
-        spark.read.format("dbc")
-        .load(d)
-        .filter("arquivo_origem IN ('PAPE2501', 'PAPE2502')")
-    )
-    assert isin.count() == 3
+
+    from etl_lala_spark.plans.datasus import dbc_members
+
+    records = dbc.read_dbc(dbc_members(spark, d), columns=cols)
+    eq = records.filter("arquivo_origem = 'PAPE2501'")
+    assert sorted(tuple(r) for r in eq.collect()) == [
+        ("AB", "20.50", "PAPE2501"),
+        ("EP", "10.00", "PAPE2501"),
+    ]
+    assert records.filter("arquivo_origem IN ('PAPE2501', 'PAPE2502')").count() == 3
     with pytest.raises(Exception, match="implausible header"):
-        spark.read.format("dbc").load(d).count()
-
-
-def test_dbc_datasource_write_roundtrip(spark, tmp_path):
-    """`df.write.format("dbc")` — the DataSource write path: each task
-    writes one implode-compressed .dbc (temp-name + commit-rename, so
-    failed tasks leave nothing visible), empty partitions produce no file,
-    non-string schemas are rejected (the reference's record model is
-    all-string), and a write→read round trip through the same format is
-    lossless."""
-    from pyspark.sql import functions as F
-
-    from etl_lala_spark.sources.dbc_datasource import register_dbc_source
-
-    register_dbc_source(spark)
-    d = str(tmp_path / "out")
-    df = spark.range(0, 50).select(
-        F.col("id").cast("string").alias("AP_ID"),
-        F.concat(F.lit("V"), F.col("id")).cast("string").alias("AP_VAL"),
-    )
-    # 8 partitions over 50 rows: some may be empty — no empty files allowed
-    df.repartition(8).write.format("dbc").mode("overwrite").save(d)
-    files = sorted(os.listdir(d))
-    assert files and all(f.startswith("PART") and f.endswith(".dbc") for f in files)
-
-    back = spark.read.format("dbc").load(d)
-    assert sorted((r["AP_ID"], r["AP_VAL"]) for r in back.collect()) == sorted(
-        (r["AP_ID"], r["AP_VAL"]) for r in df.collect()
-    )
-
-    with pytest.raises(Exception, match="all-string"):
-        spark.range(3).write.format("dbc").mode("overwrite").save(d)
+        records.count()
 
 
 def test_register_views_enables_raw_sql(spark, sf_dir):
@@ -350,67 +290,6 @@ def test_register_views_enables_raw_sql(spark, sf_dir):
         """
     ).first()
     assert row.n_customers > 0
-
-
-def test_dbc_source_permissive_corrupt_file(spark, sf_dir, tmp_path):
-    """R5 structured errors on the binary path: with corruptColumn set, an
-    undecodable file yields one error row (provenance + message, data NULL)
-    instead of failing the job; without it the job fails loudly."""
-    import os
-
-    import pytest as _pytest
-    from pyspark.sql import functions as F
-
-    from etl_lala_spark.sources.dbc import write_dbf
-    from etl_lala_spark.sources.dbc_datasource import register_dbc_source
-
-    register_dbc_source(spark)
-    d = str(tmp_path / "mixed")
-    os.makedirs(d)
-    with open(os.path.join(d, "GOOD1.dbf"), "wb") as fh:
-        fh.write(write_dbf(["A", "B"], [["1", "x"], ["2", "y"]], 4))
-    with open(os.path.join(d, "ZBAD.dbc"), "wb") as fh:
-        fh.write(b"\x99\x99 this is not an implode stream at all")
-
-    with _pytest.raises(Exception):
-        spark.read.format("dbc").load(d).count()
-
-    got = (
-        spark.read.format("dbc")
-        .option("corruptColumn", "_error")
-        .load(d)
-        .collect()
-    )
-    good = [r for r in got if r["_error"] is None]
-    bad = [r for r in got if r["_error"] is not None]
-    assert sorted((r["A"], r["B"]) for r in good) == [("1", "x"), ("2", "y")]
-    assert len(bad) == 1
-    assert bad[0]["arquivo_origem"] == "ZBAD"
-    assert bad[0]["A"] is None and bad[0]["B"] is None
-
-
-def test_dbc_corrupt_column_collision_rejected(spark, tmp_path):
-    """A corruptColumn naming a real data column (or the provenance column)
-    would silently drop that column from reads — planning must fail loudly
-    instead (ADVICE r01)."""
-    import os
-
-    import pytest as _pytest
-
-    from etl_lala_spark.sources.dbc import write_dbf
-    from etl_lala_spark.sources.dbc_datasource import register_dbc_source
-
-    register_dbc_source(spark)
-    d = str(tmp_path / "coll")
-    os.makedirs(d)
-    with open(os.path.join(d, "T.dbf"), "wb") as fh:
-        fh.write(write_dbf(["A", "B"], [["1", "x"]], 4))
-
-    for bad in ("A", "arquivo_origem"):
-        with _pytest.raises(Exception, match="collides"):
-            spark.read.format("dbc").option("corruptColumn", bad).load(d).schema
-    ok = spark.read.format("dbc").option("corruptColumn", "_err").load(d)
-    assert ok.count() == 1
 
 
 def test_fetch_to_staging_file_urls(spark, tmp_path):
@@ -793,23 +672,22 @@ def test_ingest_chain_driver_budget(spark, tmp_path, monkeypatch, job_group):
 
 def test_read_dbf_keeps_odd_and_duplicate_names(spark):
     """Column names with a dot, a space or a backtick, and a repeated DBF
-    name, come out as written, each with its own field's values."""
+    name, come out of ``read_dbc`` as written, each with its own field's
+    values."""
     names = ["A.B", "C D", "E`F", "A.B"]
     data = dbc.write_dbf(names, [["1", "2", "3", "4"], ["5", "6", "7", "8"]], field_len=3)
-    df = spark.createDataFrame([("T.dbf", bytearray(data))], "member_basename string, content binary")
-    out = dbc.read_dbf(df)
+    df = spark.createDataFrame(
+        [("T.dbc", bytearray(dbc.dbf_to_dbc(data)))], "member_basename string, content binary"
+    )
+    out = dbc.read_dbc(df)
     assert out.columns == names + ["arquivo_origem"]
     assert [tuple(r) for r in out.collect()] == [("1", "2", "3", "4", "T"), ("5", "6", "7", "8", "T")]
-    assert [tuple(r) for r in dbc.read_dbf(df, project=["E`F"]).collect()] == [("3", "T"), ("7", "T")]
+    assert [tuple(r) for r in dbc.read_dbc(df, project=["E`F"]).collect()] == [("3", "T"), ("7", "T")]
 
 
-def test_dbf_wide_header_inference(spark, tmp_path):
-    """A >126-field DBF has a header past 4 KiB; schema inference (both the
-    mapInPandas helper and the DataSource planner) must read the declared
-    header length, not a fixed prefix."""
-    from etl_lala_spark.sources.dbc_datasource import register_dbc_source
-
-    register_dbc_source(spark)
+def test_dbf_wide_header_inference(spark):
+    """A >126-field DBF has a header past 4 KiB; schema inference must read
+    the declared header length, not a fixed prefix."""
     cols = [f"C{i:03d}" for i in range(130)]
     data = dbc.write_dbf(cols, [[str(i) for i in range(130)]], field_len=4)
     assert 32 + 32 * 130 + 1 > 4096  # the regression precondition
@@ -819,30 +697,6 @@ def test_dbf_wide_header_inference(spark, tmp_path):
         "member_basename string, content binary",
     )
     assert dbc.infer_dbf_columns(df) == cols
-
-    d = str(tmp_path / "wide")
-    os.makedirs(d)
-    with open(os.path.join(d, "WIDE.dbf"), "wb") as fh:
-        fh.write(data)
-    got = spark.read.format("dbc").load(d)
-    assert [f for f in got.columns if f != "arquivo_origem"] == cols
-    (r,) = got.collect()
-    assert r["C129"] == "129"
-
-
-def test_dbc_writer_append_does_not_clobber(spark, tmp_path):
-    """mode=append must continue PART numbering after existing files; a
-    second append used to silently overwrite PART0000 of the first."""
-    from etl_lala_spark.sources.dbc_datasource import register_dbc_source
-
-    register_dbc_source(spark)
-    d = str(tmp_path / "out")
-    df1 = spark.createDataFrame([("a",)], "X string").coalesce(1)
-    df2 = spark.createDataFrame([("b",)], "X string").coalesce(1)
-    df1.write.format("dbc").option("path", d).mode("append").save()
-    df2.write.format("dbc").option("path", d).mode("append").save()
-    back = spark.read.format("dbc").load(d)
-    assert sorted(r["X"] for r in back.collect()) == ["a", "b"]
 
 
 # --- WARC / Common Crawl ingestion -------------------------------------------

@@ -179,289 +179,6 @@ def test_stream_scd2_merges_batches_and_replay_is_noop(spark, tmp_path):
     assert again == {kf: (r.valid_to, r.is_current, r.seg) for kf, r in rows.items()}
 
 
-def test_dbc_streaming_source_incremental_and_recovery(spark, tmp_path):
-    """`spark.readStream.format("dbc")`: the custom DataSource's stream
-    reader picks up newly-arriving .dbc files per micro-batch (the streaming
-    form of the reference's per-competência arrival loop,
-    datasus.service.ts:222-237), and after a checkpointed restart only
-    genuinely-new files are processed — no re-decode of committed ones."""
-    import os
-
-    from etl_lala_spark.sources.dbc import dbf_to_dbc, write_dbf
-    from etl_lala_spark.sources.dbc_datasource import register_dbc_source
-
-    register_dbc_source(spark)
-    land = tmp_path / "landing"
-    land.mkdir()
-    ckpt = str(tmp_path / "ckpt")
-    cols = ["AP_CONDIC", "AP_VL_TOTAL"]
-
-    def put(name, rows):
-        (land / f"{name}.dbc").write_bytes(dbf_to_dbc(write_dbf(cols, rows)))
-
-    put("PAPE2501", [["EP", "10.00"], ["AB", "20.50"]])
-    out = str(tmp_path / "out")
-
-    def start():
-        return (
-            spark.readStream.format("dbc")
-            .load(str(land))
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-
-    q = start()
-    try:
-        q.processAllAvailable()
-        put("PAPE2502", [["EP", "30.00"]])
-        q.processAllAvailable()
-        got = sorted(tuple(r) for r in spark.read.parquet(out).collect())
-        assert got == [
-            ("AB", "20.50", "PAPE2501"),
-            ("EP", "10.00", "PAPE2501"),
-            ("EP", "30.00", "PAPE2502"),
-        ]
-    finally:
-        q.stop()
-
-    # restart from the checkpoint: only the file that arrived while the
-    # stream was down is decoded — committed files are not replayed
-    put("PAPE2503", [["ZZ", "1.00"]])
-    q2 = start()
-    try:
-        q2.processAllAvailable()
-        got = sorted(tuple(r) for r in spark.read.parquet(out).collect())
-        assert got == [
-            ("AB", "20.50", "PAPE2501"),
-            ("EP", "10.00", "PAPE2501"),
-            ("EP", "30.00", "PAPE2502"),
-            ("ZZ", "1.00", "PAPE2503"),
-        ]
-    finally:
-        q2.stop()
-
-
-def test_stream_dedup_ingest_only_novel_docs(spark, sf_dir, tmp_path):
-    """Dedup-on-ingest (exact dedup ∘ T5): across micro-batches only
-    never-seen content is appended, and a full replay of the stream (no
-    checkpoint) inserts nothing — the fingerprint lives in the data table,
-    so there is no two-store commit problem."""
-    from etl_lala_spark.io import load_table
-    from etl_lala_spark.sinks import writer as w
-
-    src = str(tmp_path / "src")
-    table = str(tmp_path / "table")
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    b1 = docs.filter(F.col("doc_id") < 60)           # includes exact dups
-    b2 = docs.filter((F.col("doc_id") >= 40) & (F.col("doc_id") < 100))
-    b1.write.mode("overwrite").parquet(src)
-
-    def run():
-        q = w.stream_dedup_ingest(
-            spark.readStream.schema(docs.schema).parquet(src), table
-        )
-        q.awaitTermination(120)
-        q.stop()
-
-    run()
-    n_batch1 = spark.read.parquet(table).count()
-    distinct_b1 = b1.select("text").distinct().count()
-    assert n_batch1 == distinct_b1
-
-    # second batch overlaps the first (40..59) and its own dup texts
-    b2.write.mode("append").parquet(src)
-    run()
-    got = spark.read.parquet(table)
-    want = docs.filter(F.col("doc_id") < 100).select("text").distinct().count()
-    assert got.count() == want
-    assert got.select("_fp").distinct().count() == want
-
-    # full replay (fresh stream over the same files): nothing new
-    run()
-    assert spark.read.parquet(table).count() == want
-
-
-def test_stream_ivf_index_incremental_and_pruned_search(spark, sf_dir, tmp_path):
-    """Incremental ANN index: two streamed batches land cell-partitioned and
-    exactly once (replay is a no-op); query routing joins on the partition
-    column so the scan prunes unprobed cells; every corpus query finds its
-    planted exact twin at cosine 1.0."""
-    from etl_lala_spark.io import load_table
-    from etl_lala_spark.operators import similarity as sim
-    from etl_lala_spark.sinks import writer as w
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    codebook_lazy = sim.ivf_codebook(emb, n_cells=8)
-    # Fix the codebook as a literal: the index contract is that it never
-    # changes once rows are written.
-    codebook = spark.createDataFrame(
-        codebook_lazy.collect(), schema=codebook_lazy.schema
-    )
-
-    src = str(tmp_path / "vec_src")
-    index = str(tmp_path / "ivf_index")
-    half1 = emb.filter(F.col("vec_id") % 2 == 0)
-    half2 = emb.filter(F.col("vec_id") % 2 == 1)
-    half1.write.mode("overwrite").parquet(src)
-
-    def run():
-        stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
-        q = w.stream_ivf_index(stream, index, codebook)
-        q.awaitTermination(120)
-        q.stop()
-
-    run()
-    assert spark.read.parquet(index).count() == half1.count()
-    run()  # replay without checkpoint: anti-join keeps it exactly-once
-    assert spark.read.parquet(index).count() == half1.count()
-    half2.write.mode("append").parquet(src)
-    run()
-    assert spark.read.parquet(index).count() == emb.count()
-    # cell-partitioned layout on disk
-    import os
-
-    assert any(e.startswith("cell=") for e in os.listdir(index))
-
-    # Planted twins: copies of every 25th vector under shifted ids must be
-    # found at rank 1 with cosine 1.0 (same argmax cell by construction).
-    queries = emb.filter(F.col("vec_id") % 25 == 0).withColumn(
-        "vec_id", F.col("vec_id") + 100000
-    )
-    res = w.ivf_index_search(spark, index, queries, codebook, k=3, nprobe=2)
-    top1 = {r.query_id: (r.neighbor_id, r.cos_sim) for r in res.filter("rank = 1").collect()}
-    for qid, (nid, cs) in top1.items():
-        assert nid == qid - 100000 and cs == 1.0
-    assert len(top1) == queries.count()
-
-    # Partition pruning: the index scan carries a PartitionFilters entry on
-    # the routed cell key (dynamic pruning via the broadcast join).
-    plan = w.ivf_index_search(
-        spark, index, queries, codebook, k=3, nprobe=2
-    )._jdf.queryExecution().executedPlan().toString()
-    scan = plan[plan.index("Scan parquet") :]
-    assert "dynamicpruningexpression" in scan  # unprobed cells never read
-
-
-def test_ivf_index_compaction_preserves_search(spark, sf_dir, tmp_path):
-    """Micro-batch appends leave small files per cell; the generic partition
-    compactor consolidates them without changing search results."""
-    from etl_lala_spark.io import load_table
-    from etl_lala_spark.operators import similarity as sim
-    from etl_lala_spark.sinks import writer as w
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    cb_lazy = sim.ivf_codebook(emb, n_cells=8)
-    codebook = spark.createDataFrame(cb_lazy.collect(), schema=cb_lazy.schema)
-    src = str(tmp_path / "vsrc")
-    index = str(tmp_path / "ivf_idx")
-    for i in range(3):  # three arrivals → three appends per touched cell
-        emb.filter(F.col("vec_id") % 3 == i).write.mode(
-            "overwrite" if i == 0 else "append"
-        ).parquet(src)
-        q = w.stream_ivf_index(
-            spark.readStream.schema(emb.schema).parquet(src), index, codebook
-        )
-        q.awaitTermination(120)
-        q.stop()
-
-    queries = emb.filter(F.col("vec_id") % 100 == 0)
-    before = sorted(
-        map(tuple, w.ivf_index_search(spark, index, queries, codebook, k=3).collect())
-    )
-    res = w.compact_partitions(spark, index, part_col="cell")
-    assert res["files_after"] < res["files_before"]
-    after = sorted(
-        map(tuple, w.ivf_index_search(spark, index, queries, codebook, k=3).collect())
-    )
-    assert after == before
-
-
-def test_ivf_index_vector_removal(spark, sf_dir, tmp_path):
-    """Targeted deletion composes with the index: removing a vector
-    rewrites only its cell partition and search stops returning it."""
-    from etl_lala_spark.io import load_table
-    from etl_lala_spark.operators import similarity as sim
-    from etl_lala_spark.sinks import writer as w
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    cb_lazy = sim.ivf_codebook(emb, n_cells=8)
-    codebook = spark.createDataFrame(cb_lazy.collect(), schema=cb_lazy.schema)
-    src = str(tmp_path / "vsrc")
-    index = str(tmp_path / "ivf_idx")
-    emb.write.parquet(src)
-    q = w.stream_ivf_index(
-        spark.readStream.schema(emb.schema).parquet(src), index, codebook
-    )
-    q.awaitTermination(120)
-    q.stop()
-
-    victim = emb.select("vec_id").first().vec_id
-    n_cells_total = (
-        spark.read.parquet(index).select("cell").distinct().count()
-    )
-    res = w.delete_rows(
-        spark,
-        index,
-        spark.createDataFrame([(victim,)], "vec_id bigint"),
-        "vec_id",
-        part_col="cell",
-    )
-    assert res["rows_deleted"] == 1 and len(res["partitions_rewritten"]) == 1
-    assert n_cells_total > 1  # only one cell was touched, others exist
-    # a twin query of the victim no longer finds it
-    twin = emb.filter(F.col("vec_id") == victim).withColumn(
-        "vec_id", F.col("vec_id") + 100000
-    )
-    hits = w.ivf_index_search(spark, index, twin, codebook, k=3).collect()
-    assert all(r.neighbor_id != victim for r in hits)
-
-
-def test_dbc_stream_permissive_corrupt_arrival(spark, tmp_path):
-    """A corrupt file arriving mid-stream becomes one provenance-tagged
-    error row under corruptColumn; the stream keeps running and good
-    arrivals before and after decode normally."""
-    import os
-
-    from etl_lala_spark.sources.dbc import write_dbf
-    from etl_lala_spark.sources.dbc_datasource import register_dbc_source
-
-    register_dbc_source(spark)
-    src = str(tmp_path / "landing")
-    out = str(tmp_path / "out")
-    os.makedirs(src)
-    with open(os.path.join(src, "GOOD1.dbf"), "wb") as fh:
-        fh.write(write_dbf(["A"], [["1"], ["2"]], 4))
-
-    def run():
-        q = (
-            spark.readStream.format("dbc")
-            .option("corruptColumn", "_error")
-            .load(src)
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        q.stop()
-
-    run()
-    with open(os.path.join(src, "ZBAD.dbc"), "wb") as fh:
-        fh.write(b"\x00\x07 garbage dict bits")
-    with open(os.path.join(src, "GOOD2.dbf"), "wb") as fh:
-        fh.write(write_dbf(["A"], [["3"]], 4))
-    run()
-
-    rows = spark.read.parquet(out).collect()
-    good = sorted(r["A"] for r in rows if r["_error"] is None)
-    bad = [r for r in rows if r["_error"] is not None]
-    assert good == ["1", "2", "3"]
-    assert len(bad) == 1 and bad[0]["arquivo_origem"] == "ZBAD"
-
-
 def test_stream_versioned_append_exactly_once(spark, tmp_path):
     """Streaming ingest into the versioned transaction log: each
     micro-batch is one atomic append commit whose manifest carries the
@@ -485,7 +202,7 @@ def test_stream_versioned_append_exactly_once(spark, tmp_path):
         "append"
     ).parquet(str(src))
     run(ckpt)
-    assert vt.latest_version(table) == 1
+    assert vt.table_versions(table)[-1]["version"] == 1
     assert {r.k for r in vt.read_version(spark, table).collect()} == {1, 2}
 
     # second availableNow run with the SHARED checkpoint: only new files
