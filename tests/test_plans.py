@@ -1036,20 +1036,18 @@ def test_every_engine_definition_is_reached():
         *(root / f for f in ("bench.py", "__spark_entry__.py", "plan_audit.py")),
     ]
     trees = {path: ast.parse(path.read_text()) for path in callers}
-
-    def references(tree) -> list[tuple[str, int]]:
-        """(name, line) of every code reference in one module."""
-        refs = []
+    sites: dict[str, list] = {}  # name -> [(path, line)] of each reference
+    for path, tree in trees.items():
         for node in ast.walk(tree):
             if isinstance(node, ast.Name):
-                refs.append((node.id, node.lineno))
+                name = node.id
             elif isinstance(node, ast.Attribute):
-                refs.append((node.attr, node.lineno))
+                name = node.attr
             elif isinstance(node, ast.alias):
-                refs.append((node.name.rsplit(".", 1)[-1], node.lineno))
-        return refs
-
-    refs = {path: references(tree) for path, tree in trees.items()}
+                name = node.name.rsplit(".", 1)[-1]
+            else:
+                continue
+            sites.setdefault(name, []).append((path, node.lineno))
 
     def registered(node) -> bool:
         return any(
@@ -1065,11 +1063,9 @@ def test_every_engine_definition_is_reached():
             if registered(node) or node.name in REACHED_FROM_OUTSIDE:
                 continue
             start = min([node.lineno] + [d.lineno for d in node.decorator_list])
-            if not any(
-                name == node.name
-                and not (other == path and start <= line <= node.end_lineno)
-                for other, found in refs.items()
-                for name, line in found
+            if all(
+                other == path and start <= line <= node.end_lineno
+                for other, line in sites.get(node.name, [])
             ):
                 unreached.append(f"{path.relative_to(root)}:{node.lineno} {node.name}")
     assert unreached == [], unreached
